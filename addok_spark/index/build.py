@@ -435,9 +435,8 @@ def make_doc_tokens_udf(
     """Per-DOCUMENT analysis + aggregation in ONE Arrow batch pass —
     the readable REFERENCE twin of the vectorized ``_make_doc_analyzer``
     the build actually runs (equivalence-tested in
-    tests/test_index_build.py; also used by small CDC batches via
-    the pandas-UDF path where batch sizes don't justify the
-    vectorized machinery... kept primarily as executable spec).
+    tests/test_index_build.py). Nothing else calls it: CDC batches
+    run ``analyze_docs`` too. It is kept as executable spec.
 
     Since every (doc, token) pair lives in exactly one input row, the
     tf/positions/boost aggregation is a per-row computation — doing
@@ -1659,8 +1658,10 @@ def build_blocks_from_analyzed(analyzed: DataFrame, cfg: EngineConfig) -> DataFr
     the reduce side decodes, doc-sorts, and re-chunks groups into
     block rows BIT-IDENTICAL to `build_blocks` (equivalence asserted
     in tests/test_index_build.py; golden posting-state tests cover the
-    full build). `build_blocks` remains the path for CDC micro-batches
-    where inputs are already exploded posting rows."""
+    full build). CDC batches run it too, over the re-analyzed docs
+    of their touched pbuckets (incremental.py); `build_blocks`, fed
+    exploded posting rows, is kept as the reference the equivalence
+    test compares against."""
     from pyspark.sql.types import ArrayType
 
     filter_fields = [f for f in cfg.filter_fields if f in analyzed.columns]
@@ -1772,10 +1773,12 @@ def pairs_from_blocks(
     re-analysis): unpack doc ids per token, drop COMMON tokens (the
     Zipf head is small by construction → broadcast anti-join), regroup
     per doc, expand pairs (≙ PairsIndexer skipping commons,
-    addok/pairs.py:6-16). This is the CDC path — after an incremental
-    rewrite the blocks table is the truth and the analyzed scratch is
-    stale; the bulk build uses ``pairs_from_analyzed`` (same result,
-    one less shuffle)."""
+    addok/pairs.py:6-16). For pbuckets with no analyzed rows at hand:
+    a CDC batch's pbuckets that only a common-threshold crossing
+    touches, and legacy (non-pbucket-partitioned) pair tables. The
+    bulk build and the CDC batch's touched pbuckets use
+    ``pairs_from_analyzed`` (same result, no block unpack, one less
+    shuffle)."""
     commons = dictionary.filter(
         F.col("df") > cfg.common_threshold
     ).select("token")
@@ -1795,10 +1798,12 @@ def pairs_from_blocks(
 def pairs_from_analyzed(
     analyzed: DataFrame, dictionary: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
-    """Bulk-build pairs derivation: the analyzed scratch already holds
-    each doc's distinct tokens (``__an.toks``, one struct per distinct
-    token), so the per-doc token set needs NO block unpack and NO
-    regroup-by-doc shuffle — just an in-row projection. Commons (the
+    """Pairs derivation for the bulk build (over the analyzed scratch)
+    and for a CDC batch's touched pbuckets (over its re-analyzed
+    docs): analyzed rows already hold each doc's distinct tokens
+    (``__an.toks``, one struct per distinct token), so the per-doc
+    token set needs NO block unpack and NO regroup-by-doc shuffle —
+    just an in-row projection. Commons (the
     Zipf head: bounded by tokens with df > COMMON_THRESHOLD, i.e. a
     stopword-sized set even at full corpus scale) are removed with a
     constant-folded literal array via ``array_except``. Produces the
@@ -2060,7 +2065,8 @@ class IndexBuilder:
         if cfg.build_pairs and not (resume and self._stage_done("pairs")):
             # bulk path reads per-doc token sets straight from the
             # analyzed scratch (no block unpack / regroup shuffle);
-            # CDC uses pairs_from_blocks on touched pbuckets
+            # CDC does the same over its touched pbuckets' re-analyzed
+            # docs
             pairs = pairs_from_analyzed(analyzed, dictionary, cfg)
             # HASH repartition, not repartitionByRange: the range
             # partitioner's sampling job re-executes the child, and

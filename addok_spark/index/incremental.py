@@ -37,9 +37,10 @@ from __future__ import annotations
 
 import json
 import shutil
+from contextlib import ExitStack
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
@@ -50,6 +51,7 @@ from .build import (
     build_blocks_from_analyzed,
     dict_partials_from_blocks,
     dictionary_from_partials,
+    pairs_from_analyzed,
     pairs_from_blocks,
     prefixes_from_dictionary,
     read_table,
@@ -176,6 +178,76 @@ def _next_entries(cur: IndexPaths, stg: IndexPaths, table: str,
     return out
 
 
+def _persist_scoped(held: ExitStack, df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the rest of the batch: ``held`` unpersists it
+    on every way out of ``apply_actions``, a failed write included."""
+    df = df.persist()
+    held.callback(df.unpersist)
+    return df
+
+
+def _last_action_per_key(changes: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """``changes`` reduced to one row per (conv_id, turn_idx): its LAST
+    action, ``_action`` defaulted to "index", and upserts that leave an
+    ``allow_null=False`` field empty turned into deletes. Columns:
+    conv_id, turn_idx, _action, then the payload."""
+    from pyspark.sql.window import Window
+
+    from .build import field_null_violation
+
+    if "_action" not in changes.columns:
+        changes = changes.withColumn("_action", F.lit("index"))
+    changes = changes.withColumn(
+        "_action", F.coalesce(F.col("_action"), F.lit("index"))
+    )
+    # LAST action per key wins, deterministically: ordered by the
+    # change-sequence column — explicit `_seq` if provided, else the
+    # row timestamp `ts` — with `_action` as the final tiebreak so
+    # equal-sequence batches still resolve identically across runs
+    # (the reference processes actions strictly in stream order,
+    # ds.py:67-70; a micro-batch must reproduce that order)
+    seq = (
+        F.col("_seq")
+        if "_seq" in changes.columns
+        else (F.col("ts") if "ts" in changes.columns else F.lit(0))
+    )
+    # final tiebreak: a deterministic payload digest, so two rows that
+    # tie on BOTH (_seq, _action) — e.g. duplicate 'index' actions with
+    # different text at the same _seq — still resolve identically
+    # across runs (never by partition luck); the ordering is total
+    payload_cols = [
+        c for c in changes.columns
+        if c not in ("conv_id", "turn_idx", "_seq")
+    ]
+    wseq = Window.partitionBy("conv_id", "turn_idx").orderBy(
+        seq.desc(),
+        F.col("_action").desc(),
+        F.xxhash64(*[F.col(c).cast("string") for c in payload_cols]).desc(),
+    )
+    changes = (
+        changes.withColumn("__rn", F.row_number().over(wseq))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", *(["_seq"] if "_seq" in changes.columns else []))
+    )
+
+    # ``allow_null=False`` fields: an upsert whose required field is
+    # empty is not indexable — the reference's index_document skips
+    # it, which on an update leaves the old doc deindexed; here that
+    # is exactly a delete action (no-op if the key never existed)
+    viol = field_null_violation(changes, cfg)
+    if viol is not None:
+        changes = changes.withColumn(
+            "_action",
+            F.when(
+                (F.col("_action") != "delete") & viol, F.lit("delete")
+            ).otherwise(F.col("_action")),
+        )
+    return changes.select(
+        "conv_id", "turn_idx", "_action",
+        *[c for c in changes.columns if c not in ("conv_id", "turn_idx", "_action")],
+    )
+
+
 def apply_actions(
     spark: SparkSession,
     paths: IndexPaths | str,
@@ -205,6 +277,12 @@ def apply_actions(
     partitions purely by snapshot-manifest reference — nothing is
     linked or copied, and readers resolve tables via
     ``build.read_table``.
+
+    Each relation is computed once per batch: the change set is
+    resolved against the docs table in one join, the touched docs are
+    analyzed once (docs, blocks AND touched pairs all come from those
+    rows), and the dictionary is folded once. Every relation the batch
+    persists is released before it returns or raises.
     """
     paths = paths if isinstance(paths, IndexPaths) else IndexPaths(Path(paths))
     fileio = fileio or LocalFileIO()
@@ -222,378 +300,318 @@ def apply_actions(
                 "replayed": True,
             }
 
-    if "_action" not in changes.columns:
-        changes = changes.withColumn("_action", F.lit("index"))
-    changes = changes.withColumn(
-        "_action", F.coalesce(F.col("_action"), F.lit("index"))
-    )
-    # LAST action per key wins, deterministically: ordered by the
-    # change-sequence column — explicit `_seq` if provided, else the
-    # row timestamp `ts` — with `_action` as the final tiebreak so
-    # equal-sequence batches still resolve identically across runs
-    # (the reference processes actions strictly in stream order,
-    # ds.py:67-70; a micro-batch must reproduce that order)
-    from pyspark.sql.window import Window as _W
-
-    seq = (
-        F.col("_seq")
-        if "_seq" in changes.columns
-        else (F.col("ts") if "ts" in changes.columns else F.lit(0))
-    )
-    # final tiebreak: a deterministic payload digest, so two rows that
-    # tie on BOTH (_seq, _action) — e.g. duplicate 'index' actions with
-    # different text at the same _seq — still resolve identically
-    # across runs (never by partition luck); the ordering is total
-    payload_cols = [
-        c for c in changes.columns
-        if c not in ("conv_id", "turn_idx", "_seq")
-    ]
-    wseq = _W.partitionBy("conv_id", "turn_idx").orderBy(
-        seq.desc(),
-        F.col("_action").desc(),
-        F.xxhash64(*[F.col(c).cast("string") for c in payload_cols]).desc(),
-    )
-    changes = (
-        changes.withColumn("__rn", F.row_number().over(wseq))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", *(["_seq"] if "_seq" in changes.columns else []))
-    )
-
-    # ``allow_null=False`` fields: an upsert whose required field is
-    # empty is not indexable — the reference's index_document skips
-    # it, which on an update leaves the old doc deindexed; here that
-    # is exactly a delete action (no-op if the key never existed)
-    from .build import field_null_violation
-
-    viol = field_null_violation(changes, cfg)
-    if viol is not None:
-        changes = changes.withColumn(
-            "_action",
-            F.when(
-                (F.col("_action") != "delete") & viol, F.lit("delete")
-            ).otherwise(F.col("_action")),
-        )
-
+    keyed = _last_action_per_key(changes, cfg)
     docs = read_table(spark, cur, "docs")
-    keyed = changes.select(
-        "conv_id", "turn_idx", "_action",
-        *[c for c in changes.columns if c not in ("conv_id", "turn_idx", "_action")],
-    )
-    existing = docs.select("conv_id", "turn_idx", "doc_index").join(
-        F.broadcast(keyed.select("conv_id", "turn_idx")), ["conv_id", "turn_idx"],
-        "left_semi",
-    )
-
-    deletes = keyed.filter(F.col("_action") == "delete")
-    upserts = keyed.filter(F.col("_action") != "delete")
-
-    # ids: updates keep their doc_index; new docs append after max
-    upd = upserts.join(
-        docs.select("conv_id", "turn_idx", "doc_index"),
-        ["conv_id", "turn_idx"],
-        "left",
-    )
-    max_id = docs.agg(F.max("doc_index")).collect()[0][0]
-    max_id = -1 if max_id is None else int(max_id)
-    new_rows = upd.filter(F.col("doc_index").isNull()).drop("doc_index")
-    n_new = new_rows.count()
-    cached_ids = None
-    if n_new > cfg.cdc_backfill_threshold:
-        # backfill-sized batch: the two-pass range assigner (no
-        # global window — id assignment must not serialize through
-        # one task), offset past the existing id space
-        parts = max(1, min(cfg.build_partitions, n_new // 50_000 + 1))
-        assigned, cached_ids = assign_doc_ids(new_rows, parts)
-        new_rows = assigned.withColumn(
-            "doc_index", F.col("doc_index") + F.lit(max_id + 1)
-        )
-    else:
-        # micro-batch: one small window task is cheaper than the
-        # assigner's extra pass
-        from pyspark.sql.window import Window
-
-        w = Window.orderBy("conv_id", "turn_idx")
-        new_rows = new_rows.withColumn(
-            "doc_index", F.row_number().over(w).cast("long") + F.lit(max_id)
-        )
-    upserted = upd.filter(F.col("doc_index").isNotNull()).unionByName(new_rows)
-
-    # touched pbuckets = buckets of deleted ∪ updated ∪ new doc ids
-    touched_ids = (
-        existing.select("doc_index")
-        .unionByName(upserted.select("doc_index"))
-        .distinct()
-    )
+    keys = ["conv_id", "turn_idx"]
     shift = cfg.doc_bucket_bits + cfg.pbucket_shift
-    touched_pb = sorted(
-        r["pb"]
-        for r in touched_ids.select(
-            F.shiftright("doc_index", shift).alias("pb")
-        ).distinct().collect()
-    )
-    if not touched_pb:
-        # no-op batch: no new snapshot — report the STILL-CURRENT
-        # version so callers reading metrics["version"] (as the
-        # docstring promises) never KeyError
-        return {
-            "upserts": 0,
-            "deletes": 0,
-            "touched_pbuckets": [],
-            "version": cur.version or 0,
+    with ExitStack() as held:
+        # the change set resolved ONCE: every key's last action with its
+        # current doc_index (null → a key the index does not hold). Counts,
+        # touched pbuckets, id assignment and the survivors anti-join all
+        # read this one relation — the dedup window and the docs join run
+        # once per batch. Both joins broadcast the batch side, so the
+        # docs scan is never shuffled
+        matched = docs.select(*keys, "doc_index").join(
+            F.broadcast(keyed.select(*keys)), keys, "left_semi"
+        )
+        resolved = _persist_scoped(
+            held, keyed.join(F.broadcast(matched), keys, "left")
+        )
+        is_del = F.col("_action") == "delete"
+        counts = resolved.agg(
+            F.count(F.when(~is_del, 1)).alias("n_up"),
+            F.count(F.when(is_del, 1)).alias("n_del"),
+            F.count(F.when(~is_del & F.col("doc_index").isNull(), 1)).alias("n_new"),
+            F.collect_set(F.shiftright("doc_index", shift)).alias("old_pb"),
+        ).collect()[0]
+        n_new = int(counts["n_new"])
+        # per-pbucket (count, Σdl, max id) of the live docs: one scan of
+        # three narrow columns gives the id space's tail AND the old stats
+        # of whichever pbuckets the batch touches (≤ n_docs / 2^shift rows)
+        pb_stats = {
+            r["pbucket"]: r
+            for r in docs.groupBy("pbucket").agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl"),
+                F.max("doc_index").alias("max_id"),
+            ).collect()
         }
+        max_id = max((int(r["max_id"]) for r in pb_stats.values()), default=-1)
 
-    # --- staging snapshot: all writes land here; nothing under the
-    # current snapshot is ever modified ------------------------------
-    stg_version = (cur.version or 0) + 1
-    stg = IndexPaths(cur.root, stg_version)
-    if stg.snapshot_root.exists():  # crashed, never-published staging
-        shutil.rmtree(stg.snapshot_root)
-    stale_manifest = stg.snapshot_manifest_file(stg_version)
-    if stale_manifest.exists():
-        stale_manifest.unlink()
-    stg.snapshot_root.mkdir(parents=True)
+        # touched pbuckets = buckets of deleted ∪ updated ids, plus the
+        # new ids [max_id+1, max_id+n_new] (dense — both assigners below)
+        touched_pb = set(counts["old_pb"])
+        if n_new:
+            touched_pb.update(
+                range((max_id + 1) >> shift, ((max_id + n_new) >> shift) + 1)
+            )
+        touched_pb = sorted(touched_pb)
+        if not touched_pb:
+            # no-op batch: no new snapshot — report the STILL-CURRENT
+            # version so callers reading metrics["version"] (as the
+            # docstring promises) never KeyError
+            return {
+                "upserts": 0,
+                "deletes": 0,
+                "touched_pbuckets": [],
+                "version": cur.version or 0,
+            }
 
-    # rebuild the touched doc partitions: survivors + upserts
-    doc_cols = [c for c in docs.columns if c not in ("dl", "pbucket")]
-    survivors = (
-        docs.filter(F.col("pbucket").isin(touched_pb))
-        .join(
-            F.broadcast(keyed.select("conv_id", "turn_idx")),
-            ["conv_id", "turn_idx"],
-            "left_anti",
+        # ids: updates keep their doc_index; new docs append after max
+        upserts = resolved.filter(~is_del)
+        new_rows = upserts.filter(F.col("doc_index").isNull()).drop("doc_index")
+        if n_new > cfg.cdc_backfill_threshold:
+            # backfill-sized batch: the two-pass range assigner (no
+            # global window — id assignment must not serialize through
+            # one task), offset past the existing id space
+            parts = max(1, min(cfg.build_partitions, n_new // 50_000 + 1))
+            assigned, cached_ids = assign_doc_ids(new_rows, parts)
+            held.callback(cached_ids.unpersist)
+            new_rows = assigned.withColumn(
+                "doc_index", F.col("doc_index") + F.lit(max_id + 1)
+            )
+        else:
+            # micro-batch: one small window task is cheaper than the
+            # assigner's extra pass
+            from pyspark.sql.window import Window
+
+            w = Window.orderBy("conv_id", "turn_idx")
+            new_rows = new_rows.withColumn(
+                "doc_index", F.row_number().over(w).cast("long") + F.lit(max_id)
+            )
+        upserted = upserts.filter(F.col("doc_index").isNotNull()).unionByName(new_rows)
+
+        # --- staging snapshot: all writes land here; nothing under the
+        # current snapshot is ever modified ------------------------------
+        stg_version = (cur.version or 0) + 1
+        stg = IndexPaths(cur.root, stg_version)
+        if stg.snapshot_root.exists():  # crashed, never-published staging
+            shutil.rmtree(stg.snapshot_root)
+        stale_manifest = stg.snapshot_manifest_file(stg_version)
+        if stale_manifest.exists():
+            stale_manifest.unlink()
+        stg.snapshot_root.mkdir(parents=True)
+
+        # rebuild the touched doc partitions: survivors + upserts
+        doc_cols = [c for c in docs.columns if c not in ("dl", "pbucket")]
+        survivors = (
+            docs.filter(F.col("pbucket").isin(touched_pb))
+            .join(F.broadcast(resolved.select(*keys)), keys, "left_anti")
+            .select(*doc_cols)
         )
-        .select(*doc_cols)
-    )
-    ups_cols = upserted
-    if "importance" not in ups_cols.columns:
-        ups_cols = ups_cols.withColumn("importance", F.lit(0.0))
-    ups_cols = ups_cols.select(
-        *[F.col(c) if c in ups_cols.columns else F.lit(None).alias(c) for c in doc_cols]
-    )
-    new_docs = survivors.unionByName(ups_cols)
+        ups_cols = upserted
+        if "importance" not in ups_cols.columns:
+            ups_cols = ups_cols.withColumn("importance", F.lit(0.0))
+        ups_cols = ups_cols.select(*[
+            F.col(c) if c in ups_cols.columns else F.lit(None).alias(c)
+            for c in doc_cols
+        ])
+        new_docs = survivors.unionByName(ups_cols)
 
-    # old stats of the touched doc partitions (partition-pruned read)
-    # — lets n_docs / sum_dl update incrementally instead of
-    # re-scanning the whole docs table
-    old_stats = (
-        docs.filter(F.col("pbucket").isin(touched_pb))
-        .agg(
+        # analyze ONCE (the bulk build's shape): dl comes from the
+        # analyzer's own counter, and the docs, blocks and touched pairs
+        # all read these analyzed rows — no second analysis pass, no dl
+        # groupBy, no block unpack for the pair refresh
+        analyzed_new = _persist_scoped(held, analyze_docs(new_docs, cfg))
+        docs_part = _with_pbucket(
+            analyzed_new.withColumn("dl", F.col("__an.dl")).drop("__an"), cfg
+        )
+        # the new stats of the touched doc partitions ride on the docs
+        # write (an observed metric, no job of their own); the old ones
+        # came with the id-space scan — n_docs / sum_dl update
+        # incrementally instead of re-scanning the whole docs table
+        new_stats = Observation("cdc_new_docs")
+        docs_part = docs_part.observe(
+            new_stats,
             F.count(F.lit(1)).alias("cnt"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl"),
         )
-        .collect()[0]
-    )
-
-    # analyze ONCE (the bulk build's shape): dl comes from the
-    # analyzer's own counter and the blocks rebuild reuses the same
-    # analyzed rows through the local-pack path — no second
-    # analysis pass for the token-string join-back, no dl groupBy
-    analyzed_new = analyze_docs(new_docs, cfg).persist()
-    docs_part = _with_pbucket(
-        analyzed_new.withColumn("dl", F.col("__an.dl")).drop("__an"), cfg
-    ).persist()
-    # untouched partitions: shared into the staging snapshot
-    # (hardlinks) when the FileIO supports it, else left as manifest
-    # references; touched partitions: appended fresh (a partition
-    # that became EMPTY is neither shared nor written — no orphan
-    # postings, the reference's deindex invariant,
-    # tests/test_index_utils.py:94-114)
-    if linked:
-        _stage_partitions(cur.docs, stg.docs, set(touched_pb), "pbucket=",
-                          fileio)
-    docs_part.write.mode("append").partitionBy("pbucket").parquet(stg.docs)
-
-    # rebuild the touched posting partitions (filter-set rows are
-    # synthesized inside the local packer, same as the bulk build)
-    blocks = build_blocks_from_analyzed(analyzed_new, cfg)
-    if linked:
-        _stage_partitions(cur.blocks, stg.blocks, set(touched_pb),
-                          "pbucket=", fileio)
-    blocks.write.mode("append").partitionBy("pbucket").parquet(stg.blocks)
-    analyzed_new.unpersist()
-
-    new_stats = (
-        docs_part.filter(F.col("pbucket").isin(touched_pb))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl"),
-        )
-        .collect()[0]
-    )
-    docs_part.unpersist()
-    if cached_ids is not None:
-        cached_ids.unpersist()
-
-    # --- dictionary: per-pbucket partials, touched partitions only --
-    # (O(touched) — untouched pbuckets' block files are never read;
-    # the global fold reads only the tiny partials table. The old
-    # partials stay readable at the current snapshot, so no scratch
-    # materialization is needed to know the previously-present tokens)
-    blocks_touched = spark.read.parquet(stg.blocks).filter(
-        F.col("pbucket").isin(touched_pb)
-    )
-    changed_tokens = None  # None → unknown → full prefix rewrite
-    partials_full_rewrite = not table_exists(cur, "dict_partials")
-    if not partials_full_rewrite:
+        # untouched partitions: shared into the staging snapshot
+        # (hardlinks) when the FileIO supports it, else left as manifest
+        # references; touched partitions: appended fresh (a partition
+        # that became EMPTY is neither shared nor written — no orphan
+        # postings, the reference's deindex invariant,
+        # tests/test_index_utils.py:94-114)
         if linked:
-            _stage_partitions(cur.dict_partials, stg.dict_partials,
-                              set(touched_pb), "pbucket=", fileio)
-        dict_partials_from_blocks(blocks_touched).repartitionByRange(
+            _stage_partitions(cur.docs, stg.docs, set(touched_pb), "pbucket=",
+                              fileio)
+        docs_part.write.mode("append").partitionBy("pbucket").parquet(stg.docs)
+
+        # rebuild the touched posting partitions (filter-set rows are
+        # synthesized inside the local packer, same as the bulk build)
+        blocks = build_blocks_from_analyzed(analyzed_new, cfg)
+        if linked:
+            _stage_partitions(cur.blocks, stg.blocks, set(touched_pb),
+                              "pbucket=", fileio)
+        blocks.write.mode("append").partitionBy("pbucket").parquet(stg.blocks)
+
+        # --- dictionary: per-pbucket partials, touched partitions only --
+        # (O(touched) — untouched pbuckets' block files are never read;
+        # the global fold reads only the tiny partials table. The old
+        # partials stay readable at the current snapshot, so no scratch
+        # materialization is needed to know the previously-present tokens)
+        changed_tokens = None  # None → unknown → full prefix rewrite
+        partials_full_rewrite = not table_exists(cur, "dict_partials")
+        if partials_full_rewrite:
+            # legacy index (pre-partials layout): one full derivation
+            # upgrades it; subsequent batches are incremental
+            partials_src = _staged_view(spark, cur, stg, "blocks",
+                                        set(touched_pb), "pbucket", linked)
+        else:
+            if linked:
+                _stage_partitions(cur.dict_partials, stg.dict_partials,
+                                  set(touched_pb), "pbucket=", fileio)
+            partials_src = spark.read.parquet(stg.blocks).filter(
+                F.col("pbucket").isin(touched_pb)
+            )
+        # hash repartition (not range), as the bulk build: the range
+        # sampler would re-run the blocks aggregation
+        dict_partials_from_blocks(partials_src).repartition(
             cfg.build_partitions, "pbucket", "token"
         ).sortWithinPartitions("pbucket", "token").write.mode(
-            "append"
+            "overwrite" if partials_full_rewrite else "append"
         ).partitionBy("pbucket").parquet(stg.dict_partials)
-        changed_tokens = (
-            read_table(spark, cur, "dict_partials")
-            .filter(F.col("pbucket").isin(touched_pb))
-            .select("token")
-            .unionByName(
-                spark.read.parquet(stg.dict_partials)
+        if not partials_full_rewrite:
+            # read by the crossing check and the prefix refresh (three
+            # times there) — computed once
+            changed_tokens = _persist_scoped(held, (
+                read_table(spark, cur, "dict_partials")
                 .filter(F.col("pbucket").isin(touched_pb))
                 .select("token")
+                .unionByName(
+                    spark.read.parquet(stg.dict_partials)
+                    .filter(F.col("pbucket").isin(touched_pb))
+                    .select("token")
+                )
+                .distinct()
+            ))
+
+        partials_view = _staged_view(
+            spark, cur, stg, "dict_partials",
+            set() if partials_full_rewrite else set(touched_pb),
+            "pbucket", linked or partials_full_rewrite,
+        )
+        dictionary_from_partials(partials_view).repartitionByRange(
+            cfg.build_partitions, "token"
+        ).sortWithinPartitions("token").write.mode("overwrite").parquet(
+            stg.dictionary
+        )
+        dict_disk = spark.read.parquet(stg.dictionary)
+        # tokens whose COMMON status flips this batch invalidate pair
+        # partitions beyond the touched set (the pair table excludes the
+        # Zipf head by global df) — the OLD dictionary (still intact at
+        # the current snapshot) against the one just written
+        crossing: list[str] = []
+        if (
+            changed_tokens is not None
+            and table_exists(cur, "pairs")
+            and cfg.cdc_rebuild_pairs
+        ):
+            old_df = read_table(spark, cur, "dictionary").select(
+                "token", F.col("df").alias("odf")
             )
-            .distinct()
-        )
-    else:
-        # legacy index (pre-partials layout): one full derivation
-        # upgrades it; subsequent batches are incremental
-        dict_partials_from_blocks(
-            _staged_view(spark, cur, stg, "blocks", set(touched_pb),
-                         "pbucket", linked)
-        ).repartitionByRange(
-            cfg.build_partitions, "pbucket", "token"
-        ).sortWithinPartitions(
-            "pbucket", "token"
-        ).write.mode("overwrite").partitionBy("pbucket").parquet(
-            stg.dict_partials
-        )
+            crossing = [
+                r["token"]
+                for r in changed_tokens.join(old_df, "token", "left")
+                .join(
+                    dict_disk.select("token", F.col("df").alias("ndf")),
+                    "token",
+                    "left",
+                )
+                .filter(
+                    (F.coalesce(F.col("odf"), F.lit(0)) > cfg.common_threshold)
+                    != (F.coalesce(F.col("ndf"), F.lit(0)) > cfg.common_threshold)
+                )
+                .select("token")
+                .collect()
+            ]
 
-    partials_view = _staged_view(
-        spark, cur, stg, "dict_partials",
-        set() if partials_full_rewrite else set(touched_pb),
-        "pbucket", linked or partials_full_rewrite,
-    )
-    new_dict = dictionary_from_partials(partials_view)
-    # tokens whose COMMON status flips this batch invalidate pair
-    # partitions beyond the touched set (the pair table excludes the
-    # Zipf head by global df) — detect them against the OLD
-    # dictionary (still intact at the current snapshot)
-    crossing: list[str] = []
-    if (
-        changed_tokens is not None
-        and table_exists(cur, "pairs")
-        and cfg.cdc_rebuild_pairs
-    ):
-        old_df = read_table(spark, cur, "dictionary").select(
-            "token", F.col("df").alias("odf")
-        )
-        crossing = [
-            r["token"]
-            for r in changed_tokens.join(old_df, "token", "left")
-            .join(
-                new_dict.select("token", F.col("df").alias("ndf")),
-                "token",
-                "left",
+        # --- prefixes: rewrite only the hash buckets of changed tokens --
+        pfx_rewritten: set[str] | str = "full"
+        if table_exists(cur, "prefixes"):
+            pfx_rewritten = _refresh_prefixes(
+                spark, cur, stg, dict_disk, changed_tokens, cfg, fileio
             )
-            .filter(
-                (F.coalesce(F.col("odf"), F.lit(0)) > cfg.common_threshold)
-                != (F.coalesce(F.col("ndf"), F.lit(0)) > cfg.common_threshold)
+
+        # --- pairs: rebuild touched partitions (+ partitions holding a
+        # common-threshold-crossing token), never the whole corpus ------
+        pairs_rewritten: set[str] | str = "full"
+        if table_exists(cur, "pairs") and cfg.cdc_rebuild_pairs:
+            pairs_rewritten = _refresh_pairs(
+                spark, cur, stg, dict_disk, partials_view, analyzed_new,
+                touched_pb, crossing, cfg, fileio,
             )
-            .select("token")
-            .collect()
-        ]
-    new_dict.repartitionByRange(
-        cfg.build_partitions, "token"
-    ).sortWithinPartitions("token").write.mode("overwrite").parquet(
-        stg.dictionary
-    )
-    dict_disk = spark.read.parquet(stg.dictionary)
+        # (cdc_rebuild_pairs=False → pairs simply absent from the new
+        # snapshot; the engine degrades to pairs=None expansion pruning)
 
-    # --- prefixes: rewrite only the hash buckets of changed tokens --
-    pfx_rewritten: set[str] | str = "full"
-    if table_exists(cur, "prefixes"):
-        pfx_rewritten = _refresh_prefixes(
-            spark, cur, stg, dict_disk, changed_tokens, cfg, fileio
+        # refresh meta (n_docs / avgdl) incrementally + lineage record
+        meta = json.loads(cur.meta.read_text())
+        if "sum_dl" in meta:
+            new = new_stats.get
+            old = [pb_stats[pb] for pb in touched_pb if pb in pb_stats]
+            n_docs = meta["n_docs"] - sum(int(r["cnt"]) for r in old) + int(new["cnt"])
+            sum_dl = meta["sum_dl"] - sum(int(r["sdl"]) for r in old) + int(new["sdl"])
+        else:  # legacy meta: one full single-column scan re-baselines it
+            docs_now = _staged_view(
+                spark, cur, stg, "docs", set(touched_pb), "pbucket", linked
+            )
+            n_docs = docs_now.count()
+            sum_dl = int(docs_now.agg(F.sum("dl")).collect()[0][0] or 0)
+        meta["n_docs"] = int(n_docs)
+        meta["sum_dl"] = int(sum_dl)
+        meta["avgdl"] = float(sum_dl) / max(n_docs, 1)
+        n_up, n_del = int(counts["n_up"]), int(counts["n_del"])
+        lineage = {
+            "upserts": n_up,
+            "deletes": n_del,
+            "touched_pbuckets": touched_pb,
+            "version": stg_version,
+        }
+        if batch_id is not None:
+            lineage["batch_id"] = batch_id
+        meta.setdefault("applied_batches", []).append(lineage)
+        stg.meta.write_text(json.dumps(meta, indent=2))
+
+        # --- snapshot manifest: per-table entry → root-relative location.
+        # With links every location points into the materialized staging
+        # tree (the manifest is then just a listing); without links the
+        # untouched partitions keep their previous locations — sharing by
+        # reference, which is what makes the layout object-store-safe ----
+        tables: dict[str, dict[str, str]] = {}
+        pbnames = {f"pbucket={v}" for v in touched_pb}
+        for t, rewritten in (
+            ("docs", pbnames),
+            ("blocks", pbnames),
+            ("dict_partials", "full" if partials_full_rewrite else pbnames),
+            ("dictionary", "full"),
+            ("prefixes", pfx_rewritten),
+            ("pairs", pairs_rewritten),
+        ):
+            entries = _next_entries(cur, stg, t, rewritten)
+            if entries:
+                tables[t] = entries
+        stg.snapshot_manifest_file(stg_version).write_text(
+            json.dumps(
+                {
+                    "version": stg_version,
+                    "materialized": bool(linked),
+                    "tables": tables,
+                },
+                indent=2,
+            )
         )
 
-    # --- pairs: rebuild touched partitions (+ partitions holding a
-    # common-threshold-crossing token), never the whole corpus ------
-    pairs_rewritten: set[str] | str = "full"
-    if table_exists(cur, "pairs") and cfg.cdc_rebuild_pairs:
-        pairs_rewritten = _refresh_pairs(
-            spark, cur, stg, dict_disk, partials_view, touched_pb,
-            crossing, cfg, fileio,
+        # --- atomic publish: one pointer swap of CURRENT.json (local:
+        # os.replace; object store: single PUT) --------------------------
+        IndexPaths(cur.root).publish(
+            stg_version, keep=cfg.snapshot_keep, fileio=fileio
         )
-    # (cdc_rebuild_pairs=False → pairs simply absent from the new
-    # snapshot; the engine degrades to pairs=None expansion pruning)
-
-    # refresh meta (n_docs / avgdl) incrementally + lineage record
-    meta = json.loads(cur.meta.read_text())
-    if "sum_dl" in meta:
-        n_docs = meta["n_docs"] - int(old_stats["cnt"]) + int(new_stats["cnt"])
-        sum_dl = meta["sum_dl"] - int(old_stats["sdl"]) + int(new_stats["sdl"])
-    else:  # legacy meta: one full single-column scan re-baselines it
-        docs_now = _staged_view(
-            spark, cur, stg, "docs", set(touched_pb), "pbucket", linked
-        )
-        n_docs = docs_now.count()
-        sum_dl = int(docs_now.agg(F.sum("dl")).collect()[0][0] or 0)
-    meta["n_docs"] = int(n_docs)
-    meta["sum_dl"] = int(sum_dl)
-    meta["avgdl"] = float(sum_dl) / max(n_docs, 1)
-    n_up = upserted.count()
-    n_del = deletes.count()
-    lineage = {
-        "upserts": n_up,
-        "deletes": n_del,
-        "touched_pbuckets": touched_pb,
-        "version": stg_version,
-    }
-    if batch_id is not None:
-        lineage["batch_id"] = batch_id
-    meta.setdefault("applied_batches", []).append(lineage)
-    stg.meta.write_text(json.dumps(meta, indent=2))
-
-    # --- snapshot manifest: per-table entry → root-relative location.
-    # With links every location points into the materialized staging
-    # tree (the manifest is then just a listing); without links the
-    # untouched partitions keep their previous locations — sharing by
-    # reference, which is what makes the layout object-store-safe ----
-    tables: dict[str, dict[str, str]] = {}
-    pbnames = {f"pbucket={v}" for v in touched_pb}
-    for t, rewritten in (
-        ("docs", pbnames),
-        ("blocks", pbnames),
-        ("dict_partials", "full" if partials_full_rewrite else pbnames),
-        ("dictionary", "full"),
-        ("prefixes", pfx_rewritten),
-        ("pairs", pairs_rewritten),
-    ):
-        entries = _next_entries(cur, stg, t, rewritten)
-        if entries:
-            tables[t] = entries
-    stg.snapshot_manifest_file(stg_version).write_text(
-        json.dumps(
-            {
-                "version": stg_version,
-                "materialized": bool(linked),
-                "tables": tables,
-            },
-            indent=2,
-        )
-    )
-
-    # --- atomic publish: one pointer swap of CURRENT.json (local:
-    # os.replace; object store: single PUT) --------------------------
-    IndexPaths(cur.root).publish(
-        stg_version, keep=cfg.snapshot_keep, fileio=fileio
-    )
-    return {
-        "upserts": n_up,
-        "deletes": n_del,
-        "touched_pbuckets": touched_pb,
-        "version": stg_version,
-    }
+        return {
+            "upserts": n_up,
+            "deletes": n_del,
+            "touched_pbuckets": touched_pb,
+            "version": stg_version,
+        }
 
 
 def _refresh_prefixes(
@@ -668,6 +686,7 @@ def _refresh_pairs(
     stg: IndexPaths,
     dict_disk: DataFrame,
     partials_view: DataFrame,
+    analyzed: DataFrame,
     touched_pb: list[int],
     crossing: list[str],
     cfg: EngineConfig,
@@ -675,12 +694,13 @@ def _refresh_pairs(
 ) -> set[str] | str:
     """Stage the pair table's next snapshot: untouched pbucket
     partitions shared (hardlink or manifest reference), touched ones
-    (plus any partition holding a token that crossed the common
-    threshold this batch) re-derived from the staged blocks only. A
-    partition rebuilt to zero pairs is simply not written — the
-    stale-dir hazard of in-place dynamic overwrite cannot occur.
-    Returns the rebuilt partition names (or "full") for the snapshot
-    manifest."""
+    re-derived from the batch's ``analyzed`` rows (which hold every
+    doc of the touched pbuckets), and any other partition holding a
+    token that crossed the common threshold this batch re-derived
+    from its staged blocks. A partition rebuilt to zero pairs is
+    simply not written — the stale-dir hazard of in-place dynamic
+    overwrite cannot occur. Returns the rebuilt partition names (or
+    "full") for the snapshot manifest."""
     if cur.read_snapshot_manifest() is not None:
         legacy = False  # manifest-bearing snapshots are never legacy
     else:
@@ -700,27 +720,37 @@ def _refresh_pairs(
             .collect()
         )
     linked = fileio.supports_links
-    if legacy:
-        src = _staged_view(
+
+    def staged_blocks():
+        return _staged_view(
             spark, cur, stg, "blocks", set(touched_pb), "pbucket", linked
         )
+
+    if legacy:
+        pairs = pairs_from_blocks(staged_blocks(), dict_disk, cfg)
         mode = "overwrite"
     else:
         if linked:
             _stage_partitions(cur.pairs, stg.pairs, rebuild, "pbucket=",
                               fileio)
-        # rebuild may exceed touched_pb (threshold-crossing tokens
-        # live in untouched pbuckets too) — read through the staged
-        # VIEW so those partitions' blocks resolve by reference
-        src = _staged_view(
-            spark, cur, stg, "blocks", set(touched_pb), "pbucket", linked
-        ).filter(F.col("pbucket").isin(sorted(rebuild)))
+        # touched pbuckets: each doc's distinct tokens are already in
+        # its analyzed row — no block unpack, no regroup-by-doc shuffle
+        pairs = pairs_from_analyzed(analyzed, dict_disk, cfg)
+        # a crossing token's other pbuckets were not analyzed this
+        # batch: unpack their blocks (read through the staged VIEW, so
+        # they resolve by reference too)
+        extra = sorted(rebuild - set(touched_pb))
+        if extra:
+            pairs = pairs.unionByName(pairs_from_blocks(
+                staged_blocks().filter(F.col("pbucket").isin(extra)),
+                dict_disk, cfg,
+            ))
         mode = "append"
     # HASH repartition (not range): the range sampler re-executes the
     # pair-expansion child — the measured 2× of the bulk stage; files
     # stay (token_a, token_b)-sorted within partitions for row-group
     # pruning, which is the part the probes need
-    pairs_from_blocks(src, dict_disk, cfg).repartition(
+    pairs.repartition(
         cfg.build_partitions, "pbucket", "token_a"
     ).sortWithinPartitions("pbucket", "token_a", "token_b").write.mode(
         mode

@@ -231,7 +231,11 @@ def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path):
     (b) the partials read plan carrying a pbucket partition filter —
     while global df/cf stay EXACTLY consistent (full-recompute
     comparison)."""
-    from addok_spark.index.build import dictionary_from_blocks
+    from addok_spark.index.build import (
+        dictionary_from_blocks,
+        pairs_from_blocks,
+        prefixes_from_dictionary,
+    )
 
     out = str(tmp_path / "idx_untouched")
     paths = build_index(spark, _bigger_corpus(spark), cfg, out)
@@ -283,6 +287,78 @@ def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path):
         ).collect()
     }
     assert got == want
+    # ...and so do the prefix and pair tables: each equals its full
+    # derivation from the published dictionary / blocks
+    dictionary = spark.read.parquet(paths.dictionary)
+    pfx_cols = ["prefix", "token", "df", "max_boost", "pfx_bucket"]
+    assert _rowset(spark.read.parquet(paths.prefixes), pfx_cols) == _rowset(
+        prefixes_from_dictionary(dictionary, cfg), pfx_cols
+    )
+    pair_cols = ["pbucket", "token_a", "token_b"]
+    assert _rowset(spark.read.parquet(paths.pairs), pair_cols) == _rowset(
+        pairs_from_blocks(spark.read.parquet(paths.blocks), dictionary, cfg),
+        pair_cols,
+    )
+
+
+def _rowset(df, cols):
+    return {tuple(r) for r in df.select(*cols).collect()}
+
+
+def test_legacy_layout_batch_is_exact(spark, cfg, tmp_path):
+    """An index from before the per-pbucket layouts — no dict_partials
+    table, a pair table without pbucket partitions, meta without
+    sum_dl — takes a batch through the full-derivation paths and
+    comes out exact, in the current layout."""
+    import shutil
+
+    from addok_spark.index.build import (
+        dict_partials_from_blocks,
+        dictionary_from_blocks,
+        pairs_from_blocks,
+    )
+
+    paths = build_index(spark, _bigger_corpus(spark), cfg,
+                        str(tmp_path / "idx_legacy"))
+    shutil.rmtree(paths.dict_partials)
+    flat = spark.createDataFrame(
+        spark.read.parquet(paths.pairs).select("token_a", "token_b")
+        .distinct().toPandas()
+    )
+    shutil.rmtree(paths.pairs)
+    flat.write.parquet(paths.pairs)
+    meta = json.loads(paths.meta.read_text())
+    del meta["sum_dl"]
+    paths.meta.write_text(json.dumps(meta))
+
+    changes = spark.createDataFrame(
+        [
+            ("conv-001", 0, "user", "alpha tok001 REVISED omega", None, 0.1, "index"),
+            ("conv-900", 0, "user", "alpha brand new omega", None, 0.1, "index"),
+            ("conv-002", 0, "user", None, None, 0.1, "delete"),
+        ],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, importance double, _action string",
+    )
+    apply_actions(spark, paths, changes, cfg)
+    blocks = spark.read.parquet(paths.blocks)
+    dictionary = spark.read.parquet(paths.dictionary)
+    dcols = ["token", "df", "cf", "max_tf", "max_boost"]
+    assert _rowset(dictionary, dcols) == _rowset(
+        dictionary_from_blocks(blocks), dcols
+    )
+    pcols = ["pbucket"] + dcols
+    assert _rowset(spark.read.parquet(paths.dict_partials), pcols) == _rowset(
+        dict_partials_from_blocks(blocks), pcols
+    )
+    pair_cols = ["pbucket", "token_a", "token_b"]
+    assert _rowset(spark.read.parquet(paths.pairs), pair_cols) == _rowset(
+        pairs_from_blocks(blocks, dictionary, cfg), pair_cols
+    )
+    docs = spark.read.parquet(paths.docs)
+    meta = json.loads(paths.meta.read_text())
+    assert meta["n_docs"] == docs.count() == 24
+    assert meta["sum_dl"] == docs.agg(F.sum("dl")).collect()[0][0]
 
 
 def test_common_threshold_crossing_rebuilds_pairs_exactly(spark, tmp_path):
@@ -346,6 +422,61 @@ def test_common_threshold_crossing_rebuilds_pairs_exactly(spark, tmp_path):
     }
     assert got == want
     assert not any("zulu" in p for p in got)
+
+
+def test_common_token_falling_below_threshold_regains_pairs(spark, tmp_path):
+    """The other crossing direction: deletes drop a COMMON token's df
+    to the threshold, so its pairs must reappear in pbuckets the batch
+    never touched — the one path that still unpacks posting blocks
+    (the batch holds no analyzed rows for those pbuckets)."""
+    from addok_spark.index.build import pairs_from_blocks
+
+    cfg2 = EngineConfig(
+        fields=(FieldSpec("text", 1.0),),
+        build_partitions=4,
+        doc_bucket_bits=2,
+        pbucket_shift=1,
+        posting_block_size=2,
+        common_threshold=2,
+    )
+    # 8 docs per pbucket: zulu sits in pbuckets 0, 1 and 2 → df=3 > 2
+    texts = [f"fill{i} word{i}" for i in range(17)]
+    texts[0], texts[8], texts[16] = "zulu first0", "zulu ninth8", "zulu last16"
+    rows = [(f"conv-{i:03d}", 0, "user", t, None, 0.1)
+            for i, t in enumerate(texts)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string,"
+        " tool string, importance double",
+    )
+    paths = build_index(spark, df, cfg2, str(tmp_path / "idx_uncommon"))
+    pairs0 = {
+        (r["token_a"], r["token_b"])
+        for r in spark.read.parquet(paths.pairs).collect()
+    }
+    assert not any("zulu" in p for p in pairs0)  # common: no pairs
+    # delete the pbucket-2 zulu doc -> df=2 -> no longer common
+    changes = spark.createDataFrame(
+        [("conv-016", 0, "user", None, None, 0.1, "delete")],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, importance double, _action string",
+    )
+    m = apply_actions(spark, paths, changes, cfg2)
+    assert m["touched_pbuckets"] == [2]
+    got = {
+        (r["pbucket"], r["token_a"], r["token_b"])
+        for r in spark.read.parquet(paths.pairs).collect()
+    }
+    want = {
+        (r["pbucket"], r["token_a"], r["token_b"])
+        for r in pairs_from_blocks(
+            spark.read.parquet(paths.blocks),
+            spark.read.parquet(paths.dictionary),
+            cfg2,
+        ).collect()
+    }
+    assert got == want
+    # the pairs came back in the two UNTOUCHED pbuckets
+    assert (0, "first0", "zulu") in got and (1, "ninth8", "zulu") in got
 
 
 def test_backfill_batch_routes_through_range_assigner(spark, cfg, built):
@@ -646,3 +777,51 @@ def test_time_travel_reads_pinned_versions(spark, cfg, built):
         [Query(qid="t", q="place des roses", k=5)]
     ).collect()
     assert any("roses" in (r["text"] or "").lower() for r in hits_v2)
+
+
+def _persisted_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("fail_on", [None, "blocks", "pairs"])
+def test_batch_releases_persisted_relations(spark, cfg, built, monkeypatch,
+                                            fail_on):
+    """Every relation a batch persists is released when it returns AND
+    when a staged write raises midway ("blocks": after the analyzed
+    rows are cached; "pairs": the last write) — nothing stays pinned
+    for the life of the session, and the failed batch publishes
+    nothing, so the next batch applies cleanly."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    changes = spark.createDataFrame(
+        [
+            ("conv-a", 0, "user", "rue des Tulipes", None, 0.5, "update"),
+            ("conv-e", 0, "user", "quai de la Loire", None, 0.2, "index"),
+            ("conv-b", 1, "tool", None, None, 0.0, "delete"),
+        ],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, importance double, _action string",
+    )
+    before = _persisted_rdds(spark)
+    if fail_on is None:
+        apply_actions(spark, built, changes, cfg)
+        assert _persisted_rdds(spark) == before
+        assert built.current_version() == 1
+        return
+
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *a, **kw):
+        if Path(path).name == fail_on:
+            raise OSError(f"injected failure writing {path}")
+        return real(self, path, *a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", failing)
+        with pytest.raises(OSError, match="injected"):
+            apply_actions(spark, built, changes, cfg)
+    assert _persisted_rdds(spark) == before
+    assert built.current_version() is None  # nothing was published
+    m = apply_actions(spark, built, changes, cfg)
+    assert m["version"] == 1 and _persisted_rdds(spark) == before
+    assert "tulipes" in _tokens(spark, built) and "lilas" not in _tokens(spark, built)

@@ -151,7 +151,7 @@ def test_pairs_table(spark, built):
 def test_pairs_from_analyzed_equals_pairs_from_blocks(spark, built, tiny_cfg):
     """The bulk-path derivation (per-doc token sets read straight from
     the analyzed scratch) must produce the identical pair set to the
-    CDC-path block-unpack derivation — including commons exclusion
+    block-unpack derivation — including commons exclusion
     (threshold lowered so the tiny corpus actually has a Zipf head)."""
     from dataclasses import replace
 
