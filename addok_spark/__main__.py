@@ -86,14 +86,14 @@ def cmd_ngrams(args) -> None:
     """Prefix-table post-pass (≙ `addok ngrams`): builds the edge
     n-gram table from the CURRENT dictionary. On a flat index (the
     usual deferred-mass-import case) it writes in place; on a
-    versioned index it publishes a new snapshot with every other
-    table hardlinked, so concurrent readers never observe a
+    versioned index it publishes a new snapshot that carries every
+    other table over (manifest references, hardlinked into the new
+    dir by LocalFileIO), so concurrent readers never observe a
     half-written prefix table."""
-    import shutil
     import time
     from pathlib import Path
 
-    from .index.build import IndexPaths, prefixes_from_dictionary
+    from .index.build import IndexPaths, prefixes_from_dictionary, read_table
     from .index.fileio import LocalFileIO
 
     fileio = LocalFileIO()
@@ -102,34 +102,16 @@ def cmd_ngrams(args) -> None:
     cfg = _cfg(args)  # honors --config: prefix table must be built
     # under the SAME min/max edge-ngram knobs as the index
     cur = IndexPaths(Path(args.index)).pin()
-    versioned = cur.current_version() is not None
-    man = cur.read_snapshot_manifest()
-    ref_only = man is not None and not man.get("materialized", True)
+    versioned = bool(cur.version)
+    out = cur
     if versioned:
-        stg = IndexPaths(cur.root, (cur.version or 0) + 1)
-        if stg.snapshot_root.exists():
-            shutil.rmtree(stg.snapshot_root)
-        stale = stg.snapshot_manifest_file(stg.version or 0)
-        if stale.exists():
-            stale.unlink()
-        stg.snapshot_root.mkdir(parents=True)
-        if not ref_only:
-            # materialized predecessor: share its tables physically
-            # (hardlinks); a reference-only one is carried purely via
-            # the manifest below
-            for name in (
-                "docs", "blocks", "dictionary", "dict_partials", "pairs"
-            ):
-                src = Path(getattr(cur, name))
-                if src.exists():
-                    fileio.share_tree(src, Path(getattr(stg, name)))
-        stg.meta.write_text(cur.meta.read_text())
-        out = stg
-    else:
-        out = cur
+        out = cur.stage_next()
+        for name in ("docs", "blocks", "dictionary", "dict_partials", "pairs"):
+            fileio.stage_partitions(
+                getattr(cur, name), getattr(out, name), (), ""
+            )
+        out.meta.write_text(cur.meta.read_text())
     t0 = time.time()
-    from .index.build import read_table
-
     dictionary = read_table(spark, cur, "dictionary")
     prefixes_from_dictionary(dictionary, cfg).repartitionByRange(
         cfg.build_partitions, "pfx_bucket", "prefix"
@@ -137,27 +119,7 @@ def cmd_ngrams(args) -> None:
         "overwrite"
     ).partitionBy("pfx_bucket").parquet(out.prefixes)
     if versioned:
-        from .index.incremental import _next_entries
-
-        from .index.build import MANIFEST_TABLES
-
-        tables = {}
-        for t in MANIFEST_TABLES:
-            entries = _next_entries(
-                cur, out, t, "full" if t == "prefixes" else set()
-            )
-            if entries:
-                tables[t] = entries
-        out.snapshot_manifest_file(out.version or 0).write_text(
-            json.dumps(
-                {
-                    "version": out.version,
-                    "materialized": not ref_only,
-                    "tables": tables,
-                },
-                indent=2,
-            )
-        )
+        out.write_manifest(cur, {"prefixes": "full"})
         IndexPaths(cur.root).publish(
             out.version, keep=cfg.snapshot_keep, fileio=fileio
         )

@@ -76,23 +76,45 @@ BLOCK_SCHEMA = T.ArrayType(
 )
 
 
+def _load_json(f: Path, what: str) -> dict | None:
+    """``f`` parsed, or None when it does not exist. A file that exists
+    but does not parse raises: a damaged pointer or manifest must never
+    read as "no snapshot" (that silently serves an older version)."""
+    if not f.exists():
+        return None
+    try:
+        obj = json.loads(f.read_text())
+        if not isinstance(obj, dict):
+            raise ValueError("not a JSON object")
+        return obj
+    except ValueError as e:
+        raise ValueError(f"damaged {what} {f}: {e}") from e
+
+
 @dataclass
 class IndexPaths:
-    """Index directory layout with versioned snapshot publish.
+    """Index directory layout, versioned snapshot publish, and the ONE
+    resolver of where a snapshot's table data lives.
 
     Two layouts coexist:
 
     - **flat** (a bulk build into an empty dir): tables live directly
       under ``root`` — ``version`` 0.
-    - **versioned** (after any CDC batch): each snapshot is a complete
-      table set under ``root/v{N:06d}/`` and ``root/CURRENT.json``
-      names the published one. Publish is a single atomic
-      ``os.replace`` of that manifest — the local-FS analog of an
-      Iceberg snapshot commit (the reference gets the same property
-      from Redis per-command atomicity). A reader NEVER sees a torn
-      table: writers only create new snapshot dirs (hardlinking
-      unchanged partition files, O(#files) not O(bytes)) and flip
-      CURRENT last.
+    - **versioned** (after any CDC batch or a rebuild over a versioned
+      index): snapshot N writes its files under ``root/v{N:06d}/``,
+      and ``root/snapshot-v{N:06d}.json`` (its manifest) maps each
+      table's partitions to root-relative locations — in that dir, or
+      in any earlier one when the FileIO shares untouched partitions
+      by reference instead of by hardlink. ``root/CURRENT.json`` names
+      the published version; publish is one atomic pointer swap (the
+      local-FS analog of an Iceberg snapshot commit). A reader never
+      sees a torn table: writers only create new snapshot dirs and
+      flip CURRENT last.
+
+    ``table_entries`` is where every reader starts: the manifest's
+    entries, or entries synthesized from the table dir when the
+    version has no manifest (flat v0). ``read_table`` (Spark) and
+    ``open_dataset`` (pyarrow) open exactly those entries.
 
     ``version=None`` (default) resolves CURRENT.json on every access —
     what mutators and tests want. Long-lived readers (SearchEngine,
@@ -105,13 +127,15 @@ class IndexPaths:
     version: int | None = None  # None → follow CURRENT.json; 0 → flat
 
     def current_version(self) -> int | None:
-        cur = self.root / "CURRENT.json"
-        if not cur.exists():
+        ptr = _load_json(self.root / "CURRENT.json", "snapshot pointer")
+        if ptr is None:
             return None
         try:
-            return int(json.loads(cur.read_text())["version"])
-        except Exception:
-            return None
+            return int(ptr["version"])
+        except (KeyError, TypeError, ValueError) as e:
+            raise ValueError(
+                f"damaged snapshot pointer {self.root / 'CURRENT.json'}: {e!r}"
+            ) from e
 
     def pin(self) -> "IndexPaths":
         """A copy fixed to the snapshot published right now."""
@@ -128,54 +152,108 @@ class IndexPaths:
         return self.root / f"v{v:06d}"
 
     def snapshot_manifest_file(self, version: int) -> Path:
-        """Immutable per-snapshot manifest: {"version": N,
-        "materialized": bool, "tables": {table: {entry: root-relative
-        location}}}. Entries are partition-dir names ("pbucket=3") or
-        "" for a table wholly inside one dir. With a link-capable
-        FileIO every location points into the materialized snapshot
-        tree; without links, locations reference whichever earlier
-        snapshot dir actually holds the bytes — sharing by reference,
-        the object-store-safe substitute for hardlinks."""
+        """Immutable per-snapshot manifest: {"version": N, "tables":
+        {table: {entry: root-relative location}}}. Entries are
+        partition-dir names ("pbucket=3") or "" for a table wholly
+        inside one dir. (Manifests written before this format also
+        carry a "materialized" flag; readers ignore it.)"""
         return self.root / f"snapshot-v{int(version):06d}.json"
 
     def read_snapshot_manifest(self) -> dict | None:
         """The pinned version's snapshot manifest, or None (flat v0 /
-        pre-manifest snapshots)."""
+        pre-manifest snapshots). Raises if the file is damaged."""
         v = self.version if self.version is not None else self.current_version()
         if not v:
             return None
-        f = self.snapshot_manifest_file(v)
-        if not f.exists():
-            return None
-        try:
-            return json.loads(f.read_text())
-        except Exception:
-            return None
+        return _load_json(self.snapshot_manifest_file(v), "snapshot manifest")
 
-    def table_locations(self, table: str) -> list[str] | None:
-        """Manifest-resolved absolute locations of ``table``'s data,
-        or None when the table should be read as a plain directory
-        (no manifest, or a materialized snapshot)."""
+    def dir_entries(self, table: str) -> dict[str, str]:
+        """Entries synthesized from this snapshot's own ``table`` dir:
+        one per partition dir, or the single entry "" for an
+        unpartitioned table; {} when the dir is missing or holds no
+        data (hidden files — _SUCCESS, _metrics.json, .crc — only, as
+        an empty partitioned write leaves it)."""
+        d = Path(getattr(self, table))
+        if not d.exists():
+            return {}
+        rel = str(d.relative_to(self.root))
+        names = [
+            p.name for p in sorted(d.iterdir())
+            if not p.name.startswith(("_", "."))
+        ]
+        if any("=" in n for n in names):
+            return {n: f"{rel}/{n}" for n in names if "=" in n}
+        return {"": rel} if names else {}
+
+    def table_entries(self, table: str) -> dict[str, str]:
+        """Where ``table``'s data lives in this snapshot — straight from
+        the manifest when the version has one (locations stay valid
+        verbatim: manifests only reference immutable dirs), else
+        synthesized from the table dir. {} → the snapshot has no such
+        table."""
         m = self.read_snapshot_manifest()
-        if m is None or m.get("materialized", True):
-            return None
-        entries = m.get("tables", {}).get(table)
-        if not entries:
-            return None
-        return [str(self.root / rel) for rel in entries.values()]
+        if m is None:
+            return self.dir_entries(table)
+        return dict(m.get("tables", {}).get(table, {}))
+
+    def next_entries(self, prev: "IndexPaths | None", table: str,
+                     rewritten=frozenset()) -> dict[str, str]:
+        """Entries for ``table`` in this STAGED snapshot: ``prev``'s
+        entries minus the ``rewritten`` partition names ("full" drops
+        them all), plus whatever this snapshot's own dir holds."""
+        own = self.dir_entries(table)
+        if prev is None or rewritten == "full" or "" in own:
+            return own
+        out = {
+            k: v for k, v in prev.table_entries(table).items()
+            if k not in rewritten
+        }
+        out.update(own)
+        return out
+
+    def write_manifest(self, prev: "IndexPaths | None" = None,
+                       rewritten: dict | None = None) -> None:
+        """Write this staged snapshot's manifest (``next_entries`` for
+        every table; ``rewritten`` maps table → rewritten partition
+        names or "full"). ``prev=None`` lists only this snapshot's own
+        dirs — a full rebuild."""
+        rewritten = rewritten or {}
+        tables = {}
+        for t in MANIFEST_TABLES:
+            entries = self.next_entries(prev, t, rewritten.get(t, frozenset()))
+            if entries:
+                tables[t] = entries
+        self.snapshot_manifest_file(self.version).write_text(
+            json.dumps({"version": self.version, "tables": tables}, indent=2)
+        )
+
+    def stage_next(self) -> "IndexPaths":
+        """An empty staging snapshot for the version after this pinned
+        one. A dir or manifest left by a crashed, never-published
+        attempt at that version is removed first."""
+        import shutil as _shutil
+
+        stg = IndexPaths(self.root, (self.version or 0) + 1)
+        if stg.snapshot_root.exists():
+            _shutil.rmtree(stg.snapshot_root)
+        stale = stg.snapshot_manifest_file(stg.version)
+        if stale.exists():
+            stale.unlink()
+        stg.snapshot_root.mkdir(parents=True)
+        return stg
 
     def publish(self, version: int, keep: int = 2, fileio=None) -> None:
         """Commit ``version``: one atomic pointer swap of
         CURRENT.json (os.replace locally ≙ single-object PUT on an
         object store — the only mutable object in the layout), then
         GC snapshot dirs older than the last ``keep`` UNLESS a
-        retained manifest still references them (without hardlinks a
-        new snapshot's untouched partitions live in older dirs by
-        reference; deleting those would corrupt the live snapshot).
-        Pinned readers on the previous snapshot keep working; the
-        flat v0 layout is never deleted — it doubles as the root
-        dir."""
-        import os
+        retained manifest still references them (a snapshot's
+        untouched partitions may live in older dirs by reference;
+        deleting those would corrupt the live snapshot). Every
+        retained manifest is read BEFORE the swap, so a damaged one
+        raises with nothing committed and nothing deleted. Pinned
+        readers on the previous snapshot keep working; the flat v0
+        layout is never deleted — it doubles as the root dir."""
         import re
         import shutil as _shutil
 
@@ -183,26 +261,20 @@ class IndexPaths:
             from .fileio import LocalFileIO
 
             fileio = LocalFileIO()
+        # dirs referenced by any RETAINED snapshot's manifest survive
+        referenced: set[str] = set()
+        lo = version - max(keep, 1) + 1
+        for v in range(max(lo, 1), version + 1):
+            man = _load_json(self.snapshot_manifest_file(v), "snapshot manifest")
+            for entries in (man or {}).get("tables", {}).values():
+                for rel in entries.values():
+                    referenced.add(str(rel).split("/", 1)[0])
         pointer: dict = {"version": int(version)}
         if self.snapshot_manifest_file(version).exists():
             pointer["manifest"] = self.snapshot_manifest_file(version).name
         fileio.put_pointer(
             self.root / "CURRENT.json", json.dumps(pointer)
         )
-        # dirs referenced by any RETAINED snapshot's manifest survive
-        referenced: set[str] = set()
-        lo = version - max(keep, 1) + 1
-        for v in range(max(lo, 1), version + 1):
-            f = self.snapshot_manifest_file(v)
-            if not f.exists():
-                continue
-            try:
-                man = json.loads(f.read_text())
-            except Exception:
-                continue
-            for entries in man.get("tables", {}).values():
-                for rel in entries.values():
-                    referenced.add(str(rel).split("/", 1)[0])
         for p in self.root.iterdir():
             m = re.fullmatch(r"v(\d{6})", p.name)
             if m and int(m.group(1)) <= version - max(keep, 1):
@@ -258,78 +330,81 @@ MANIFEST_TABLES = (
 )
 
 
-def read_table(spark, paths: "IndexPaths", table: str) -> DataFrame:
-    """Open an index table at the pinned snapshot.
-
-    Materialized snapshots (flat v0, or any snapshot published with a
-    link-capable FileIO) read as a plain directory — identical plan
-    to before. A reference-only snapshot (object-store publish: no
-    hardlinks) resolves through its manifest: partition dirs are
-    grouped by the snapshot-dir base they physically live in, each
-    group scanned with that ``basePath`` (so the hive partition
-    column survives), groups unioned. Partition-filter pushdown still
-    prunes inside every group, so the scan shape matches the
-    materialized layout's."""
-    pinned = paths.pin()
-    locs = pinned.table_locations(table)
-    if locs is None:
-        return spark.read.parquet(str(getattr(pinned, table)))
+def _scans(root: Path, entries: dict[str, str]) -> list[tuple[str, list[str] | None]]:
+    """``entries`` grouped by the dir they physically live in: (dir,
+    None) reads the whole dir — an unpartitioned table, or a base
+    whose every partition is an entry (flat v0 and every hardlinked
+    snapshot: one plain scan, as a directory read); (base, partition
+    dirs) reads just those under that ``basePath``."""
+    out: list[tuple[str, list[str] | None]] = []
     groups: dict[str, list[str]] = {}
-    singles: list[str] = []
-    for loc in locs:
-        p = Path(loc)
-        if "=" in p.name:
-            groups.setdefault(str(p.parent), []).append(str(p))
+    for name, rel in sorted(entries.items()):
+        loc = root / rel
+        if name:
+            groups.setdefault(str(loc.parent), []).append(str(loc))
         else:
-            singles.append(str(p))
+            out.append((str(loc), None))
+    for base, dirs in sorted(groups.items()):
+        listed = {p.name for p in Path(base).iterdir() if "=" in p.name}
+        covered = listed == {Path(d).name for d in dirs}
+        out.append((base, None if covered else dirs))
+    return out
+
+
+def read_entries(spark, root: Path, entries: dict[str, str]) -> DataFrame:
+    """One Spark scan per base dir of ``entries`` (see ``_scans``),
+    unioned. A ``basePath`` scan keeps the hive partition column, and
+    partition-filter pushdown still prunes inside every scan."""
+    if not entries:
+        raise FileNotFoundError(f"no table data under {root}")
     dfs = [
-        spark.read.option("basePath", base).parquet(*sorted(dirs))
-        for base, dirs in sorted(groups.items())
+        spark.read.parquet(base) if dirs is None
+        else spark.read.option("basePath", base).parquet(*dirs)
+        for base, dirs in _scans(Path(root), entries)
     ]
-    dfs.extend(spark.read.parquet(s) for s in sorted(singles))
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d, allowMissingColumns=True)
     return out
 
 
-def table_exists(paths: "IndexPaths", table: str) -> bool:
-    """Whether the pinned snapshot carries ``table`` — by manifest
-    entry for reference-only snapshots, by directory otherwise."""
+def read_table(spark, paths: "IndexPaths", table: str) -> DataFrame:
+    """Open an index table at the pinned snapshot (Spark)."""
     pinned = paths.pin()
-    m = pinned.read_snapshot_manifest()
-    if m is not None and not m.get("materialized", True):
-        return bool(m.get("tables", {}).get(table))
-    return Path(getattr(pinned, table)).exists()
+    return read_entries(spark, pinned.root, pinned.table_entries(table))
 
 
-def materialize_snapshot(paths: "IndexPaths", dest: str) -> "IndexPaths":
-    """Sync the pinned snapshot into a plain directory tree — what an
-    object-store serving node does to its local cache before opening
-    pyarrow datasets (the serving tier reads individual parquet files
-    by offset and needs a physical layout; on a POSIX deployment
-    snapshots are already materialized and this is never needed).
-    Returns a flat-layout IndexPaths over ``dest``."""
-    import shutil as _shutil
+def open_dataset(paths: "IndexPaths", table: str):
+    """Open an index table at the pinned snapshot as a pyarrow dataset
+    (hive-partitioned, filter-prunable), or None when the snapshot has
+    no such table. The same entries and base dirs as ``read_table``:
+    one dataset per base, unioned only when there are several."""
+    import pyarrow.dataset as pds
 
     pinned = paths.pin()
-    dst = Path(dest)
-    dst.mkdir(parents=True, exist_ok=True)
-    for table in MANIFEST_TABLES:
-        locs = pinned.table_locations(table)
-        tdir = Path(getattr(pinned, table))
-        out = dst / table
-        if locs is None:
-            if tdir.exists():
-                _shutil.copytree(tdir, out, dirs_exist_ok=True)
+    entries = pinned.table_entries(table)
+    if not entries:
+        return None
+    sets = []
+    for base, dirs in _scans(pinned.root, entries):
+        if dirs is None:
+            # default ignore_prefixes skips _SUCCESS/_metrics/.crc
+            sets.append(pds.dataset(base, format="parquet", partitioning="hive"))
             continue
-        for loc in locs:
-            src = Path(loc)
-            tgt = out / src.name if "=" in src.name else out
-            _shutil.copytree(src, tgt, dirs_exist_ok=True)
-    if pinned.meta.exists():
-        _shutil.copy2(pinned.meta, dst / "meta.json")
-    return IndexPaths(dst, 0)
+        files = [
+            str(f) for d in dirs for f in sorted(Path(d).rglob("*"))
+            if f.is_file() and not f.name.startswith(("_", "."))
+        ]
+        sets.append(pds.dataset(
+            files, format="parquet", partitioning="hive",
+            partition_base_dir=base,
+        ))
+    return sets[0] if len(sets) == 1 else pds.dataset(sets)
+
+
+def table_exists(paths: "IndexPaths", table: str) -> bool:
+    """Whether the pinned snapshot carries ``table``."""
+    return bool(paths.pin().table_entries(table))
 
 
 def _parquet_rows(path: str) -> int:
@@ -2087,7 +2162,10 @@ class IndexBuilder:
         meta["build_metrics"] = self.metrics["stages"]
         self.paths.meta.write_text(json.dumps(meta, indent=2))
         if self._publish_version is not None:
-            # atomic cutover: readers switch snapshots only here
+            # this snapshot's own manifest (overwriting any a crashed
+            # batch left for this version), then the atomic cutover:
+            # readers switch snapshots only here
+            self.paths.write_manifest()
             IndexPaths(self.paths.root).publish(
                 self._publish_version, keep=self.cfg.snapshot_keep
             )

@@ -4,34 +4,25 @@ Two primitives differ between a POSIX filesystem and an S3-class
 object store, and both sit on the snapshot-publish path
 (``incremental.apply_actions`` / ``IndexPaths.publish``):
 
-- **hardlinks**: local snapshots share untouched partition files with
-  their predecessor via ``os.link`` (O(#files) metadata ops, zero
-  copy). An object store has no links — sharing must be BY
-  REFERENCE, which is what the snapshot *manifest* records: each
-  table maps partition-dir names to root-relative locations that may
-  live in ANY earlier snapshot directory (the Iceberg manifest-file
-  idea, scaled to this layout).
+- **physical sharing**: a new snapshot's untouched partitions are
+  always shared BY REFERENCE — its manifest maps each table's
+  partition-dir names to root-relative locations that may live in
+  ANY earlier snapshot directory (the Iceberg manifest-file idea,
+  scaled to this layout), and every reader resolves tables through
+  ``IndexPaths.table_entries``. ``stage_partitions`` is the one
+  place a FileIO may additionally share bytes: ``LocalFileIO``
+  hardlinks the untouched partitions into the new snapshot dir
+  (O(#files) metadata ops, zero copy), so each snapshot is also a
+  complete directory tree (plain directory reads, age-based GC);
+  ``NoLinkFileIO`` (object-store semantics) shares nothing, so a
+  snapshot dir holds only the partitions its batch rewrote and GC
+  keeps every dir a retained manifest references.
 - **atomic rename**: ``CURRENT.json`` is committed locally with
   ``os.replace``. An object store has no rename, but a single-object
   PUT *is* atomic — readers see the whole old pointer or the whole
   new one, never bytes of both — the same property Iceberg's catalog
   pointer swap relies on. The pointer is the ONLY mutable object in
   the layout; manifests and data files are immutable once written.
-
-``apply_actions`` routes every link/copy and the pointer swap through
-a ``FileIO``:
-
-- ``LocalFileIO`` (default): identical behavior to before — each
-  snapshot is additionally *materialized* as a hardlink tree (an
-  optimization: plain directory reads, pyarrow serving, age-based
-  GC), and the manifest simply lists that tree.
-- a ``supports_links=False`` IO (object-store semantics;
-  ``NoLinkFileIO`` simulates it in tests): nothing is linked or
-  copied — a new snapshot dir holds ONLY the partitions the batch
-  rewrote, untouched partitions exist purely as manifest references
-  into earlier snapshot dirs, every whole-table read resolves through
-  ``build.read_table`` (per-base ``basePath`` scans unioned), and GC
-  deletes only snapshot dirs that no retained manifest references.
 """
 
 from __future__ import annotations
@@ -42,35 +33,21 @@ from pathlib import Path
 
 
 class FileIO:
-    """Abstract seam. ``supports_links`` gates snapshot
-    materialization; ``put_pointer`` is the atomic commit primitive
-    (local: write-temp + rename; object store: single PUT)."""
-
-    supports_links: bool = True
+    """Abstract seam: ``put_pointer`` is the atomic commit primitive
+    (local: write-temp + rename; object store: single PUT);
+    ``stage_partitions`` shares a table's untouched partitions into a
+    staging snapshot, or does nothing."""
 
     def put_pointer(self, path: Path, payload: str) -> None:
         raise NotImplementedError
 
-    def share_file(self, src: Path, dst: Path) -> None:
+    def stage_partitions(self, src: str, dst: str, skip, prefix: str) -> None:
         raise NotImplementedError
-
-    def share_tree(self, src: Path, dst: Path) -> None:
-        """Share every file under ``src`` into the same relative
-        layout under ``dst``."""
-        for p in src.rglob("*"):
-            q = dst / p.relative_to(src)
-            if p.is_dir():
-                q.mkdir(parents=True, exist_ok=True)
-                continue
-            q.parent.mkdir(parents=True, exist_ok=True)
-            self.share_file(p, q)
 
 
 class LocalFileIO(FileIO):
     """POSIX filesystem: hardlink sharing (copy2 fallback for
     filesystems that refuse cross-links), os.replace pointer swap."""
-
-    supports_links = True
 
     def put_pointer(self, path: Path, payload: str) -> None:
         tmp = path.with_suffix(path.suffix + ".tmp")
@@ -83,24 +60,43 @@ class LocalFileIO(FileIO):
         except OSError:
             shutil.copy2(src, dst)
 
+    def share_tree(self, src: Path, dst: Path) -> None:
+        """Share every file under ``src`` into the same relative
+        layout under ``dst``."""
+        for p in src.rglob("*"):
+            q = dst / p.relative_to(src)
+            if p.is_dir():
+                q.mkdir(parents=True, exist_ok=True)
+                continue
+            q.parent.mkdir(parents=True, exist_ok=True)
+            self.share_file(p, q)
+
+    def stage_partitions(self, src: str, dst: str, skip, prefix: str) -> None:
+        """Populate a staging table dir with SHARED copies (hardlinks)
+        of every partition dir of ``src`` except ``{prefix}{v}`` for v
+        in ``skip`` (the caller rewrites those). Loose table files are
+        shared too, except _SUCCESS (the staged write drops a fresh
+        one). Nothing under ``src`` is modified."""
+        s, d = Path(src), Path(dst)
+        d.mkdir(parents=True, exist_ok=True)
+        if not s.exists():
+            return
+        skip_names = {f"{prefix}{v}" for v in skip}
+        for p in s.iterdir():
+            if p.name in skip_names or p.name == "_SUCCESS":
+                continue
+            if p.is_dir():
+                self.share_tree(p, d / p.name)
+            else:
+                self.share_file(p, d / p.name)
+
 
 class NoLinkFileIO(LocalFileIO):
     """Object-store SEMANTICS on the local filesystem (for tests and
-    as the reference behavior an S3 FileIO must match): no links —
-    ``share_*`` raising proves the publish path never needs byte
-    sharing — and a pointer swap that, like an S3 PUT, atomically
+    as the reference behavior an S3 FileIO must match): no data file
+    is ever linked or copied — untouched partitions stay manifest
+    references — and a pointer swap that, like an S3 PUT, atomically
     replaces the whole object."""
 
-    supports_links = False
-
-    def share_file(self, src: Path, dst: Path) -> None:  # pragma: no cover
-        raise AssertionError(
-            "object-store publish must not link or copy data files: "
-            f"{src} -> {dst}"
-        )
-
-    def share_tree(self, src: Path, dst: Path) -> None:  # pragma: no cover
-        raise AssertionError(
-            "object-store publish must not link or copy data trees: "
-            f"{src} -> {dst}"
-        )
+    def stage_partitions(self, src: str, dst: str, skip, prefix: str) -> None:
+        return None

@@ -8,14 +8,16 @@ snapshot publication*:
 - every posting block holds only docs from one doc-range bucket, and
   buckets are grouped into ``pbucket`` partition directories;
 - an upsert/delete therefore invalidates exactly the pbuckets of the
-  touched doc_indexes: a batch builds the NEXT snapshot dir
-  (``root/v{N+1}``) by hardlinking every untouched partition dir from
-  the current snapshot (O(#files) metadata ops, zero data copy — the
-  local-FS analog of Iceberg manifest reuse) and recomputing only the
-  touched ones, then atomically flips ``CURRENT.json``
-  (``IndexPaths.publish``, one ``os.replace``). Readers pinned to the
-  previous snapshot (``IndexPaths.pin()``) are never torn: no live
-  path is ever rewritten or removed mid-batch — the property the
+  touched doc_indexes: a batch writes only the touched partitions
+  into the NEXT snapshot dir (``root/v{N+1}``), records a manifest in
+  which every untouched partition keeps its previous location (the
+  Iceberg manifest-reuse idea; ``FileIO.stage_partitions`` may also
+  hardlink them into the new dir — ``LocalFileIO`` does), then
+  atomically flips ``CURRENT.json`` (``IndexPaths.publish``). Every
+  read of the current or staged tables resolves through
+  ``IndexPaths`` entries, whichever FileIO wrote them. Readers pinned
+  to the previous snapshot (``IndexPaths.pin()``) are never torn: no
+  live path is ever rewritten or removed mid-batch — the property the
   reference gets from Redis per-command atomicity, ≙ Iceberg
   ``REPLACE WHERE`` + snapshot commit;
 - the token dictionary is re-derived from block *metadata* (no text
@@ -54,6 +56,7 @@ from .build import (
     pairs_from_analyzed,
     pairs_from_blocks,
     prefixes_from_dictionary,
+    read_entries,
     read_table,
     table_exists,
 )
@@ -67,115 +70,12 @@ def _with_pbucket(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def _stage_partitions(src: str, dst: str, skip, prefix: str,
-                      fileio: FileIO) -> None:
-    """Populate a staging table dir with SHARED copies (hardlinks on
-    a POSIX FileIO) of every partition dir of ``src`` except
-    ``{prefix}{v}`` for v in ``skip`` (the caller rewrites those).
-    Loose table files are shared too, except _SUCCESS (the staged
-    write drops a fresh one). Nothing under ``src`` is modified.
-
-    Only called for link-capable FileIOs: without links a snapshot
-    shares unchanged partitions BY MANIFEST REFERENCE instead (see
-    fileio module docstring), and nothing is staged for them."""
-    s, d = Path(src), Path(dst)
-    d.mkdir(parents=True, exist_ok=True)
-    if not s.exists():
-        return
-    skip_names = {f"{prefix}{v}" for v in skip}
-    for p in s.iterdir():
-        if p.name in skip_names or p.name == "_SUCCESS":
-            continue
-        if p.is_dir():
-            fileio.share_tree(p, d / p.name)
-        else:
-            fileio.share_file(p, d / p.name)
-
-
 def _staged_view(spark, cur: IndexPaths, stg: IndexPaths, table: str,
-                 rewritten, part_col: str, linked: bool) -> DataFrame:
-    """The complete STAGED table as a DataFrame. With links the
-    staging dir materializes it (shared untouched partitions +
-    freshly written ones) — one plain read. Without links the staging
-    dir holds only the rewritten partitions, so the view is their
-    union with the current snapshot's untouched partitions (read by
-    manifest reference) — exactly the relation the new manifest will
-    record."""
-    stg_dir = getattr(stg, table)
-    if linked:
-        return spark.read.parquet(stg_dir)
-    parts: list[DataFrame] = []
-    if Path(stg_dir).exists():
-        parts.append(spark.read.parquet(stg_dir))
-    if table_exists(cur, table):
-        kept = read_table(spark, cur, table)
-        if rewritten:
-            kept = kept.filter(~F.col(part_col).isin(sorted(rewritten)))
-        parts.append(kept)
-    if not parts:
-        raise ValueError(f"staged table {table} has no data")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
-def _rel_to_root(path: str, root: Path) -> str:
-    return str(Path(path).relative_to(root))
-
-
-def _synth_entries(table_dir: str, rel_base: str) -> dict[str, str]:
-    """Manifest entries synthesized from a materialized table dir
-    (pre-manifest snapshots / the flat v0 bulk layout)."""
-    d = Path(table_dir)
-    if not d.exists():
-        return {}
-    names = [p.name for p in sorted(d.iterdir()) if p.name != "_SUCCESS"]
-    if any("=" in n for n in names):
-        return {n: f"{rel_base}/{n}" for n in names if "=" in n}
-    return {"": rel_base} if names else {}
-
-
-def _prev_entries(cur: IndexPaths, table: str) -> dict[str, str]:
-    """The current snapshot's manifest entries for ``table`` —
-    straight from its manifest when one exists (locations stay valid
-    verbatim: manifests only ever reference immutable dirs), else
-    synthesized from the materialized layout."""
-    m = cur.read_snapshot_manifest()
-    if m is not None:
-        return dict(m.get("tables", {}).get(table, {}))
-    return _synth_entries(
-        getattr(cur, table), _rel_to_root(getattr(cur, table), cur.root)
-    )
-
-
-def _next_entries(cur: IndexPaths, stg: IndexPaths, table: str,
-                  rewritten) -> dict[str, str]:
-    """Manifest entries for ``table`` in the snapshot being staged:
-    previous entries minus the rewritten partitions, plus whatever
-    the batch actually wrote under the staging dir. ``rewritten`` is
-    a set of partition-dir names, or "full" for a whole-table
-    rewrite."""
-    if rewritten == "full":
-        out: dict[str, str] = {}
-    else:
-        out = {
-            k: v
-            for k, v in _prev_entries(cur, table).items()
-            if k not in rewritten
-        }
-    stg_dir = Path(getattr(stg, table))
-    if stg_dir.exists():
-        rel = _rel_to_root(str(stg_dir), stg.root)
-        names = [
-            p.name for p in sorted(stg_dir.iterdir()) if p.name != "_SUCCESS"
-        ]
-        if names and not any("=" in n for n in names):
-            return {"": rel}
-        for n in names:
-            if "=" in n:
-                out[n] = f"{rel}/{n}"
-    return out
+                 rewritten) -> DataFrame:
+    """The complete STAGED table as a DataFrame: exactly the entries
+    the new manifest will record for it (see ``IndexPaths.next_entries``),
+    read through the same resolver as any published table."""
+    return read_entries(spark, stg.root, stg.next_entries(cur, table, rewritten))
 
 
 def _persist_scoped(held: ExitStack, df: DataFrame) -> DataFrame:
@@ -272,11 +172,9 @@ def apply_actions(
     snapshot versions on top of foreachBatch's at-least-once.
 
     ``fileio``: the filesystem seam (see fileio module docstring).
-    Default LocalFileIO materializes each snapshot as a hardlink
-    tree; a supports_links=False IO (object store) shares untouched
-    partitions purely by snapshot-manifest reference — nothing is
-    linked or copied, and readers resolve tables via
-    ``build.read_table``.
+    Untouched partitions are always carried by manifest reference;
+    the default LocalFileIO also hardlinks them into the new snapshot
+    dir, NoLinkFileIO (object store) shares nothing.
 
     Each relation is computed once per batch: the change set is
     resolved against the docs table in one join, the touched docs are
@@ -286,7 +184,6 @@ def apply_actions(
     """
     paths = paths if isinstance(paths, IndexPaths) else IndexPaths(Path(paths))
     fileio = fileio or LocalFileIO()
-    linked = fileio.supports_links
     cur = paths.pin()  # the consistent snapshot every read comes from
 
     if batch_id is not None and cur.meta.exists():
@@ -383,14 +280,8 @@ def apply_actions(
 
         # --- staging snapshot: all writes land here; nothing under the
         # current snapshot is ever modified ------------------------------
-        stg_version = (cur.version or 0) + 1
-        stg = IndexPaths(cur.root, stg_version)
-        if stg.snapshot_root.exists():  # crashed, never-published staging
-            shutil.rmtree(stg.snapshot_root)
-        stale_manifest = stg.snapshot_manifest_file(stg_version)
-        if stale_manifest.exists():
-            stale_manifest.unlink()
-        stg.snapshot_root.mkdir(parents=True)
+        stg = cur.stage_next()
+        pbnames = {f"pbucket={v}" for v in touched_pb}
 
         # rebuild the touched doc partitions: survivors + upserts
         doc_cols = [c for c in docs.columns if c not in ("dl", "pbucket")]
@@ -426,23 +317,18 @@ def apply_actions(
             F.count(F.lit(1)).alias("cnt"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl"),
         )
-        # untouched partitions: shared into the staging snapshot
-        # (hardlinks) when the FileIO supports it, else left as manifest
-        # references; touched partitions: appended fresh (a partition
-        # that became EMPTY is neither shared nor written — no orphan
-        # postings, the reference's deindex invariant,
-        # tests/test_index_utils.py:94-114)
-        if linked:
-            _stage_partitions(cur.docs, stg.docs, set(touched_pb), "pbucket=",
-                              fileio)
+        # untouched partitions: manifest references (the FileIO may
+        # also share them into the staging dir); touched partitions:
+        # appended fresh (a partition that became EMPTY is neither
+        # shared nor written — no orphan postings, the reference's
+        # deindex invariant, tests/test_index_utils.py:94-114)
+        fileio.stage_partitions(cur.docs, stg.docs, touched_pb, "pbucket=")
         docs_part.write.mode("append").partitionBy("pbucket").parquet(stg.docs)
 
         # rebuild the touched posting partitions (filter-set rows are
         # synthesized inside the local packer, same as the bulk build)
         blocks = build_blocks_from_analyzed(analyzed_new, cfg)
-        if linked:
-            _stage_partitions(cur.blocks, stg.blocks, set(touched_pb),
-                              "pbucket=", fileio)
+        fileio.stage_partitions(cur.blocks, stg.blocks, touched_pb, "pbucket=")
         blocks.write.mode("append").partitionBy("pbucket").parquet(stg.blocks)
 
         # --- dictionary: per-pbucket partials, touched partitions only --
@@ -455,12 +341,10 @@ def apply_actions(
         if partials_full_rewrite:
             # legacy index (pre-partials layout): one full derivation
             # upgrades it; subsequent batches are incremental
-            partials_src = _staged_view(spark, cur, stg, "blocks",
-                                        set(touched_pb), "pbucket", linked)
+            partials_src = _staged_view(spark, cur, stg, "blocks", pbnames)
         else:
-            if linked:
-                _stage_partitions(cur.dict_partials, stg.dict_partials,
-                                  set(touched_pb), "pbucket=", fileio)
+            fileio.stage_partitions(cur.dict_partials, stg.dict_partials,
+                                    touched_pb, "pbucket=")
             partials_src = spark.read.parquet(stg.blocks).filter(
                 F.col("pbucket").isin(touched_pb)
             )
@@ -488,8 +372,7 @@ def apply_actions(
 
         partials_view = _staged_view(
             spark, cur, stg, "dict_partials",
-            set() if partials_full_rewrite else set(touched_pb),
-            "pbucket", linked or partials_full_rewrite,
+            "full" if partials_full_rewrite else pbnames,
         )
         dictionary_from_partials(partials_view).repartitionByRange(
             cfg.build_partitions, "token"
@@ -552,9 +435,7 @@ def apply_actions(
             n_docs = meta["n_docs"] - sum(int(r["cnt"]) for r in old) + int(new["cnt"])
             sum_dl = meta["sum_dl"] - sum(int(r["sdl"]) for r in old) + int(new["sdl"])
         else:  # legacy meta: one full single-column scan re-baselines it
-            docs_now = _staged_view(
-                spark, cur, stg, "docs", set(touched_pb), "pbucket", linked
-            )
+            docs_now = _staged_view(spark, cur, stg, "docs", pbnames)
             n_docs = docs_now.count()
             sum_dl = int(docs_now.agg(F.sum("dl")).collect()[0][0] or 0)
         meta["n_docs"] = int(n_docs)
@@ -565,52 +446,34 @@ def apply_actions(
             "upserts": n_up,
             "deletes": n_del,
             "touched_pbuckets": touched_pb,
-            "version": stg_version,
+            "version": stg.version,
         }
         if batch_id is not None:
             lineage["batch_id"] = batch_id
         meta.setdefault("applied_batches", []).append(lineage)
         stg.meta.write_text(json.dumps(meta, indent=2))
 
-        # --- snapshot manifest: per-table entry → root-relative location.
-        # With links every location points into the materialized staging
-        # tree (the manifest is then just a listing); without links the
-        # untouched partitions keep their previous locations — sharing by
-        # reference, which is what makes the layout object-store-safe ----
-        tables: dict[str, dict[str, str]] = {}
-        pbnames = {f"pbucket={v}" for v in touched_pb}
-        for t, rewritten in (
-            ("docs", pbnames),
-            ("blocks", pbnames),
-            ("dict_partials", "full" if partials_full_rewrite else pbnames),
-            ("dictionary", "full"),
-            ("prefixes", pfx_rewritten),
-            ("pairs", pairs_rewritten),
-        ):
-            entries = _next_entries(cur, stg, t, rewritten)
-            if entries:
-                tables[t] = entries
-        stg.snapshot_manifest_file(stg_version).write_text(
-            json.dumps(
-                {
-                    "version": stg_version,
-                    "materialized": bool(linked),
-                    "tables": tables,
-                },
-                indent=2,
-            )
-        )
+        # --- snapshot manifest: per-table entry → root-relative location;
+        # untouched partitions keep their previous locations ----------
+        stg.write_manifest(cur, {
+            "docs": pbnames,
+            "blocks": pbnames,
+            "dict_partials": "full" if partials_full_rewrite else pbnames,
+            "dictionary": "full",
+            "prefixes": pfx_rewritten,
+            "pairs": pairs_rewritten,
+        })
 
         # --- atomic publish: one pointer swap of CURRENT.json (local:
         # os.replace; object store: single PUT) --------------------------
         IndexPaths(cur.root).publish(
-            stg_version, keep=cfg.snapshot_keep, fileio=fileio
+            stg.version, keep=cfg.snapshot_keep, fileio=fileio
         )
         return {
             "upserts": n_up,
             "deletes": n_del,
             "touched_pbuckets": touched_pb,
-            "version": stg_version,
+            "version": stg.version,
         }
 
 
@@ -632,14 +495,8 @@ def _refresh_prefixes(
     read-from/overwrite-to-same-path cycle (reads come from ``cur``,
     writes go to ``stg``). Returns the rewritten partition names (or
     "full") for the snapshot manifest."""
-    if cur.read_snapshot_manifest() is not None:
-        legacy = False  # manifest-bearing snapshots are never legacy
-    else:
-        legacy = not any(
-            p.name.startswith("pfx_bucket=")
-            for p in Path(cur.prefixes).iterdir()
-            if p.is_dir()
-        )
+    # a legacy flat (unpartitioned) table has the single entry ""
+    legacy = "" in cur.table_entries("prefixes")
     if legacy or changed_tokens is None:
         prefixes_from_dictionary(dict_disk, cfg).repartitionByRange(
             cfg.build_partitions, "pfx_bucket", "prefix"
@@ -657,9 +514,7 @@ def _refresh_prefixes(
         .distinct()
         .collect()
     ]
-    if fileio.supports_links:
-        _stage_partitions(cur.prefixes, stg.prefixes, set(buckets),
-                          "pfx_bucket=", fileio)
+    fileio.stage_partitions(cur.prefixes, stg.prefixes, buckets, "pfx_bucket=")
     if not buckets:
         return set()
     keep = (
@@ -701,14 +556,8 @@ def _refresh_pairs(
     simply not written — the stale-dir hazard of in-place dynamic
     overwrite cannot occur. Returns the rebuilt partition names (or
     "full") for the snapshot manifest."""
-    if cur.read_snapshot_manifest() is not None:
-        legacy = False  # manifest-bearing snapshots are never legacy
-    else:
-        legacy = not any(
-            p.name.startswith("pbucket=")
-            for p in Path(cur.pairs).iterdir()
-            if p.is_dir()
-        )
+    # a legacy flat (unpartitioned) table has the single entry ""
+    legacy = "" in cur.table_entries("pairs")
     rebuild = set(touched_pb)
     if not legacy and crossing:
         rebuild.update(
@@ -719,20 +568,17 @@ def _refresh_pairs(
             .distinct()
             .collect()
         )
-    linked = fileio.supports_links
 
     def staged_blocks():
         return _staged_view(
-            spark, cur, stg, "blocks", set(touched_pb), "pbucket", linked
+            spark, cur, stg, "blocks", {f"pbucket={v}" for v in touched_pb}
         )
 
     if legacy:
         pairs = pairs_from_blocks(staged_blocks(), dict_disk, cfg)
         mode = "overwrite"
     else:
-        if linked:
-            _stage_partitions(cur.pairs, stg.pairs, rebuild, "pbucket=",
-                              fileio)
+        fileio.stage_partitions(cur.pairs, stg.pairs, rebuild, "pbucket=")
         # touched pbuckets: each doc's distinct tokens are already in
         # its analyzed row — no block unpack, no regroup-by-doc shuffle
         pairs = pairs_from_analyzed(analyzed, dict_disk, cfg)

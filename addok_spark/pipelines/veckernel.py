@@ -169,17 +169,14 @@ def list_to_matrix(col) -> np.ndarray:
         col = col.combine_chunks()
     if col.null_count:
         raise ValueError("null vectors are not supported")
-    if isinstance(col, pa.FixedSizeListArray):
-        d = col.type.list_size
-        flat = col.values.to_numpy(zero_copy_only=False)
-        return flat.reshape(len(col), d)
+    # flatten() honours a slice's offset and length (``.values`` does not)
     flat = col.flatten().to_numpy(zero_copy_only=False)
+    if isinstance(col, pa.FixedSizeListArray):
+        return flat.reshape(len(col), col.type.list_size)
     n = len(col)
     if n == 0:
         return flat.reshape(0, 0)
-    offsets = col.offsets.to_numpy(zero_copy_only=False)
-    widths = np.diff(offsets)
+    widths = np.diff(col.offsets.to_numpy(zero_copy_only=False))
     if not (widths == widths[0]).all():
         raise ValueError("ragged vector lengths are not supported")
-    # offsets may not start at 0 for sliced arrays
-    return flat[offsets[0] : offsets[-1]].reshape(n, int(widths[0]))
+    return flat.reshape(n, int(widths[0]))

@@ -260,24 +260,23 @@ class SearchEngine:
             paths if isinstance(paths, IndexPaths) else IndexPaths(Path(paths))
         ).pin()
         self.meta = json.loads(self.paths.meta.read_text())
-        # read_table resolves materialized snapshots as plain
-        # directory scans (identical plan to before) and
-        # object-store-published snapshots via their manifest
-        # references (see index.fileio)
-        from ..index.build import read_table
+        # every table resolves through the snapshot's entries (see
+        # IndexPaths.table_entries), whichever FileIO published it
+        from ..index.build import read_table, table_exists
 
         self.blocks = read_table(spark, self.paths, "blocks")
         self.docs = read_table(spark, self.paths, "docs")
         self.dictionary = read_table(spark, self.paths, "dictionary")
-        try:
-            self.prefixes = read_table(spark, self.paths, "prefixes")
-        except Exception:
-            self.prefixes = None  # deferred (build_prefixes=False;
-            #                       `addok_spark ngrams` builds later)
-        try:
-            self.pairs = read_table(spark, self.paths, "pairs")
-        except Exception:
-            self.pairs = None  # pairs deferred at build time
+        # prefixes may be deferred (build_prefixes=False; `addok_spark
+        # ngrams` builds them later), pairs deferred at build time
+        self.prefixes = (
+            read_table(spark, self.paths, "prefixes")
+            if table_exists(self.paths, "prefixes") else None
+        )
+        self.pairs = (
+            read_table(spark, self.paths, "pairs")
+            if table_exists(self.paths, "pairs") else None
+        )
         self._probe_cache: dict[str, object] = {}
 
     # ------------------------------------------------------------------
@@ -288,28 +287,17 @@ class SearchEngine:
         job (~0.3-0.5 s of scheduling on the measured host) — 3-5 of
         them per search() were most of the single-query latency floor.
         A pruned pyarrow read of the same parquet (IN-filter against
-        row-group min/max stats, the same pushdown the Spark scan did)
+        row-group min/max stats, the same pushdown a Spark scan does)
         returns identical rows without a job — the serving tier's
         access pattern applied to just the probe layer; the collection
-        rounds and scoring stay in Spark. Returns None (→ the Spark
-        fallback path) for reference-only snapshots, whose tables
-        resolve through manifest locations."""
-        if table in self._probe_cache:
-            return self._probe_cache[table]
-        dset = None
-        try:
-            if self.paths.table_locations(table) is None:
-                d = Path(str(getattr(self.paths, table)))
-                if d.exists():
-                    import pyarrow.dataset as pds
+        rounds and scoring stay in Spark. The driver reads the index
+        root itself (meta.json, the manifest), so ``open_dataset``
+        reaches the very files ``read_table`` hands to Spark."""
+        dset = self._probe_cache.get(table)
+        if dset is None:
+            from ..index.build import open_dataset
 
-                    # default ignore_prefixes skips _SUCCESS/_metrics
-                    dset = pds.dataset(
-                        str(d), format="parquet", partitioning="hive"
-                    )
-        except Exception:
-            dset = None
-        self._probe_cache[table] = dset
+            dset = self._probe_cache[table] = open_dataset(self.paths, table)
         return dset
 
     # ------------------------------------------------------------------
@@ -320,29 +308,19 @@ class SearchEngine:
         addok/helpers/text.py:61-63, lua/order_by_max_score.lua)."""
         if not tokens:
             return {}
-        dset = self._probe("dictionary")
-        if dset is not None:
-            import pyarrow.dataset as pds
+        import pyarrow.dataset as pds
 
-            t = dset.to_table(
-                filter=pds.field("token").isin(list(tokens)),
-                columns=["token", "df", "max_boost"],
-            )
-            return {
-                tok: (df, float(mb or 0.0))
-                for tok, df, mb in zip(
-                    t.column("token").to_pylist(),
-                    t.column("df").to_pylist(),
-                    t.column("max_boost").to_pylist(),
-                )
-            }
-        rows = (
-            self.dictionary.filter(F.col("token").isin(list(tokens)))
-            .select("token", "df", "max_boost")
-            .collect()
+        t = self._probe("dictionary").to_table(
+            filter=pds.field("token").isin(list(tokens)),
+            columns=["token", "df", "max_boost"],
         )
         return {
-            r["token"]: (r["df"], float(r["max_boost"] or 0.0)) for r in rows
+            tok: (df, float(mb or 0.0))
+            for tok, df, mb in zip(
+                t.column("token").to_pylist(),
+                t.column("df").to_pylist(),
+                t.column("max_boost").to_pylist(),
+            )
         }
 
     def _prefix_candidates_batch(
@@ -357,52 +335,32 @@ class SearchEngine:
         frequency) happen afterwards in _plan_queries."""
         if not prefixes or self.prefixes is None:
             return {}
-        has_mb = "max_boost" in self.prefixes.columns
-        dset = self._probe("prefixes")
-        if dset is not None:
-            import pyarrow.dataset as pds
+        import pyarrow.dataset as pds
 
-            cols = ["prefix", "token", "df"] + (
-                ["max_boost"] if has_mb else []
-            )
-            pdf = dset.to_table(
-                filter=pds.field("prefix").isin(list(prefixes)),
-                columns=cols,
-            ).to_pandas()
-            # the same (df desc, token asc) rank-and-cap the Spark
-            # window computed; mergesort keeps the order total/stable
-            pdf = pdf.sort_values(
-                ["prefix", "df", "token"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            pdf["rn"] = pdf.groupby("prefix").cumcount() + 1
-            pdf = pdf[pdf["rn"] <= cap]
-            out: dict[str, list[tuple[str, int, float | None]]] = {}
-            for r in pdf.itertuples(index=False):
-                mb = None
-                if has_mb:
-                    # pandas nulls arrive as NaN (truthy!) — map to the
-                    # Spark path's `None or 0.0` semantics explicitly
-                    mb = 0.0 if pd.isna(r.max_boost) else float(r.max_boost)
-                out.setdefault(r.prefix, []).append((r.token, int(r.df), mb))
-            return out
-        w = Window.partitionBy("prefix").orderBy(F.desc("df"), F.asc("token"))
-        rows = (
-            self.prefixes.filter(F.col("prefix").isin(list(prefixes)))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= cap)
-            .collect()
+        dset = self._probe("prefixes")
+        has_mb = "max_boost" in dset.schema.names
+        cols = ["prefix", "token", "df"] + (["max_boost"] if has_mb else [])
+        pdf = dset.to_table(
+            filter=pds.field("prefix").isin(list(prefixes)),
+            columns=cols,
+        ).to_pandas()
+        # rank-and-cap per prefix by (df desc, token asc); mergesort
+        # keeps the order total/stable
+        pdf = pdf.sort_values(
+            ["prefix", "df", "token"],
+            ascending=[True, False, True],
+            kind="mergesort",
         )
-        out = {}
-        for r in sorted(rows, key=lambda r: (r["prefix"], r["rn"])):
-            out.setdefault(r["prefix"], []).append(
-                (
-                    r["token"],
-                    r["df"],
-                    float(r["max_boost"] or 0.0) if has_mb else None,
-                )
-            )
+        pdf["rn"] = pdf.groupby("prefix").cumcount() + 1
+        pdf = pdf[pdf["rn"] <= cap]
+        out: dict[str, list[tuple[str, int, float | None]]] = {}
+        for r in pdf.itertuples(index=False):
+            mb = None
+            if has_mb:
+                # pandas nulls arrive as NaN (truthy!) — map them to
+                # 0.0 explicitly, as the dictionary probe does
+                mb = 0.0 if pd.isna(r.max_boost) else float(r.max_boost)
+            out.setdefault(r.prefix, []).append((r.token, int(r.df), mb))
         return out
 
     def _pairs_probe(self, checks: set[tuple[str, str]]) -> set[tuple[str, str]]:
@@ -422,31 +380,17 @@ class SearchEngine:
         self, a_list: list[str], b_list: list[str]
     ) -> set[tuple[str, str]]:
         """All (token_a, token_b) rows of the pair table matching the
-        two IN-lists — pyarrow pruned read when the snapshot is
-        materialized, Spark job otherwise (same rows either way)."""
-        dset = self._probe("pairs")
-        if dset is not None:
-            import pyarrow.dataset as pds
+        two IN-lists (one pruned pyarrow read)."""
+        import pyarrow.dataset as pds
 
-            t = dset.to_table(
-                filter=pds.field("token_a").isin(a_list)
-                & pds.field("token_b").isin(b_list),
-                columns=["token_a", "token_b"],
-            )
-            return set(
-                zip(
-                    t.column("token_a").to_pylist(),
-                    t.column("token_b").to_pylist(),
-                )
-            )
-        rows = (
-            self.pairs.filter(
-                F.col("token_a").isin(a_list) & F.col("token_b").isin(b_list)
-            )
-            .select("token_a", "token_b")
-            .collect()
+        t = self._probe("pairs").to_table(
+            filter=pds.field("token_a").isin(a_list)
+            & pds.field("token_b").isin(b_list),
+            columns=["token_a", "token_b"],
         )
-        return {(r["token_a"], r["token_b"]) for r in rows}
+        return set(
+            zip(t.column("token_a").to_pylist(), t.column("token_b").to_pylist())
+        )
 
     # ------------------------------------------------------------------
     def _plan_queries(self, queries: list[Query]) -> dict[str, _QState]:

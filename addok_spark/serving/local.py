@@ -25,7 +25,11 @@ from those artifacts with pruned columnar reads:
 - **documents** are fetched per pbucket partition only when a doc
   becomes a candidate (hive partition pruning on ``pbucket``);
 - **prefixes / pairs** reads are filter-pruned the same way and
-  memoized per key.
+  memoized per key;
+- every table opens through ``index.build.open_dataset``, the same
+  snapshot resolver the Spark engine reads through, so any published
+  snapshot — hardlinked or reference-only (object-store publish,
+  partitions spread over several snapshot dirs) — serves directly.
 
 Sharding story at scale: a serving node owns a pbucket range (the
 docs/blocks partition key), so each node's working set is bounded and
@@ -53,7 +57,7 @@ import numpy as np
 import pandas as pd
 
 from ..config import EngineConfig
-from ..index.build import IndexPaths
+from ..index.build import IndexPaths, open_dataset
 from ..index.compress import unpack_deltas, unpack_f32, varint_decode
 from ..oracle.bm25_oracle import ExpansionMixin, SpecSearch
 from ..query.engine import Query, normalize_filter_values
@@ -309,17 +313,6 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         # shard mode: this node owns [lo, hi) of the pbucket space —
         # every blocks/docs read is partition-pruned to that range
         self.pbucket_range = pbucket_range
-        man = self.paths.read_snapshot_manifest()
-        if man is not None and not man.get("materialized", True):
-            # serving reads individual parquet files by offset and
-            # needs a physical layout; an object-store snapshot is
-            # reference-only — sync it to local disk first (what a
-            # real serving node's cache pull does)
-            raise ValueError(
-                "snapshot is reference-only (object-store publish); "
-                "materialize it locally first: "
-                "addok_spark.index.build.materialize_snapshot(paths, dest)"
-            )
         self.meta = json.loads(self.paths.meta.read_text())
         self.n_docs = int(self.meta["n_docs"])
         self.avgdl = float(self.meta["avgdl"])
@@ -328,22 +321,20 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
             self.meta.get("pbucket_shift", 6)
         )
 
-        self._blocks_ds = pads.dataset(self.paths.blocks, partitioning="hive")
-        self._docs_ds = pads.dataset(self.paths.docs, partitioning="hive")
-        try:
-            self._prefix_ds = pads.dataset(self.paths.prefixes, partitioning="hive")
-        except Exception:
-            self._prefix_ds = None
-        try:
-            self._pairs_ds = pads.dataset(self.paths.pairs, partitioning="hive")
-        except Exception:
-            self._pairs_ds = None
+        # every table opens through the snapshot's entries — a
+        # hardlinked snapshot or flat index is one directory dataset, a
+        # reference-only one unions its base dirs; prefixes / pairs are
+        # None when the snapshot has none
+        self._blocks_ds = open_dataset(self.paths, "blocks")
+        self._docs_ds = open_dataset(self.paths, "docs")
+        self._prefix_ds = open_dataset(self.paths, "prefixes")
+        self._pairs_ds = open_dataset(self.paths, "pairs")
         self.have_pairs = self._pairs_ds is not None
 
         # term dictionary in RAM (token → df / max_boost, float32
         # parity with dictionary_from_blocks)
         t0 = time.perf_counter()
-        dic = self._pads.dataset(self.paths.dictionary).to_table(
+        dic = open_dataset(self.paths, "dictionary").to_table(
             columns=["token", "df", "max_boost"]
         ).to_pandas()
         self.df: dict[str, int] = dict(zip(dic["token"], dic["df"].astype(int)))
@@ -363,10 +354,9 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         self._pos_cache: dict[str, tuple] = _LRU(10_000)
 
     def refresh(self) -> None:
-        """Re-open the index after a CDC batch: re-resolves the
-        published snapshot (CURRENT.json — CDC publishes versioned
-        snapshot dirs with one atomic manifest swap, incremental.py)
-        and reloads the term dictionary. Crash-safe swap: the fresh
+        """Re-open the index after a CDC batch: re-pins the published
+        snapshot (CDC publishes versioned snapshots with one atomic
+        pointer swap, incremental.py) and reloads the term dictionary. Crash-safe swap: the fresh
         view is built COMPLETELY on the side and only then replaces
         this object's state, so a transient read failure mid-reload
         leaves the serving instance answering from the old snapshot
@@ -778,14 +768,22 @@ class ShardedIndex(ExpansionMixin, _PreloadMixin):
         self.have_pairs = self._global.have_pairs
         self._doc_shift = self._global._doc_shift
         self._bucket_bits = self._global._bucket_bits
-        max_pb = (max(self.n_docs - 1, 0) >> self._doc_shift) + 1
+        # doc ids are not dense after CDC deletes + appends, so the
+        # pbucket space ends at the docs table's highest partition,
+        # not at n_docs
+        max_pb = max(
+            (int(k.split("=", 1)[1])
+             for k in self._global.paths.table_entries("docs")),
+            default=0,
+        ) + 1
         step = max(1, -(-max_pb // n_shards))
         self._bounds = [
             (i * step, min((i + 1) * step, max_pb) if i < n_shards - 1 else max_pb)
             for i in range(n_shards)
         ]
+        # every shard pinned to the coordinator's snapshot
         self.shards = [
-            ParquetIndex(index_dir, self.cfg, pbucket_range=b)
+            ParquetIndex(self._global.paths, self.cfg, pbucket_range=b)
             for b in self._bounds
         ]
         self._dict_views: dict[str, dict[int, float]] = _LRU(10_000)

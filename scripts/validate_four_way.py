@@ -1,7 +1,11 @@
 """Four-way rank-identity validation at scale: the Spark engine, the
 pure-Python oracle, the warm serving tier, and a sharded scatter-
 gather coordinator answer the same query set over the same corpus and
-must agree. Run ad hoc per round as the closing evidence
+must agree. The check runs twice: on the bulk-built index, and again
+after one CDC batch (updates, deletes and an appended conversation)
+published with ``NoLinkFileIO`` — a reference-only snapshot whose
+untouched partitions stay in the bulk build's dirs, which the serving
+tier opens directly. Run ad hoc per round as the closing evidence
 (BASELINE.md records each round's result).
 
 Usage: python scripts/validate_four_way.py [n_convs] [cores]
@@ -14,36 +18,14 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import numpy as np
+import pandas as pd
 
 
-def main() -> None:
-    n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 2500
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 16
+def make_queries(pdf, seed):
+    from addok_spark.data.transcripts import reference_queries
+    from addok_spark.query.engine import Query
 
-    from addok_spark.config import EngineConfig
-    from addok_spark.data.transcripts import (
-        reference_queries, transcripts_df, transcripts_pdf,
-    )
-    from addok_spark.index.build import build_index
-    from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
-    from addok_spark.query.engine import Query, SearchEngine
-    from addok_spark.serving.local import LocalSearchEngine
-    from addok_spark.session import build_session
-
-    spark = build_session(cores=cores, driver_memory="16g")
-    cfg = EngineConfig(build_partitions=cores * 2, common_threshold=10_000)
-    sdf = transcripts_df(spark, n_convs, seed=42)
-    out = f"/tmp/val4_{n_convs}"
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
-    t0 = time.time()
-    paths = build_index(spark, sdf, cfg, out)
-    build_s = time.time() - t0
-    pdf = transcripts_pdf(n_convs, seed=42)
-    n_turns = len(pdf)
-
-    qdf = reference_queries(pdf, n=48, seed=7)
+    qdf = reference_queries(pdf, n=48, seed=seed)
     queries = [
         Query(qid=r.qid, q=r.q, k=10, autocomplete=(r.kind == "prefix"))
         for r in qdf.itertuples(index=False)
@@ -54,19 +36,25 @@ def main() -> None:
             qid=f"f-{i:02d}", q=r.q, k=10,
             filters={"role": ["user", "assistant"][i % 2:i % 2 + 1]},
         ))
+    return queries
+
+
+def four_way(spark, cfg, index, pdf, queries):
+    """Rank mismatches against the oracle, whether the engine's scores
+    match it, and the engine / serving wall seconds."""
+    from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
+    from addok_spark.query.engine import SearchEngine
+    from addok_spark.serving.local import LocalSearchEngine
 
     t0 = time.time()
-    eng = SearchEngine(spark, paths, cfg)
-    got_engine = eng.search(queries).toPandas()
+    got_engine = SearchEngine(spark, index, cfg).search(queries).toPandas()
     engine_s = time.time() - t0
-    oracle = OracleIndex(pdf, cfg)
-    want = oracle_search(oracle, queries, cfg)
-    srv = LocalSearchEngine(out, cfg)
+    want = oracle_search(OracleIndex(pdf, cfg), queries, cfg)
+    srv = LocalSearchEngine(index, cfg)
     t0 = time.time()
     got_srv = srv.search(queries)
     srv_s = time.time() - t0
-    shr = LocalSearchEngine(out, cfg, shards=4)
-    got_shr = shr.search(queries)
+    got_shr = LocalSearchEngine(index, cfg, shards=4).search(queries)
 
     def ranks(df):
         out = {}
@@ -88,16 +76,113 @@ def main() -> None:
     )
     if len(m):
         sc_ok = bool(np.allclose(m["score_e"], m["score_o"], rtol=1e-9))
-    print(
-        f"RESULT turns={n_turns} queries={len(queries)} "
-        f"mismatches={len(mismatches)} scores_close={sc_ok} "
-        f"build_s={build_s:.1f} engine_batch_s_per_q={engine_s/len(queries):.3f} "
-        f"serving_cold_ms_per_q={1000*srv_s/len(queries):.1f}"
+    return mismatches, sc_ok, engine_s, srv_s
+
+
+def change_batch(pdf, seed):
+    """One CDC batch against ``pdf``: text updates and deletes among
+    the first eighth of the docs (the lowest pbuckets), and one
+    appended conversation (its conv_id sorts after every existing one,
+    so appended doc ids keep the oracle's (conv_id, turn_idx) order).
+    Returns (changes with an ``_action`` column, the corpus after it)."""
+    rng = np.random.Generator(np.random.PCG64(seed))
+    n = max(4, len(pdf) // 200)
+    picked = rng.choice(max(len(pdf) // 8, 2 * n), size=2 * n, replace=False)
+    upd, dele = picked[:n], picked[n:]
+    donors = rng.choice(len(pdf), size=n + 3, replace=False)
+    updates = pdf.iloc[upd].copy()
+    updates["text"] = [
+        f"{pdf['text'].iloc[d]} cdcmark{i:04d}" for i, d in enumerate(donors[:n])
+    ]
+    updates["_action"] = "index"
+    deletes = pdf.iloc[dele].copy()
+    deletes["_action"] = "delete"
+    appended = pdf.iloc[donors[n:]].copy()
+    appended["conv_id"] = "zz-cdc-00000000"
+    appended["turn_idx"] = np.arange(len(appended), dtype="int32")
+    appended["_action"] = "index"
+    changes = pd.concat([updates, deletes, appended], ignore_index=True)
+    after = pdf.copy()
+    after.loc[after.index[upd], "text"] = updates["text"].to_numpy()
+    after = after.drop(after.index[dele])
+    after = pd.concat(
+        [after, appended.drop(columns="_action")], ignore_index=True
     )
-    for mm in mismatches[:5]:
-        print("MISMATCH", mm[0], mm[1], mm[2][:3], "vs", mm[3][:3])
+    return changes, after
+
+
+def main() -> None:
+    n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 2500
+    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 16
+
+    from pyspark.sql import types as T
+
+    from addok_spark.config import EngineConfig
+    from addok_spark.data.transcripts import (
+        SCHEMA, transcripts_df, transcripts_pdf,
+    )
+    from addok_spark.index.build import IndexPaths, build_index
+    from addok_spark.index.fileio import NoLinkFileIO
+    from addok_spark.index.incremental import apply_actions
+    from addok_spark.query.engine import Query
+    from addok_spark.session import build_session
+
+    spark = build_session(cores=cores, driver_memory="16g")
+    # 1024 docs per pbucket: many partitions, so shards own real slices
+    # and the CDC snapshot leaves most of them in the bulk build's dirs
+    cfg = EngineConfig(build_partitions=cores * 2, common_threshold=10_000,
+                       doc_bucket_bits=8, pbucket_shift=2)
+    sdf = transcripts_df(spark, n_convs, seed=42)
+    out = f"/tmp/val4_{n_convs}"
+    import shutil
+
+    shutil.rmtree(out, ignore_errors=True)
+    t0 = time.time()
+    paths = build_index(spark, sdf, cfg, out)
+    build_s = time.time() - t0
+    pdf = transcripts_pdf(n_convs, seed=42)
+
+    changes, after = change_batch(pdf, seed=11)
+    schema = T.StructType(
+        list(SCHEMA.fields) + [T.StructField("_action", T.StringType())]
+    )
+    failed = False
+    for label, corpus in (("bulk", pdf), ("cdc", after)):
+        if label == "cdc":
+            t0 = time.time()
+            m = apply_actions(
+                spark, paths, spark.createDataFrame(changes, schema), cfg,
+                fileio=NoLinkFileIO(),
+            )
+            cdc_s = time.time() - t0
+            man = IndexPaths(Path(out), m["version"]).read_snapshot_manifest()
+            bases = {
+                t: sorted({rel.split("/", 1)[0] for rel in entries.values()})
+                for t, entries in man["tables"].items()
+            }
+            print(f"CDC version={m['version']} upserts={m['upserts']} "
+                  f"deletes={m['deletes']} touched={m['touched_pbuckets']} "
+                  f"apply_s={cdc_s:.1f} manifest_bases={bases}")
+        queries = make_queries(corpus, seed=7)
+        if label == "cdc":  # the updated rows' unique tokens
+            queries += [
+                Query(qid=f"mark-{i}", q=f"cdcmark{i:04d}", k=10)
+                for i in range(3)
+            ]
+        mismatches, sc_ok, engine_s, srv_s = four_way(
+            spark, cfg, out, corpus, queries
+        )
+        print(
+            f"RESULT {label} turns={len(corpus)} queries={len(queries)} "
+            f"mismatches={len(mismatches)} scores_close={sc_ok} "
+            f"build_s={build_s:.1f} engine_batch_s_per_q={engine_s/len(queries):.3f} "
+            f"serving_cold_ms_per_q={1000*srv_s/len(queries):.1f}"
+        )
+        for mm in mismatches[:5]:
+            print("MISMATCH", mm[0], mm[1], mm[2][:3], "vs", mm[3][:3])
+        failed |= bool(mismatches) or not sc_ok
     spark.stop()
-    sys.exit(1 if mismatches or not sc_ok else 0)
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":

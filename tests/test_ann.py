@@ -362,3 +362,21 @@ def test_round6_array_matches_scalar_semantics():
     assert list(got) == want
     nan_out = vk.round6_array(np.array([float("nan")]))
     assert np.isnan(nan_out[0])
+
+
+def test_list_to_matrix_honours_slices():
+    """A sliced List or FixedSizeList column converts to exactly the
+    rows of the slice: flatten() already applies the slice, so the
+    values must not be sliced again (List) or read unsliced
+    (FixedSizeList)."""
+    import pyarrow as pa
+
+    from addok_spark.pipelines.veckernel import list_to_matrix
+
+    want = np.array([[3.0, 4.0], [5.0, 6.0]])
+    lists = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0], [7.0, 8.0]])
+    assert np.array_equal(list_to_matrix(lists.slice(1, 2)), want)
+    fixed = pa.FixedSizeListArray.from_arrays(
+        pa.array([1.0, 2.0, 3.0, 4.0, 5.0, 6.0]), 2
+    )
+    assert np.array_equal(list_to_matrix(fixed.slice(1, 2)), want)

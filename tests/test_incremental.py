@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from addok_spark.config import EngineConfig, FieldSpec
 from addok_spark.index.build import build_index
+from addok_spark.index.fileio import LocalFileIO, NoLinkFileIO
 from addok_spark.index.incremental import apply_actions, stream_transcripts
 from addok_spark.query.engine import Query, SearchEngine
 
@@ -209,10 +210,10 @@ def _bigger_corpus(spark, n=24):
 
 def _pb_files(base, skip_pb):
     """{relative path: (inode, mtime_ns, size)} of every parquet file
-    NOT under the given pbucket partitions. Snapshot publication
-    HARDLINKS untouched partition files into the next version dir, so
-    "not rewritten" ⟺ the new snapshot's file is the same inode with
-    the same mtime — zero bytes recomputed or copied."""
+    NOT under the given pbucket partitions. A snapshot shares
+    untouched partition files (hardlinked into the next version dir,
+    or referenced where they are), so "not rewritten" ⟺ the same
+    inode with the same mtime — zero bytes recomputed or copied."""
     out = {}
     base = Path(base)
     for p in base.rglob("*.parquet"):
@@ -224,17 +225,23 @@ def _pb_files(base, skip_pb):
     return out
 
 
-def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path):
+@pytest.mark.parametrize(
+    "fileio", [LocalFileIO(), NoLinkFileIO()], ids=["local", "nolink"]
+)
+def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path, fileio):
     """Verdict #4 done-criterion: a CDC batch must not re-read or
-    rewrite untouched pbuckets — asserted via (a) unchanged file
-    mtimes for docs/blocks/dict_partials outside the touched set and
-    (b) the partials read plan carrying a pbucket partition filter —
-    while global df/cf stay EXACTLY consistent (full-recompute
-    comparison)."""
+    rewrite untouched pbuckets — asserted via (a) the untouched
+    partitions' manifest entries across a second batch: the same
+    names, resolving to the same files (inode, mtime, size — hardlinks
+    under LocalFileIO), and under NoLinkFileIO the very same
+    locations, and (b) the partials read plan carrying a pbucket
+    partition filter — while global df/cf stay EXACTLY consistent
+    (full-recompute comparison)."""
     from addok_spark.index.build import (
         dictionary_from_blocks,
         pairs_from_blocks,
         prefixes_from_dictionary,
+        read_table,
     )
 
     out = str(tmp_path / "idx_untouched")
@@ -256,48 +263,60 @@ def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path):
     )
     assert "PartitionFilters" in plan and "pbucket" in plan
 
-    m0 = apply_actions(spark, paths, changes, cfg)
+    m0 = apply_actions(spark, paths, changes, cfg, fileio=fileio)
     touched = m0["touched_pbuckets"]
     assert len(touched) == 1
-    before = {
-        base: _pb_files(getattr(paths, base), touched)
-        for base in ("docs", "blocks", "dict_partials")
-    }
+
+    def untouched(table):
+        entries = paths.pin().table_entries(table)
+        return {
+            name: rel for name, rel in entries.items()
+            if name not in {f"pbucket={t}" for t in touched}
+        }
+
+    def files(entries):
+        return {
+            name: _pb_files(Path(paths.root) / rel, ())
+            for name, rel in entries.items()
+        }
+
+    tables = ("docs", "blocks", "dict_partials")
+    before = {t: untouched(t) for t in tables}
+    before_files = {t: files(e) for t, e in before.items()}
     # second batch touching the same pbucket again
     changes2 = spark.createDataFrame(
         [("conv-001", 0, "user", "alpha tok001 AGAIN omega", None, 0.1)],
         "conv_id string, turn_idx int, role string, text string,"
         " tool string, importance double",
     )
-    m1 = apply_actions(spark, paths, changes2, cfg)
+    m1 = apply_actions(spark, paths, changes2, cfg, fileio=fileio)
     assert m1["touched_pbuckets"] == touched
-    for base, files in before.items():
-        assert _pb_files(getattr(paths, base), touched) == files, (
-            f"untouched {base} partitions were rewritten"
+    for t in tables:
+        after = untouched(t)
+        assert after and set(after) == set(before[t]), t
+        assert files(after) == before_files[t], (
+            f"untouched {t} partitions were rewritten"
         )
+        if isinstance(fileio, NoLinkFileIO):
+            assert after == before[t], f"untouched {t} entries moved"
     # exactness: dictionary == full recompute from blocks
-    got = {
-        (r["token"], r["df"], r["cf"])
-        for r in spark.read.parquet(paths.dictionary).collect()
-    }
+    blocks = read_table(spark, paths, "blocks")
+    dictionary = read_table(spark, paths, "dictionary")
+    got = {(r["token"], r["df"], r["cf"]) for r in dictionary.collect()}
     want = {
         (r["token"], r["df"], r["cf"])
-        for r in dictionary_from_blocks(
-            spark.read.parquet(paths.blocks)
-        ).collect()
+        for r in dictionary_from_blocks(blocks).collect()
     }
     assert got == want
     # ...and so do the prefix and pair tables: each equals its full
     # derivation from the published dictionary / blocks
-    dictionary = spark.read.parquet(paths.dictionary)
     pfx_cols = ["prefix", "token", "df", "max_boost", "pfx_bucket"]
-    assert _rowset(spark.read.parquet(paths.prefixes), pfx_cols) == _rowset(
+    assert _rowset(read_table(spark, paths, "prefixes"), pfx_cols) == _rowset(
         prefixes_from_dictionary(dictionary, cfg), pfx_cols
     )
     pair_cols = ["pbucket", "token_a", "token_b"]
-    assert _rowset(spark.read.parquet(paths.pairs), pair_cols) == _rowset(
-        pairs_from_blocks(spark.read.parquet(paths.blocks), dictionary, cfg),
-        pair_cols,
+    assert _rowset(read_table(spark, paths, "pairs"), pair_cols) == _rowset(
+        pairs_from_blocks(blocks, dictionary, cfg), pair_cols,
     )
 
 

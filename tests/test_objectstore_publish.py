@@ -1,10 +1,11 @@
 """Object-store-safe snapshot publish (VERDICT r4 #4): snapshots
 share untouched partitions by MANIFEST REFERENCE (no hardlinks, no
-byte copies), commit is a single pointer PUT, readers resolve tables
-through build.read_table, GC never deletes a dir a retained manifest
-references. A NoLinkFileIO simulates S3 semantics and RAISES on any
-attempted link/copy, so 'nothing is shared by bytes' is asserted by
-construction."""
+byte copies), commit is a single pointer PUT, every reader (Spark
+engine, serving tier) resolves tables through the snapshot's
+IndexPaths entries, GC never deletes a dir a retained manifest
+references, and a damaged pointer or manifest fails loudly. A
+NoLinkFileIO simulates S3 semantics: it never links or copies a data
+file."""
 
 import json
 from pathlib import Path
@@ -17,7 +18,6 @@ from addok_spark.config import EngineConfig, FieldSpec
 from addok_spark.index.build import (
     IndexPaths,
     build_index,
-    materialize_snapshot,
     read_table,
 )
 from addok_spark.index.fileio import LocalFileIO, NoLinkFileIO
@@ -92,7 +92,6 @@ def test_nolink_publish_shares_by_reference(spark, cfg, tmp_path):
     cur = json.loads((Path(np_.root) / "CURRENT.json").read_text())
     assert cur["version"] == 1 and cur["manifest"] == "snapshot-v000001.json"
     man = json.loads((Path(np_.root) / cur["manifest"]).read_text())
-    assert man["materialized"] is False
     docs_entries = man["tables"]["docs"]
     untouched = {
         k: v for k, v in docs_entries.items()
@@ -187,24 +186,135 @@ def test_nolink_gc_keeps_referenced_dirs(spark, cfg, tmp_path):
     assert not _search(spark, paths, cfg2, "one")
 
 
-def test_materialize_snapshot_for_serving(spark, cfg, tmp_path):
-    """Serving needs a physical layout: it must refuse a
-    reference-only snapshot with a pointer to materialize_snapshot,
-    and the materialized copy must serve identically to the engine."""
-    io = NoLinkFileIO()
-    np_, _ = _twin(spark, cfg, tmp_path, io, "nolink")
+def _ranks(rows):
+    out: dict[str, list] = {}
+    for qid, conv, turn in rows:
+        out.setdefault(qid, []).append((conv, int(turn)))
+    return out
+
+
+def _frame_ranks(df):
+    df = df.sort_values(["qid", "rank"])
+    return _ranks(zip(df["qid"], df["conv_id"], df["turn_idx"]))
+
+
+def test_serving_opens_reference_only_snapshot_directly(spark, cfg, tmp_path):
+    """Two chained no-link batches touching different pbuckets leave
+    the live partitions spread over v0, v1 and v2. The serving tier
+    opens that snapshot as it is — unsharded and with two shards —
+    and ranks exactly like the Spark engine and the oracle. The second
+    batch also deletes one doc and appends one, so doc ids end past
+    n_docs and the shard bounds must still cover the last pbucket."""
+    from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
     from addok_spark.serving.local import LocalSearchEngine
 
-    with pytest.raises(ValueError, match="materialize"):
-        LocalSearchEngine(np_, cfg)
-    dest = str(tmp_path / "served")
-    flat = materialize_snapshot(np_, dest)
-    srv = LocalSearchEngine(flat, cfg)
-    got = srv.search([Query(qid="q", q="rewritten zeta", k=10)])
-    want = _search(spark, np_, cfg, "rewritten zeta")
-    assert list(zip(got["conv_id"], got["turn_idx"])) == [
-        (c, t) for c, t, _ in want
+    io = NoLinkFileIO()
+    n = 32  # pbuckets 0-3 (8 docs each); the appended doc opens pbucket 4
+    paths = build_index(spark, _corpus(spark, n), cfg, str(tmp_path / "spread"))
+    apply_actions(
+        spark, paths, _batch(spark, 0, "rewritten zeta payload"), cfg, fileio=io
+    )
+    second = spark.createDataFrame(
+        [
+            (f"conv-{n - 1:03d}", 0, "user", "second wave theta", None, 0.5, "update"),
+            (f"conv-{n - 2:03d}", 0, "user", "", None, 0.1, "delete"),
+            ("conv-100", 0, "user", "fresh appended kappa", None, 0.5, "index"),
+        ],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, importance double, _action string",
+    )
+    apply_actions(spark, paths, second, cfg, fileio=io)
+    man = json.loads((Path(paths.root) / "snapshot-v000002.json").read_text())
+    roots = {v.split("/", 1)[0] for v in man["tables"]["docs"].values()}
+    assert roots == {"docs", "v000001", "v000002"}, roots
+
+    pdf = _corpus(spark, n).toPandas()
+    pdf.loc[0, ["text", "importance"]] = ["rewritten zeta payload", 0.5]
+    pdf.loc[n - 1, ["text", "importance"]] = ["second wave theta", 0.5]
+    pdf = pdf.drop(index=n - 2)
+    pdf.loc[n] = ["conv-100", 0, "user", "fresh appended kappa", None, 0.5]
+    queries = [
+        Query(qid="exact", q="rewritten zeta", k=10),
+        Query(qid="second", q="second wave theta", k=10),
+        Query(qid="v0", q="alpha tok017", k=10),
+        Query(qid="deleted", q="alpha tok030", k=10),
+        Query(qid="appended", q="fresh kappa", k=10),
+        Query(qid="common", q="alpha omega", k=10),
+        Query(qid="prefix", q="tok02", k=10, autocomplete=True),
+        Query(qid="typo", q="thetq", k=10),
     ]
+    want = _frame_ranks(
+        oracle_search(OracleIndex(pdf, cfg), queries, cfg)
+    )
+    assert want["v0"][0] == ("conv-017", 0)
+    assert want["appended"] == [("conv-100", 0)]
+    eng = SearchEngine(spark, paths, cfg).search(queries).collect()
+    assert _ranks(
+        (r["qid"], r["conv_id"], r["turn_idx"])
+        for r in sorted(eng, key=lambda r: (r["qid"], r["rank"]))
+    ) == want
+    for shards in (None, 2):
+        got = LocalSearchEngine(paths, cfg, shards=shards).search(queries)
+        assert _frame_ranks(got) == want, shards
+
+
+@pytest.mark.parametrize("damaged", ["pointer", "manifest"])
+def test_damaged_pointer_or_manifest_fails_loudly(spark, cfg, tmp_path, damaged):
+    """A pointer or manifest that exists but does not parse must raise
+    in every reader — never read as "no snapshot" (which would serve
+    the flat v0 tables, or miss every partition the manifest points to
+    in older dirs) — and publish's GC must delete nothing."""
+    from addok_spark.serving.local import LocalSearchEngine
+
+    io = NoLinkFileIO()
+    paths, _ = _twin(spark, cfg, tmp_path, io, "dmg")
+    apply_actions(spark, paths, _batch(spark, 15, "second wave"), cfg, fileio=io)
+    root = Path(paths.root)
+    bad = root / ("CURRENT.json" if damaged == "pointer" else "snapshot-v000002.json")
+    bad.write_text('{"version": 2, "tables": ')
+
+    def listing():
+        return sorted(str(p.relative_to(root)) for p in root.rglob("*"))
+
+    before = listing()
+    with pytest.raises(ValueError, match="damaged"):
+        read_table(spark, paths, "docs")
+    with pytest.raises(ValueError, match="damaged"):
+        SearchEngine(spark, paths, cfg)
+    with pytest.raises(ValueError, match="damaged"):
+        LocalSearchEngine(paths, cfg)
+    with pytest.raises(ValueError, match="damaged"):
+        apply_actions(spark, paths, _batch(spark, 7, "third wave"), cfg, fileio=io)
+    if damaged == "manifest":
+        # keep=1 retains only v2, whose manifest is unreadable: GC must
+        # not guess which old dirs it still references
+        with pytest.raises(ValueError, match="damaged"):
+            IndexPaths(root).publish(2, keep=1, fileio=io)
+    assert listing() == before
+
+
+def test_rebuild_over_stale_manifest_reads_rebuilt_tables(spark, cfg, tmp_path):
+    """A full rebuild over a versioned index publishes version N+1 with
+    a manifest it wrote itself: a leftover snapshot-v{N+1}.json (a CDC
+    batch that crashed between writing its manifest and publishing)
+    must not redirect readers to the old partitions."""
+    paths, _ = _twin(spark, cfg, tmp_path, NoLinkFileIO(), "rebuild")
+    root = Path(paths.root)
+    stale = json.loads((root / "snapshot-v000001.json").read_text())
+    stale["version"] = 2
+    (root / "snapshot-v000002.json").write_text(json.dumps(stale))
+    rebuilt = build_index(spark, _corpus(spark, 20), cfg, str(root))
+    assert paths.current_version() == 2
+    for table in ("docs", "blocks", "dictionary", "dict_partials",
+                  "prefixes", "pairs"):
+        got = read_table(spark, paths, table)
+        want = spark.read.parquet(getattr(rebuilt, table))
+        cols = sorted(want.columns)
+        assert sorted(got.columns) == cols, table
+        assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+            map(tuple, want.select(*cols).collect())
+        ), table
+    assert read_table(spark, paths, "docs").count() == 20
 
 
 def test_read_table_prunes_partitions_on_manifest_snapshots(spark, cfg, tmp_path):
@@ -270,7 +380,6 @@ def test_cli_ngrams_postpass_on_flat_linked_and_reference_snapshots(
     v = run_ngrams(str(np_.root))["version"]
     assert v == 2 and np_.pin().version == 2
     man = json.loads((Path(np_.root) / "snapshot-v000002.json").read_text())
-    assert man["materialized"] is False
     assert "prefixes" in man["tables"]
     assert any(
         not loc.startswith("v000002/")

@@ -257,11 +257,14 @@ def test_topn_two_level_bounded_head_rank_identity(spark):
     assert list(two["doc_index"]) == list(want["doc_index"])
 
 
-def test_arrow_probes_match_spark_fallback(spark, tmp_index_root):
+def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
     """r6: the driver-side pyarrow metadata probes (dictionary stats,
-    prefix candidates, pair existence) must return exactly what the
-    Spark-job fallback path returns — including absent keys, null
+    prefix candidates, pair existence) must return exactly what Spark
+    scans of the same tables return — including absent keys, null
     max_boost handling, and the prefix rank-and-cap order."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
     cfg = EngineConfig(
         build_partitions=4, doc_bucket_bits=4, posting_block_size=16,
         build_prefixes=True, build_pairs=True, common_threshold=400,
@@ -271,7 +274,6 @@ def test_arrow_probes_match_spark_fallback(spark, tmp_index_root):
         str(Path(tmp_index_root) / "probe_idx"),
     )
     eng = SearchEngine(spark, paths, cfg)
-    assert eng._probe("dictionary") is not None, "materialized snapshot"
 
     toks = {
         r["token"]
@@ -286,15 +288,31 @@ def test_arrow_probes_match_spark_fallback(spark, tmp_index_root):
         (a, b) for a in some for b in some if a < b
     }
 
-    arrow = (
-        eng._token_stats(toks),
-        eng._prefix_candidates_batch(prefixes, cap=5),
-        eng._pairs_probe(checks),
-    )
-    eng._probe_cache = {"dictionary": None, "prefixes": None, "pairs": None}
-    fallback = (
-        eng._token_stats(toks),
-        eng._prefix_candidates_batch(prefixes, cap=5),
-        eng._pairs_probe(checks),
-    )
-    assert arrow == fallback
+    stats = {
+        r["token"]: (r["df"], float(r["max_boost"] or 0.0))
+        for r in eng.dictionary.filter(F.col("token").isin(list(toks)))
+        .select("token", "df", "max_boost").collect()
+    }
+    w = Window.partitionBy("prefix").orderBy(F.desc("df"), F.asc("token"))
+    cands: dict = {}
+    for r in sorted(
+        eng.prefixes.filter(F.col("prefix").isin(list(prefixes)))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 5).collect(),
+        key=lambda r: (r["prefix"], r["rn"]),
+    ):
+        cands.setdefault(r["prefix"], []).append(
+            (r["token"], r["df"], float(r["max_boost"] or 0.0))
+        )
+    a_list = sorted({a for a, _ in checks})
+    b_list = sorted({b for _, b in checks})
+    pairs = {
+        (r["token_a"], r["token_b"])
+        for r in eng.pairs.filter(
+            F.col("token_a").isin(a_list) & F.col("token_b").isin(b_list)
+        ).collect()
+    } & checks
+
+    assert eng._token_stats(toks) == stats
+    assert eng._prefix_candidates_batch(prefixes, cap=5) == cands
+    assert eng._pairs_probe(checks) == pairs
