@@ -33,6 +33,16 @@ from ..functions.text import (
 )
 
 
+# result frame columns, in order (``rank`` is appended last)
+_RESULT_COLUMNS = [
+    "qid", "doc_index", "score", "str_distance", "boost", "importance",
+    "conv_id", "turn_idx", "role", "tool", "text",
+]
+
+# ``doc_values`` default meaning "the field must exist" (``row[name]``)
+REQUIRED = object()
+
+
 @dataclass
 class OracleResult:
     qid: str
@@ -86,6 +96,16 @@ class ExpansionMixin:
         )
         return tfs, boosts
 
+    def doc_values(self, name: str, docs, default=REQUIRED) -> list:
+        """One field of many docs, in ``docs`` order: ``doc(d)[name]``
+        per doc, or ``doc(d).get(name, default)`` when a default is
+        given. Spec form: one row per doc; the serving tier overrides
+        this with one sorted-position gather per pbucket column
+        (serving/local.py), equal in value and Python type."""
+        if default is REQUIRED:
+            return [self.doc(int(d))[name] for d in docs]
+        return [self.doc(int(d)).get(name, default) for d in docs]
+
     def folded_text(self, d: int) -> str:
         """Folded doc text for cream / reference-scorer / tie-break
         string comparisons (fold is deterministic, so implementations
@@ -101,8 +121,7 @@ class ExpansionMixin:
         labels = [self.folded_text(d)]
         alt_name = getattr(self.cfg, "alt_text_field", None)
         if alt_name:
-            row = self.doc(d)
-            alt = row.get(alt_name) if hasattr(row, "get") else None
+            alt = self.doc_values(alt_name, [d], default=None)[0]
             if alt is not None and not (
                 isinstance(alt, float) and math.isnan(alt)
             ) and len(alt):
@@ -284,9 +303,11 @@ class OracleIndex(ExpansionMixin):
         return self.positions.get(token, {})
 
     def doc(self, d: int):
-        """Row accessor (supports ``row[col]`` / ``row.get``) — the
-        serving tier overrides this with a pbucket-pruned parquet
-        fetch (serving/local.py)."""
+        """Full row of one doc (supports ``row[col]`` / ``row.get``).
+        The scoring fold reads single fields through ``doc_values``
+        and fetches full rows only for the ≤k records it returns; the
+        serving tier overrides both with reads from a columnar
+        per-pbucket doc store (serving/local.py)."""
         return self.docs.iloc[d]
 
     def doc_len(self, d: int) -> int:
@@ -606,14 +627,19 @@ class SpecSearch:
                     continue
                 for tok in groups[gid]:
                     gathered[(gid, tok)] = index.tf_boost_many(tok, cand_arr)
+        # the fold reads only importance and the filter fields: one
+        # column gather each over the candidate array; full rows are
+        # fetched below only for the ≤k records that are returned
+        fcols = []
+        for col, vals in filters.items():
+            vs = set(normalize_filter_values(vals, cfg.max_filter_values))
+            if vs:
+                fcols.append((index.doc_values(col, cand_arr), vs))
+        imps = index.doc_values("importance", cand_arr, default=0.0)
         for ci, d in enumerate(cand_sorted):
-            doc = index.doc(d)
             ok = True
-            for col, vals in filters.items():
-                vs = set(normalize_filter_values(vals, cfg.max_filter_values))
-                if not vs:
-                    continue
-                dv = doc[col]
+            for fvals, vs in fcols:
+                dv = fvals[ci]
                 # list-valued field matches when ANY element matches
                 els = dv if isinstance(dv, (list, tuple, np.ndarray)) else [dv]
                 if not any(
@@ -622,6 +648,8 @@ class SpecSearch:
                     ok = False
             if not ok:
                 continue
+            importance = float(imps[ci] or 0.0)
+            dl = float(index.doc_len(d))
             score = 0.0
             boost_sum = 0.0
             matched_any = False
@@ -644,14 +672,14 @@ class SpecSearch:
                     continue
                 matched_any = True
                 idf = math.log(1.0 + (float(n_docs) - dfm + 0.5) / (dfm + 0.5))
-                tfn = tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * float(index.doc_len(d)) / avgdl))
+                tfn = tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
                 score += idf * tfn
                 boost_sum += float(gboost)
             if not matched_any:
                 continue
             if cfg.scorer == "reference":
                 score = ref_fold_score(
-                    float(doc.get("importance", 0.0) or 0.0),
+                    importance,
                     ref_string_score_best(
                         qf, index.folded_labels(d),
                         bool(getattr(q, "autocomplete", False)),
@@ -668,14 +696,7 @@ class SpecSearch:
                     # str_distance filled in one batched DP below
                     "str_distance": 0.0,
                     "boost": boost_sum,
-                    "importance": float(doc.get("importance", 0.0) or 0.0),
-                    "conv_id": doc["conv_id"],
-                    "turn_idx": int(doc["turn_idx"]),
-                    # render fields (≙ engine.search's doc join) so
-                    # serving/HTTP can answer without a second fetch
-                    "role": doc.get("role"),
-                    "tool": doc.get("tool"),
-                    "text": doc["text"],
+                    "importance": importance,
                 }
             )
         if recs:
@@ -702,9 +723,10 @@ class SpecSearch:
             return None
         # total order (score desc, str_distance desc, boost desc,
         # importance desc, doc_index asc) via one lexsort on the key
-        # arrays; only the top-k records become a frame (a per-query
-        # sort_values over a 5-key candidate-sized DataFrame was a
-        # measured chunk of warm serving latency)
+        # arrays; only the top-k records fetch their doc row and
+        # become a frame (a per-query sort_values over a 5-key
+        # candidate-sized DataFrame was a measured chunk of warm
+        # serving latency)
         order = np.lexsort((
             np.array([r["doc_index"] for r in recs], dtype=np.int64),
             -np.array([r["importance"] for r in recs], dtype=np.float64),
@@ -712,9 +734,19 @@ class SpecSearch:
             -np.array([r["str_distance"] for r in recs], dtype=np.float64),
             -np.array([r["score"] for r in recs], dtype=np.float64),
         ))[: q.k]
-        rdf = pd.DataFrame(
-            [recs[i] for i in order], columns=list(recs[0].keys())
-        )
+        top = []
+        for i in order:
+            rec = recs[i]
+            doc = index.doc(rec["doc_index"])
+            # render fields (≙ engine.search's doc join) so
+            # serving/HTTP can answer without a second fetch
+            rec["conv_id"] = doc["conv_id"]
+            rec["turn_idx"] = int(doc["turn_idx"])
+            rec["role"] = doc.get("role")
+            rec["tool"] = doc.get("tool")
+            rec["text"] = doc["text"]
+            top.append(rec)
+        rdf = pd.DataFrame(top, columns=_RESULT_COLUMNS)
         rdf["rank"] = np.arange(1, len(rdf) + 1)
         return rdf
 
@@ -725,11 +757,7 @@ class SpecSearch:
             if rdf is not None:
                 rows_out.append(rdf)
         if not rows_out:
-            return pd.DataFrame(
-                columns=["qid", "doc_index", "score", "str_distance", "boost",
-                         "importance", "conv_id", "turn_idx", "role", "tool",
-                         "text", "rank"]
-            )
+            return pd.DataFrame(columns=_RESULT_COLUMNS + ["rank"])
         return pd.concat(rows_out, ignore_index=True)
 
 

@@ -237,7 +237,12 @@ def minhash_lsh_pairs(
     bucket population is uniform (no salt needed). Band keys are
     built IN-ROW from the wide signature (no per-band shuffle), and
     the banded table is persisted so the self-join's two sides read
-    one materialization."""
+    one materialization. ``bands`` must divide ``n_hashes``: a
+    remainder would leave hash ids in no band."""
+    if bands <= 0 or n_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must divide n_hashes={n_hashes}"
+        )
     rows_per_band = n_hashes // bands
     wide = _minhash_wide(df, id_col, text_col, n_hashes, k)
     bandrows = F.explode(

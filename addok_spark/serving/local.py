@@ -22,8 +22,13 @@ from those artifacts with pruned columnar reads:
   decoded with the same numpy codec the build wrote with
   (``index/compress.py``), and kept as sorted numpy arrays
   (docs / tf / boost), not Python dicts;
-- **documents** are fetched per pbucket partition only when a doc
-  becomes a candidate (hive partition pruning on ``pbucket``);
+- **documents** are read per pbucket partition (hive partition
+  pruning on ``pbucket``) the first time one of its docs becomes a
+  candidate, and kept columnar: the partition's Arrow table sorted by
+  ``doc_index``. The scoring fold gathers importance and the filter
+  fields for the whole candidate array with one ``searchsorted`` +
+  ``take``, reads lengths and folded text straight from the columns,
+  and builds a full row dict only for the ≤k records a query returns;
 - **prefixes / pairs** reads are filter-pruned the same way and
   memoized per key;
 - every table opens through ``index.build.open_dataset``, the same
@@ -55,11 +60,12 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..config import EngineConfig
 from ..index.build import IndexPaths, open_dataset
 from ..index.compress import unpack_deltas, unpack_f32, varint_decode
-from ..oracle.bm25_oracle import ExpansionMixin, SpecSearch
+from ..oracle.bm25_oracle import REQUIRED, ExpansionMixin, SpecSearch
 from ..query.engine import Query, normalize_filter_values
 
 _EMPTY = (
@@ -267,6 +273,99 @@ class _TokenBlocks:
         return self.n_blocks if self._full is not None else len(self._dec)
 
 
+def _native(v):
+    """Box one stored value the way a pandas row's ``to_dict()`` does:
+    numpy scalars become Python ``int`` / ``float`` / ``bool``;
+    ``pd.Timestamp``, arrays and ``None`` pass through."""
+    return v.item() if isinstance(v, np.generic) else v
+
+
+class _DocStore:
+    """One pbucket's docs, columnar: the partition's Arrow table
+    sorted by ``doc_index`` (after CDC a partition can hold several
+    files, so the sort is explicit), with numpy ``doc_index`` for
+    position lookups and ``dl`` for the BM25 length norm.
+
+    Values are boxed per read exactly as the pandas row
+    ``frame.loc[d].to_dict()`` boxes them. String columns stay Arrow
+    and box with ``as_py`` (``None`` when missing). Every other column
+    is converted once, on its first read, by pandas itself, so
+    pandas' dtype rules hold: ints with nulls become float,
+    timestamps ``pd.Timestamp``, lists numpy arrays. Two threads
+    converting the same column at once build equal values, so the
+    memo needs no lock."""
+
+    __slots__ = ("table", "doc_index", "dl", "_cols")
+
+    def __init__(self, tbl):
+        self.table = tbl.sort_by("doc_index")
+        self.doc_index = self.table.column("doc_index").to_numpy()
+        self.dl = self.table.column("dl").to_numpy()
+        self._cols: dict[str, tuple] = {}
+
+    def positions(self, docs: np.ndarray) -> np.ndarray:
+        n = len(self.doc_index)
+        pos = np.searchsorted(self.doc_index, docs)
+        miss = pos >= n
+        miss[~miss] = self.doc_index[pos[~miss]] != docs[~miss]
+        if miss.any():
+            raise KeyError(int(docs[miss][0]))
+        return pos
+
+    def position(self, d: int) -> int:
+        i = int(self.doc_index.searchsorted(d))
+        if i == len(self.doc_index) or self.doc_index.item(i) != d:
+            raise KeyError(d)
+        return i
+
+    def _column(self, name: str) -> tuple:
+        col = self._cols.get(name)
+        if col is None:
+            chunked = self.table.column(name)
+            if pa.types.is_string(chunked.type):
+                # the sort's take leaves one chunk: read it in place
+                col = (True, chunked.chunk(0) if chunked.num_chunks == 1
+                       else chunked.combine_chunks())
+            else:
+                ser = chunked.to_pandas()
+                numpy_backed = (
+                    isinstance(ser.dtype, np.dtype) and ser.dtype.kind not in "mM"
+                )
+                col = (False, ser.to_numpy() if numpy_backed else ser.array)
+            self._cols[name] = col
+        return col
+
+    def value(self, name: str, i: int):
+        arrow, vals = self._column(name)
+        return vals[i].as_py() if arrow else _native(vals[i])
+
+    def values(self, name: str, pos: np.ndarray) -> list:
+        arrow, vals = self._column(name)
+        if arrow:
+            return vals.take(pos).to_pylist()
+        if isinstance(vals, np.ndarray):
+            return vals[pos].tolist()
+        return [_native(vals[i]) for i in pos.tolist()]
+
+    def row(self, i: int) -> dict:
+        return {name: self.value(name, i) for name in self.table.column_names}
+
+
+def _stitch(keys: np.ndarray, fetch) -> list:
+    """Values for every position of ``keys``, in input order, from one
+    ``fetch(key, sel)`` call per distinct key (``sel`` = the positions
+    holding it; a slice when there is only one key)."""
+    uniq = np.unique(keys)
+    if len(uniq) <= 1:
+        return fetch(int(uniq[0]), slice(None)) if len(uniq) else []
+    out = [None] * len(keys)
+    for key in uniq.tolist():
+        sel = np.flatnonzero(keys == key)
+        for i, v in zip(sel.tolist(), fetch(key, sel)):
+            out[i] = v
+    return out
+
+
 class _PreloadMixin:
     """Shared startup warm-up for anything exposing ``df`` (token →
     document frequency) and ``prefetch_tokens``."""
@@ -327,6 +426,7 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         # None when the snapshot has none
         self._blocks_ds = open_dataset(self.paths, "blocks")
         self._docs_ds = open_dataset(self.paths, "docs")
+        self._doc_columns = frozenset(self._docs_ds.schema.names)
         self._prefix_ds = open_dataset(self.paths, "prefixes")
         self._pairs_ds = open_dataset(self.paths, "pairs")
         self.have_pairs = self._pairs_ds is not None
@@ -346,7 +446,7 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         self._blocks: dict[str, _TokenBlocks] = _LRU(100_000)
         self._scan_cache: dict[tuple, tuple] = _LRU(1024)
         self._dict_views: dict[str, dict[int, float]] = _LRU(10_000)
-        self._doc_cache: dict[int, pd.DataFrame] = _LRU(64)
+        self._doc_cache: dict[int, _DocStore] = _LRU(64)
         self._row_cache: dict[int, dict] = _LRU(100_000)
         self._fold_cache: dict[int, str] = _LRU(100_000)
         self._prefix_cache: dict[str, list[str]] = _LRU(50_000)
@@ -648,30 +748,53 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         return out_tf, out_b
 
     # -- documents ----------------------------------------------------------
-    def _doc_frame(self, pbucket: int) -> pd.DataFrame:
-        frame = self._doc_cache.get(pbucket)
-        if frame is None:
+    def _doc_store(self, pbucket: int) -> _DocStore:
+        store = self._doc_cache.get(pbucket)
+        if store is None:
             f = self._pads.field
-            tbl = self._docs_ds.to_table(filter=f("pbucket") == pbucket)
-            frame = tbl.to_pandas().set_index("doc_index", drop=False)
-            self._doc_cache[pbucket] = frame
-        return frame
+            store = _DocStore(
+                self._docs_ds.to_table(filter=f("pbucket") == pbucket)
+            )
+            self._doc_cache[pbucket] = store
+        return store
+
+    def _locate(self, d: int) -> tuple[_DocStore, int]:
+        store = self._doc_store(d >> self._doc_shift)
+        return store, store.position(d)
 
     def doc(self, d: int):
+        """Full row of one doc as a plain dict: the same keys, values
+        and Python types as the pandas row ``.loc[d].to_dict()`` of
+        its pbucket partition. The scoring fold calls this only for
+        the ≤k records it returns; everything it reads per candidate
+        comes from ``doc_values`` / ``doc_len`` / ``folded_text``,
+        which read the columnar store without building a row."""
         d = int(d)
         row = self._row_cache.get(d)
         if row is None:
-            # plain-dict rows, not pandas Series: the scoring fold
-            # reads several fields per candidate and Series scalar
-            # __getitem__ is ~50× a dict probe (it dominated the warm
-            # serving profile); dict supports the documented row[col]
-            # / row.get contract identically
-            row = self._doc_frame(d >> self._doc_shift).loc[d].to_dict()
+            store, i = self._locate(d)
+            row = store.row(i)
             self._row_cache[d] = row
         return row
 
+    def doc_values(self, name: str, docs, default=REQUIRED) -> list:
+        """One field of many docs (see ExpansionMixin.doc_values):
+        one ``searchsorted`` + ``take`` per pbucket store."""
+        docs = np.asarray(docs, dtype=np.int64)
+        if len(docs) and name not in self._doc_columns:
+            if default is REQUIRED:
+                raise KeyError(name)
+            return [default] * len(docs)
+
+        def fetch(pbucket, sel):
+            store = self._doc_store(pbucket)
+            return store.values(name, store.positions(docs[sel]))
+
+        return _stitch(docs >> self._doc_shift, fetch)
+
     def doc_len(self, d: int) -> int:
-        return int(self.doc(d)["dl"])
+        store, i = self._locate(int(d))
+        return store.dl.item(i)
 
     def get_doc(self, conv_id: str, turn_idx: int):
         """Direct lookup by natural key (≙ Result.from_id,
@@ -693,7 +816,8 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         if ft is None:
             from ..functions.text import fold_str
 
-            ft = fold_str(self.doc(d)["text"] or "")
+            store, i = self._locate(d)
+            ft = fold_str(store.value("text", i) or "")
             self._fold_cache[d] = ft
         return ft
 
@@ -788,12 +912,14 @@ class ShardedIndex(ExpansionMixin, _PreloadMixin):
         ]
         self._dict_views: dict[str, dict[int, float]] = _LRU(10_000)
 
-    def _owner(self, d: int) -> "ParquetIndex":
-        pb = int(d) >> self._doc_shift
-        for (lo, hi), sh in zip(self._bounds, self.shards):
+    def _shard_of(self, pb: int) -> int:
+        for i, (lo, hi) in enumerate(self._bounds):
             if lo <= pb < hi:
-                return sh
-        return self.shards[-1]
+                return i
+        return len(self.shards) - 1
+
+    def _owner(self, d: int) -> "ParquetIndex":
+        return self.shards[self._shard_of(int(d) >> self._doc_shift)]
 
     # -- postings: scatter-gather, concat stays doc-sorted ------------------
     def _token_arrays(self, token: str):
@@ -917,6 +1043,17 @@ class ShardedIndex(ExpansionMixin, _PreloadMixin):
     # -- documents: routed to the owning shard ------------------------------
     def doc(self, d: int):
         return self._owner(d).doc(d)
+
+    def doc_values(self, name: str, docs, default=REQUIRED) -> list:
+        docs = np.asarray(docs, dtype=np.int64)
+        pbs = docs >> self._doc_shift
+        owners = np.zeros(len(docs), dtype=np.int64)
+        for pb in np.unique(pbs).tolist():
+            owners[pbs == pb] = self._shard_of(pb)
+        return _stitch(
+            owners,
+            lambda k, sel: self.shards[k].doc_values(name, docs[sel], default),
+        )
 
     def doc_len(self, d: int) -> int:
         return self._owner(d).doc_len(d)

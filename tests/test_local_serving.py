@@ -7,6 +7,7 @@ the rank-identity suite in test_query_engine.py) to the Spark engine.
 from pathlib import Path
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from addok_spark.config import EngineConfig
@@ -525,3 +526,127 @@ def test_sharded_rebalance_after_cdc(spark, tmp_path):
     assert np.allclose(got["score"].values, want["score"].values)
     assert ("new", "conv-050", 0) in got_t
     assert ("old", "conv-001", 0) in got_t
+
+
+def _assert_same_row(got: dict, want: dict, where):
+    """Same keys in the same order, and per key the same Python type
+    and an equal value (NaN equal to NaN)."""
+    assert list(got) == list(want), where
+    for k, w in want.items():
+        g = got[k]
+        assert type(g) is type(w), (where, k, type(g), type(w))
+        same = g == w or (isinstance(w, float) and np.isnan(w) and np.isnan(g))
+        assert same, (where, k, g, w)
+
+
+def test_doc_store_matches_pandas_rows_after_cdc(spark, tmp_path):
+    """The columnar doc store answers ``doc(d)`` with exactly the row
+    a pandas ``.loc[d].to_dict()`` over the same pbucket partition
+    gives (keys, values and Python types: ``pd.Timestamp`` ts, ``None``
+    tool, ``int`` ints), and ``doc_len`` / ``folded_text`` /
+    ``doc_values`` agree with it. The CDC batch leaves a touched
+    pbucket in several files, so the store's own sort by doc_index is
+    what orders it. Unsharded and with ``shards=2``."""
+    import re
+
+    import pyarrow.dataset as pads
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from addok_spark.data.transcripts import SCHEMA
+    from addok_spark.functions.text import fold_str
+    from addok_spark.index.build import IndexPaths, open_dataset
+    from addok_spark.index.incremental import apply_actions
+
+    cfg = EngineConfig(
+        build_partitions=4,
+        doc_bucket_bits=4,
+        pbucket_shift=2,   # 64 docs per pbucket: many pbuckets
+        posting_block_size=16,
+        common_threshold=400,
+    )
+    corpus = transcripts_pdf(12, seed=11)
+    paths = build_index(
+        spark, transcripts_df(spark, 12, seed=11), cfg, str(tmp_path / "docstore")
+    )
+    live = corpus.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    ups = live.iloc[[3, 5, 40, 41, 42]].copy()
+    ups["text"] = ups["text"] + " zqparity"
+    dels = live.iloc[[4, 43, 100]].copy()
+    new = live.iloc[:6].copy()
+    new["conv_id"] = "conv-zz-appended"
+    batch = pd.concat([
+        ups.assign(_action="index"),
+        dels.assign(_action="delete"),
+        new.assign(_action="index"),
+    ], ignore_index=True)
+    schema = StructType(list(SCHEMA.fields) + [StructField("_action", StringType())])
+    apply_actions(spark, paths, spark.createDataFrame(batch, schema), cfg)
+
+    ds = open_dataset(IndexPaths(Path(paths.root)).pin(), "docs")
+    files_per_pb: dict[int, int] = {}
+    for f in ds.files:
+        pb = int(re.search(r"pbucket=(\d+)", f).group(1))
+        files_per_pb[pb] = files_per_pb.get(pb, 0) + 1
+    assert max(files_per_pb.values()) >= 2, files_per_pb
+    frames = {
+        pb: ds.to_table(filter=pads.field("pbucket") == pb)
+        .to_pandas().set_index("doc_index", drop=False)
+        for pb in sorted(files_per_pb)
+    }
+    n_live = sum(len(f) for f in frames.values())
+    assert n_live == len(live) - len(dels) + len(new)
+
+    for shards in (None, 2):
+        idx = LocalSearchEngine(paths, cfg, shards=shards).index
+        for pb, frame in frames.items():
+            docs = frame.index.to_numpy()
+            for col in ("importance", "role", "tool", "ts", "turn_idx", "dl"):
+                got = idx.doc_values(col, docs[::-1])
+                want = [frame.loc[d].to_dict()[col] for d in docs[::-1]]
+                _assert_same_row(dict(enumerate(got)), dict(enumerate(want)),
+                                 (shards, pb, col))
+            assert idx.doc_values("nope", docs[:2], default=0.0) == [0.0, 0.0]
+            with pytest.raises(KeyError):
+                idx.doc_values("nope", docs[:2])
+            for d in docs:
+                want = frame.loc[d].to_dict()
+                _assert_same_row(idx.doc(d), want, (shards, int(d)))
+                assert idx.doc_len(d) == want["dl"]
+                assert idx.folded_text(d) == fold_str(want["text"] or "")
+        # across pbuckets, in any order: one value per doc, input order
+        mixed = np.concatenate([f.index.to_numpy()[:2] for f in frames.values()])
+        np.random.default_rng(0).shuffle(mixed)
+        assert idx.doc_values("doc_index", mixed) == mixed.tolist()
+
+
+def test_row_fetch_bounded_by_k(index_paths, oracle, corpus_pdf, cfg):
+    """The scoring fold builds full row dicts only for the records a
+    query returns: on a fresh engine, ``_row_cache`` grows by at most
+    each query's ``k`` — common, filtered, phrase and reference-scorer
+    queries included — and the answers stay equal to the spec flow
+    and the corpus oracle."""
+    import dataclasses
+
+    words = corpus_pdf["text"].iloc[0].split()
+    queries = _queries(corpus_pdf)[:12] + [
+        Query(qid="rb1", q="the of", k=10),
+        Query(qid="rb2", q="the of to and", k=3),
+        Query(qid="rb3", q=" ".join(words[:2]), k=10, filters={"role": ["user"]}),
+        Query(qid="rb4", q=" ".join(words[:2]), k=10,
+              filters={"role": ["user", "assistant"], "tool": ["python"]}),
+        Query(qid="rb5", q=" ".join(words[1:4]), k=5, phrase=True),
+    ]
+    ref_cfg = dataclasses.replace(cfg, scorer="reference")
+    for qcfg in (cfg, ref_cfg):
+        srv = LocalSearchEngine(index_paths, qcfg)
+        frames = []
+        for q in queries:
+            before = len(srv.index._row_cache)
+            frames.append(srv.search([q]))
+            assert len(srv.index._row_cache) - before <= q.k, q.qid
+        got = pd.concat([f for f in frames if len(f)], ignore_index=True)
+        spec = LocalSearchEngine(index_paths, qcfg, mode="spec").search(queries)
+        _assert_identical(got, spec, min_nonempty=10, score_rtol=0.0)
+        _assert_identical(
+            got, oracle_search(oracle, queries, qcfg), score_rtol=0.0
+        )

@@ -1,10 +1,12 @@
 """Behavioral tests for the round-5 training-data-pipeline ops:
 duplicate_spans (Lee-et-al substring-dedup signal), quality_buckets
-(CCNet head/middle/tail), dsir_weights (importance resampling)."""
+(CCNet head/middle/tail), dsir_weights (importance resampling), and
+the band check of minhash_lsh_pairs."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from addok_spark.pipelines.dedup import duplicate_spans
+from addok_spark.pipelines.dedup import duplicate_spans, minhash_lsh_pairs
 from addok_spark.pipelines.sampling import dsir_weights
 from addok_spark.pipelines.textstats import quality_buckets
 
@@ -164,3 +166,20 @@ def test_remove_duplicate_spans_overlap_union(spark):
     assert out[1]["n_removed"] == 0
     assert out[2]["n_removed"] == 9
     assert out[2]["cleaned"] == "x0 y0"
+
+
+def test_minhash_lsh_pairs_rejects_bands_that_do_not_divide(spark):
+    """Bands of n_hashes // bands rows would leave the remainder's
+    hash ids in no band, so a count that does not divide is refused;
+    a dividing one still pairs the near duplicates."""
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog again"),
+        (2, "the quick brown fox jumps over the lazy dog again"),
+        (3, "entirely different words share nothing with those"),
+    ]
+    df = spark.createDataFrame(rows, "id long, text string")
+    for n_hashes, bands in ((10, 4), (8, 3), (8, 0)):
+        with pytest.raises(ValueError, match=f"bands={bands}.*n_hashes={n_hashes}"):
+            minhash_lsh_pairs(df, "id", "text", n_hashes=n_hashes, bands=bands)
+    pairs = minhash_lsh_pairs(df, "id", "text", n_hashes=8, bands=4).collect()
+    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
