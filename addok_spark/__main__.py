@@ -162,32 +162,22 @@ def cmd_search(args) -> None:
 
 
 def cmd_serve(args) -> None:
-    """HTTP serving: ``--backend local`` (default) answers from the
-    parquet index through the warm serving tier — no Spark session;
-    ``--backend spark`` routes through the Spark engine."""
+    """HTTP serving from the parquet index through the warm serving
+    tier — no Spark session."""
     from .http_api import make_server
+    from .serving.local import LocalSearchEngine
 
-    if args.backend == "local":
-        from .serving.local import LocalSearchEngine
-
-        engine = LocalSearchEngine(
-            args.index, _cfg(args), shards=getattr(args, "shards", None)
+    engine = LocalSearchEngine(
+        args.index, _cfg(args), shards=getattr(args, "shards", None)
+    )
+    preload = getattr(args, "preload", 0)
+    if preload:
+        t0 = time.time()
+        n = engine.preload(preload)
+        print(
+            f"preloaded {n} hot tokens' blocks "
+            f"in {time.time() - t0:.1f}s"
         )
-        preload = getattr(args, "preload", 0)
-        if preload:
-            t0 = time.time()
-            n = engine.preload(preload)
-            print(
-                f"preloaded {n} hot tokens' blocks "
-                f"in {time.time() - t0:.1f}s"
-            )
-    else:
-        from .query.engine import SearchEngine
-
-        if getattr(args, "preload", 0):
-            print("warning: --preload applies to the local backend "
-                  "only; the Spark engine has no posting cache to warm")
-        engine = SearchEngine(_spark(args), args.index, _cfg(args))
     srv = make_server(engine, host=args.host, port=args.port)
     print(f"serving on http://{args.host}:{srv.server_address[1]}/search/")
     try:
@@ -197,44 +187,21 @@ def cmd_serve(args) -> None:
 
 
 def cmd_explain(args) -> None:
-    """Per-stage timing + plan for one query (≙ the reference shell's
-    EXPLAIN, addok/shell.py:282-327: token classification, collection
-    steps with timings, scoring)."""
-    from .query.engine import FILTER_GID_BASE, Query, SearchEngine
+    """Token groups, candidates, timing and results for one query
+    (≙ the reference shell's EXPLAIN, addok/shell.py:282-327), run on
+    the serving tier so the timing covers the whole executed query."""
+    from .query.engine import Query
+    from .serving.local import LocalSearchEngine
+    from .shell import explain_search
 
-    spark = _spark(args)
-    eng = SearchEngine(spark, args.index, _cfg(args))
+    eng = LocalSearchEngine(args.index, _cfg(args))
     filters = json.loads(args.filters) if args.filters else {}
     res = eng.search(
         [Query(qid="explain", q=args.query, k=args.k,
                autocomplete=args.autocomplete, filters=filters)]
-    ).collect()
-    st = eng.last_states["explain"]
-    groups = [
-        {
-            "gid": gid,
-            "kind": "filter" if gid >= FILTER_GID_BASE else (
-                "meaningful" if gid in st.meaningful_order else "common"
-            ),
-            "tokens": toks,
-            "df": st.group_df.get(gid),
-        }
-        for gid, toks in sorted(st.groups.items())
-    ]
+    )
     print(json.dumps(
-        {
-            "query": args.query,
-            "groups": groups,
-            "stages": eng.last_trace,
-            "metrics": eng.last_metrics,
-            "candidates": len(st.candidates),
-            "results": [
-                {"rank": r["rank"], "conv_id": r["conv_id"],
-                 "turn_idx": r["turn_idx"], "score": r["score"]}
-                for r in res
-            ],
-        },
-        indent=2,
+        {"query": args.query, **explain_search(eng, res)}, indent=2
     ))
 
 
@@ -242,8 +209,7 @@ def cmd_shell(args) -> None:
     """Interactive REPL (≙ `addok shell`, addok/shell.py)."""
     from .shell import Shell
 
-    spark = _spark(args)
-    Shell(spark, args.index, _cfg(args)).loop()
+    Shell(args.index, _cfg(args)).loop()
 
 
 def cmd_actions(args) -> None:
@@ -258,27 +224,25 @@ def pyshell_namespace(args) -> dict:
     """The namespace `pyshell` drops you into (≙ reference pyshell
     user_ns {DB, config, get_document}, addok/shell.py:595-614):
     a live SparkSession, the resolved EngineConfig, a ready
-    SearchEngine over --index, and doc_by_id."""
+    SearchEngine and a serving-tier ParquetIndex over --index, and
+    doc_by_id."""
     from .query.engine import Query, SearchEngine
+    from .serving.local import ParquetIndex
 
     spark = _spark(args)
     cfg = _cfg(args)
     engine = SearchEngine(spark, args.index, cfg)
+    index = ParquetIndex(args.index, cfg)
 
     def doc_by_id(conv_id, turn_idx):
-        from pyspark.sql import functions as F
-
-        return (
-            engine.docs.filter(
-                (F.col("conv_id") == conv_id)
-                & (F.col("turn_idx") == int(turn_idx))
-            ).collect()
-        )
+        row = index.get_doc(conv_id, int(turn_idx))
+        return [] if row is None else [row]
 
     return {
         "spark": spark,
         "config": cfg,
         "engine": engine,
+        "index": index,
         "Query": Query,
         "doc_by_id": doc_by_id,
     }
@@ -380,7 +344,6 @@ def main(argv=None) -> None:
 
     sv = sub.add_parser("serve")
     sv.add_argument("--index", required=True)
-    sv.add_argument("--backend", choices=["local", "spark"], default="local")
     sv.add_argument("--host", default="127.0.0.1")
     sv.add_argument("--port", type=int, default=7878)
     sv.add_argument("--synonyms")

@@ -123,41 +123,14 @@ class EngineConfig:
     max_meaningful: int = 10  # addok/core.py:274
     match_threshold: float = 0.9  # MATCH_THRESHOLD, default.py:36
     min_score: float = 0.1  # default.py:38
-    # --- block-max WAND bucket skipping (SURVEY §4.1 top-k pushdown) ---
-    # engage two-phase collection when EVERY required group's df
-    # exceeds wand_min_df: decode the wand_bucket_batch best buckets
-    # by upper bound first, then only buckets whose ub beats the
-    # running top-n floor. Rank-preserving by construction.
-    wand_enabled: bool = True
-    wand_min_df: int = 10_000
-    wand_bucket_batch: int = 4
-    # ...and only when the decode volume actually justifies the second
-    # scheduling round-trip: Σ group df must exceed this. Two-phase
-    # collection costs ~2 extra driver actions (~1s fixed overhead on
-    # a warm local cluster), which posting decode only outweighs in
-    # the tens of millions of postings.
-    wand_min_postings: int = 20_000_000
-    # bucket pruning (metadata intersection before decode) is two
-    # extra stages per round; engage it per-qid only above this
-    # estimated decode volume (Σ group df)
-    prune_min_postings: int = 100_000
-    # --- phrase-mode collection bounds ---
-    # doc-level conjunction on the RAREST phrase token before the
-    # position explode: every other token's (doc, position) stream is
-    # semi-joined against the rare token's doc set, so a phrase
-    # containing a stopword never shuffles the stopword's full
-    # positional postings (bounded by min-df instead of max-df).
-    # False = decode-everything path (kept for A/B evidence in bench).
-    phrase_rare_prune: bool = True
-    # broadcast the rare-token doc set into that semi-join when its
-    # df (known from the dictionary probe, no extra job) is at most
-    # this — the filter then runs map-side inside the decode stage
-    # and the common tokens' position rows never reach a shuffle
-    phrase_broadcast_docs: int = 1_000_000
-    # phrase matches above this estimated volume (Σ per-qid min df)
-    # take the two-level streaming top-n instead of the single-stage
-    # per-qid slice (same cutover shape as the non-phrase rounds)
-    phrase_two_level_min: int = 100_000
+    # --- knobs no search path reads ---
+    # They change no result. They stay only because the frozen bench.py
+    # sets or reads them in its _wand_at_scale and _phrase_ab sections;
+    # they go together with those two sections.
+    wand_enabled: bool = True  # set by bench.py _wand_at_scale
+    wand_min_df: int = 10_000  # read by bench.py _wand_at_scale
+    wand_min_postings: int = 20_000_000  # set and read by _wand_at_scale
+    phrase_rare_prune: bool = True  # set by bench.py _phrase_ab
 
     # --- scoring model ---
     # "bm25" (north_rule default) or "reference": the reference's

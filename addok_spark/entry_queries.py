@@ -346,8 +346,8 @@ FROM (SELECT token, unnest(range(1, length(token) + 1)) AS i FROM d)
 """
 
 def q_phrase_count(spark, sf_dir):
-    """Positional-phrase analog over raw text (the engine's
-    phrase_match uses packed position streams; this is the
+    """Positional-phrase analog over raw text (the search flow's
+    phrase mode counts over packed position streams; this is the
     SQL-checkable twin): per-doc occurrence count of the normalized
     phrase 'data table'."""
     norm = dedup.normalize_text(F.col("text"))

@@ -380,7 +380,6 @@ def compare_str(query: str, label: str) -> float:
 # Spark pandas_udf wrappers (Arrow-vectorized)
 # ---------------------------------------------------------------------------
 
-fold_udf = F.pandas_udf(fold_series, T.StringType())
 tokenize_udf = F.pandas_udf(tokenize_series, T.ArrayType(T.StringType()))
 
 
@@ -431,33 +430,15 @@ def ref_string_score(query: str, label: str, autocomplete: bool) -> float:
 def ref_fold_score(importance: float, str_score: float, iw: float = 0.1) -> float:
     """The reference's score fold (core.py:92-101): Σ sub-scores /
     Σ ceilings over {importance (ceiling iw), str_distance (ceiling
-    1.0)} — shared by engine UDF and oracle so the division happens
-    in one place."""
+    1.0)} — the one place the division happens."""
     return (importance * iw + str_score) / (iw + 1.0)
-
-
-def make_ref_score_udf(iw: float = 0.1):
-    def _rs(q: pd.Series, lbl: pd.Series, ac: pd.Series, imp: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                ref_fold_score(
-                    float(i or 0.0),
-                    ref_string_score(a or "", b or "", bool(c)),
-                    iw,
-                )
-                for a, b, c, i in zip(q, lbl, ac, imp)
-            ]
-        )
-
-    return F.pandas_udf(_rs, T.DoubleType())
 
 
 def str_distance_key(query: str, label: str) -> float:
     """The deterministic str_distance tie-break key: compare_str
-    rounded to 9 digits with Python round (banker's/HALF_EVEN). BOTH
-    the engine UDF and the oracle call THIS function, so a value
-    landing exactly on a representable half can't round differently
-    between the two sides."""
+    rounded to 9 digits with Python round (banker's/HALF_EVEN); the
+    batched ``str_distance_keys`` the search flow uses is bit-equal
+    to it."""
     return round(compare_str(query, label), 9)
 
 
@@ -517,80 +498,6 @@ def str_distance_keys_multi(
         if v > out[o]:
             out[o] = v
     return out
-
-
-def _labels_of(text, alts) -> list[str]:
-    """Fold text + alt variants into the compare label list (shared
-    by the engine UDFs; oracle/serving build the same list via
-    ExpansionMixin.folded_labels)."""
-    labels = [fold_str(text or "")]
-    if alts is not None and not (
-        isinstance(alts, float) and np.isnan(alts)
-    ):
-        labels.extend(fold_str(v or "") for v in alts)
-    return labels
-
-
-def make_compare_best_udf():
-    """Best-of-labels str_distance tie-break UDF (alt-variant path):
-    folds inside, batches the DP per distinct query over ALL labels
-    of its rows, takes max per row."""
-
-    def _cmp(q: pd.Series, lbl: pd.Series, alts: pd.Series) -> pd.Series:
-        out = np.empty(len(q), dtype=np.float64)
-        qv = q.fillna("").map(fold_str).to_numpy()
-        lists = [
-            _labels_of(t, a) for t, a in zip(lbl.tolist(), alts.tolist())
-        ]
-        for query in pd.unique(qv):
-            m = np.flatnonzero(qv == query)
-            out[m] = str_distance_keys_multi(query, [lists[i] for i in m])
-        return pd.Series(out)
-
-    return F.pandas_udf(_cmp, T.DoubleType())
-
-
-def make_ref_score_best_udf(iw: float = 0.1):
-    """Best-of-labels reference score fold (alt-variant path)."""
-
-    def _rs(
-        q: pd.Series, lbl: pd.Series, alts: pd.Series,
-        ac: pd.Series, imp: pd.Series,
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                ref_fold_score(
-                    float(i or 0.0),
-                    ref_string_score_best(
-                        fold_str(a or ""), _labels_of(b, al), bool(c)
-                    ),
-                    iw,
-                )
-                for a, b, al, c, i in zip(
-                    q, lbl.tolist(), alts.tolist(), ac, imp
-                )
-            ]
-        )
-
-    return F.pandas_udf(_rs, T.DoubleType())
-
-
-def make_compare_str_udf():
-    """str_distance tie-break UDF: rows arrive grouped by query (the
-    scoring join fans one query out over its candidates), so each
-    distinct query's labels run through ONE batched DP
-    (str_distance_keys — bit-equal to the per-pair call)."""
-
-    def _cmp(q: pd.Series, lbl: pd.Series) -> pd.Series:
-        out = np.empty(len(q), dtype=np.float64)
-        qv = q.fillna("").to_numpy()
-        lv = lbl.fillna("").to_numpy()
-        for query in pd.unique(qv):
-            m = np.flatnonzero(qv == query)
-            out[m] = str_distance_keys(query, [lv[i] for i in m])
-        return pd.Series(out)
-
-    return F.pandas_udf(_cmp, T.DoubleType())
 
 
 # Pure-column (JVM/codegen) variants — preferred in hot paths where the

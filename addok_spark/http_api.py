@@ -9,11 +9,10 @@ multi-value filters (``role=a&role=b`` → OR, different params → AND,
 ``addok/http/base.py:88-122``), 413 on over-long queries
 (EntityTooLarge, ``addok/helpers/text.py:225-233``).
 
-stdlib http.server on purpose: the serving tier is NOT the engine
-(any WSGI/ASGI frontend works); this exists so a reference user can
-exercise the same HTTP contract against the Spark engine. One
-process, driver-side — batch evaluation (``SearchEngine.search`` with
-many queries) is the idiomatic high-throughput path.
+stdlib http.server on purpose (any WSGI/ASGI frontend works): one
+process answering through the warm serving tier's
+``LocalSearchEngine``. Batch evaluation (``SearchEngine.search`` with
+many queries, spread over Spark tasks) is the high-throughput path.
 """
 
 from __future__ import annotations
@@ -24,44 +23,22 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from .config import EngineConfig
-from .query.engine import Query, SearchEngine
+from .query.engine import Query
 
 def _handle_health(engine) -> tuple[int, dict]:
     """≙ reference /health (``addok/http/base.py:225-237``): the
-    endpoint every load balancer probes first. Answers from driver-
-    held metadata only — never runs a Spark job or a posting read —
-    on both backends (Spark SearchEngine and the warm serving tier's
-    LocalSearchEngine)."""
-    meta = None
-    version = None
-    paths = getattr(engine, "paths", None)  # Spark SearchEngine
-    idx = getattr(engine, "index", None)    # LocalSearchEngine
-    if paths is None and idx is not None:
-        meta = getattr(idx, "meta", None)
-        paths = getattr(idx, "paths", None)
-    elif paths is not None:
-        try:
-            meta = json.loads(paths.meta.read_text())
-        except Exception:
-            meta = None
-    if paths is not None:
-        version = getattr(paths, "version", None)
-    if meta is None:
-        return 503, {"status": "unavailable"}
-    body = {
+    endpoint every load balancer probes first. Answers from the
+    serving index's metadata and in-RAM dictionary only — never a
+    posting read."""
+    idx = engine.index
+    paths = getattr(idx, "paths", None)  # a ShardedIndex has none
+    return 200, {
         "status": "ok",
-        "n_docs": int(meta.get("n_docs", -1)),
-        "avgdl": meta.get("avgdl"),
-        "snapshot_version": version,
+        "n_docs": int(idx.meta.get("n_docs", -1)),
+        "avgdl": idx.meta.get("avgdl"),
+        "snapshot_version": getattr(paths, "version", None),
+        "n_tokens": len(idx.df),
     }
-    n_tokens = (
-        meta.get("build_metrics", {}).get("dictionary", {}).get("rows")
-    )
-    if idx is not None and getattr(idx, "df", None) is not None:
-        n_tokens = len(idx.df)
-    if n_tokens is not None:
-        body["n_tokens"] = int(n_tokens)
-    return 200, body
 
 
 def _match_filters(
@@ -150,7 +127,7 @@ class QueryLogs:
 
 
 def _handle_search(
-    engine: SearchEngine,
+    engine,
     params: dict[str, list[str]],
     qlogs: QueryLogs | None = None,
 ) -> tuple[int, dict]:
@@ -170,14 +147,10 @@ def _handle_search(
     import time as _time
 
     t0 = _time.perf_counter()
-    out = engine.search(
+    res = engine.search(
         [Query(qid="http", q=q, k=limit, autocomplete=autocomplete,
                filters=filters, phrase=phrase)]
-    )
-    # Spark engine returns a Spark DataFrame; the warm serving tier
-    # (serving/local.py LocalSearchEngine) a pandas frame — same row
-    # contract either way
-    res = out.collect() if hasattr(out, "collect") else out.to_dict("records")
+    ).to_dict("records")
     hits = [
         {
             "rank": int(r["rank"]),
@@ -195,7 +168,7 @@ def _handle_search(
     return 200, {"query": q, "limit": limit, "hits": hits}
 
 
-def make_server(engine: SearchEngine, host: str = "127.0.0.1", port: int = 0):
+def make_server(engine, host: str = "127.0.0.1", port: int = 0):
     qlogs = QueryLogs(engine.cfg) if (
         engine.cfg.log_queries
         or engine.cfg.log_not_found
@@ -235,7 +208,7 @@ def make_server(engine: SearchEngine, host: str = "127.0.0.1", port: int = 0):
     return ThreadingHTTPServer((host, port), Handler)
 
 
-def serve_background(engine: SearchEngine, port: int = 0):
+def serve_background(engine, port: int = 0):
     """Start the server on a daemon thread; returns (server, port)."""
     srv = make_server(engine, port=port)
     t = threading.Thread(target=srv.serve_forever, daemon=True)

@@ -1,14 +1,16 @@
-"""Single-process pure-Python/numpy oracle for the Spark engine.
+"""Single-process pure-Python/numpy oracle and the one search flow.
 
-Implements the EXACT same specification as
-``addok_spark.query.engine.SearchEngine`` + ``index.build`` — same
-analyzer functions (imported, not re-implemented), same weight
-formula (``addok/helpers/index.py:30-37``), same collection rounds,
-same BM25 expression tree evaluated in the same operand order, same
-deterministic tie-breaks — so rank identity (north_rule) is checkable
-with ``python -m pytest -x -q`` without trusting the system under
-test. Candidate-set accumulation mirrors the engine line-for-line
-(bucket semantics ≙ ``addok/core.py:354-365``).
+``OracleIndex`` rebuilds the index from the corpus with the same
+analyzer functions as ``index.build`` (imported, not re-implemented)
+and the same weight formula (``addok/helpers/index.py:30-37``).
+``SpecSearch`` is the search flow itself: planning, collection
+rounds, relaxation, cream, relation round and BM25 scoring with
+deterministic tie-breaks. The serving tier (``serving/local.py``)
+runs it over the parquet index, and the Spark ``SearchEngine``
+(``query/engine.py``) runs the serving tier in tasks, so rank identity
+(north_rule) against the corpus-built oracle is checkable with
+``python -m pytest -x -q`` (bucket semantics ≙
+``addok/core.py:354-365``).
 """
 
 from __future__ import annotations
@@ -41,6 +43,18 @@ _RESULT_COLUMNS = [
 
 # ``doc_values`` default meaning "the field must exist" (``row[name]``)
 REQUIRED = object()
+
+
+@dataclass
+class QueryPlan:
+    """One query's plan as the search flow ran it: token groups by
+    gid (FILTER_GID_BASE and up are filter groups), each group's df,
+    the meaningful gids in collection order, and the collected
+    candidates."""
+    groups: dict[int, list[str]]
+    group_dfs: dict[int, int]
+    meaningful: list[int]
+    candidates: set[int]
 
 
 @dataclass
@@ -128,14 +142,14 @@ class ExpansionMixin:
                 labels.extend(fold_str(v or "") for v in alt)
         return labels
 
-    # -- expansion helpers (mirror SearchEngine._plan_queries) -------------
+    # -- expansion helpers (query planning) ---------------------------------
     def noncommon(self, t: str) -> bool:
         return 0 < self.df.get(t, 0) <= self.cfg.common_threshold
 
     def prefix_expansions(
         self, prefix: str, others: list[str]
     ) -> list[tuple[str, int]]:
-        """≙ autocomplete.py:83-95 + the engine's planning block:
+        """≙ autocomplete.py:83-95:
         candidates co-occurring with every other meaningful token
         (commons exempt — the pair table drops the Zipf head), ordered
         by max posting score when the prefix is the only meaningful
@@ -318,7 +332,7 @@ class OracleIndex(ExpansionMixin):
 
     def prefix_candidates(self, prefix: str, cap: int = 100) -> list[str]:
         """Raw df-desc candidates under a prefix (≙ SMEMBERS n|prefix
-        + the engine's _prefix_candidates_batch driver cap)."""
+        capped at ``cap``, highest df first)."""
         cands = sorted(self.prefixes.get(prefix, []), key=lambda x: (-x[1], x[0]))
         return [t for t, _ in cands[:cap]]
 
@@ -326,16 +340,18 @@ class OracleIndex(ExpansionMixin):
 class SpecSearch:
     """Per-query search flow over an OracleIndex-shaped index object:
     planning, collection rounds, relaxation, relation extrapolation,
-    cream early-termination, scoring — the executable spec the Spark
-    engine is rank-identity tested against.  The serving tier
+    cream early-termination, scoring.  The serving tier
     (serving/local.py) subclasses this and overrides only the hot
     ``run_gids`` collection kernel with a numpy-vectorized version;
-    every other line of the flow is shared, so the two paths cannot
-    drift in semantics."""
+    every other line of the flow is shared, so serving, the Spark
+    engine that runs it in tasks and this oracle cannot drift in
+    semantics."""
 
     def __init__(self, index, cfg: EngineConfig):
         self.index = index
         self.cfg = cfg
+        # plan of the most recent query (see QueryPlan; read by EXPLAIN)
+        self.last_plan: QueryPlan | None = None
 
     # -- hot kernel (overridable) ------------------------------------------
     def run_gids(
@@ -347,7 +363,7 @@ class SpecSearch:
         use_scan: bool = True,
     ) -> list[int]:
         """Conjunctive group match + Σboost top-bucket_max (same
-        spec as SearchEngine._run_round incl. manual_scan)."""
+        spec incl. manual_scan, lua/manual_scan.lua)."""
         index, cfg = self.index, self.cfg
         scan_docs = None
         if use_scan and all(
@@ -463,11 +479,15 @@ class SpecSearch:
                 meaningful.append((df, gid, tok))
         meaningful.sort(key=lambda x: (x[0], x[2]))
         order = [gid for _, gid, _ in meaningful[: cfg.max_meaningful]]
+        candidates: set[int] = set()
+        # EXPLAIN's view of this query; the filter groups and the
+        # candidates below fill the same dicts and set
+        self.last_plan = QueryPlan(groups, group_dfs, order, candidates)
 
         # no usable word tokens -> abort guard (collectors.py:10-17)
         if not groups:
             return None
-        # filter groups (mirror engine FILTER_GID_BASE semantics)
+        # filter groups (FILTER_GID_BASE and up)
         filter_gids: list[int] = []
         for fi, (fcol, vals) in enumerate(
             sorted((getattr(q, "filters", None) or {}).items())
@@ -480,7 +500,6 @@ class SpecSearch:
                 group_dfs[gid] = min(index.posting_count(k) for k in keys)
                 filter_gids.append(gid)
 
-        candidates: set[int] = set()
         done = False
         qf = fold_str(q.q)
         # per-query bucket limit = max(k, BUCKET_MAX) (reference
@@ -490,7 +509,7 @@ class SpecSearch:
         cream_memo: dict[int, float] = {}
 
         def has_cream() -> bool:
-            # ≙ core.py:400-419 (mirror of SearchEngine._apply_cream):
+            # ≙ core.py:400-419:
             # the metric is the reference result processors'
             # str_distance (autocomplete ladder / compare_ngrams per
             # query mode, results.py:60-104), not the tie-break key.
@@ -512,7 +531,7 @@ class SpecSearch:
             )
 
         def removal_order() -> list[int]:
-            # ≙ collectors.py:127-131 (mirror of engine removal_order)
+            # ≙ collectors.py:127-131
             return sorted(
                 order,
                 key=lambda g: (
@@ -545,8 +564,8 @@ class SpecSearch:
                 break
             variants: list[list[int]] = []
             if round_no == 1:
-                # meaningful conjunction or commons fallback (mirror
-                # of the engine's merged round 1)
+                # meaningful conjunction or commons fallback
+                # (only_commons, collectors.py:20-65)
                 gids = order if order else [
                     g for g in sorted(groups) if g < FILTER_GID_BASE
                 ]
@@ -581,7 +600,6 @@ class SpecSearch:
                 done = True
 
         # round 5: relation extrapolation (Q13, collectors.py:151-214)
-        # — mirror of SearchEngine._relation_round
         if not done and candidates and has_cream():
             done = True
         if not done and len(order) >= 3:
@@ -738,7 +756,7 @@ class SpecSearch:
         for i in order:
             rec = recs[i]
             doc = index.doc(rec["doc_index"])
-            # render fields (≙ engine.search's doc join) so
+            # render fields (≙ the reference's doc fetch) so
             # serving/HTTP can answer without a second fetch
             rec["conv_id"] = doc["conv_id"]
             rec["turn_idx"] = int(doc["turn_idx"])

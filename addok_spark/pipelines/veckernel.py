@@ -37,15 +37,22 @@ def round6_half_up(x: float) -> float:
     )
 
 
+# |y| below this keeps ``y*1e6`` within ~1.2e-7 of the scaled decimal
+# repr (half an ulp of y, scaled, plus half an ulp of the product):
+# the 1e-6 midpoint guard of round6_array is proven only there
+_ROUND6_FAST_MAX = 1e3
+
+
 def round6_array(y: np.ndarray) -> np.ndarray:
     """Vectorized ``F.round(col, 6)`` for float64 arrays.
 
     Fast path: scale by 1e6 and round half-away-from-zero — exact
-    whenever the scaled value is not within 1e-6 of a .5 midpoint
-    (the float error of ``y*1e6`` is ~1e-10 for |y| ≤ 1e3, far inside
-    that guard band). Values near a midpoint fall back to the exact
-    shortest-repr BigDecimal semantics per element (expected rate
-    ~2e-6 of rows). NaN/±Inf pass through like Spark's Round."""
+    whenever |y| < 1e3 and the scaled value is not within 1e-6 of a
+    .5 midpoint. Values near a midpoint, and every value of larger
+    magnitude (where the product's own error can exceed the guard:
+    16539.2153925 would round down), fall back to the exact
+    shortest-repr BigDecimal semantics per element. NaN/±Inf pass
+    through like Spark's Round."""
     y = np.asarray(y, dtype=np.float64)
     scaled = y * 1e6
     with np.errstate(invalid="ignore"):
@@ -54,7 +61,9 @@ def round6_array(y: np.ndarray) -> np.ndarray:
             / 1e6
         )
         frac = np.abs(scaled - np.floor(scaled) - 0.5)
-        risky = np.isfinite(scaled) & (frac < 1e-6)
+        risky = np.isfinite(scaled) & (
+            (frac < 1e-6) | (np.abs(y) >= _ROUND6_FAST_MAX)
+        )
     if risky.any():
         flat_y = y.reshape(-1)
         flat_out = out.reshape(-1)

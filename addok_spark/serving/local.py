@@ -2,11 +2,8 @@
 
 The reference serves queries in ~10 ms because its whole index lives
 in Redis RAM on the serving node (``/root/reference/addok/core.py``
-+ ``addok/db.py``); the Spark engine in ``query/engine.py`` answers
-the same queries rank-identically but pays Spark's per-job scheduling
-floor (seconds), which is the right shape for *batch* scoring, not
-for interactive lookups.  This module closes that gap the way
-Lucene-style systems do: Spark builds and compacts the immutable
++ ``addok/db.py``).  This module answers the same way Lucene-style
+systems do: Spark builds and compacts the immutable
 index artifacts (blocks / dictionary / prefixes / pairs / docs —
 ``index/build.py``), and a serving process answers queries straight
 from those artifacts with pruned columnar reads:
@@ -32,7 +29,7 @@ from those artifacts with pruned columnar reads:
 - **prefixes / pairs** reads are filter-pruned the same way and
   memoized per key;
 - every table opens through ``index.build.open_dataset``, the same
-  snapshot resolver the Spark engine reads through, so any published
+  snapshot resolver Spark's ``read_table`` uses, so any published
   snapshot — hardlinked or reference-only (object-store publish,
   partitions spread over several snapshot dirs) — serves directly.
 
@@ -43,10 +40,11 @@ same partition layout the CDC path already rewrites incrementally.
 
 Rank identity is by construction, not by re-implementation: planning,
 rounds, relaxation, cream, and scoring run through the *same*
-``SpecSearch`` flow (``oracle/bm25_oracle.py``) that the Spark engine
-is rank-identity tested against; this module only (a) swaps the data
-access layer from "rebuilt from corpus" to "read from the index
-parquet" and (b) overrides the one hot kernel (``run_gids``) with a
+``SpecSearch`` flow (``oracle/bm25_oracle.py``) as the oracle, and the
+Spark ``SearchEngine`` (``query/engine.py``) runs this module's
+``LocalSearchEngine`` in ``mapInPandas`` tasks. This module only (a)
+swaps the data access layer from "rebuilt from corpus" to "read from
+the index parquet" and (b) overrides the one hot kernel (``run_gids``) with a
 numpy-vectorized version whose float64 accumulation order matches the
 spec exactly (tested bit-equal in tests/test_local_serving.py).
 """
@@ -485,8 +483,8 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
     def _token_blocks(self, token: str) -> "_TokenBlocks":
         """Per-block lazy posting store for one token: block metadata
         (n / max_boost / min_doc / max_doc) up front, payloads decoded
-        on demand — the serving analog of the Spark engine's block-max
-        pruning. One pruned blocks read per token per process."""
+        on demand (block-max pruning). One pruned blocks read per
+        token per process."""
         tb = self._blocks.get(token)
         if tb is not None:
             return tb
@@ -610,15 +608,15 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
     def token_position_arrays(self, token: str, within_docs=None):
         """(docs repeated per occurrence int64, absolute position
         int64) for one token — pos_bin decoded with the same
-        cumsum + per-posting offset reset the Spark phrase operator
-        uses (query/phrase.py). One pruned read per token, memoized.
+        cumsum + per-posting offset reset the build wrote them with.
+        One pruned read per token, memoized.
 
         ``within_docs`` (sorted unique int64 array) restricts the
         DECODE to blocks whose [min_doc, max_doc] range intersects
         it — the phrase path passes the rarest token's doc set, so a
         stopword decodes at most |rare docs| blocks instead of its
-        whole positional stream (the Spark engine's rare-token
-        conjunction, applied at block granularity; bucket-granular
+        whole positional stream (a rare-token conjunction applied
+        at block granularity; bucket-granular
         pruning is too coarse — a 63-doc token touches most of a
         small corpus's doc-range buckets). When the doc set spans
         few buckets the read itself is also bucket-filtered (real IO
@@ -1095,8 +1093,7 @@ class FastSearch(SpecSearch):
         from one unique pass — value-identical to the dict/set spec
         (same pairs, same counts).
 
-        Same scale bound as the Spark engine's phrase collection: a
-        match doc must contain EVERY phrase token, so every stream is
+        Scale bound: a match doc must contain EVERY phrase token, so every stream is
         restricted to the rarest token's doc set — and the rarest
         token is known from the RAM dictionary (df probe, no decode),
         so the other tokens DECODE only the posting blocks whose
@@ -1307,9 +1304,9 @@ class FastSearch(SpecSearch):
 
 
 class LocalSearchEngine:
-    """Drop-in low-latency twin of ``query.engine.SearchEngine``:
-    same ``search(list[Query]) -> frame-of-ranked-rows`` contract,
-    answered from the parquet index without a Spark job.
+    """Low-latency search over the parquet index without a Spark job:
+    ``search(list[Query]) -> frame-of-ranked-rows``. The Spark
+    ``query.engine.SearchEngine`` runs one of these per Python worker.
 
     ``mode="fast"`` (default) uses the vectorized collection kernel;
     ``mode="spec"`` runs the pure-dict oracle flow end to end (the
@@ -1364,6 +1361,11 @@ class LocalSearchEngine:
     def get(self, conv_id: str, turn_idx: int):
         """Fetch one document by natural key (≙ Result.from_id)."""
         return self.index.get_doc(conv_id, turn_idx)
+
+    @property
+    def last_plan(self):
+        """Spec plan of the most recent query (``QueryPlan``)."""
+        return self._searcher.last_plan
 
     def search(self, queries: list[Query]) -> pd.DataFrame:
         import time as _time

@@ -1,12 +1,13 @@
 """Interactive shell over a built index (≙ the reference's REPL,
 ``/root/reference/addok/shell.py`` — same command surface recast over
-the Spark engine; the heavyweight EXPLAIN logic already lives in the
-engine's ``last_trace`` and is shared with ``python -m addok_spark
+the serving tier: ``LocalSearchEngine`` answers searches and its
+``ParquetIndex`` the introspection commands, so no Spark session is
+needed; ``explain_search`` below is shared with ``python -m addok_spark
 explain``).
 
 Commands (case-insensitive; anything else is a SEARCH):
     <free text>            search the index
-    EXPLAIN <q>            search + per-stage timings and token groups
+    EXPLAIN <q>            search + token groups, candidates and timing
     BUCKET <q>             search returning the WHOLE collected bucket
     BENCH [n] <q>          repeat a search n times (default 10), p50/p95
     INTERSECT <toks> [LIMIT n]  raw conjunctive Σboost top-n (≙ zinter)
@@ -27,8 +28,8 @@ Commands (case-insensitive; anything else is a SEARCH):
     HELP                   this help
     QUIT / EXIT            leave
 
-One SparkSession + SearchEngine is reused across commands, so repeat
-queries are warm (first query pays Spark job-server warm-up).
+One LocalSearchEngine is reused across commands, so repeat queries
+are warm (its posting, doc and plan caches persist).
 """
 
 from __future__ import annotations
@@ -41,13 +42,47 @@ import time
 HELP = __doc__.split("Commands", 1)[1]
 
 
-class Shell:
-    def __init__(self, spark, index_dir: str, cfg):
-        from .query.engine import SearchEngine
+def explain_search(engine, res) -> dict:
+    """EXPLAIN view of the query a ``LocalSearchEngine`` just answered
+    with the frame ``res`` (≙ the reference shell's EXPLAIN,
+    addok/shell.py:282-327): the spec plan's token groups with their
+    kind and df, the number of collected candidates, the search's
+    trace entry — which times the executed query, collection, scoring
+    and doc fetch included — and the results."""
+    from .query.engine import FILTER_GID_BASE
 
-        self.spark = spark
+    plan = engine.last_plan
+    return {
+        "groups": [
+            {
+                "gid": gid,
+                "kind": "filter" if gid >= FILTER_GID_BASE else (
+                    "meaningful" if gid in plan.meaningful else "common"
+                ),
+                "tokens": toks,
+                "df": plan.group_dfs.get(gid),
+            }
+            for gid, toks in sorted(plan.groups.items())
+        ],
+        "candidates": len(plan.candidates),
+        "stages": [{"stage": "search", **e} for e in engine.last_trace],
+        "results": [
+            {"rank": int(r["rank"]), "conv_id": r["conv_id"],
+             "turn_idx": int(r["turn_idx"]), "score": float(r["score"])}
+            for r in res.to_dict("records")
+        ],
+    }
+
+
+class Shell:
+    def __init__(self, index_dir: str, cfg):
+        from .serving.local import FastSearch, LocalSearchEngine
+
         self.cfg = cfg
-        self.engine = SearchEngine(spark, index_dir, cfg)
+        self.engine = LocalSearchEngine(index_dir, cfg)
+        self.index = self.engine.index
+        # INTERSECT runs the collection kernel alone
+        self.searcher = FastSearch(self.index, cfg)
         self.index_dir = index_dir
         self.autocomplete = False
         self.filters: dict[str, list[str]] = {}
@@ -95,7 +130,7 @@ class Shell:
 
     # -- commands -----------------------------------------------------------
     def do_search(self, q: str, explain: bool = False) -> str:
-        from .query.engine import FILTER_GID_BASE, Query
+        from .query.engine import Query
 
         self.qid += 1
         qid = f"sh{self.qid}"
@@ -120,28 +155,23 @@ class Shell:
         res = self.engine.search(
             [Query(qid=qid, q=q, k=k,
                    autocomplete=autocomplete, filters=filters)]
-        ).collect()
+        )
         dt = time.time() - t0
-        out = []
-        for r in res:
-            out.append(
-                f"{r['rank']:>3}  {r['score']:.4f}  "
-                f"{r['conv_id']}#{r['turn_idx']} [{r['role']}] {r['text'][:90]}"
-            )
+        out = [
+            f"{r['rank']:>3}  {r['score']:.4f}  "
+            f"{r['conv_id']}#{r['turn_idx']} [{r['role']}] {r['text'][:90]}"
+            for r in res.to_dict("records")
+        ]
         out.append(f"({len(res)} hits in {dt:.2f}s)")
         if explain:
-            st = self.engine.last_states[qid]
-            for gid, toks in sorted(st.groups.items()):
-                kind = (
-                    "filter" if gid >= FILTER_GID_BASE
-                    else "meaningful" if gid in st.meaningful_order
-                    else "common"
-                )
+            info = explain_search(self.engine, res)
+            for g in info["groups"]:
                 out.append(
-                    f"  group {gid} [{kind}] df={st.group_df.get(gid)} "
-                    f"tokens={toks}"
+                    f"  group {g['gid']} [{g['kind']}] df={g['df']} "
+                    f"tokens={g['tokens']}"
                 )
-            for stage in self.engine.last_trace:
+            out.append(f"  candidates: {info['candidates']}")
+            for stage in info["stages"]:
                 out.append(f"  {json.dumps(stage)}")
         return "\n".join(out)
 
@@ -159,134 +189,106 @@ class Shell:
         return str(make_fuzzy_str(word.strip(), self.cfg.fuzzy_key_map))
 
     def do_freq(self, arg: str) -> str:
-        toks = shlex.split(arg)
-        stats = self.engine._token_stats(set(toks))
         return "\n".join(
-            f"{t}: df={stats.get(t, (0, 0.0))[0]}" for t in toks
+            f"{t}: df={self.index.df.get(t, 0)}" for t in shlex.split(arg)
         )
 
     def do_intersect(self, arg: str) -> str:
         """Raw conjunctive Σboost top-n over exact tokens, bypassing
         planning/relaxation (≙ shell INTERSECT → ZINTERSTORE +
-        ZREVRANGE, reference shell.py:291-307)."""
-        from pyspark.sql import functions as F
+        ZREVRANGE, reference shell.py:291-307): the search flow's
+        collection kernel on singleton groups, without manual scan."""
+        import re
 
         from .functions.text import analyze_str
-
-        import re
 
         limit = 100
         m = re.search(r"\s+LIMIT\s+(\d+)\s*$", arg, re.I)
         if m:
             limit = int(m.group(1))
             arg = arg[: m.start()]
-        toks = analyze_str(arg, self.cfg.synonyms, self.cfg.processors)
+        toks = list(dict.fromkeys(
+            analyze_str(arg, self.cfg.synonyms, self.cfg.processors)
+        ))
         if not toks:
             return "(no tokens)"
         t0 = time.time()
-        plan_rows = [
-            {"qid": "ix", "gid": g, "token": t, "n_required": len(set(toks)),
-             "is_scan": False}
-            for g, t in enumerate(dict.fromkeys(toks))
-        ]
-        import pandas as pd
-
-        got = self.engine._run_round(pd.DataFrame(plan_rows), topn=limit)
-        if not len(got):
-            return "(0 in %.2fs)" % (time.time() - t0)
-        ids = [int(d) for d in got["doc_index"]]
-        rows = {
-            r["doc_index"]: r
-            for r in self.engine.docs.filter(
-                F.col("doc_index").isin(ids)
-            ).collect()
-        }
-        out = [
-            f"{r.rn:>3}  {r.prescore:.4f}  "
-            f"{rows[r.doc_index]['conv_id']}#{rows[r.doc_index]['turn_idx']} "
-            f"{(rows[r.doc_index]['text'] or '')[:80]}"
-            for r in got.itertuples(index=False)
-        ]
-        out.append(f"({len(got)} in {time.time() - t0:.2f}s)")
+        groups = {g: [t] for g, t in enumerate(toks)}
+        dfs = {g: self.index.df.get(t, 0) for g, t in enumerate(toks)}
+        ids = self.searcher.run_gids(
+            groups, dfs, sorted(groups), limit, use_scan=False
+        )
+        out = []
+        for rn, d in enumerate(ids, 1):
+            # Σ boost in gid order, the kernel's accumulation order
+            prescore = sum(self.index.boost_of(t, d) for t in toks)
+            doc = self.index.doc(d)
+            out.append(
+                f"{rn:>3}  {prescore:.4f}  {doc['conv_id']}#{doc['turn_idx']} "
+                f"{(doc['text'] or '')[:80]}"
+            )
+        out.append(f"({len(ids)} in {time.time() - t0:.2f}s)")
         return "\n".join(out)
 
     def do_pair(self, token: str) -> str:
         """Tokens co-occurring with ``token`` (≙ inspecting the p|
         set; served from the pairs table, commons excluded by
         design)."""
-        from pyspark.sql import functions as F
+        import pyarrow.dataset as pds
 
         from .functions.text import analyze_str
+        from .index.build import open_dataset
 
         toks = analyze_str(token, self.cfg.synonyms, self.cfg.processors)
         if not toks:
             return "(no token)"
         t = toks[0]
-        if self.engine.pairs is None:
+        pairs = open_dataset(self.index.paths, "pairs")
+        if pairs is None:
             return "(no pairs table)"
-        rows = (
-            self.engine.pairs.filter(
-                (F.col("token_a") == t) | (F.col("token_b") == t)
-            )
-            .select("token_a", "token_b")
-            .collect()
+        tbl = pairs.to_table(
+            filter=(pds.field("token_a") == t) | (pds.field("token_b") == t),
+            columns=["token_a", "token_b"],
         )
-        others = sorted(
-            {r["token_b"] if r["token_a"] == t else r["token_a"] for r in rows}
-        )
+        others = sorted({
+            b if a == t else a
+            for a, b in zip(tbl.column("token_a").to_pylist(),
+                            tbl.column("token_b").to_pylist())
+        })
         return f"{t}: {len(others)} pairs\n" + ", ".join(others[:100])
 
     def do_bestscore(self, word: str) -> str:
         """Top docs of one token by posting boost (≙ BESTSCORE →
         ZREVRANGE WITHSCORES, reference shell.py:469-476)."""
-        from pyspark.sql import functions as F
-
         from .functions.text import analyze_str
-        from .query.engine import _exploded_postings
 
         toks = analyze_str(word, self.cfg.synonyms, self.cfg.processors)
         if not toks:
             return "(no token)"
         t = toks[0]
-        posts = (
-            _exploded_postings(
-                self.engine.blocks.filter(F.col("token") == t), []
-            )
-            .orderBy(F.desc("boost"), F.asc("doc_index"))
-            .limit(20)
-            .collect()
-        )
+        posts = sorted(
+            self.index.postings(t).items(), key=lambda kv: (-kv[1], kv[0])
+        )[:20]
         if not posts:
             return f"{t}: no postings"
-        ids = [int(r["doc_index"]) for r in posts]
-        rows = {
-            r["doc_index"]: r
-            for r in self.engine.docs.filter(
-                F.col("doc_index").isin(ids)
-            ).collect()
-        }
-        return "\n".join(
-            f"{r['boost']:.4f}  {rows[r['doc_index']]['conv_id']}"
-            f"#{rows[r['doc_index']]['turn_idx']} "
-            f"{(rows[r['doc_index']]['text'] or '')[:80]}"
-            for r in posts
-        )
+        out = []
+        for d, boost in posts:
+            doc = self.index.doc(d)
+            out.append(
+                f"{boost:.4f}  {doc['conv_id']}#{doc['turn_idx']} "
+                f"{(doc['text'] or '')[:80]}"
+            )
+        return "\n".join(out)
 
     def do_get(self, arg: str) -> str:
         """One document by natural key (≙ GET, shell.py:421-430)."""
-        from pyspark.sql import functions as F
-
         parts = shlex.split(arg)
         if len(parts) != 2:
             return "usage: GET <conv_id> <turn_idx>"
-        rows = self.engine.docs.filter(
-            (F.col("conv_id") == parts[0])
-            & (F.col("turn_idx") == int(parts[1]))
-        ).collect()
-        if not rows:
+        row = self.engine.get(parts[0], int(parts[1]))
+        if row is None:
             return f'id "{arg}" not found'
-        r = rows[0]
-        return "\n".join(f"{k} {r[k]}" for k in r.asDict())
+        return "\n".join(f"{k} {v}" for k, v in row.items())
 
     def do_strdistance(self, arg: str) -> str:
         """≙ STRDISTANCE (shell.py:523-532): compare_str on the two
@@ -315,7 +317,7 @@ class Shell:
             self.engine.search(
                 [Query(qid=f"b{self.qid}", q=q, k=self.k,
                        autocomplete=self.autocomplete, filters=self.filters)]
-            ).collect()
+            )
             times.append(time.time() - t0)
         times.sort()
         return (
@@ -345,27 +347,29 @@ class Shell:
         behind one index key. Reference key grammar kept: ``w|token``
         (postings), ``p|token`` (pair set), ``f|col|val`` (filter
         postings), ``d|conv_id|turn`` (document row)."""
-        from pyspark.sql import functions as F
+        import pyarrow.dataset as pds
+
+        from .index.build import open_dataset
 
         key = key.strip()
         kind, _, rest = key.partition("|")
         if kind == "w" and rest:
-            stats = self.engine._token_stats({rest})
-            if rest not in stats:
+            if rest not in self.index.df:
                 return f"type: none\nvalue: (no such token) {rest}"
-            df, mx = stats[rest]
-            nb = self.engine.blocks.filter(F.col("token") == rest).count()
+            nb = open_dataset(self.index.paths, "blocks").count_rows(
+                filter=pds.field("token") == rest
+            )
             return (
                 f"type: postings\n"
-                f"value: token={rest} df={df} max_boost={mx:.4f} blocks={nb}"
+                f"value: token={rest} df={self.index.df[rest]} "
+                f"max_boost={self.index.max_boost[rest]:.4f} blocks={nb}"
             )
         if kind == "p" and rest:
             return f"type: set\nvalue:\n{self.do_pair(rest)}"
         if kind == "f" and rest:
-            stats = self.engine._token_stats({key})
-            if key not in stats:
+            if key not in self.index.df:
                 return f"type: none\nvalue: (no such filter key) {key}"
-            return f"type: postings\nvalue: key={key} df={stats[key][0]}"
+            return f"type: postings\nvalue: key={key} df={self.index.df[key]}"
         if kind == "d" and rest:
             conv, _, turn = rest.partition("|")
             return f"type: hash\nvalue:\n{self.do_get(f'{conv} {turn or 0}')}"
@@ -376,81 +380,62 @@ class Shell:
         details for one document — each indexed token's boost for this
         doc and the doc's rank inside that token's postings (the
         reference's ZSCORE + ZREVRANK pair)."""
-        from pyspark.sql import functions as F
+        import numpy as np
+        import pandas as pd
+
+        from .functions.text import analyze_str
 
         parts = shlex.split(arg)
         if len(parts) != 2:
             return "usage: INDEX <conv_id> <turn_idx>"
-        rows = self.engine.docs.filter(
-            (F.col("conv_id") == parts[0])
-            & (F.col("turn_idx") == int(parts[1]))
-        ).collect()
-        if not rows:
+        doc = self.engine.get(parts[0], int(parts[1]))
+        if doc is None:
             return f'id "{arg}" not found'
-        doc = rows[0]
         di = int(doc["doc_index"])
-        from .functions.text import analyze_str
-        from .query.engine import _exploded_postings
-
         toks: list[str] = []
         for f_spec in self.cfg.fields:
-            val = doc[f_spec.name] if f_spec.name in doc.asDict() else None
-            if not val:
-                continue
-            vals = val if isinstance(val, (list, tuple)) else [val]
+            val = doc.get(f_spec.name)
+            vals = list(val) if isinstance(val, (list, tuple, np.ndarray)) else [val]
             for v in vals:
-                toks.extend(
-                    analyze_str(str(v), self.cfg.synonyms,
-                                self.cfg.processors)
-                )
+                if v is not None and not (np.isscalar(v) and pd.isna(v)):
+                    toks.extend(
+                        analyze_str(str(v), self.cfg.synonyms,
+                                    self.cfg.processors)
+                    )
         toks = list(dict.fromkeys(toks))
         if not toks:
             return "(no indexed tokens)"
-        exploded = _exploded_postings(
-            self.engine.blocks.filter(F.col("token").isin(toks)), ["token"]
-        ).select("token", "doc_index", "boost")
-        mine = exploded.filter(F.col("doc_index") == di).select(
-            F.col("token"), F.col("boost").alias("my_boost")
-        )
-        # rank ≙ ZREVRANK: postings strictly ahead of this doc in the
-        # (boost desc, doc_index asc) total order — one join + agg, no
-        # full-postings collect
-        ranked = (
-            exploded.join(F.broadcast(mine), "token")
-            .groupBy("token", "my_boost")
-            .agg(
-                F.sum(
-                    (
-                        (F.col("boost") > F.col("my_boost"))
-                        | (
-                            (F.col("boost") == F.col("my_boost"))
-                            & (F.col("doc_index") < F.lit(di))
-                        )
-                    ).cast("int")
-                ).alias("rank")
-            )
-            .collect()
-        )
-        by_tok = {r["token"]: r for r in ranked}
         out = []
         for t in toks:
-            r = by_tok.get(t)
-            if r is None:
+            post = self.index.postings(t)
+            mine = post.get(di)
+            if mine is None:
                 out.append(f"{t} (not indexed)")
-            else:
-                out.append(f"{t} {float(r['my_boost']):.4f} {int(r['rank'])}")
+                continue
+            # rank ≙ ZREVRANK: postings strictly ahead of this doc in
+            # the (boost desc, doc_index asc) total order
+            rank = sum(
+                1 for d, b in post.items()
+                if b > mine or (b == mine and d < di)
+            )
+            out.append(f"{t} {mine:.4f} {rank}")
         return "\n".join(out)
 
     def do_dbinfo(self) -> str:
-        from pyspark.sql import functions as F
+        import pyarrow.compute as pc
 
-        agg = self.engine.blocks.agg(
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.sum("n").alias("n_postings"),
-            F.countDistinct("token").alias("n_tokens"),
-        ).collect()[0]
+        from .index.build import open_dataset
+
+        blocks = open_dataset(self.index.paths, "blocks").to_table(
+            columns=["token", "n"]
+        )
         return json.dumps(
-            {**self.engine.meta, **{k: int(agg[k]) for k in agg.asDict()}},
+            {
+                **self.index.meta,
+                "n_blocks": blocks.num_rows,
+                "n_postings": int(pc.sum(blocks["n"]).as_py() or 0),
+                "n_tokens": pc.count_distinct(blocks["token"]).as_py(),
+            },
             indent=2,
         )
 

@@ -1,7 +1,8 @@
 """Four-way rank-identity validation at scale: the Spark engine, the
 pure-Python oracle, the warm serving tier, and a sharded scatter-
 gather coordinator answer the same query set over the same corpus and
-must agree. The check runs twice: on the bulk-built index, and again
+must agree. The Spark engine runs the serving tier in mapInPandas
+tasks, so its frame must also equal the serving frame exactly. The check runs twice: on the bulk-built index, and again
 after one CDC batch (updates, deletes and an appended conversation)
 published with ``NoLinkFileIO`` — a reference-only snapshot whose
 untouched partitions stay in the bulk build's dirs, which the serving
@@ -40,8 +41,9 @@ def make_queries(pdf, seed):
 
 
 def four_way(spark, cfg, index, pdf, queries):
-    """Rank mismatches against the oracle, whether the engine's scores
-    match it, and the engine / serving wall seconds."""
+    """Rank mismatches against the oracle, whether the engine's frame
+    equals the serving frame exactly, and the engine / serving wall
+    seconds."""
     from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
     from addok_spark.query.engine import SearchEngine
     from addok_spark.serving.local import LocalSearchEngine
@@ -69,14 +71,20 @@ def four_way(spark, cfg, index, pdf, queries):
         for name, r in (("engine", r_e), ("serving", r_s), ("sharded", r_h)):
             if r.get(qid, []) != r_o[qid]:
                 mismatches.append((qid, name, r.get(qid, []), r_o[qid]))
-    # engine BM25 score agreement (rtol)
-    sc_ok = True
-    m = got_engine.merge(
-        want, on=["qid", "conv_id", "turn_idx"], suffixes=("_e", "_o")
-    )
-    if len(m):
-        sc_ok = bool(np.allclose(m["score_e"], m["score_o"], rtol=1e-9))
-    return mismatches, sc_ok, engine_s, srv_s
+    # every column the engine returns, value for value (the engine's
+    # rank / turn_idx are int32, the serving frame's int64)
+    served = got_srv.sort_values(["qid", "rank"], kind="stable")
+    try:
+        pd.testing.assert_frame_equal(
+            got_engine.reset_index(drop=True),
+            served[list(got_engine.columns)].reset_index(drop=True),
+            check_exact=True, check_dtype=False,
+        )
+        exact = True
+    except AssertionError as e:
+        print("ENGINE != SERVING", str(e)[:500])
+        exact = False
+    return mismatches, exact, engine_s, srv_s
 
 
 def change_batch(pdf, seed):
@@ -169,18 +177,18 @@ def main() -> None:
                 Query(qid=f"mark-{i}", q=f"cdcmark{i:04d}", k=10)
                 for i in range(3)
             ]
-        mismatches, sc_ok, engine_s, srv_s = four_way(
+        mismatches, exact, engine_s, srv_s = four_way(
             spark, cfg, out, corpus, queries
         )
         print(
             f"RESULT {label} turns={len(corpus)} queries={len(queries)} "
-            f"mismatches={len(mismatches)} scores_close={sc_ok} "
+            f"mismatches={len(mismatches)} engine_equals_serving={exact} "
             f"build_s={build_s:.1f} engine_batch_s_per_q={engine_s/len(queries):.3f} "
             f"serving_cold_ms_per_q={1000*srv_s/len(queries):.1f}"
         )
         for mm in mismatches[:5]:
             print("MISMATCH", mm[0], mm[1], mm[2][:3], "vs", mm[3][:3])
-        failed |= bool(mismatches) or not sc_ok
+        failed |= bool(mismatches) or not exact
     spark.stop()
     sys.exit(1 if failed else 0)
 

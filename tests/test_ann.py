@@ -364,6 +364,24 @@ def test_round6_array_matches_scalar_semantics():
     assert np.isnan(nan_out[0])
 
 
+def test_round6_array_large_magnitude_midpoints():
+    """Above |y| = 1e3 the product y*1e6 can be off a 6-dp midpoint by
+    more than the fast path's 1e-6 guard (16539.2153925 used to round
+    down to .215392); round6_array must still equal round6_half_up on
+    midpoints at every magnitude."""
+    from addok_spark.pipelines import veckernel as vk
+
+    rng = np.random.default_rng(11)
+    vals = [16539.2153925, -16539.2153925]
+    for lo in (1e3, 1e4, 1e5, 1e6):
+        ints = rng.integers(int(lo), int(lo * 10), 2000)
+        fracs = rng.integers(0, 10**6, 2000)
+        vals += [float(f"{i}.{f:06d}5") for i, f in zip(ints, fracs)]
+    got = vk.round6_array(np.array(vals))
+    assert got[0] == 16539.215393
+    assert list(got) == [vk.round6_half_up(v) for v in vals]
+
+
 def test_list_to_matrix_honours_slices():
     """A sliced List or FixedSizeList column converts to exactly the
     rows of the slice: flatten() already applies the slice, so the

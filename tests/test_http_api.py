@@ -9,8 +9,8 @@ import pytest
 from addok_spark.config import EngineConfig
 from addok_spark.data.transcripts import transcripts_df
 from addok_spark.http_api import serve_background
-from addok_spark.index.build import build_index
-from addok_spark.query.engine import SearchEngine
+from addok_spark.index.build import build_index, open_dataset
+from addok_spark.serving.local import LocalSearchEngine
 
 
 @pytest.fixture(scope="module")
@@ -23,7 +23,7 @@ def server(spark, tmp_index_root):
         spark, transcripts_df(spark, 25, seed=42), cfg,
         f"{tmp_index_root}/http_idx",
     )
-    engine = SearchEngine(spark, paths, cfg)
+    engine = LocalSearchEngine(paths, cfg)
     srv, port = serve_background(engine)
     yield f"http://127.0.0.1:{port}", engine
     srv.shutdown()
@@ -39,7 +39,7 @@ def _get(url):
 
 def test_search_basic(server, spark):
     base, engine = server
-    sample = engine.docs.limit(1).collect()[0]
+    sample = engine.index.doc(0)
     words = "+".join(sample["text"].split()[:2])
     code, body, headers = _get(f"{base}/search/?q={words}&limit=5")
     assert code == 200
@@ -138,12 +138,12 @@ def test_404(server):
 
 def test_health(server):
     """≙ reference /health route (http/base.py:225-237): cheap
-    metadata answer, no Spark job."""
+    metadata answer, no posting read."""
     base, engine = server
     code, body, _ = _get(f"{base}/health")
     assert code == 200
     assert body["status"] == "ok"
-    assert body["n_docs"] == engine.docs.count()
+    assert body["n_docs"] == open_dataset(engine.index.paths, "docs").count_rows()
     assert body["n_tokens"] > 0
 
 

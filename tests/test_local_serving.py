@@ -1,7 +1,7 @@
 """Serving-tier rank identity: LocalSearchEngine (parquet-backed,
 no Spark job per query — serving/local.py) must answer the reference
-query set identically to the corpus-built oracle, and therefore (by
-the rank-identity suite in test_query_engine.py) to the Spark engine.
+query set identically to the corpus-built oracle, and the Spark
+engine, which runs it in mapInPandas tasks, exactly like it.
 """
 
 from pathlib import Path
@@ -101,6 +101,69 @@ def test_serving_matches_spark_engine(spark, index_paths, server, cfg, corpus_pd
     got = server.search(queries)
     want = engine.search(queries).toPandas()
     _assert_identical(got, want, score_rtol=1e-9)
+
+
+def _equality_queries(corpus_pdf):
+    words = corpus_pdf["text"].iloc[0].split()[:2]
+    return _queries(corpus_pdf) + [
+        Query(qid="qf1", q=" ".join(words), k=10, filters={"role": ["user"]}),
+        Query(qid="qf2", q=" ".join(words), k=10,
+              filters={"role": ["user", "assistant"], "tool": ["python"]}),
+        Query(qid="qa1", q=words[0][:4], k=10, autocomplete=True),
+        Query(qid="qp1", q=" ".join(words), k=10, phrase=True),
+    ]
+
+
+@pytest.mark.parametrize("snapshot", ["bulk", "cdc", "nolink"])
+def test_spark_engine_equals_serving_exactly(
+    spark, index_paths, cfg, corpus_pdf, tmp_path, snapshot
+):
+    """The Spark engine answers by running the serving tier in
+    mapInPandas tasks, so its collected frame equals
+    LocalSearchEngine's exactly — every shared column, every float —
+    on a bulk index and on CDC snapshots published with and without
+    hardlinks (partitions spread over several snapshot dirs)."""
+    import dataclasses
+
+    from addok_spark.index.fileio import NoLinkFileIO
+    from addok_spark.index.incremental import apply_actions
+
+    paths = index_paths
+    if snapshot != "bulk":
+        # 64 docs per pbucket: the batch rewrites a few partitions and
+        # the snapshot references the rest from the bulk build
+        cfg = dataclasses.replace(
+            cfg, build_partitions=4, doc_bucket_bits=4, pbucket_shift=2
+        )
+        paths = build_index(
+            spark, transcripts_df(spark, N_CONVS, seed=42), cfg,
+            str(tmp_path / snapshot),
+        )
+        changes = corpus_pdf.iloc[[0, 1, 700, 701, 1200]].copy()
+        changes["_action"] = ["update", "update", "delete", "delete", "update"]
+        changes.loc[changes.index[[0, 1]], "text"] = [
+            "rewritten zeta payload", "second wave theta",
+        ]
+        changes.loc[changes.index[4], "text"] = corpus_pdf["text"].iloc[3]
+        appended = corpus_pdf.iloc[[5]].copy()
+        appended["conv_id"] = "conv-appended"
+        appended["_action"] = "index"
+        apply_actions(
+            spark, paths,
+            spark.createDataFrame(pd.concat([changes, appended])), cfg,
+            fileio=NoLinkFileIO() if snapshot == "nolink" else None,
+        )
+    queries = _equality_queries(corpus_pdf) + [
+        Query(qid="qz", q="rewritten zeta payload", k=10),
+    ]
+    got = SearchEngine(spark, paths, cfg).search(queries).toPandas()
+    want = LocalSearchEngine(paths, cfg).search(queries)
+    want = want.sort_values(["qid", "rank"], kind="stable")[list(got.columns)]
+    assert len(got) >= 200
+    pd.testing.assert_frame_equal(
+        got, want.reset_index(drop=True),
+        check_exact=True, check_dtype=False,  # rank/turn_idx are int32
+    )
 
 
 def test_serving_filters_and_autocomplete(server, oracle, corpus_pdf, cfg):

@@ -22,6 +22,7 @@ from addok_spark.config import EngineConfig, FieldSpec
 from addok_spark.index.build import build_index
 from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
 from addok_spark.query.engine import Query, SearchEngine
+from addok_spark.serving.local import ParquetIndex
 
 # the first 8 edit-1 neighbors make_fuzzy_str generates for "bronc"
 # (transpositions then substitutions) — each lives in its own doc and
@@ -75,11 +76,24 @@ def setup(spark, tmp_index_root):
     )
     out = str(Path(tmp_index_root) / "pair_pruning")
     paths = build_index(spark, spark.createDataFrame(pdf), cfg, out)
-    return SearchEngine(spark, paths, cfg), OracleIndex(pdf, cfg), cfg
+    return (
+        SearchEngine(spark, paths, cfg), OracleIndex(pdf, cfg), cfg,
+        ParquetIndex(paths, cfg),
+    )
+
+
+def _expanded(setup, tok, others, autocomplete=False):
+    """A df-0 token's expansion group, as the search flow plans it
+    from the index files: prefix candidates for an autocompleted last
+    token, else edit-1 neighbors (SpecSearch._one)."""
+    idx = setup[3]
+    others = [t for t in others if idx.noncommon(t)]
+    exp = idx.prefix_expansions(tok, others) if autocomplete else []
+    return [t for t, _ in exp or idx.fuzzy_expansions(tok, others)]
 
 
 def _search(setup, q, **kw):
-    engine, oracle, cfg = setup
+    engine, oracle, cfg = setup[:3]
     query = Query(qid="s", q=q, k=20, **kw)
     got = engine.search([query]).toPandas()
     want = oracle_search(oracle, [query], cfg)
@@ -93,9 +107,7 @@ def test_fuzzy_pair_pruning_beats_generation_cap(setup):
     """8 dictionary-present neighbors generated BEFORE the
     co-occurring one would exhaust the [:8] cap under presence-only
     pruning; pair pruning must keep only the co-occurring one."""
-    engine, _, _ = setup
-    state = engine._plan_queries([Query(qid="f", q="alpha bronc", k=5)])["f"]
-    assert state.groups[1] == ["brond"]
+    assert _expanded(setup, "bronc", ["alpha"]) == ["brond"]
     res = _search(setup, "alpha bronc")
     assert res.iloc[0]["conv_id"] == "doc-alpha-brond"
     # both tokens matched: two BM25 group terms, not a one-term match
@@ -105,20 +117,14 @@ def test_fuzzy_pair_pruning_beats_generation_cap(setup):
 def test_fuzzy_presence_only_without_other_tokens(setup):
     """Single-token typo query: no other tokens to SINTER with →
     plain dictionary-presence pruning, generation order, cap 8."""
-    engine, _, _ = setup
-    state = engine._plan_queries([Query(qid="f", q="bronc", k=5)])["f"]
-    assert state.groups[0] == EARLY_NEIGHBORS  # brond past the cap
+    assert _expanded(setup, "bronc", []) == EARLY_NEIGHBORS  # brond past the cap
     _search(setup, "bronc")
 
 
 def test_autocomplete_pair_semi_join(setup):
     """Prefix candidates not co-occurring with the other meaningful
     token are dropped (autocomplete.py:83-87)."""
-    engine, _, _ = setup
-    state = engine._plan_queries(
-        [Query(qid="a", q="zebrat qrd", k=5, autocomplete=True)]
-    )["a"]
-    assert state.groups[1] == ["qrdgood"]
+    assert _expanded(setup, "qrd", ["zebrat"], autocomplete=True) == ["qrdgood"]
     res = _search(setup, "zebrat qrd", autocomplete=True)
     assert res.iloc[0]["conv_id"] == "doc-zebrat-qrdgood"
 
@@ -127,11 +133,8 @@ def test_autocomplete_single_token_max_score_order(setup):
     """One-token prefix query orders candidates by max posting boost
     (order_by_max_score.lua): the df=1 high-importance token must
     survive the [:10] cut that df-ordering would have applied."""
-    engine, _, _ = setup
-    state = engine._plan_queries(
-        [Query(qid="a", q="prec", k=20, autocomplete=True)]
-    )["a"]
-    assert state.groups[0][0] == "preczz"
-    assert len(state.groups[0]) == 10
+    group = _expanded(setup, "prec", [], autocomplete=True)
+    assert group[0] == "preczz"
+    assert len(group) == 10
     res = _search(setup, "prec", autocomplete=True)
     assert "doc-preczz" in set(res["conv_id"])

@@ -17,7 +17,7 @@ from addok_spark.config import EngineConfig, FieldSpec
 from addok_spark.index.build import build_index
 from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
 from addok_spark.query.engine import Query, SearchEngine
-from addok_spark.serving.local import LocalSearchEngine
+from addok_spark.serving.local import FastSearch, LocalSearchEngine, ParquetIndex
 
 DOCS = [
     # conv_id, text, role
@@ -139,45 +139,9 @@ def test_phrase_mixed_with_normal_queries_in_one_batch(env):
     assert set(_ids(want, pdf_sorted, "p1")) == {"d-ba", "d-dup"}
 
 
-def test_phrase_rare_pruned_path_identical(env, spark, tmp_index_root):
-    """The rarest-token doc conjunction + broadcast semi-join (the
-    100-TB bound, engaged above prune_min_postings) must be
-    result-identical to the decode-everything path on the same
-    index — forced open here with a zero floor."""
-    import dataclasses
-
-    from pathlib import Path
-
-    cfg = dataclasses.replace(env["cfg"], prune_min_postings=0)
-    eng = SearchEngine(spark, str(Path(tmp_index_root) / "phrase_mode"), cfg)
-    queries = [
-        Query(qid="p1", q="alpha beta", k=10, phrase=True),
-        Query(qid="p2", q="common here", k=10, phrase=True),
-        Query(qid="p3", q="alpha beta gamma", k=10, phrase=True),
-        Query(qid="p4", q="common here", k=10, phrase=True,
-              filters={"role": ["user"]}),
-    ]
-    pruned = eng.search(queries).toPandas()
-    want = oracle_search(env["oracle"], queries, env["cfg"])
-    gg = {q: list(g.sort_values("rank")["doc_index"])
-          for q, g in pruned.groupby("qid")}
-    ww = {q: list(g.sort_values("rank")["doc_index"])
-          for q, g in want.groupby("qid")}
-    assert gg == ww
-    # tiny-volume batches skip the extra rare-decode job entirely
-    cfg_off = dataclasses.replace(env["cfg"], prune_min_postings=10**9)
-    eng_off = SearchEngine(
-        spark, str(Path(tmp_index_root) / "phrase_mode"), cfg_off
-    )
-    off = eng_off.search(queries).toPandas()
-    assert {q: list(g.sort_values("rank")["doc_index"])
-            for q, g in off.groupby("qid")} == ww
-
-
 def test_serving_restricted_position_decode_identical(env):
     """token_position_arrays(within_docs=...) (block-granular decode
-    restriction, the serving twin of the engine's rare-token
-    conjunction) must equal full-decode-then-slice on every token,
+    restriction to the rarest phrase token's docs) must equal full-decode-then-slice on every token,
     on both the unsharded and the sharded index — and the
     whole-phrase LRU must return independent copies."""
     import numpy as np
@@ -209,3 +173,66 @@ def test_serving_restricted_position_decode_identical(env):
     r2 = fs.phrase_occurrences(["alpha", "beta"])
     assert 99999 not in r2
     assert fs.phrase_occurrences(["alpha", "beta"]) == r2
+
+
+def test_phrase_occurrence_counts(spark, tmp_index_root):
+    """Per-doc occurrence counts of consecutive in-order token runs
+    (the phrase candidates' collection order) from the vectorized
+    serving kernel and the spec flow over the index files, against
+    hand-counted docs and a naive scan of the synthetic corpus."""
+    from addok_spark.data.transcripts import transcripts_pdf
+    from addok_spark.functions.text import analyze_str
+    from addok_spark.oracle.bm25_oracle import SpecSearch
+
+    cfg = EngineConfig(
+        build_partitions=4, doc_bucket_bits=4, posting_block_size=8,
+        common_threshold=400,
+    )
+
+    def counts(paths, phrase):
+        seq = analyze_str(phrase, cfg.synonyms)
+        idx = ParquetIndex(paths, cfg)
+        fast = FastSearch(idx, cfg).phrase_occurrences(seq)
+        assert SpecSearch(idx, cfg).phrase_occurrences(seq) == fast
+        docs = idx.doc_values("conv_id", sorted(fast))
+        turns = idx.doc_values("turn_idx", sorted(fast))
+        return {(c, int(t)): fast[d]
+                for c, t, d in zip(docs, turns, sorted(fast))}
+
+    rows = [
+        ("c1", 0, "user", "the quick brown fox jumps", None, 0.5),
+        ("c1", 1, "user", "quick brown shoes and a brown fox", None, 0.5),
+        ("c2", 0, "user", "fox brown quick reversed words", None, 0.2),
+        ("c2", 1, "user", "quick brown fox quick brown fox", None, 0.2),
+    ]
+    sdf = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string,"
+        " tool string, importance double"
+    )
+    paths = build_index(spark, sdf, cfg, f"{tmp_index_root}/phrase_counts")
+    # order matters: c2/0 holds the tokens reversed
+    assert counts(paths, "quick brown fox") == {("c1", 0): 1, ("c2", 1): 2}
+    assert counts(paths, "brown fox") == {
+        ("c1", 0): 1, ("c1", 1): 1, ("c2", 1): 2,
+    }
+    assert counts(paths, "brown quick fox") == {}
+    assert counts(paths, "zzz qqq") == {}
+
+    corpus = transcripts_pdf(10, seed=42)
+    phrase_toks = analyze_str(corpus["text"].iloc[5], cfg.synonyms)[:2]
+    assert len(phrase_toks) == 2
+    paths = build_index(
+        spark, spark.createDataFrame(corpus), cfg,
+        f"{tmp_index_root}/phrase_counts_corpus",
+    )
+    want = {}
+    for row in corpus.itertuples(index=False):
+        toks = analyze_str(row.text, cfg.synonyms) + (
+            analyze_str(row.tool, cfg.synonyms) if isinstance(row.tool, str) else []
+        )
+        n = sum(
+            1 for i in range(len(toks) - 1) if toks[i : i + 2] == phrase_toks
+        )
+        if n:
+            want[(row.conv_id, row.turn_idx)] = n
+    assert counts(paths, " ".join(phrase_toks)) == want

@@ -50,12 +50,10 @@ def test_bm25_uses_broadcast_joins(spark):
 
 
 def test_round_pushes_token_infilter_into_blocks_scan(spark, tmp_index_root):
-    """The collection round must push the plan's token IN-list into
-    the blocks parquet scan (a broadcast join alone pushes nothing —
-    every round would re-read all packed binaries)."""
-    import pandas as pd
-
-    from addok_spark.query.engine import SearchEngine
+    """A token IN-list on the blocks table must be pushed into the
+    parquet scan (a broadcast join alone pushes nothing — every read
+    would re-read all packed binaries)."""
+    from addok_spark.index.build import read_table
 
     cfg = EngineConfig(
         build_partitions=4, doc_bucket_bits=4, posting_block_size=16,
@@ -64,13 +62,13 @@ def test_round_pushes_token_infilter_into_blocks_scan(spark, tmp_index_root):
         spark, transcripts_df(spark, 10, seed=42), cfg,
         f"{tmp_index_root}/scanplan_idx",
     )
-    eng = SearchEngine(spark, paths, cfg)
+    blocks = read_table(spark, paths, "blocks")
     toks = sorted(
         r["token"]
-        for r in eng.blocks.select("token").distinct().limit(3).collect()
+        for r in blocks.select("token").distinct().limit(3).collect()
     )
     plan = _fmt(
-        eng.blocks.filter(F.col("token").isin(toks)).select("token", "n")
+        blocks.filter(F.col("token").isin(toks)).select("token", "n")
     )
     assert "PushedFilters" in plan
     assert "In(token" in plan or "EqualTo(token" in plan

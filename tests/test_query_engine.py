@@ -178,7 +178,7 @@ def test_filter_value_whitespace_normalized(spark, cfg, tmp_index_root):
     """A doc whose filter-column value carries stray whitespace must
     still match the filter: index keys, query keys and the post-score
     predicate all trim values identically (build.py filter_token_rows
-    ↔ engine._plan_queries ↔ engine._score)."""
+    ↔ SpecSearch planning ↔ its scoring fold)."""
     from addok_spark.index.build import build_index as _build
 
     rows = []
@@ -209,61 +209,17 @@ def test_filter_value_whitespace_normalized(spark, cfg, tmp_index_root):
     assert list(got["doc_index"]) == list(want["doc_index"])
 
 
-def test_topn_two_level_bounded_head_rank_identity(spark):
-    """The level-1 streaming head (sort + per-run head in mapInPandas)
-    must return EXACTLY the same ranks as the single-level path, on a
-    corpus-sized match group with heavy score ties, and with Arrow
-    batches far smaller than a (qid, salt) run so the cross-batch
-    carry state is exercised."""
-    from addok_spark.query.engine import _topn_per_qid
-
-    rng = np.random.default_rng(7)
-    n = 20_000
-    pdf = pd.DataFrame(
-        {
-            "qid": np.where(np.arange(n) % 3 == 0, "qa", "qb"),
-            "doc_index": np.arange(n, dtype=np.int64),
-            # few distinct scores → massive ties → tiebreak stress
-            "prescore": rng.integers(0, 5, n).astype(np.float64) / 4.0,
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "37")
-        two = (
-            _topn_per_qid(df, "prescore", "doc_index", 25, two_level=True)
-            .toPandas()
-            .sort_values(["qid", "rn"])
-            .reset_index(drop=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    one = (
-        _topn_per_qid(df, "prescore", "doc_index", 25, two_level=False)
-        .toPandas()
-        .sort_values(["qid", "rn"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(two, one, check_dtype=False)
-    # cross-check against plain pandas
-    want = (
-        pdf.sort_values(["qid", "prescore", "doc_index"],
-                        ascending=[True, False, True])
-        .groupby("qid")
-        .head(25)
-        .reset_index(drop=True)
-    )
-    assert list(two["doc_index"]) == list(want["doc_index"])
-
-
 def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
-    """r6: the driver-side pyarrow metadata probes (dictionary stats,
-    prefix candidates, pair existence) must return exactly what Spark
-    scans of the same tables return — including absent keys, null
-    max_boost handling, and the prefix rank-and-cap order."""
+    """The serving index's pyarrow metadata probes (in-RAM dictionary
+    stats, prefix candidates, pair existence) the search flow plans
+    with must return exactly what Spark scans of the same tables
+    return — including absent keys and the prefix rank-and-cap
+    order."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
+
+    from addok_spark.index.build import read_table
+    from addok_spark.serving.local import ParquetIndex
 
     cfg = EngineConfig(
         build_partitions=4, doc_bucket_bits=4, posting_block_size=16,
@@ -273,15 +229,18 @@ def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
         spark, transcripts_df(spark, 15, seed=42), cfg,
         str(Path(tmp_index_root) / "probe_idx"),
     )
-    eng = SearchEngine(spark, paths, cfg)
+    idx = ParquetIndex(paths, cfg)
+    dictionary = read_table(spark, paths, "dictionary")
+    prefix_tbl = read_table(spark, paths, "prefixes")
+    pairs_tbl = read_table(spark, paths, "pairs")
 
     toks = {
         r["token"]
-        for r in eng.dictionary.select("token").limit(10).collect()
+        for r in dictionary.select("token").limit(10).collect()
     } | {"zz_absent_token"}
     prefixes = {
         r["prefix"]
-        for r in eng.prefixes.select("prefix").limit(6).collect()
+        for r in prefix_tbl.select("prefix").limit(6).collect()
     } | {"zzzz"}
     some = sorted(toks)[:6]
     checks = {
@@ -290,29 +249,31 @@ def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
 
     stats = {
         r["token"]: (r["df"], float(r["max_boost"] or 0.0))
-        for r in eng.dictionary.filter(F.col("token").isin(list(toks)))
+        for r in dictionary.filter(F.col("token").isin(list(toks)))
         .select("token", "df", "max_boost").collect()
     }
     w = Window.partitionBy("prefix").orderBy(F.desc("df"), F.asc("token"))
     cands: dict = {}
     for r in sorted(
-        eng.prefixes.filter(F.col("prefix").isin(list(prefixes)))
+        prefix_tbl.filter(F.col("prefix").isin(list(prefixes)))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5).collect(),
         key=lambda r: (r["prefix"], r["rn"]),
     ):
-        cands.setdefault(r["prefix"], []).append(
-            (r["token"], r["df"], float(r["max_boost"] or 0.0))
-        )
+        cands.setdefault(r["prefix"], []).append(r["token"])
     a_list = sorted({a for a, _ in checks})
     b_list = sorted({b for _, b in checks})
     pairs = {
         (r["token_a"], r["token_b"])
-        for r in eng.pairs.filter(
+        for r in pairs_tbl.filter(
             F.col("token_a").isin(a_list) & F.col("token_b").isin(b_list)
         ).collect()
     } & checks
 
-    assert eng._token_stats(toks) == stats
-    assert eng._prefix_candidates_batch(prefixes, cap=5) == cands
-    assert eng._pairs_probe(checks) == pairs
+    assert {
+        t: (idx.df[t], idx.max_boost[t]) for t in toks if t in idx.df
+    } == stats
+    assert {
+        p: c for p in prefixes if (c := idx.prefix_candidates(p, cap=5))
+    } == cands
+    assert {(a, b) for a, b in checks if idx.cooc(a, b)} == pairs

@@ -15,6 +15,7 @@ from addok_spark.config import EngineConfig, FieldSpec
 from addok_spark.index.build import build_index
 from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
 from addok_spark.query.engine import Query, SearchEngine
+from addok_spark.serving.local import ParquetIndex
 
 DOCS = [
     # (conv_id, text, importance)
@@ -562,25 +563,32 @@ def strategy_setup(spark, tmp_index_root):
 
 
 def _search_with_plan(engine, oracle, cfg, query):
-    """Run one query capturing every collection plan the engine
-    submits (≙ the reference's scripts.manual_scan monkeypatch)."""
-    plans = []
-    orig = engine._run_round
+    """Run one query through the Spark engine, and through the serving
+    flow over the same snapshot capturing whether each collection
+    kernel call (``run_gids``) is a manual scan (≙ the reference's
+    scripts.manual_scan monkeypatch): it is when scanning is allowed
+    and every required group's df exceeds ``intersect_limit``."""
+    from addok_spark.serving.local import FastSearch, ParquetIndex
 
-    def spy(plan, *a, **k):
-        plans.append(plan)
-        return orig(plan, *a, **k)
+    searcher = FastSearch(ParquetIndex(engine.paths, cfg), cfg)
+    scans = []
+    orig = searcher.run_gids
 
-    engine._run_round = spy
-    try:
-        got = engine.search([query]).toPandas()
-    finally:
-        engine._run_round = orig
+    def spy(groups, group_dfs, gids, bucket_limit, use_scan=True):
+        scans.append(use_scan and all(
+            group_dfs.get(g, 0) > cfg.intersect_limit for g in gids
+        ))
+        return orig(groups, group_dfs, gids, bucket_limit, use_scan)
+
+    searcher.run_gids = spy
+    served = searcher.search([query])
+    got = engine.search([query]).toPandas()
     want = oracle_search(oracle, [query], cfg)
     assert list(got["doc_index"]) == list(want["doc_index"]), (
         f"engine/oracle diverge for {query.q!r}:\n{got}\n{want}"
     )
-    return got, plans
+    assert list(served["doc_index"]) == list(want["doc_index"])
+    return got, scans
 
 
 def test_should_use_intersect_if_filter_smaller_than_token(strategy_setup):
@@ -589,11 +597,11 @@ def test_should_use_intersect_if_filter_smaller_than_token(strategy_setup):
     # round must INTERSECT (no scan), and only the cities come back
     engine, oracle, cfg = strategy_setup
     q = Query(qid="st1", q="la", k=10, filters={"role": ["city"]})
-    got, plans = _search_with_plan(engine, oracle, cfg, q)
+    got, scans = _search_with_plan(engine, oracle, cfg, q)
     ids = set(got["conv_id"])
     assert {"c-monnaie", "c-poste"} <= ids
     assert not any(i.startswith("s-") for i in ids)
-    assert plans and not any(bool(p["is_scan"].any()) for p in plans), (
+    assert scans and not any(scans), (
         "manual scan must NOT trigger when the filter is more "
         "selective than the token"
     )
@@ -604,11 +612,11 @@ def test_should_use_manual_scan_if_both_token_and_filter_large(strategy_setup):
     # (3 docs) both exceed intersect_limit=2 → manual scan fires
     engine, oracle, cfg = strategy_setup
     q = Query(qid="st2", q="la", k=10, filters={"role": ["street"]})
-    got, plans = _search_with_plan(engine, oracle, cfg, q)
+    got, scans = _search_with_plan(engine, oracle, cfg, q)
     assert set(got["conv_id"]) == {
         "s-monnaie-vitry", "s-monnaie-paris", "s-republique"
     }
-    assert any(bool(p["is_scan"].any()) for p in plans), (
+    assert any(scans), (
         "manual scan must trigger when token and filter are both "
         "above intersect_limit"
     )
@@ -746,7 +754,7 @@ def _env_with_importance(spark, tmp_index_root, name, docs, **cfg_kw):
     cfg = EngineConfig(**base)
     out = str(Path(tmp_index_root) / name)
     paths = build_index(spark, spark.createDataFrame(pdf), cfg, out)
-    return SearchEngine(spark, paths, cfg), cfg
+    return ParquetIndex(paths, cfg), cfg
 
 
 @pytest.fixture(scope="module")
@@ -758,21 +766,29 @@ def scripts_env(spark, tmp_index_root):
     )[0]
 
 
-def _round(engine, groups, topn, scan_gid=None):
-    """Run ONE collection round over explicit group expansions — the
-    exact plan shape ``round_plan`` emits (engine.py) for one query —
-    returning doc_index in bucket order. This is the engine analog of
-    calling ``scripts.zinter`` / ``scripts.manual_scan`` directly."""
-    rows = [
-        ("q", gid, tok, len(groups), gid == scan_gid)
-        for gid, toks in enumerate(groups)
-        for tok in toks
+def _round(index, groups, topn, scan_gid=None):
+    """Run ONE collection kernel call over explicit group expansions —
+    the call the search flow makes per round variant — returning
+    doc_index in bucket order, the same through the vectorized
+    ``FastSearch`` and the spec ``SpecSearch``. This is the analog of
+    calling ``scripts.zinter`` / ``scripts.manual_scan`` directly: a
+    ``scan_gid`` gets the lowest df above ``intersect_limit`` and every
+    other group a higher one, so the kernel probes from that group."""
+    from addok_spark.oracle.bm25_oracle import SpecSearch
+    from addok_spark.serving.local import FastSearch
+
+    gids = list(range(len(groups)))
+    lim = index.cfg.intersect_limit
+    dfs = {g: lim + (1 if g == scan_gid else 2) for g in gids}
+    got = [
+        cls(index, index.cfg).run_gids(
+            dict(enumerate(groups)), dfs, gids, topn,
+            use_scan=scan_gid is not None,
+        )
+        for cls in (FastSearch, SpecSearch)
     ]
-    plan = pd.DataFrame(
-        rows, columns=["qid", "gid", "token", "n_required", "is_scan"]
-    )
-    out = engine._run_round(plan, topn)
-    return list(out.sort_values("rn")["doc_index"])
+    assert got[0] == got[1]
+    return got[0]
 
 
 def test_zinter_sums_scores_and_limits(scripts_env):
@@ -821,11 +837,18 @@ def freq_env(spark, tmp_index_root):
     )[0]
 
 
+def _token_stats(index, tokens):
+    """(df, max_boost) per token present in the in-RAM dictionary."""
+    return {
+        t: (index.df[t], index.max_boost[t]) for t in tokens if t in index.df
+    }
+
+
 def test_order_by_frequency(freq_env):
     # tests/test_scripts.py:52-59: tokens ordered by df desc (the
     # reference corpus ties rue/vitry once the importance doc is
     # added, so `des` stands in for `rue` to keep the order strict)
-    stats = freq_env._token_stats({"monnaie", "des", "lilas", "vitry"})
+    stats = _token_stats(freq_env, {"monnaie", "des", "lilas", "vitry"})
     got = sorted(stats, key=lambda t: -stats[t][0])
     assert got == ["vitry", "des", "lilas", "monnaie"]
 
@@ -834,7 +857,7 @@ def test_order_by_max_score(freq_env):
     # tests/test_scripts.py:62-70 (lua/order_by_max_score.lua): the
     # token whose best doc carries importance 0.5 (boost 1.0+0.05)
     # outranks tokens whose docs are all importance 0
-    stats = freq_env._token_stats({"monnaie", "lilas", "vitry", "rue"})
+    stats = _token_stats(freq_env, {"monnaie", "lilas", "vitry", "rue"})
     best = max(stats, key=lambda t: stats[t][1])
     assert best == "vitry"
     assert stats["vitry"][1] == pytest.approx(1.05, abs=1e-6)
@@ -843,14 +866,14 @@ def test_order_by_max_score(freq_env):
 # --- many-to-many relation extrapolation (tests/test_collectors.py) -------
 
 
-def _relations(engine, cfg, qtokens):
+def _relations(index, cfg, qtokens):
     """≙ ``_extract_manytomany_relations`` (reference
-    collectors.py:175-214) through the engine's own primitives: df
+    collectors.py:175-214) through the serving index's primitives: df
     probe → meaningful set (0 < df ≤ COMMON_THRESHOLD) → pair-index
     probe → maximal cliques (≥2) over the co-occurrence graph."""
     from addok_spark.query.cliques import maximal_cliques
 
-    stats = engine._token_stats(set(qtokens))
+    stats = _token_stats(index, set(qtokens))
     meaningful = sorted(
         t
         for t in set(qtokens)
@@ -861,7 +884,7 @@ def _relations(engine, cfg, qtokens):
         for i, a in enumerate(meaningful)
         for b in meaningful[i + 1:]
     }
-    present = engine._pairs_probe(checks)
+    present = {(a, b) for a, b in checks if index.cooc(a, b)}
     idx = {t: i for i, t in enumerate(meaningful)}
     edges = {(idx[a], idx[b]) for a, b in present}
     cliques = [
@@ -875,7 +898,7 @@ def _relations(engine, cfg, qtokens):
 def test_extract_manytomany_relations(spark, tmp_index_root):
     # tests/test_collectors.py:5-13: rue/de are common; the only
     # interlinked meaningful group is {fecamp, paris}
-    engine, cfg = _env_with_importance(
+    index, cfg = _env_with_importance(
         spark, tmp_index_root, "ref_m2m_1",
         [
             ("doc-0", "rue de Paris Fecamp", "street", 0.0),
@@ -885,7 +908,7 @@ def test_extract_manytomany_relations(spark, tmp_index_root):
         common_threshold=2,
     )
     got = _relations(
-        engine, cfg, "rue de paris porte 506 fecamp".split()
+        index, cfg, "rue de paris porte 506 fecamp".split()
     )
     assert got == {frozenset({"fecamp", "paris"})}
 
@@ -893,7 +916,7 @@ def test_extract_manytomany_relations(spark, tmp_index_root):
 def test_extract_manytomany_relations_2(spark, tmp_index_root):
     # tests/test_collectors.py:16-39: two overlapping relations share
     # dieppe/76370; neuville and la stay singletons and drop out
-    engine, cfg = _env_with_importance(
+    index, cfg = _env_with_importance(
         spark, tmp_index_root, "ref_m2m_2",
         [
             ("doc-0", "rue de falaise dieppe 76370 1", "street", 0.0),
@@ -904,7 +927,7 @@ def test_extract_manytomany_relations_2(spark, tmp_index_root):
         common_threshold=2,
     )
     got = _relations(
-        engine, cfg,
+        index, cfg,
         "1 chemin de la falaise le semaphore neuville les 76370 dieppe"
         .split(),
     )
@@ -919,7 +942,7 @@ def test_extract_manytomany_relations_3(spark, tmp_index_root):
     # Saint-Pierre-de-Rouergue and goes common; typo/zero-df tokens
     # (tassign, pleiade, porte) and the unrelated `a` drop out,
     # leaving the single 4-clique
-    engine, cfg = _env_with_importance(
+    index, cfg = _env_with_importance(
         spark, tmp_index_root, "ref_m2m_3",
         [
             (
@@ -935,7 +958,7 @@ def test_extract_manytomany_relations_3(spark, tmp_index_root):
         common_threshold=2,
     )
     got = _relations(
-        engine, cfg,
+        index, cfg,
         "45 rue de lattre de tassign pleiade a 3 porte 76130 mont saint "
         "aignan".split(),
     )

@@ -36,7 +36,7 @@ def shell(spark, tmp_index_root):
     )
     out = str(Path(tmp_index_root) / "shell_idx")
     build_index(spark, spark.createDataFrame(pdf), cfg, out)
-    return Shell(spark, out, cfg)
+    return Shell(out, cfg)
 
 
 def test_shell_search_default(shell):
@@ -46,7 +46,31 @@ def test_shell_search_default(shell):
 
 def test_shell_explain(shell):
     out = shell.dispatch("EXPLAIN rue des lilas")
-    assert "group" in out and "plan_queries" in out
+    assert "group" in out and '"stage": "search"' in out
+
+
+def test_cli_explain_covers_the_executed_query(shell, capsys):
+    """``explain`` runs the query on the serving tier: its groups come
+    from the spec plan, and its one stage times the executed search,
+    so the stage's row count is the number of results printed."""
+    import json
+
+    from addok_spark.__main__ import main
+
+    main(["explain", "--index", shell.index_dir, "-q", "des lilas",
+          "-k", "2", "--filters", '{"role": ["user", "tool"]}'])
+    info = json.loads(capsys.readouterr().out)
+    assert info["query"] == "des lilas"
+    assert [(g["kind"], g["tokens"], g["df"]) for g in info["groups"]] == [
+        ("meaningful", ["des"], 2),
+        ("meaningful", ["lilas"], 2),
+        ("filter", ["f|role|tool", "f|role|user"], 1),
+    ]
+    assert info["candidates"] == 2
+    assert {r["conv_id"] for r in info["results"]} == {"doc-0", "doc-1"}
+    (stage,) = info["stages"]
+    assert stage["stage"] == "search" and stage["seconds"] > 0
+    assert stage["rows"] == len(info["results"])
 
 
 def test_shell_tokenize_fuzzy_freq(shell):

@@ -1,14 +1,11 @@
-"""Block-max WAND bucket skipping + cream early-termination.
+"""Cream early-termination (reference core.py:400-419): a dry bucket
+already holding a string match ≥ MATCH_THRESHOLD stops the relaxation
+rounds. Answers are checked through the serving tier's FastSearch and
+the spec flow against the corpus-built oracle; the number of
+collection kernel calls (``run_gids``) shows whether relaxation ran.
 
-WAND (SURVEY §4.1 top-k pushdown): per-bucket upper bounds from block
-metadata let the engine skip decoding buckets that cannot contain a
-top-n doc. The test corpus is deliberately skewed: the first docs are
-two-token turns (boost 0.5/token) and the rest are 40-token turns
-(boost 0.025/token), so the leading buckets' ub dominates and the
-tail buckets must be skipped with ranks unchanged.
-
-Cream (reference core.py:400-419): a dry bucket already holding a
-string match ≥ MATCH_THRESHOLD stops the relaxation rounds.
+The corpus is skewed: the first docs are two-token turns and the rest
+are 40-token turns, with one unique six-token doc as the cream target.
 """
 
 from pathlib import Path
@@ -18,8 +15,9 @@ import pytest
 
 from addok_spark.config import EngineConfig
 from addok_spark.index.build import build_index
-from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
-from addok_spark.query.engine import Query, SearchEngine
+from addok_spark.oracle.bm25_oracle import OracleIndex, SpecSearch, oracle_search
+from addok_spark.query.engine import Query
+from addok_spark.serving.local import FastSearch, ParquetIndex
 
 
 def _skewed_corpus() -> pd.DataFrame:
@@ -49,154 +47,73 @@ def _skewed_corpus() -> pd.DataFrame:
 
 
 @pytest.fixture(scope="module")
-def wand_setup(spark, tmp_index_root):
+def cream_setup(spark, tmp_index_root):
     pdf = _skewed_corpus()
     cfg = EngineConfig(
         build_partitions=4,
         doc_bucket_bits=3,       # 8 docs per bucket → 12 buckets
         posting_block_size=8,
-        wand_min_df=4,           # 'alpha'/'beta' df≈95 → wand engages
-        wand_min_postings=10,    # tiny corpus: bypass the volume gate
-        wand_bucket_batch=2,
         build_pairs=False,
     )
     sdf = spark.createDataFrame(pdf)
-    out = str(Path(tmp_index_root) / "wand_test")
+    out = str(Path(tmp_index_root) / "cream_test")
     paths = build_index(spark, sdf, cfg, out)
     return pdf, cfg, paths
 
 
-def test_wand_skips_buckets_with_identical_ranks(spark, wand_setup):
-    pdf, cfg, paths = wand_setup
-    engine = SearchEngine(spark, paths, cfg)
-    plan = pd.DataFrame(
-        [("w1", 0, "alpha", 2, False), ("w1", 1, "beta", 2, False)],
-        columns=["qid", "gid", "token", "n_required", "is_scan"],
+def _answers(paths, pdf, cfg, queries):
+    """doc_index lists of the serving kernel, the spec flow (both over
+    the index files) and the oracle, plus the number of ``run_gids``
+    calls the serving flow made."""
+    fast = FastSearch(ParquetIndex(paths, cfg), cfg)
+    calls = []
+    orig = fast.run_gids
+
+    def counting(*a, **kw):
+        calls.append(a[2])
+        return orig(*a, **kw)
+
+    fast.run_gids = counting
+    served = fast.search(queries)
+    spec = SpecSearch(ParquetIndex(paths, cfg), cfg).search(queries)
+    want = oracle_search(OracleIndex(pdf, cfg), queries, cfg)
+    return (
+        [list(f["doc_index"]) for f in (served, spec, want)],
+        len(calls),
     )
-    wand = engine._run_round(plan, topn=5, wand_qids=["w1"])
-    assert engine.last_round_metrics["buckets_skipped"] > 0, (
-        "skewed corpus must let WAND skip tail buckets"
-    )
-    plain = engine._run_round(plan, topn=5, wand_qids=[])
-    assert engine.last_round_metrics["buckets_skipped"] == 0
-    pd.testing.assert_frame_equal(
-        wand[["qid", "doc_index", "rn"]].reset_index(drop=True),
-        plain[["qid", "doc_index", "rn"]].reset_index(drop=True),
-    )
-    # the winners are the short (high-boost) docs
-    assert set(wand["doc_index"]) <= set(range(1, 8))
 
 
-def test_wand_end_to_end_rank_identity(spark, wand_setup):
-    import dataclasses
-
-    pdf, cfg_full, paths = wand_setup
-    # skipping engages once matches exceed the bucket limit
-    # max(k, bucket_max) (the top-n floor must be a real lower
-    # bound); 95 docs match, so shrink the bucket AND keep k within
-    # it — k > bucket_max legitimately raises the collection limit
-    # (reference core.py:339) and with it the skip floor
-    cfg = dataclasses.replace(cfg_full, bucket_max=5, bucket_min=2)
-    engine = SearchEngine(spark, paths, cfg)
-    oracle = OracleIndex(pdf, cfg)
-    queries = [Query(qid="we1", q="alpha beta", k=5)]
-    got = engine.search(queries).toPandas()
-    want = oracle_search(oracle, queries, cfg)
-    assert list(got["doc_index"]) == list(want["doc_index"])
-    assert engine.last_metrics["buckets_skipped"] > 0
-
-
-def test_cream_early_termination(spark, wand_setup):
+def test_cream_early_termination(cream_setup):
     """An exact full-text match (str_distance 1.0) in a dry bucket
     stops the relaxation rounds; ranks stay oracle-identical."""
-    pdf, cfg, paths = wand_setup
-    engine = SearchEngine(spark, paths, cfg)
-    oracle = OracleIndex(pdf, cfg)
+    pdf, cfg, paths = cream_setup
     # unique-ish 2-token doc text as the query, made dry by a
     # third token that only co-occurs in few docs: use the exact
     # short doc text (matches 8 docs < bucket_min=10 → dry) —
     # cream must stop rounds 3/4
     queries = [Query(qid="c1", q="alpha beta x1 x2 x3", k=10)]
-    got = engine.search(queries).toPandas()
-    want = oracle_search(oracle, queries, cfg)
-    assert list(got["doc_index"]) == list(want["doc_index"])
+    (served, spec, want), _ = _answers(paths, pdf, cfg, queries)
+    assert served == spec == want
 
 
-def test_cream_reduces_rounds(spark, wand_setup):
-    pdf, cfg, paths = wand_setup
-    oracle = OracleIndex(pdf, cfg)
-    engine = SearchEngine(spark, paths, cfg)
+def test_cream_reduces_rounds(cream_setup):
+    pdf, cfg, paths = cream_setup
     # the query matches exactly ONE doc (dry: 1 < bucket_min=10)
     # whose text IS the query → cream stops before round 3. Six
     # meaningful tokens so the remove-1 margin condition
     # (len(meaningful)-1 > ceil(2/3·len(tokens)), collectors.py:123)
     # holds and the relaxation round WOULD run without cream
     q = [Query(qid="cr1", q="gamma delta eps zeta eta theta", k=10)]
-    got = engine.search(q).toPandas()
-    with_cream = dict(engine.last_metrics)
-    assert with_cream["cream_stops"] >= 1
-    assert with_cream["rounds"] == 1
+    (served, spec, want), calls = _answers(paths, pdf, cfg, q)
+    assert served == spec == want
+    assert calls == 1  # round 1 only
 
     import dataclasses
 
     cfg_nc = dataclasses.replace(cfg, match_threshold=2.0)  # unreachable
-    engine2 = SearchEngine(spark, paths, cfg_nc)
-    got_nc = engine2.search(q).toPandas()
-    assert engine2.last_metrics["rounds"] == 2  # relaxation round paid
-
-    # ranks identical with and without cream, and oracle-identical
-    want = oracle_search(oracle, q, cfg)
-    assert list(got["doc_index"]) == list(want["doc_index"])
-    want_nc = oracle_search(oracle, q, cfg_nc)
-    assert list(got_nc["doc_index"]) == list(want_nc["doc_index"])
-
-
-def test_wand_floor_tie_includes_tied_buckets(spark, tmp_index_root):
-    """A remaining bucket whose upper bound EQUALS the phase-1 top-n
-    floor must still be decoded: it can hold a doc that ties the floor
-    prescore and wins the doc_index tiebreak. Corpus: doc 8 is the
-    lone high-boost doc (bucket 1, ub 1.0); every other doc scores
-    exactly float32(0.5), so bucket 0's ub ties the floor and its
-    docs 0..3 must displace docs 9..12 in the final ranks."""
-    rows = []
-    for i in range(16):
-        text = "alpha" if i == 8 else f"alpha w{i:02d}"
-        rows.append(
-            {
-                "conv_id": f"conv-{i:02d}",
-                "turn_idx": 0,
-                "role": "user",
-                "text": text,
-                "tool": None,
-                "ts": pd.Timestamp("2026-01-01") + pd.Timedelta(seconds=i),
-                "importance": 0.0,
-            }
-        )
-    pdf = pd.DataFrame(rows)
-    cfg = EngineConfig(
-        build_partitions=2,
-        doc_bucket_bits=3,   # 8 docs per bucket → 2 buckets
-        posting_block_size=8,
-        wand_bucket_batch=1,  # phase 1 decodes ONLY bucket 1 (ub 1.0)
-        build_pairs=False,
-        build_prefixes=False,
-    )
-    sdf = spark.createDataFrame(pdf)
-    out = str(Path(tmp_index_root) / "wand_tie_test")
-    paths = build_index(spark, sdf, cfg, out)
-    engine = SearchEngine(spark, paths, cfg)
-    plan = pd.DataFrame(
-        [("t1", 0, "alpha", 1, False)],
-        columns=["qid", "gid", "token", "n_required", "is_scan"],
-    )
-    wand = engine._run_round(plan, topn=5, wand_qids=["t1"])
-    plain = engine._run_round(plan, topn=5, wand_qids=[])
-    assert list(plain["doc_index"]) == [8, 0, 1, 2, 3]
-    pd.testing.assert_frame_equal(
-        wand[["qid", "doc_index", "rn"]].reset_index(drop=True),
-        plain[["qid", "doc_index", "rn"]].reset_index(drop=True),
-        check_dtype=False,  # merged path re-ranks in pandas (int64)
-    )
+    (served_nc, spec_nc, want_nc), calls_nc = _answers(paths, pdf, cfg_nc, q)
+    assert served_nc == spec_nc == want_nc
+    assert calls_nc > 1  # relaxation round paid
 
 
 def test_cream_metric_not_fooled_by_containment(spark, tmp_index_root):
@@ -249,11 +166,7 @@ def test_cream_metric_not_fooled_by_containment(spark, tmp_index_root):
     sdf = spark.createDataFrame(pdf)
     out = str(Path(tmp_index_root) / "cream_containment_test")
     paths = build_index(spark, sdf, cfg, out)
-    engine = SearchEngine(spark, paths, cfg)
     q = [Query(qid="cc1", q=QUERY, k=10)]
-    got = engine.search(q).toPandas()
-    assert engine.last_metrics["cream_stops"] == 0
-    assert engine.last_metrics["rounds"] >= 2  # relaxation round ran
-    oracle = OracleIndex(pdf, cfg)
-    want = oracle_search(oracle, q, cfg)
-    assert list(got["doc_index"]) == list(want["doc_index"])
+    (served, spec, want), calls = _answers(paths, pdf, cfg, q)
+    assert calls >= 2  # no cream stop: the relaxation round ran
+    assert served == spec == want
