@@ -167,9 +167,7 @@ def cmd_serve(args) -> None:
     from .http_api import make_server
     from .serving.local import LocalSearchEngine
 
-    engine = LocalSearchEngine(
-        args.index, _cfg(args), shards=getattr(args, "shards", None)
-    )
+    engine = LocalSearchEngine(args.index, _cfg(args))
     preload = getattr(args, "preload", 0)
     if preload:
         t0 = time.time()
@@ -347,8 +345,6 @@ def main(argv=None) -> None:
     sv.add_argument("--host", default="127.0.0.1")
     sv.add_argument("--port", type=int, default=7878)
     sv.add_argument("--synonyms")
-    sv.add_argument("--shards", type=int, default=None,
-                    help="serve through a pbucket-range shard coordinator")
     sv.add_argument("--preload", type=int, default=0,
                     help="warm the N highest-df tokens' blocks at startup")
     sv.add_argument("--log-dir", default=None,

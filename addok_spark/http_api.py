@@ -31,12 +31,11 @@ def _handle_health(engine) -> tuple[int, dict]:
     serving index's metadata and in-RAM dictionary only — never a
     posting read."""
     idx = engine.index
-    paths = getattr(idx, "paths", None)  # a ShardedIndex has none
     return 200, {
         "status": "ok",
         "n_docs": int(idx.meta.get("n_docs", -1)),
         "avgdl": idx.meta.get("avgdl"),
-        "snapshot_version": getattr(paths, "version", None),
+        "snapshot_version": idx.paths.version,
         "n_tokens": len(idx.df),
     }
 

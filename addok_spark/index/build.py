@@ -1025,25 +1025,6 @@ def analyze_docs(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def tokenize_docs(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """docs (with doc_index, importance, field columns) →
-    (doc_index, token, tf, positions, boost) rows — the reference's
-    extract_tokens + FieldsIndexer weight fold
-    (addok/helpers/index.py:30-37,121-141); per-row aggregation, no
-    shuffle."""
-    return (
-        analyze_docs(docs, cfg)
-        .select("doc_index", F.explode("__an.toks").alias("tk"))
-        .select(
-            "doc_index",
-            F.col("tk.token").alias("token"),
-            F.col("tk.tf").alias("tf"),
-            F.col("tk.pos_bin").alias("pos_bin"),
-            F.col("tk.boost").alias("boost"),
-        )
-    )
-
-
 # packer output is keyed by the two token hashes, NOT the token
 # string: the string never travels the posting shuffle or the Arrow
 # crossing (measured: serializing 40M token strings into Python was

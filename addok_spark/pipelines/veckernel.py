@@ -107,8 +107,12 @@ def assign_cells(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(argmax cell, its round-6 cosine) per row — the numpy twin of
     ``ann._assign_step``'s fold: strictly-better updates keep the
-    FIRST maximum; NaN cosines never win; a row with no finite cosine
-    yields the fold's init (-1, -2.0).
+    FIRST maximum.
+
+    Every row and centroid must have a finite, nonzero norm, else
+    ``ValueError``. The fold divides by the norm product, so a
+    zero-norm vector makes Spark raise ``DIVIDE_BY_ZERO`` and a NaN
+    one gives NaN cosines; no cell is a right answer for either.
 
     Chunked over rows so the (rows × cells) score block stays small
     even at SemDeDup-scale cell counts."""
@@ -119,6 +123,13 @@ def assign_cells(
     if cent_norms is None:
         cent_norms = seq_sq_norms(cents)
     vec_norms = seq_sq_norms(vecs)
+    for what, norms in (("vector", vec_norms), ("centroid", cent_norms)):
+        bad = np.flatnonzero(~np.isfinite(norms) | (norms == 0))
+        if len(bad):
+            raise ValueError(
+                f"{what} {int(bad[0])} has a zero or non-finite norm "
+                f"({norms[bad[0]]}); cosine assignment is undefined"
+            )
     out_c = np.empty(n, dtype=np.int32)
     out_b = np.empty(n, dtype=np.float64)
     chunk = max(1, (4 << 20) // max(k, 1))

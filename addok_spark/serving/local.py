@@ -33,10 +33,12 @@ from those artifacts with pruned columnar reads:
   snapshot — hardlinked or reference-only (object-store publish,
   partitions spread over several snapshot dirs) — serves directly.
 
-Sharding story at scale: a serving node owns a pbucket range (the
-docs/blocks partition key), so each node's working set is bounded and
-queries fan out only for tokens whose postings span shards — the
-same partition layout the CDC path already rewrites incrementally.
+Scale-out: one ``ParquetIndex`` answers every query — in ``serve``,
+the shell, ``explain`` and every Spark task. Many queries spread over
+executors through ``SearchEngine``'s ``mapInPandas`` tasks, each
+Python worker holding one ``LocalSearchEngine`` on the pinned
+snapshot; within a query, ``prefetch_tokens`` reads the cold tokens'
+blocks concurrently.
 
 Rank identity is by construction, not by re-implementation: planning,
 rounds, relaxation, cream, and scoring run through the *same*
@@ -364,26 +366,7 @@ def _stitch(keys: np.ndarray, fetch) -> list:
     return out
 
 
-class _PreloadMixin:
-    """Shared startup warm-up for anything exposing ``df`` (token →
-    document frequency) and ``prefetch_tokens``."""
-
-    def preload_hot(self, n: int) -> int:
-        """Warm the block cache with the ``n`` highest-df tokens
-        before taking traffic — the deployment analog of the
-        reference's everything-in-RAM Redis start. The Zipf head
-        carries most query token mass, so preloading it converts the
-        bulk of first-touch cold reads into warm hits while loading
-        only n tokens' blocks, not the corpus. On the shard
-        coordinator the fan-out covers every shard's slice."""
-        if n <= 0 or not self.df:
-            return 0
-        hot = sorted(self.df.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
-        self.prefetch_tokens([t for t, _ in hot])
-        return len(hot)
-
-
-class ParquetIndex(ExpansionMixin, _PreloadMixin):
+class ParquetIndex(ExpansionMixin):
     """OracleIndex-shaped read-only view over the on-disk index.
 
     Posting lists are numpy triples ``(docs asc, tf, boost_f32)``;
@@ -391,10 +374,7 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
     (only the tests' spec-mode runs ever materialize them)."""
 
     def __init__(
-        self,
-        index_dir: str | Path,
-        cfg: EngineConfig | None = None,
-        pbucket_range: tuple[int, int] | None = None,
+        self, index_dir: str | Path, cfg: EngineConfig | None = None
     ):
         import pyarrow.dataset as pads
 
@@ -407,9 +387,6 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
             index_dir if isinstance(index_dir, IndexPaths)
             else IndexPaths(Path(index_dir))
         ).pin()
-        # shard mode: this node owns [lo, hi) of the pbucket space —
-        # every blocks/docs read is partition-pruned to that range
-        self.pbucket_range = pbucket_range
         self.meta = json.loads(self.paths.meta.read_text())
         self.n_docs = int(self.meta["n_docs"])
         self.avgdl = float(self.meta["avgdl"])
@@ -442,7 +419,7 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         self.warmup_seconds = time.perf_counter() - t0
 
         self._blocks: dict[str, _TokenBlocks] = _LRU(100_000)
-        self._scan_cache: dict[tuple, tuple] = _LRU(1024)
+        self._scan_cache: dict[tuple, np.ndarray] = _LRU(1024)
         self._dict_views: dict[str, dict[int, float]] = _LRU(10_000)
         self._doc_cache: dict[int, _DocStore] = _LRU(64)
         self._row_cache: dict[int, dict] = _LRU(100_000)
@@ -459,20 +436,14 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         this object's state, so a transient read failure mid-reload
         leaves the serving instance answering from the old snapshot
         (in-flight queries keep their pinned caches either way)."""
-        fresh = ParquetIndex(
-            IndexPaths(Path(self.paths.root)), self.cfg, self.pbucket_range
-        )
+        fresh = ParquetIndex(IndexPaths(Path(self.paths.root)), self.cfg)
         self.__dict__.update(fresh.__dict__)
 
     # -- postings -----------------------------------------------------------
     def _read_token_blocks(self, token: str) -> "_TokenBlocks":
         """Uncached pruned blocks read for one token (thread-safe:
         touches only the immutable dataset handle)."""
-        f = self._pads.field
-        tok_filter = f("token") == token
-        if self.pbucket_range is not None:
-            lo, hi = self.pbucket_range
-            tok_filter = tok_filter & (f("pbucket") >= lo) & (f("pbucket") < hi)
+        tok_filter = self._pads.field("token") == token
         is_filter = token.startswith("f|")
         cols = ["n", "max_boost", "min_doc", "max_doc", "docs_bin"]
         if not is_filter:
@@ -516,18 +487,28 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
             if self._blocks.get(t) is None:
                 self._blocks[t] = tb
 
+    def preload_hot(self, n: int) -> int:
+        """Warm the block cache with the ``n`` highest-df tokens
+        before taking traffic — the deployment analog of the
+        reference's everything-in-RAM Redis start. The Zipf head
+        carries most query token mass, so preloading it converts the
+        bulk of first-touch cold reads into warm hits while loading
+        only n tokens' blocks, not the corpus."""
+        if n <= 0 or not self.df:
+            return 0
+        hot = sorted(self.df.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
+        self.prefetch_tokens([t for t, _ in hot])
+        return len(hot)
+
     def _token_arrays(self, token: str):
         """(docs asc int64, tf int64, boost float32) for one token —
         full decode, cached (the non-scan collection path)."""
         return self._token_blocks(token).full()
 
     def scan_top_docs(self, tokens: list[str], limit: int) -> np.ndarray:
-        """Exact top-``limit`` doc set of a token group by
-        (-boost, doc) — see ``_scan_top``."""
-        du, _ = self._scan_top(tokens, limit)
-        return np.sort(du)
-
-    def _scan_top(self, tokens: list[str], limit: int):
+        """Exact top-``limit`` doc set (sorted) of a token group by
+        (-boost, doc), memoized per (tokens, limit) — see
+        ``_scan_top_uncached``."""
         key = (tuple(tokens), limit)
         cached = self._scan_cache.get(key)
         if cached is None:
@@ -536,7 +517,7 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
         return cached
 
     def _scan_top_uncached(self, tokens: list[str], limit: int):
-        """Exact top-``limit`` (docs, boosts) of a token group by
+        """Exact top-``limit`` docs (sorted) of a token group by
         (-boost, doc) — per-doc max over the group's tokens — decoding
         blocks in max_boost-descending order and stopping as soon as
         no remaining block's upper bound can reach the current k-th
@@ -592,10 +573,9 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
             elif pos >= len(entries):
                 break
         if not dparts:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+            return np.empty(0, dtype=np.int64)
         du, bu = _reduce()
-        top = np.lexsort((du, -bu))[:limit]
-        return du[top], bu[top]
+        return np.sort(du[np.lexsort((du, -bu))[:limit]])
 
     def arrays_within(self, token: str, docs_sorted: np.ndarray):
         """Postings of ``token`` restricted to a sorted candidate doc
@@ -633,9 +613,6 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
             return cached
         f = self._pads.field
         tok_filter = f("token") == token
-        if self.pbucket_range is not None:
-            lo, hi = self.pbucket_range
-            tok_filter = tok_filter & (f("pbucket") >= lo) & (f("pbucket") < hi)
         cols = ["docs_bin", "tfs_bin", "pos_bin"]
         if within_docs is not None:
             buckets = np.unique(
@@ -853,229 +830,6 @@ class ParquetIndex(ExpansionMixin, _PreloadMixin):
             s = set(tbl.column("token_b").to_pylist())
             self._pair_cache[lo] = s
         return hi in s
-
-
-class ShardedIndex(ExpansionMixin, _PreloadMixin):
-    """Scatter-gather coordinator over pbucket-range shards — the
-    horizontal-scaling shape of the serving tier at 10^12 turns.
-
-    Each shard is a ParquetIndex restricted to a contiguous
-    ``[lo, hi)`` slice of the pbucket space (in production: a serving
-    node owning those partitions on local disk).  Because pbucket is
-    the HIGH bits of doc_index, contiguous shard ranges are contiguous
-    doc ranges, so concatenating per-shard posting arrays in shard
-    order yields the exact doc-sorted arrays of the unsharded index —
-    ``FastSearch`` runs on this coordinator unchanged and the results
-    are rank-identical by construction (tested in
-    tests/test_local_serving.py).  Global stats (dictionary, prefixes,
-    pairs, meta) are broadcast state: small, read once by the
-    coordinator."""
-
-    def __init__(
-        self,
-        index_dir: str | Path,
-        cfg: EngineConfig | None = None,
-        n_shards: int = 2,
-    ):
-        self.cfg = cfg or EngineConfig()
-        # coordinator-held global state (dictionary / prefixes /
-        # pairs / meta) via an unrestricted index that is never asked
-        # for postings
-        self._global = ParquetIndex(index_dir, self.cfg)
-        self.meta = self._global.meta
-        self.n_docs = self._global.n_docs
-        self.avgdl = self._global.avgdl
-        self.df = self._global.df
-        self.max_boost = self._global.max_boost
-        self.have_pairs = self._global.have_pairs
-        self._doc_shift = self._global._doc_shift
-        self._bucket_bits = self._global._bucket_bits
-        # doc ids are not dense after CDC deletes + appends, so the
-        # pbucket space ends at the docs table's highest partition,
-        # not at n_docs
-        max_pb = max(
-            (int(k.split("=", 1)[1])
-             for k in self._global.paths.table_entries("docs")),
-            default=0,
-        ) + 1
-        step = max(1, -(-max_pb // n_shards))
-        self._bounds = [
-            (i * step, min((i + 1) * step, max_pb) if i < n_shards - 1 else max_pb)
-            for i in range(n_shards)
-        ]
-        # every shard pinned to the coordinator's snapshot
-        self.shards = [
-            ParquetIndex(self._global.paths, self.cfg, pbucket_range=b)
-            for b in self._bounds
-        ]
-        self._dict_views: dict[str, dict[int, float]] = _LRU(10_000)
-
-    def _shard_of(self, pb: int) -> int:
-        for i, (lo, hi) in enumerate(self._bounds):
-            if lo <= pb < hi:
-                return i
-        return len(self.shards) - 1
-
-    def _owner(self, d: int) -> "ParquetIndex":
-        return self.shards[self._shard_of(int(d) >> self._doc_shift)]
-
-    # -- postings: scatter-gather, concat stays doc-sorted ------------------
-    def _token_arrays(self, token: str):
-        parts = [sh._token_arrays(token) for sh in self.shards]
-        parts = [p for p in parts if len(p[0])]
-        if not parts:
-            return _EMPTY
-        if len(parts) == 1:
-            return parts[0]
-        return tuple(np.concatenate([p[i] for p in parts]) for i in range(3))
-
-    def postings(self, token: str) -> dict[int, float]:
-        view = self._dict_views.get(token)
-        if view is None:
-            docs, _, boosts = self._token_arrays(token)
-            view = dict(zip(docs.tolist(), boosts.astype(np.float64).tolist()))
-            self._dict_views[token] = view
-        return view
-
-    def posting_count(self, token: str) -> int:
-        return sum(sh.posting_count(token) for sh in self.shards)
-
-    def scan_top_docs(self, tokens: list[str], limit: int) -> np.ndarray:
-        """Global exact top-``limit`` = reduce of per-shard block-max
-        tops (shard doc spaces are disjoint, so per-shard top-limit
-        sets cover the global top-limit)."""
-        parts = [sh._scan_top(tokens, limit) for sh in self.shards]
-        du = np.concatenate([p[0] for p in parts])
-        bu = np.concatenate([p[1] for p in parts])
-        if not len(du):
-            return du.astype(np.int64)
-        top = np.lexsort((du, -bu))[:limit]
-        return np.sort(du[top])
-
-    def token_position_arrays(self, token: str, within_docs=None):
-        parts = [
-            sh.token_position_arrays(token, within_docs=within_docs)
-            for sh in self.shards
-        ]
-        parts = [p for p in parts if len(p[0])]
-        if not parts:
-            return (np.empty(0, np.int64), np.empty(0, np.int64))
-        if len(parts) == 1:
-            return parts[0]
-        return (
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-        )
-
-    def token_positions(self, token: str) -> dict[int, list[int]]:
-        docs, pos = self.token_position_arrays(token)
-        view: dict[int, list[int]] = {}
-        for d, p in zip(docs.tolist(), pos.tolist()):
-            view.setdefault(d, []).append(p)
-        return view
-
-    def arrays_within(self, token: str, docs_sorted: np.ndarray):
-        parts = [
-            sh.arrays_within(token, docs_sorted) for sh in self.shards
-        ]
-        parts = [p for p in parts if len(p[0])]
-        if not parts:
-            return _EMPTY
-        if len(parts) == 1:
-            return parts[0]
-        docs = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        boosts = np.concatenate([p[2] for p in parts])
-        o = np.argsort(docs, kind="stable")
-        return (docs[o], tfs[o], boosts[o])
-
-    def tf_of(self, token: str, d: int) -> int:
-        return self._owner(d).tf_of(token, d)
-
-    def boost_of(self, token: str, d: int) -> float:
-        return self._owner(d).boost_of(token, d)
-
-    def prefetch_tokens(self, tokens) -> None:
-        """Scatter the cold-read fan-out across (shard, token) pairs
-        in one thread pool — cache insertion per shard stays on this
-        thread (see ParquetIndex.prefetch_tokens)."""
-        pairs = [
-            (sh, t)
-            for t in dict.fromkeys(tokens)
-            for sh in self.shards
-            if t and sh._blocks.get(t) is None
-        ]
-        if not pairs:
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, len(pairs))) as ex:
-            built = list(
-                ex.map(lambda p: p[0]._read_token_blocks(p[1]), pairs)
-            )
-        for (sh, t), tb in zip(pairs, built):
-            if sh._blocks.get(t) is None:
-                sh._blocks[t] = tb
-
-    def tf_boost_many(self, token: str, docs_sorted):
-        # candidate array is sorted and shards own contiguous pbucket
-        # (= doc high-bit) ranges, so each shard's slice is one
-        # contiguous run — scatter the gather, stitch in place
-        docs_sorted = np.asarray(docs_sorted, dtype=np.int64)
-        out_tf = np.zeros(len(docs_sorted), dtype=np.int64)
-        out_b = np.zeros(len(docs_sorted), dtype=np.float64)
-        pbs = docs_sorted >> self._doc_shift
-        for (lo, hi), sh in zip(self._bounds, self.shards):
-            a = int(np.searchsorted(pbs, lo, side="left"))
-            b = int(np.searchsorted(pbs, hi, side="left"))
-            if b > a:
-                out_tf[a:b], out_b[a:b] = sh.tf_boost_many(
-                    token, docs_sorted[a:b]
-                )
-        return out_tf, out_b
-
-    def any_shared_docs(self, a: str, b: str) -> bool:
-        # co-occurrence happens within one doc, i.e. within one shard
-        return any(sh.any_shared_docs(a, b) for sh in self.shards)
-
-    # -- documents: routed to the owning shard ------------------------------
-    def doc(self, d: int):
-        return self._owner(d).doc(d)
-
-    def doc_values(self, name: str, docs, default=REQUIRED) -> list:
-        docs = np.asarray(docs, dtype=np.int64)
-        pbs = docs >> self._doc_shift
-        owners = np.zeros(len(docs), dtype=np.int64)
-        for pb in np.unique(pbs).tolist():
-            owners[pbs == pb] = self._shard_of(pb)
-        return _stitch(
-            owners,
-            lambda k, sel: self.shards[k].doc_values(name, docs[sel], default),
-        )
-
-    def doc_len(self, d: int) -> int:
-        return self._owner(d).doc_len(d)
-
-    def folded_text(self, d: int) -> str:
-        return self._owner(d).folded_text(d)
-
-    def get_doc(self, conv_id: str, turn_idx: int):
-        return self._global.get_doc(conv_id, turn_idx)
-
-    # -- global side tables -------------------------------------------------
-    def prefix_candidates(self, prefix: str, cap: int = 100) -> list[str]:
-        return self._global.prefix_candidates(prefix, cap)
-
-    def cooc(self, a: str, b: str) -> bool:
-        return self._global.cooc(a, b)
-
-    def refresh(self) -> None:
-        # side-build + swap (see ParquetIndex.refresh): a failure
-        # mid-reload leaves the coordinator serving the old snapshot
-        fresh = ShardedIndex(
-            Path(self._global.paths.root), self.cfg, n_shards=len(self.shards)
-        )
-        self.__dict__.update(fresh.__dict__)
 
 
 class FastSearch(SpecSearch):
@@ -1317,14 +1071,9 @@ class LocalSearchEngine:
         index_dir: str | Path,
         cfg: EngineConfig | None = None,
         mode: str = "fast",
-        shards: int | None = None,
     ):
         self.cfg = cfg or EngineConfig()
-        self.index = (
-            ShardedIndex(index_dir, self.cfg, n_shards=shards)
-            if shards
-            else ParquetIndex(index_dir, self.cfg)
-        )
+        self.index = ParquetIndex(index_dir, self.cfg)
         if mode not in ("fast", "spec"):
             raise ValueError(f"unknown mode {mode!r}")
         self._searcher = (
@@ -1377,34 +1126,31 @@ class LocalSearchEngine:
                 )
         trace = []
         frames = []
-        blocks = getattr(self.index, "_blocks", None)
+        blocks = self.index._blocks
         for q in queries:
             t0 = _time.perf_counter()
-            b0 = len(blocks) if blocks is not None else 0
+            b0 = len(blocks)
             # cold-path fan-out: read every query token's (and filter
             # key's) pruned blocks concurrently before the sequential
             # spec flow touches them one by one (analysis memoized so
             # warm repeats don't re-analyze for a no-op prefetch)
-            if hasattr(self.index, "prefetch_tokens"):
-                want = self._analyzed(q.q)
-                if getattr(q, "filters", None):
-                    want = list(want)
-                    for col, vals in sorted(q.filters.items()):
-                        for v in normalize_filter_values(
-                            vals, self.cfg.max_filter_values
-                        ):
-                            want.append(f"f|{col}|{v}")
-                self.index.prefetch_tokens(want)
+            want = self._analyzed(q.q)
+            if getattr(q, "filters", None):
+                want = list(want)
+                for col, vals in sorted(q.filters.items()):
+                    for v in normalize_filter_values(
+                        vals, self.cfg.max_filter_values
+                    ):
+                        want.append(f"f|{col}|{v}")
+            self.index.prefetch_tokens(want)
             rdf = self._searcher.search([q])
             frames.append(rdf)
-            entry = {
+            trace.append({
                 "qid": q.qid,
                 "seconds": round(_time.perf_counter() - t0, 4),
                 "rows": int(len(rdf)),
-            }
-            if blocks is not None:
-                entry["tokens_faulted"] = len(blocks) - b0
-            trace.append(entry)
+                "tokens_faulted": len(blocks) - b0,
+            })
         self.last_trace = trace
         # empty-safe concat: zero queries (or all-empty results)
         # return the contract's empty-columns frame rather than

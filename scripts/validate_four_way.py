@@ -1,8 +1,8 @@
-"""Four-way rank-identity validation at scale: the Spark engine, the
-pure-Python oracle, the warm serving tier, and a sharded scatter-
-gather coordinator answer the same query set over the same corpus and
-must agree. The Spark engine runs the serving tier in mapInPandas
-tasks, so its frame must also equal the serving frame exactly. The check runs twice: on the bulk-built index, and again
+"""Rank-identity validation at scale: the Spark engine, the
+pure-Python oracle and the warm serving tier answer the same query
+set over the same corpus and must agree. The Spark engine runs the
+serving tier in mapInPandas tasks, so its frame must also equal the
+serving frame exactly. The check runs twice: on the bulk-built index, and again
 after one CDC batch (updates, deletes and an appended conversation)
 published with ``NoLinkFileIO`` — a reference-only snapshot whose
 untouched partitions stay in the bulk build's dirs, which the serving
@@ -40,7 +40,7 @@ def make_queries(pdf, seed):
     return queries
 
 
-def four_way(spark, cfg, index, pdf, queries):
+def check_answers(spark, cfg, index, pdf, queries):
     """Rank mismatches against the oracle, whether the engine's frame
     equals the serving frame exactly, and the engine / serving wall
     seconds."""
@@ -56,7 +56,6 @@ def four_way(spark, cfg, index, pdf, queries):
     t0 = time.time()
     got_srv = srv.search(queries)
     srv_s = time.time() - t0
-    got_shr = LocalSearchEngine(index, cfg, shards=4).search(queries)
 
     def ranks(df):
         out = {}
@@ -65,10 +64,10 @@ def four_way(spark, cfg, index, pdf, queries):
             out[qid] = list(zip(g["conv_id"], g["turn_idx"]))
         return out
 
-    r_e, r_o, r_s, r_h = ranks(got_engine), ranks(want), ranks(got_srv), ranks(got_shr)
+    r_e, r_o, r_s = ranks(got_engine), ranks(want), ranks(got_srv)
     mismatches = []
     for qid in sorted(r_o):
-        for name, r in (("engine", r_e), ("serving", r_s), ("sharded", r_h)):
+        for name, r in (("engine", r_e), ("serving", r_s)):
             if r.get(qid, []) != r_o[qid]:
                 mismatches.append((qid, name, r.get(qid, []), r_o[qid]))
     # every column the engine returns, value for value (the engine's
@@ -136,8 +135,8 @@ def main() -> None:
     from addok_spark.session import build_session
 
     spark = build_session(cores=cores, driver_memory="16g")
-    # 1024 docs per pbucket: many partitions, so shards own real slices
-    # and the CDC snapshot leaves most of them in the bulk build's dirs
+    # 1024 docs per pbucket: many partitions, so the CDC snapshot
+    # leaves most of them in the bulk build's dirs
     cfg = EngineConfig(build_partitions=cores * 2, common_threshold=10_000,
                        doc_bucket_bits=8, pbucket_shift=2)
     sdf = transcripts_df(spark, n_convs, seed=42)
@@ -177,7 +176,7 @@ def main() -> None:
                 Query(qid=f"mark-{i}", q=f"cdcmark{i:04d}", k=10)
                 for i in range(3)
             ]
-        mismatches, exact, engine_s, srv_s = four_way(
+        mismatches, exact, engine_s, srv_s = check_answers(
             spark, cfg, out, corpus, queries
         )
         print(

@@ -146,6 +146,29 @@ def test_with_assignment_bit_identical_to_literal_fold(emb):
     assert key(lit) == key(bro)
 
 
+def test_degenerate_vectors_raise_on_both_assignment_paths(spark, emb):
+    """A zero-norm vector has no cosine: the literal fold raises
+    DIVIDE_BY_ZERO (ANSI), and the numpy kernel behind with_assignment
+    raises too instead of returning the fold's init (-1, -2.0). A NaN
+    vector, which the fold would assign to cell 0 with a NaN cosine,
+    raises in with_assignment; so does a zero-norm centroid."""
+    from addok_spark.pipelines import veckernel as vk
+
+    anchors = ann.ivf_cells(emb, CELLS)
+    schema = "vec_id long, embedding array<float>"
+    zero = spark.createDataFrame([(0, [0.0] * DIM)], schema)
+    nan = spark.createDataFrame([(1, [float("nan")] * DIM)], schema)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        zero.select(
+            ann.assign_struct_col(F.col("embedding"), anchors).alias("s")
+        ).collect()
+    for df in (zero, nan):
+        with pytest.raises(Exception, match="zero or non-finite norm"):
+            ann.with_assignment(df, anchors, "embedding").collect()
+    with pytest.raises(ValueError, match="centroid 1"):
+        vk.assign_cells(np.ones((3, DIM)), np.stack([np.ones(DIM), np.zeros(DIM)]))
+
+
 def test_with_assignment_scales_to_k2048(spark):
     """VERDICT r4 #2 'done' condition: k=2048 centroids — a scale the
     literal path would choke on (2048x8 doubles in the Catalyst tree) —

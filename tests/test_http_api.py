@@ -144,6 +144,7 @@ def test_health(server):
     assert code == 200
     assert body["status"] == "ok"
     assert body["n_docs"] == open_dataset(engine.index.paths, "docs").count_rows()
+    assert body["snapshot_version"] == engine.index.paths.version
     assert body["n_tokens"] > 0
 
 

@@ -201,10 +201,10 @@ def _frame_ranks(df):
 def test_serving_opens_reference_only_snapshot_directly(spark, cfg, tmp_path):
     """Two chained no-link batches touching different pbuckets leave
     the live partitions spread over v0, v1 and v2. The serving tier
-    opens that snapshot as it is — unsharded and with two shards —
-    and ranks exactly like the Spark engine and the oracle. The second
-    batch also deletes one doc and appends one, so doc ids end past
-    n_docs and the shard bounds must still cover the last pbucket."""
+    opens that snapshot as it is and ranks exactly like the Spark
+    engine and the oracle. The second batch also deletes one doc and
+    appends one, so doc ids end past n_docs and the last pbucket must
+    still be served."""
     from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
     from addok_spark.serving.local import LocalSearchEngine
 
@@ -253,9 +253,8 @@ def test_serving_opens_reference_only_snapshot_directly(spark, cfg, tmp_path):
         (r["qid"], r["conv_id"], r["turn_idx"])
         for r in sorted(eng, key=lambda r: (r["qid"], r["rank"]))
     ) == want
-    for shards in (None, 2):
-        got = LocalSearchEngine(paths, cfg, shards=shards).search(queries)
-        assert _frame_ranks(got) == want, shards
+    got = LocalSearchEngine(paths, cfg).search(queries)
+    assert _frame_ranks(got) == want
 
 
 @pytest.mark.parametrize("damaged", ["pointer", "manifest"])

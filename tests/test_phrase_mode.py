@@ -2,7 +2,7 @@
 analyzed token stream contains the query tokens CONSECUTIVELY in
 order, counted per positional anchor, then scored by the normal BM25
 pipeline. Three-way identity: Spark engine ≡ corpus oracle ≡ warm
-serving tier (fast and sharded) over the same index files.
+serving tier over the same index files.
 
 NB positions are one continuous counter across indexed fields (the
 build's analyzer semantics), so all surfaces agree on boundaries.
@@ -58,7 +58,6 @@ def env(spark, tmp_index_root):
         "engine": SearchEngine(spark, paths, cfg),
         "oracle": OracleIndex(pdf, cfg),
         "serving": LocalSearchEngine(paths, cfg),
-        "sharded": LocalSearchEngine(paths, cfg, shards=3),
         "cfg": cfg,
         "pdf": pdf,
     }
@@ -68,8 +67,7 @@ def _run(env, queries):
     got_e = env["engine"].search(queries).toPandas()
     want = oracle_search(env["oracle"], queries, env["cfg"])
     got_s = env["serving"].search(queries)
-    got_sh = env["sharded"].search(queries)
-    for name, got in [("engine", got_e), ("serving", got_s), ("sharded", got_sh)]:
+    for name, got in [("engine", got_e), ("serving", got_s)]:
         gg = {q: list(g.sort_values("rank")["doc_index"])
               for q, g in got.groupby("qid")}
         ww = {q: list(g.sort_values("rank")["doc_index"])
@@ -142,29 +140,27 @@ def test_phrase_mixed_with_normal_queries_in_one_batch(env):
 def test_serving_restricted_position_decode_identical(env):
     """token_position_arrays(within_docs=...) (block-granular decode
     restriction to the rarest phrase token's docs) must equal full-decode-then-slice on every token,
-    on both the unsharded and the sharded index — and the
-    whole-phrase LRU must return independent copies."""
+    and the whole-phrase LRU must return independent copies."""
     import numpy as np
 
-    for srv in (env["serving"], env["sharded"]):
-        idx = srv.index
-        rare_docs, _ = idx.token_position_arrays("gamma")
-        rare_docs = np.unique(rare_docs)
-        assert len(rare_docs)
-        for tok in ("alpha", "beta", "common", "gamma"):
-            full_d, full_p = idx.token_position_arrays(tok)
-            m = np.isin(full_d, rare_docs)
-            got_d, got_p = idx.token_position_arrays(
-                tok, within_docs=rare_docs
-            )
-            o = np.lexsort((got_p, got_d))
-            w = np.lexsort((full_p[m], full_d[m]))
-            assert np.array_equal(got_d[o], full_d[m][w])
-            assert np.array_equal(got_p[o], full_p[m][w])
-        # restricted reads bypass the per-token memo: a later full
-        # decode must still return the complete stream
-        idx_fresh_d, _ = idx.token_position_arrays("common")
-        assert len(idx_fresh_d) >= len(rare_docs) or len(idx_fresh_d)
+    idx = env["serving"].index
+    rare_docs, _ = idx.token_position_arrays("gamma")
+    rare_docs = np.unique(rare_docs)
+    assert len(rare_docs)
+    for tok in ("alpha", "beta", "common", "gamma"):
+        full_d, full_p = idx.token_position_arrays(tok)
+        m = np.isin(full_d, rare_docs)
+        got_d, got_p = idx.token_position_arrays(
+            tok, within_docs=rare_docs
+        )
+        o = np.lexsort((got_p, got_d))
+        w = np.lexsort((full_p[m], full_d[m]))
+        assert np.array_equal(got_d[o], full_d[m][w])
+        assert np.array_equal(got_p[o], full_p[m][w])
+    # restricted reads bypass the per-token memo: a later full
+    # decode must still return the complete stream
+    idx_fresh_d, _ = idx.token_position_arrays("common")
+    assert len(idx_fresh_d) >= len(rare_docs) or len(idx_fresh_d)
 
     fs = env["serving"]._searcher
     r1 = fs.phrase_occurrences(["alpha", "beta"])
