@@ -289,7 +289,7 @@ def cmd_info(args) -> None:
     """Index stats (≙ shell DBINFO, addok/shell.py:309-327)."""
     from pathlib import Path
 
-    from .index.build import IndexPaths, read_table
+    from .index.build import IndexPaths, read_table, table_files
 
     spark = _spark(args)
     paths = IndexPaths(Path(args.index)).pin()
@@ -301,10 +301,13 @@ def cmd_info(args) -> None:
         F.count(F.lit(1)).alias("n_blocks"),
         F.sum("n").alias("n_postings"),
         F.countDistinct("token").alias("n_tokens"),
-        F.sum(F.length("docs_bin") + F.length("tfs_bin")
-              + F.length("boosts_bin") + F.length("pos_bin")).alias("packed_bytes"),
     ).collect()[0]
-    print(json.dumps({**meta, **{k: int(agg[k]) for k in agg.asDict()}}, indent=2))
+    stats = {k: int(agg[k]) for k in agg.asDict()}
+    # on-disk size of the snapshot's blocks files
+    stats["blocks_bytes"] = sum(
+        f.stat().st_size for f in table_files(paths, "blocks")
+    )
+    print(json.dumps({**meta, **stats}, indent=2))
 
 
 def main(argv=None) -> None:

@@ -17,7 +17,10 @@ same logical artifacts are produced as one declarative Spark plan:
         no reducer ever owns a full hot posting list, and unlike a
         random salt the bucket boundaries preserve doc order so blocks
         concatenate into a globally doc-ordered posting list]
-      → delta+varint pack (PForDelta-style) into binary columns
+      → block rows whose payloads are native Parquet list columns
+        (``docs`` absolute ascending, ``tfs``, ``boosts``, one
+        position list per posting in ``pos``) — the columnar writer
+        encodes them; no hand-written codec
       → dictionary / prefix / pair side tables.
 
 Each stage is written to its own directory with a manifest + metrics
@@ -49,13 +52,6 @@ from pyspark.sql import types as T
 
 from ..config import EngineConfig
 from ..functions.text import edge_ngrams_col
-from .compress import (
-    pack_deltas,
-    pack_f32,
-    varint_decode,
-    varint_encode,
-    varint_encode_offsets,
-)
 
 BLOCK_SCHEMA = T.ArrayType(
     T.StructType(
@@ -67,13 +63,27 @@ BLOCK_SCHEMA = T.ArrayType(
             T.StructField("max_boost", T.FloatType()),
             T.StructField("min_doc", T.LongType()),
             T.StructField("max_doc", T.LongType()),
-            T.StructField("docs_bin", T.BinaryType()),
-            T.StructField("tfs_bin", T.BinaryType()),
-            T.StructField("boosts_bin", T.BinaryType()),
-            T.StructField("pos_bin", T.BinaryType()),
+            T.StructField("docs", T.ArrayType(T.LongType())),
+            T.StructField("tfs", T.ArrayType(T.IntegerType())),
+            T.StructField("boosts", T.ArrayType(T.FloatType())),
+            T.StructField("pos", T.ArrayType(T.ArrayType(T.IntegerType()))),
         ]
     )
 )
+
+# Parquet writer settings of the blocks table (bulk build and CDC).
+# A token read decodes every row group whose token min/max holds the
+# token, and list columns decode value by value, so row groups stay
+# small enough for those statistics to prune. Doc indexes and
+# positions are ascending runs: DELTA_BINARY_PACKED (a v2 encoding)
+# stores them in a few bits per value, where a per-row-group
+# dictionary would repeat the doc ids of every group.
+BLOCKS_WRITE_OPTIONS = {
+    "parquet.block.size": str(64 * 1024),
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary#docs.list.element": "false",
+    "parquet.enable.dictionary#pos.list.element.list.element": "false",
+}
 
 
 def _load_json(f: Path, what: str) -> dict | None:
@@ -391,15 +401,43 @@ def open_dataset(paths: "IndexPaths", table: str):
             # default ignore_prefixes skips _SUCCESS/_metrics/.crc
             sets.append(pds.dataset(base, format="parquet", partitioning="hive"))
             continue
-        files = [
-            str(f) for d in dirs for f in sorted(Path(d).rglob("*"))
-            if f.is_file() and not f.name.startswith(("_", "."))
-        ]
+        files = [str(f) for f in _data_files(dirs)]
         sets.append(pds.dataset(
             files, format="parquet", partitioning="hive",
             partition_base_dir=base,
         ))
     return sets[0] if len(sets) == 1 else pds.dataset(sets)
+
+
+def _data_files(dirs) -> list[Path]:
+    """Parquet data files under ``dirs`` (``_``/``.`` sidecars such as
+    _SUCCESS, _metrics.json and .crc skipped)."""
+    return [
+        f for d in dirs for f in sorted(Path(d).rglob("*"))
+        if f.is_file() and not f.name.startswith(("_", "."))
+    ]
+
+
+def table_files(paths: "IndexPaths", table: str) -> list[Path]:
+    """Every data file of ``table`` at the pinned snapshot, wherever
+    its entries live."""
+    pinned = paths.pin()
+    return _data_files(
+        pinned.root / rel for rel in pinned.table_entries(table).values()
+    )
+
+
+def check_blocks_layout(schema, where) -> None:
+    """Refuse a blocks table that predates the list-column posting
+    layout (its payloads were binary blobs, so it has no ``docs``
+    column). A CDC batch over such an index would mix both layouts in
+    one snapshot, and every old fragment's ``docs`` would read as null
+    postings."""
+    if "docs" not in schema.names:
+        raise ValueError(
+            f"{where}: the blocks table uses the retired binary posting "
+            "layout; rebuild the index with `build --no-resume`"
+        )
 
 
 def table_exists(paths: "IndexPaths", table: str) -> bool:
@@ -464,15 +502,6 @@ def assign_doc_ids(df: DataFrame, partitions: int) -> DataFrame:
     return with_ids, sdf
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _unpack_docs_udf(docs_bin: pd.Series) -> pd.Series:
-    from .compress import unpack_deltas
-
-    return pd.Series(
-        [unpack_deltas(bytes(b)).astype(np.int64).tolist() for b in docs_bin]
-    )
-
-
 DOC_TOKENS_TYPE = T.StructType(
     [
         T.StructField(
@@ -482,7 +511,7 @@ DOC_TOKENS_TYPE = T.StructType(
                     [
                         T.StructField("token", T.StringType()),
                         T.StructField("tf", T.IntegerType()),
-                        T.StructField("pos_bin", T.BinaryType()),
+                        T.StructField("pos", T.ArrayType(T.IntegerType())),
                         T.StructField("boost", T.FloatType()),
                     ]
                 )
@@ -491,17 +520,6 @@ DOC_TOKENS_TYPE = T.StructType(
         T.StructField("dl", T.IntegerType()),
     ]
 )
-
-
-def _varint_len(values: np.ndarray) -> np.ndarray:
-    """Byte length of each value's LEB128 encoding (vectorized)."""
-    v = values.astype(np.uint64)
-    nb = np.ones(v.shape, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nb += (tmp != 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    return nb
 
 
 def make_doc_tokens_udf(
@@ -550,10 +568,8 @@ def make_doc_tokens_udf(
         per_field = [analyze_series(c, syn, procs) for c in cols[:n_f]]
         n_rows = len(imp)
         # per-doc token aggregation (python dicts over ~40 tokens/doc)
-        doc_pairs: list = []   # per doc: [(token, tf, boost, pos_list), ...]
+        toks_out: list = []
         dl_out = np.zeros(n_rows, dtype=np.int32)
-        all_pos: list = []     # flat positions in emit order
-        pair_counts: list = [] # tf per emitted pair (for byte slicing)
         for i in range(n_rows):
             pos = 0
             tfs: dict = {}
@@ -587,43 +603,12 @@ def make_doc_tokens_udf(
                         boosts[t] = w
                     pos += 1
             ib = imp[i] * iw
-            pairs = []
-            for t, tf in tfs.items():
-                pairs.append((t, tf, boosts[t] + ib))
-                all_pos.extend(positions[t])
-                pair_counts.append(tf)
-            doc_pairs.append(pairs)
+            toks_out.append([
+                {"token": t, "tf": tf, "pos": positions[t],
+                 "boost": boosts[t] + ib}
+                for t, tf in tfs.items()
+            ])
             dl_out[i] = pos
-        # ONE vectorized delta+varint encode for the whole batch's
-        # positions, then slice per pair by byte offsets — position
-        # payloads travel the shuffle as opaque binary, never as
-        # per-row int arrays (Arrow/python object cost at 34M rows
-        # dominated the block build before this).
-        flat = np.asarray(all_pos, dtype=np.uint64)
-        counts = np.asarray(pair_counts, dtype=np.int64)
-        ends = np.cumsum(counts)
-        starts = ends - counts
-        deltas = flat.copy()
-        if len(flat) > 1:
-            deltas[1:] = flat[1:] - flat[:-1]
-        if len(starts):
-            deltas[starts] = flat[starts]
-        buf = varint_encode(deltas)
-        blens = _varint_len(deltas) if len(deltas) else np.empty(0, dtype=np.int64)
-        bends = np.cumsum(blens)
-        # byte range of pair j = [bstart[starts[j]], bend[ends[j]-1]]
-        toks_out = []
-        j = 0
-        for pairs in doc_pairs:
-            row = []
-            for (t, tf, boost) in pairs:
-                blo = int(bends[starts[j]] - blens[starts[j]]) if tf else 0
-                bhi = int(bends[ends[j] - 1]) if tf else 0
-                row.append(
-                    {"token": t, "tf": tf, "pos_bin": buf[blo:bhi], "boost": boost}
-                )
-                j += 1
-            toks_out.append(row)
         return pd.DataFrame({"toks": toks_out, "dl": dl_out})
 
     return F.pandas_udf(run, DOC_TOKENS_TYPE)
@@ -694,13 +679,13 @@ def _make_doc_analyzer(
     ``make_doc_tokens_udf`` (kept as the readable reference — their
     outputs are equivalence-tested). Tokens are split JVM→Arrow→C++
     (``split_pattern_regex``), synonym-expanded on unique values only,
-    aggregated per (doc, token) with one lexsort + reduceat, positions
-    delta+varint-encoded in ONE flat pass, and the nested ``__an``
-    output column is assembled as native Arrow buffers — no per-token
-    Python objects in OR out (the list-of-dicts return path of the
-    pandas UDF was most of the stage's CPU). Struct order within a doc
-    is dictionary-code order, not first-occurrence order — no consumer
-    depends on it (blocks and pairs both re-sort)."""
+    aggregated per (doc, token) with one lexsort + reduceat, and the
+    nested ``__an`` output column (positions as list<int32> sliced from
+    the one sorted position array) is assembled as native Arrow
+    buffers — no per-token Python objects in OR out (the list-of-dicts
+    return path of the pandas UDF was most of the stage's CPU). Struct
+    order within a doc is dictionary-code order, not first-occurrence
+    order — no consumer depends on it (blocks and pairs both re-sort)."""
     from ..functions.text import fold_series
 
     syn = dict(cfg.synonyms)
@@ -833,7 +818,7 @@ def _make_doc_analyzer(
                         [
                             ("token", pa.string()),
                             ("tf", pa.int32()),
-                            ("pos_bin", pa.binary()),
+                            ("pos", pa.list_(pa.int32())),
                             ("boost", pa.float32()),
                         ]
                     ),
@@ -873,13 +858,6 @@ def _make_doc_analyzer(
             boost = (
                 np.maximum.reduceat(w_s, gstarts) + imp[g_row] * iw
             ).astype(np.float32)
-            deltas = p_s.copy()
-            deltas[1:] -= p_s[:-1]
-            deltas[gstarts] = p_s[gstarts]
-            buf, bcum = varint_encode_offsets(deltas.astype(np.uint64))
-            pos_offsets = np.concatenate(
-                (np.zeros(1, dtype=np.int64), bcum[gends])
-            )
             per_doc = np.bincount(g_row, minlength=n_rows)
             offsets = np.concatenate(
                 (np.zeros(1, dtype=np.int64), np.cumsum(per_doc))
@@ -888,10 +866,12 @@ def _make_doc_analyzer(
                 [
                     dic.take(pa.array(c_s[gstarts])).cast(pa.string()),
                     pa.array(tf, type=pa.int32()),
-                    _binary_from(np.frombuffer(buf, dtype=np.uint8), pos_offsets),
+                    _list_from(
+                        np.append(gstarts, len(p_s)), pa.array(p_s, pa.int32())
+                    ),
                     pa.array(boost, type=pa.float32()),
                 ],
-                names=["token", "tf", "pos_bin", "boost"],
+                names=["token", "tf", "pos", "boost"],
             )
             toks_list = pa.ListArray.from_arrays(pa.array(offsets), struct)
             an = pa.StructArray.from_arrays(
@@ -1051,11 +1031,10 @@ def _pack_group(
 ) -> list[dict]:
     """Pack one doc-sorted (token,bucket) posting run into block rows.
 
-    ``pos_lists`` = per-posting pos_bin buffers (already delta+varint
-    encoded at analysis time, reset per posting) — block pos_bin is
-    their concatenation; decode splits by tf counts."""
-    docs = docs.astype(np.uint64)
-    tfs = tfs.astype(np.uint64)
+    ``pos_lists`` = per-posting position lists (None reads as empty,
+    like a filter posting's) — block ``pos`` holds them in doc order."""
+    docs = docs.astype(np.int64)
+    tfs = tfs.astype(np.int64)
     boosts = boosts.astype(np.float32)
     out = []
     for b, lo in enumerate(range(0, len(docs), block_size)):
@@ -1071,12 +1050,10 @@ def _pack_group(
                 "max_boost": float(boosts[lo:hi].max()),
                 "min_doc": int(docs[lo]),
                 "max_doc": int(docs[hi - 1]),
-                "docs_bin": pack_deltas(docs[lo:hi]),
-                "tfs_bin": varint_encode(tfs[lo:hi]),
-                "boosts_bin": pack_f32(boosts[lo:hi]),
-                "pos_bin": b"".join(
-                    bytes(p) if p is not None else b"" for p in pos_lists[lo:hi]
-                ),
+                "docs": docs[lo:hi].tolist(),
+                "tfs": tfs[lo:hi].tolist(),
+                "boosts": boosts[lo:hi].tolist(),
+                "pos": [[] if p is None else list(p) for p in pos_lists[lo:hi]],
             }
         )
     return out
@@ -1120,7 +1097,7 @@ def filter_token_rows(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
             "doc_index",
             F.concat(F.lit(f"f|{f}|"), F.col("__v")).alias("token"),
             F.lit(1).alias("tf"),
-            F.lit(b"").alias("pos_bin"),
+            F.array().cast("array<int>").alias("pos"),
             F.lit(0.0).cast("float").alias("boost"),
         )
         for f in fields
@@ -1146,36 +1123,33 @@ def _pa_block_schema():
             ("max_boost", pa.float32()),
             ("min_doc", pa.int64()),
             ("max_doc", pa.int64()),
-            ("docs_bin", pa.binary()),
-            ("tfs_bin", pa.binary()),
-            ("boosts_bin", pa.binary()),
-            ("pos_bin", pa.binary()),
+            ("docs", pa.list_(pa.int64())),
+            ("tfs", pa.list_(pa.int32())),
+            ("boosts", pa.list_(pa.float32())),
+            ("pos", pa.list_(pa.list_(pa.int32()))),
         ]
     )
 
 
-def _binary_view(arr) -> tuple[np.ndarray, np.ndarray]:
-    """(int64 value offsets rebased to 0, uint8 data window) of a
-    pyarrow Binary/String array — null entries read as 0-length."""
-    bufs = arr.buffers()
-    off = np.frombuffer(bufs[1], dtype=np.int32)[
-        arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
-    if bufs[2] is None:
-        return off - off[0], np.empty(0, dtype=np.uint8)
-    data = np.frombuffer(bufs[2], dtype=np.uint8)[off[0] : off[-1]]
-    return off - off[0], data
+def _list_view(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 entry offsets starting at 0, flat numpy values) of a
+    one-level pyarrow list array — null entries read as empty."""
+    import pyarrow.compute as pc
+
+    arr = _one_chunk(arr)
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy(zero_copy_only=False)
+    off = np.zeros(len(arr) + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    return off, arr.flatten().to_numpy(zero_copy_only=False)
 
 
-def _binary_from(data, offsets: np.ndarray):
-    """Zero-copy pyarrow binary array over one flat buffer: value i =
-    data[offsets[i]:offsets[i+1]] — no per-value bytes slicing."""
+def _list_from(offsets: np.ndarray, values):
+    """pyarrow list array over one flat pyarrow array: entry i =
+    values[offsets[i]:offsets[i+1]] — no per-entry Python objects."""
     import pyarrow as pa
 
-    return pa.Array.from_buffers(
-        pa.binary(),
-        len(offsets) - 1,
-        [None, pa.py_buffer(offsets.astype(np.int32).tobytes()), pa.py_buffer(data)],
+    return pa.ListArray.from_arrays(
+        pa.array(np.asarray(offsets, dtype=np.int32)), values
     )
 
 
@@ -1186,11 +1160,11 @@ def _pack_sorted_window(
 ):
     """Vectorized pack of one window of (hash,bucket,doc)-sorted
     posting rows (numpy views over the Arrow batch, prepended with any
-    carried rows). Emits one RecordBatch of hash-keyed block rows;
+    carried rows; ``pos_data[pos_off[j]:pos_off[j+1]]`` = posting j's
+    positions). Emits one RecordBatch of hash-keyed block rows;
     unless ``final``, the trailing incomplete block is returned as the
-    new carry (posting blocks are independently decodable — each
-    block's first doc delta is absolute — so complete blocks are
-    emitted even when their run continues into the next batch).
+    new carry (blocks hold absolute doc indexes, so complete blocks
+    are emitted even when their run continues into the next batch).
 
     ``k`` = carried row count (always the head of run 0);
     ``first_offset`` = block_id offset for run 0 (continuation)."""
@@ -1242,15 +1216,10 @@ def _pack_sorted_window(
 
     tfs_w = tfs[:cut]
     boosts_w = boosts[:cut].astype(np.float32, copy=False)
-    d = docs[:cut].astype(np.uint64)
-    deltas = d.copy()
-    if cut > 1:
-        deltas[1:] = d[1:] - d[:-1]
-    deltas[starts] = d[starts]
     bounds = np.append(starts, cut)
-    dbuf, dcum = varint_encode_offsets(deltas)
-    tbuf, tcum = varint_encode_offsets(tfs_w.astype(np.uint64))
-
+    posting_pos = _list_from(
+        pos_off[: cut + 1], pa.array(pos_data[: pos_off[cut]], pa.int32())
+    )
     rb = pa.RecordBatch.from_arrays(
         [
             pa.array(g1[starts], type=pa.int64()),
@@ -1263,10 +1232,10 @@ def _pack_sorted_window(
             pa.array(np.maximum.reduceat(boosts_w, starts), type=pa.float32()),
             pa.array(docs[starts].astype(np.int64), type=pa.int64()),
             pa.array(docs[ends - 1].astype(np.int64), type=pa.int64()),
-            _binary_from(dbuf, dcum[bounds]),
-            _binary_from(tbuf, tcum[bounds]),
-            _binary_from(boosts_w.tobytes(), 4 * bounds),
-            _binary_from(pos_data[: pos_off[cut]], pos_off[bounds]),
+            _list_from(bounds, pa.array(docs[:cut], pa.int64())),
+            _list_from(bounds, pa.array(tfs_w, pa.int32())),
+            _list_from(bounds, pa.array(boosts_w, pa.float32())),
+            _list_from(bounds, posting_pos),
         ],
         schema=schema,
     )
@@ -1295,8 +1264,8 @@ def _flush_carry(schema, carry, block_size):
 def _make_arrow_packer(block_size: int):
     """mapInArrow fn factory: walk sorted posting runs, emit packed
     block rows. Fully vectorized — run boundaries from the two int64
-    hash columns, per-block aggregates via np.*.reduceat, binary
-    payloads sliced zero-copy from one flat encode per batch. No
+    hash columns, per-block aggregates via np.*.reduceat, list
+    payloads cut from the batch's flat value arrays by offsets. No
     pandas, no per-row Python objects (a 64M-row mapInPandas crossing
     boxes every token string; this path crosses Arrow buffers only)."""
 
@@ -1313,7 +1282,7 @@ def _make_arrow_packer(block_size: int):
             docs = cols["doc_index"].to_numpy()
             tfs = cols["tf"].to_numpy()
             boosts = cols["boost"].to_numpy()
-            pos_off, pos_data = _binary_view(cols["pos_bin"])
+            pos_off, pos_data = _list_view(cols["pos"])
             k = 0
             first_offset = 0
             if carry is not None:
@@ -1358,7 +1327,7 @@ def _make_arrow_packer(block_size: int):
 def build_blocks(
     token_doc: DataFrame, cfg: EngineConfig, tokens: DataFrame | None = None
 ) -> DataFrame:
-    """(doc_index, token, tf, pos_bin, boost) -> packed block rows.
+    """(doc_index, token, tf, pos, boost) -> packed block rows.
 
     External **sort-merge** posting assembly (north_star): one shuffle
     keyed (token-hash, bucket) + Spark's spill-safe external sort — no
@@ -1472,7 +1441,7 @@ def _make_local_run_packer(doc_bucket_bits: int, filter_fields: list[str]):
             boost_parts = [
                 flat.field("boost").to_numpy(zero_copy_only=False).astype(np.float32)
             ]
-            pos_arrs = [flat.field("pos_bin")]
+            pos_arrs = [flat.field("pos")]
             for f in filter_fields:
                 # values arrive ALREADY Spark-cast + trimmed (the
                 # caller projects F.trim(col.cast("string")) JVM-side
@@ -1505,8 +1474,11 @@ def _make_local_run_packer(doc_bucket_bits: int, filter_fields: list[str]):
                 doc_parts.append(fdocs[idx])
                 tf_parts.append(np.ones(idx.size, dtype=np.int64))
                 boost_parts.append(np.zeros(idx.size, dtype=np.float32))
-                pos_arrs.append(
-                    pa.array([b""] * idx.size, type=pa.binary())
+                pos_arrs.append(  # filter postings carry no positions
+                    _list_from(
+                        np.zeros(idx.size + 1, dtype=np.int32),
+                        pa.array([], pa.int32()),
+                    )
                 )
             tok_all = pa.concat_arrays(
                 [a.cast(pa.string()) for a in tok_arrs]
@@ -1519,10 +1491,10 @@ def _make_local_run_packer(doc_bucket_bits: int, filter_fields: list[str]):
             doc_all = np.concatenate(doc_parts)
             tf_all = np.concatenate(tf_parts)
             boost_all = np.concatenate(boost_parts)
-            pos_all = pa.concat_arrays([a.cast(pa.binary()) for a in pos_arrs])
+            pos_all = pa.concat_arrays(pos_arrs)
             order = np.lexsort((doc_all, codes))
             docs_s = doc_all[order]
-            pos_off, pos_data = _binary_view(pos_all.take(pa.array(order)))
+            pos_off, pos_data = _list_view(pos_all.take(pa.array(order)))
             rb, _ = _pack_sorted_window(
                 hash_schema, 0, 0,
                 codes[order], codes[order],
@@ -1565,16 +1537,14 @@ def _one_chunk(col):
 def _make_run_merge_packer(block_size: int):
     """mapInArrow fn factory for the REDUCE side of the local-pack
     block build: consumes RUN rows sorted by (token, bucket, min_doc)
-    within partitions, decodes each (token, bucket) group's runs
-    (fully vectorized: segmented-cumsum delta decode, varint
-    continuation-bit scan for per-posting position byte boundaries),
-    re-sorts postings by doc (input partitions need not cover
+    within partitions, flattens each (token, bucket) group's runs into
+    postings, re-sorts them by doc (input partitions need not cover
     contiguous doc ranges — file splits/merges can interleave), and
     re-chunks through the SAME `_pack_sorted_window` machinery the
-    exploded path uses — so the final block rows are bit-identical to
+    exploded path uses — so the final block rows are identical to
     `build_blocks` output (asserted in tests). Groups are buffered to
-    completion before decode (memory bound: one (token,bucket) group
-    ≤ 2^doc_bucket_bits postings)."""
+    completion before flattening (memory bound: one (token,bucket)
+    group ≤ 2^doc_bucket_bits postings)."""
     inner = _make_arrow_packer(block_size)
 
     def merge(batches):
@@ -1584,7 +1554,7 @@ def _make_run_merge_packer(block_size: int):
         out_schema = _pa_token_block_schema()
         gid_tokens: list[str] = []
 
-        def decode(t: "pa.Table"):
+        def flatten(t: "pa.Table"):
             """Complete-group run rows → one doc-sorted posting batch."""
             tok = _one_chunk(t.column("token"))
             bucket = t.column("bucket").to_numpy()
@@ -1602,60 +1572,26 @@ def _make_run_merge_packer(block_size: int):
             for i in gstarts:
                 gid_tokens.append(tok[int(i)].as_py())
             gid_runs = gid0 + np.cumsum(change) - 1
-            # --- payload decode (all runs at once) ---
-            doff, ddata = _binary_view(_one_chunk(t.column("docs_bin")))
-            d = varint_decode(ddata)
-            ends = np.cumsum(n)
-            starts = ends - n
-            c = np.cumsum(d, dtype=np.uint64)
-            base = c[starts] - d[starts]
-            docs = (c - np.repeat(base, n)).astype(np.int64)
-            toff, tdata = _binary_view(_one_chunk(t.column("tfs_bin")))
-            tfs = varint_decode(tdata).astype(np.int64)
-            boff, bdata = _binary_view(_one_chunk(t.column("boosts_bin")))
-            boosts = np.frombuffer(bdata.tobytes(), dtype=np.float32)
-            poff, pdata = _binary_view(_one_chunk(t.column("pos_bin")))
-            # per-posting position byte boundaries from varint
-            # continuation bits. tf == #positions for word tokens;
-            # filter (f|) runs carry tf=1 with EMPTY positions, so
-            # zero their effective varint count first.
-            eff_tf = tfs.copy()
-            # poff is per-RUN (nr+1 offsets); starts/ends index POSTINGS
-            empty_runs = np.flatnonzero(np.diff(poff) == 0)
-            for i in empty_runs:
-                eff_tf[starts[i]:ends[i]] = 0
-            vends = np.concatenate(
-                (
-                    np.zeros(1, dtype=np.int64),
-                    np.flatnonzero((pdata & 0x80) == 0) + 1,
-                )
-            )
-            idx = np.cumsum(eff_tf)
-            pend_b = vends[idx]  # per-posting END byte; starts are
-            # the previous posting's end (streams are contiguous), so
-            # offsets = [0] ++ pend_b
+            docs = _list_view(t.column("docs"))[1]
             # posting-level group / bucket columns
             gid_post = np.repeat(gid_runs, n)
             bucket_post = np.repeat(bucket, n)
             # doc re-sort within groups (stable; handles interleaved
             # doc ranges from non-contiguous map partitions)
-            order = np.lexsort((docs, gid_post))
-            # rebuild contiguous per-posting pos buffers in doc order
-            pos_sorted = _binary_from(
-                pdata,
-                np.concatenate((np.zeros(1, dtype=np.int64), pend_b)),
-            ).take(pa.array(order))
+            o = np.lexsort((docs, gid_post))
+            order = pa.array(o)
             return pa.RecordBatch.from_arrays(
                 [
-                    pa.array(gid_post[order], type=pa.int64()),
-                    pa.array(gid_post[order], type=pa.int64()),
-                    pa.array(bucket_post[order], type=pa.int64()),
-                    pa.array(docs[order], type=pa.int64()),
-                    pa.array(tfs[order], type=pa.int32()),
-                    pa.array(boosts[order], type=pa.float32()),
-                    pos_sorted,
+                    pa.array(gid_post[o], type=pa.int64()),
+                    pa.array(gid_post[o], type=pa.int64()),
+                    pa.array(bucket_post[o], type=pa.int64()),
+                    pa.array(docs[o], type=pa.int64()),
+                ]
+                + [
+                    _one_chunk(t.column(c)).flatten().take(order)
+                    for c in ("tfs", "boosts", "pos")
                 ],
-                names=["g1", "g2", "bucket", "doc_index", "tf", "boost", "pos_bin"],
+                names=["g1", "g2", "bucket", "doc_index", "tf", "boost", "pos"],
             )
 
         def posting_batches():
@@ -1677,10 +1613,10 @@ def _make_run_merge_packer(block_size: int):
                     bounds = np.flatnonzero(neq | (bucket[1:] != bucket[:-1])) + 1
                     last_start = int(bounds[-1]) if len(bounds) else 0
                 if last_start > 0:
-                    yield decode(t.slice(0, last_start))
+                    yield flatten(t.slice(0, last_start))
                 buf = t.slice(last_start)
             if buf is not None and buf.num_rows:
-                yield decode(buf)
+                yield flatten(buf)
 
         # gid→token lookup built INCREMENTALLY (convert only tokens
         # added since the last output batch — rebuilding the whole
@@ -1709,10 +1645,10 @@ def build_blocks_from_analyzed(analyzed: DataFrame, cfg: EngineConfig) -> DataFr
     """Bulk-path block build: LOCAL PACK then MERGE (the classic
     local-index/merge shape). The map side crosses nested analyzed doc
     rows into Python straight off the columnar parquet scan and packs
-    per-batch (token, bucket) runs; only compressed run rows travel
-    the shuffle (~3x fewer bytes, ~100x fewer rows than raw postings);
-    the reduce side decodes, doc-sorts, and re-chunks groups into
-    block rows BIT-IDENTICAL to `build_blocks` (equivalence asserted
+    per-batch (token, bucket) runs; only run rows travel the shuffle
+    (~100x fewer rows than raw postings); the reduce side flattens,
+    doc-sorts, and re-chunks groups into block rows identical to
+    `build_blocks` (equivalence asserted
     in tests/test_index_build.py; golden posting-state tests cover the
     full build). CDC batches run it too, over the re-analyzed docs
     of their touched pbuckets (incremental.py); `build_blocks`, fed
@@ -1842,8 +1778,7 @@ def pairs_from_blocks(
     tok_doc = (
         blocks_df.filter(~F.col("token").contains("|"))
         .join(F.broadcast(commons), "token", "left_anti")
-        .select("token", _unpack_docs_udf(F.col("docs_bin")).alias("ds"))
-        .select("token", F.explode("ds").alias("doc_index"))
+        .select("token", F.explode("docs").alias("doc_index"))
     )
     per_doc = tok_doc.groupBy("doc_index").agg(
         F.array_sort(F.collect_set("token")).alias("toks")
@@ -1970,13 +1905,13 @@ class IndexBuilder:
 
     def _write(self, df: DataFrame, path: str, name: str, sort_by=None,
                partition_keys: int | None = None, partition_by: str | None = None,
-               count_rows: bool = True) -> None:
+               count_rows: bool = True, options: dict | None = None) -> None:
         t0 = time.time()
         if sort_by:
             df = df.repartitionByRange(
                 partition_keys or self.cfg.build_partitions, *sort_by
             ).sortWithinPartitions(*sort_by)
-        writer = df.write.mode("overwrite")
+        writer = df.write.mode("overwrite").options(**(options or {}))
         if partition_by:
             # directory-partitioned layout → incremental maintenance
             # rewrites only affected pbucket dirs (≙ Iceberg partition
@@ -2043,10 +1978,11 @@ class IndexBuilder:
         if not (resume and self._stage_done("blocks")):
             blocks = build_blocks_from_analyzed(analyzed, cfg)
             # pack output is (token,bucket)-sorted within partitions
-            # already — write as-is; parquet row-group stats still give
-            # token min/max pruning per file
+            # already — write as-is; parquet row-group stats give token
+            # min/max pruning (see BLOCKS_WRITE_OPTIONS)
             self._write(
                 blocks, self.paths.blocks, "blocks", partition_by="pbucket",
+                options=BLOCKS_WRITE_OPTIONS,
             )
 
         # stage 4a: per-pbucket dictionary partials from block stats

@@ -47,12 +47,15 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from .build import (
+    BLOCKS_WRITE_OPTIONS,
     IndexPaths,
     analyze_docs,
     assign_doc_ids,
     build_blocks_from_analyzed,
+    check_blocks_layout,
     dict_partials_from_blocks,
     dictionary_from_partials,
+    open_dataset,
     pairs_from_analyzed,
     pairs_from_blocks,
     prefixes_from_dictionary,
@@ -185,6 +188,9 @@ def apply_actions(
     paths = paths if isinstance(paths, IndexPaths) else IndexPaths(Path(paths))
     fileio = fileio or LocalFileIO()
     cur = paths.pin()  # the consistent snapshot every read comes from
+    blocks_ds = open_dataset(cur, "blocks")
+    if blocks_ds is not None:
+        check_blocks_layout(blocks_ds.schema, cur.root)
 
     if batch_id is not None and cur.meta.exists():
         applied = json.loads(cur.meta.read_text()).get("applied_batches", [])
@@ -329,7 +335,9 @@ def apply_actions(
         # synthesized inside the local packer, same as the bulk build)
         blocks = build_blocks_from_analyzed(analyzed_new, cfg)
         fileio.stage_partitions(cur.blocks, stg.blocks, touched_pb, "pbucket=")
-        blocks.write.mode("append").partitionBy("pbucket").parquet(stg.blocks)
+        blocks.write.mode("append").options(**BLOCKS_WRITE_OPTIONS).partitionBy(
+            "pbucket"
+        ).parquet(stg.blocks)
 
         # --- dictionary: per-pbucket partials, touched partitions only --
         # (O(touched) — untouched pbuckets' block files are never read;

@@ -204,8 +204,8 @@ class OracleIndex(ExpansionMixin):
             if f.name in corpus.columns
         ]
         # per-(token, doc) position lists in the concatenated field
-        # token stream — same counter the index build packs into
-        # pos_bin (phrase-mode positional matching)
+        # token stream — same counter the index build stores in the
+        # blocks' ``pos`` lists (phrase-mode positional matching)
         self.positions: dict[str, dict[int, list[int]]] = defaultdict(dict)
         syn, procs = cfg.synonyms, cfg.processors
         for row in corpus.itertuples(index=False):

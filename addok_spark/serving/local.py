@@ -13,12 +13,14 @@ from those artifacts with pruned columnar reads:
   term dictionary in RAM; at 10^12-turn scale this is the one table
   that stays small relative to postings);
 - **posting lists** are fetched lazily per query token from the
-  ``blocks`` table: pyarrow dataset scan with a ``token ==`` filter —
-  files are token-sorted within pbucket partitions so parquet
-  row-group statistics prune everything else — then delta+varint
-  decoded with the same numpy codec the build wrote with
-  (``index/compress.py``), and kept as sorted numpy arrays
-  (docs / tf / boost), not Python dicts;
+  ``blocks`` table: files are token-sorted within pbucket partitions
+  and written in small row groups, so the row groups' token
+  statistics select the few that can hold a token. Block payloads
+  are native Parquet list columns (``docs`` / ``tfs`` / ``boosts`` /
+  ``pos``); a selected row group is decoded once per column and
+  cached, a token's rows are filtered from it, and a block is a
+  slice of their flattened numpy arrays. Postings are kept as sorted
+  numpy arrays (docs / tf / boost), not Python dicts;
 - **documents** are read per pbucket partition (hive partition
   pruning on ``pbucket``) the first time one of its docs becomes a
   candidate, and kept columnar: the partition's Arrow table sorted by
@@ -61,10 +63,16 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..config import EngineConfig
-from ..index.build import IndexPaths, open_dataset
-from ..index.compress import unpack_deltas, unpack_f32, varint_decode
+from ..index.build import (
+    IndexPaths,
+    _list_view,
+    check_blocks_layout,
+    open_dataset,
+    table_files,
+)
 from ..oracle.bm25_oracle import REQUIRED, ExpansionMixin, SpecSearch
 from ..query.engine import Query, normalize_filter_values
 
@@ -171,15 +179,16 @@ def _in_sorted(
 
 class _TokenBlocks:
     """Block-granular lazy posting store of ONE token: metadata
-    (n / max_boost / min_doc / max_doc) held as numpy, payloads
-    decoded per block on first touch. Doc ranges are disjoint across
-    a token's blocks (bucket = doc high bits; blocks partition the
-    sorted run within a bucket), so point lookups decode exactly one
-    block and range probes decode only intersecting blocks."""
+    (n / max_boost / min_doc / max_doc) held as numpy, payload list
+    columns flattened to numpy once and sliced per block on first
+    touch. Doc ranges are disjoint across a token's blocks (bucket =
+    doc high bits; blocks partition the sorted run within a bucket),
+    so point lookups slice exactly one block and range probes only
+    intersecting blocks."""
 
     __slots__ = (
         "is_filter", "n", "ub", "mind", "maxd", "n_blocks",
-        "_docs_bin", "_tfs_bin", "_boosts_bin", "_dec", "_full",
+        "_off", "_docs", "_tfs", "_boosts", "_dec", "_full",
     )
 
     def __init__(self, tbl, is_filter: bool):
@@ -189,10 +198,11 @@ class _TokenBlocks:
         self.mind = tbl.column("min_doc").to_numpy()
         self.maxd = tbl.column("max_doc").to_numpy()
         self.n_blocks = len(self.n)
-        self._docs_bin = tbl.column("docs_bin")
-        self._tfs_bin = None if is_filter else tbl.column("tfs_bin")
-        self._boosts_bin = None if is_filter else tbl.column("boosts_bin")
-        # per-block decode memo: grows only until full() concatenates
+        self._off, self._docs = _list_view(tbl.column("docs"))
+        # filter (f|) postings score nothing: tf and boost read as 0
+        self._tfs = None if is_filter else _list_view(tbl.column("tfs"))[1]
+        self._boosts = None if is_filter else _list_view(tbl.column("boosts"))[1]
+        # per-block slice memo: grows only until full() concatenates
         # and clears it, so worst-case residency is bounded by the
         # posting-store _LRU above (maxsize tokens × this token's
         # blocks) — the store evicts whole _TokenBlocks objects
@@ -202,13 +212,14 @@ class _TokenBlocks:
     def decode_block(self, i: int):
         got = self._dec.get(i)
         if got is None:
-            docs = unpack_deltas(self._docs_bin[i].as_py()).astype(np.int64)
+            lo, hi = self._off[i], self._off[i + 1]
+            docs = self._docs[lo:hi].astype(np.int64, copy=False)
             if self.is_filter:
                 tfs = np.zeros(len(docs), np.int64)
                 boosts = np.zeros(len(docs), np.float32)
             else:
-                tfs = varint_decode(self._tfs_bin[i].as_py()).astype(np.int64)
-                boosts = unpack_f32(self._boosts_bin[i].as_py())
+                tfs = self._tfs[lo:hi].astype(np.int64)
+                boosts = self._boosts[lo:hi]
             got = (docs, tfs, boosts)
             self._dec[i] = got
         return got
@@ -400,6 +411,7 @@ class ParquetIndex(ExpansionMixin):
         # reference-only one unions its base dirs; prefixes / pairs are
         # None when the snapshot has none
         self._blocks_ds = open_dataset(self.paths, "blocks")
+        check_blocks_layout(self._blocks_ds.schema, self.paths.root)
         self._docs_ds = open_dataset(self.paths, "docs")
         self._doc_columns = frozenset(self._docs_ds.schema.names)
         self._prefix_ds = open_dataset(self.paths, "prefixes")
@@ -419,6 +431,8 @@ class ParquetIndex(ExpansionMixin):
         self.warmup_seconds = time.perf_counter() - t0
 
         self._blocks: dict[str, _TokenBlocks] = _LRU(100_000)
+        self._rg_index: list[tuple] | None = None
+        self._rg_cache: dict[tuple, pa.ChunkedArray] = _LRU(4096)
         self._scan_cache: dict[tuple, np.ndarray] = _LRU(1024)
         self._dict_views: dict[str, dict[int, float]] = _LRU(10_000)
         self._doc_cache: dict[int, _DocStore] = _LRU(64)
@@ -440,22 +454,57 @@ class ParquetIndex(ExpansionMixin):
         self.__dict__.update(fresh.__dict__)
 
     # -- postings -----------------------------------------------------------
+    def _row_groups(self) -> list[tuple]:
+        """(token min, token max, row-group fragment) of every row
+        group of the snapshot's blocks files, from their footers."""
+        if self._rg_index is None:
+            files = [str(f) for f in table_files(self.paths, "blocks")]
+            index = []
+            for frag in self._pads.dataset(files, format="parquet").get_fragments():
+                for rg in frag.split_by_row_group():
+                    st = rg.row_groups[0].statistics.get("token") or {}
+                    index.append((st.get("min"), st.get("max"), rg))
+            self._rg_index = index
+        return self._rg_index
+
+    def _blocks_rows(self, token: str, columns: list[str]) -> pa.Table:
+        """``columns`` of ``token``'s block rows. Each row group whose
+        token statistics admit the token is decoded whole, once per
+        column, and kept in ``_rg_cache``: list columns decode value by
+        value, so re-decoding a Zipf-head token's row groups for every
+        query would cost more than the read. Thread-safe: a race only
+        decodes a group twice."""
+        parts = []
+        for i, (lo, hi, rg) in enumerate(self._row_groups()):
+            if lo is not None and not lo <= token <= hi:
+                continue
+            want = ["token"] + columns
+            got = {c: self._rg_cache.get((i, c)) for c in want}
+            missing = [c for c in want if got[c] is None]
+            if missing:
+                tbl = rg.to_table(columns=missing)
+                for c in missing:
+                    got[c] = self._rg_cache[(i, c)] = tbl.column(c)
+            part = pa.table(got)
+            parts.append(part.filter(pc.equal(part["token"], token)))
+        if not parts:
+            return self._blocks_ds.schema.empty_table().select(columns)
+        return pa.concat_tables(parts).select(columns)
+
     def _read_token_blocks(self, token: str) -> "_TokenBlocks":
-        """Uncached pruned blocks read for one token (thread-safe:
-        touches only the immutable dataset handle)."""
-        tok_filter = self._pads.field("token") == token
+        """Uncached blocks read for one token (thread-safe, see
+        ``_blocks_rows``)."""
         is_filter = token.startswith("f|")
-        cols = ["n", "max_boost", "min_doc", "max_doc", "docs_bin"]
+        cols = ["n", "max_boost", "min_doc", "max_doc", "docs"]
         if not is_filter:
-            cols += ["tfs_bin", "boosts_bin"]
-        tbl = self._blocks_ds.to_table(filter=tok_filter, columns=cols)
-        return _TokenBlocks(tbl, is_filter)
+            cols += ["tfs", "boosts"]
+        return _TokenBlocks(self._blocks_rows(token, cols), is_filter)
 
     def _token_blocks(self, token: str) -> "_TokenBlocks":
         """Per-block lazy posting store for one token: block metadata
-        (n / max_boost / min_doc / max_doc) up front, payloads decoded
-        on demand (block-max pruning). One pruned blocks read per
-        token per process."""
+        (n / max_boost / min_doc / max_doc) up front, payloads sliced
+        per block on demand (block-max pruning). One pruned blocks
+        read per token per process."""
         tb = self._blocks.get(token)
         if tb is not None:
             return tb
@@ -468,8 +517,9 @@ class ParquetIndex(ExpansionMixin):
         reads (pyarrow releases the GIL inside ``to_table``), so a
         cold multi-token query pays ~one parquet read latency instead
         of one per token. Reads run in worker threads against the
-        immutable dataset; cache insertion stays on the caller's
-        thread (the _LRU is not thread-safe)."""
+        immutable dataset; the caller's thread inserts the results
+        into the block cache (an ``_LRU``, whose lock makes each
+        insert atomic)."""
         todo = [
             t for t in dict.fromkeys(tokens)
             if t and self._blocks.get(t) is None
@@ -587,23 +637,19 @@ class ParquetIndex(ExpansionMixin):
 
     def token_position_arrays(self, token: str, within_docs=None):
         """(docs repeated per occurrence int64, absolute position
-        int64) for one token — pos_bin decoded with the same
-        cumsum + per-posting offset reset the build wrote them with.
-        One pruned read per token, memoized.
+        int64) for one token: the ``pos`` lists flattened twice, each
+        doc repeated by its posting's position count. One pruned read
+        per token, memoized.
 
         ``within_docs`` (sorted unique int64 array) restricts the
         DECODE to blocks whose [min_doc, max_doc] range intersects
         it — the phrase path passes the rarest token's doc set, so a
-        stopword decodes at most |rare docs| blocks instead of its
-        whole positional stream (a rare-token conjunction applied
-        at block granularity; bucket-granular
-        pruning is too coarse — a 63-doc token touches most of a
-        small corpus's doc-range buckets). When the doc set spans
-        few buckets the read itself is also bucket-filtered (real IO
-        pruning once the corpus has many buckets). Restricted
-        decodes are not token-cached — the phrase layer memoizes at
-        whole-phrase granularity instead; a cached full decode is
-        sliced, never re-read."""
+        stopword flattens at most |rare docs| blocks instead of its
+        whole Zipf-head positional stream (a rare-token conjunction
+        applied at block granularity). Restricted results are not
+        token-cached — the phrase layer memoizes at whole-phrase
+        granularity instead; a cached full result is sliced, never
+        re-read."""
         cached = self._pos_cache.get(token)
         if cached is not None:
             if within_docs is not None:
@@ -611,48 +657,20 @@ class ParquetIndex(ExpansionMixin):
                 m = _in_sorted(docs, within_docs)
                 return docs[m], pos[m]
             return cached
-        f = self._pads.field
-        tok_filter = f("token") == token
-        cols = ["docs_bin", "tfs_bin", "pos_bin"]
-        if within_docs is not None:
-            buckets = np.unique(
-                np.asarray(within_docs, np.int64) >> self._bucket_bits
-            )
-            if len(buckets) <= 256:
-                tok_filter = tok_filter & f("bucket").isin(
-                    [int(x) for x in buckets]
-                )
-            cols = ["min_doc", "max_doc"] + cols
-        tbl = self._blocks_ds.to_table(filter=tok_filter, columns=cols)
-        if within_docs is not None and tbl.num_rows:
+        if within_docs is None:
+            tbl = self._blocks_rows(token, ["docs", "pos"])
+        else:
+            tbl = self._blocks_rows(token, ["min_doc", "max_doc", "docs", "pos"])
             # keep only blocks whose doc range holds a target doc
-            import pyarrow as pa
-
             mn = tbl.column("min_doc").to_numpy()
             mx = tbl.column("max_doc").to_numpy()
             keep = np.searchsorted(within_docs, mn, "left") < np.searchsorted(
                 within_docs, mx + 1, "left"
             )
             tbl = tbl.filter(pa.array(keep))
-        dparts, pparts = [], []
-        for db, tb, pb in zip(
-            tbl.column("docs_bin"), tbl.column("tfs_bin"), tbl.column("pos_bin")
-        ):
-            docs = unpack_deltas(db.as_py()).astype(np.int64)
-            tfs = varint_decode(tb.as_py()).astype(np.int64)
-            deltas = varint_decode(pb.as_py()).astype(np.int64)
-            if not len(deltas):
-                continue
-            starts = np.cumsum(tfs) - tfs
-            c = np.cumsum(deltas)
-            off = np.zeros(len(tfs), dtype=np.int64)
-            off[1:] = c[starts[1:] - 1]
-            dparts.append(np.repeat(docs, tfs))
-            pparts.append(c - np.repeat(off, tfs))
-        if dparts:
-            out = (np.concatenate(dparts), np.concatenate(pparts))
-        else:
-            out = (np.empty(0, np.int64), np.empty(0, np.int64))
+        docs = _list_view(tbl.column("docs"))[1].astype(np.int64, copy=False)
+        off, pos = _list_view(pc.list_flatten(tbl.column("pos")))
+        out = (np.repeat(docs, np.diff(off)), pos.astype(np.int64))
         if within_docs is None:
             self._pos_cache[token] = out
             return out
@@ -840,6 +858,19 @@ class FastSearch(SpecSearch):
     (-score, doc) tie-break.  Everything outside this kernel — rounds,
     relaxation, cream, cliques, scoring — is inherited from the spec."""
 
+    def __init__(self, index, cfg: EngineConfig):
+        super().__init__(index, cfg)
+        self.clear_caches()
+
+    def clear_caches(self) -> None:
+        """Fresh whole-phrase and whole-round memos. Their results
+        depend on index content, so a refresh to a newer snapshot
+        drops them. They are rebound rather than emptied, so a query
+        still running on the old snapshot cannot write into the new
+        ones."""
+        self._phrase_cache: dict[tuple, tuple] = _LRU(1024)
+        self._round_cache: dict[tuple, tuple] = _LRU(4096)
+
     def phrase_occurrences(self, seq: list[str]) -> dict[int, int]:
         """Vectorized twin of the spec's positional anchor
         intersection: (doc, anchor) pairs packed into int64 keys,
@@ -882,9 +913,7 @@ class FastSearch(SpecSearch):
         doc); the lexsort runs once per distinct phrase at decode
         time."""
         key = tuple(seq)
-        cache = getattr(self, "_phrase_cache", None)
-        if cache is None:
-            cache = self._phrase_cache = _LRU(1024)
+        cache = self._phrase_cache
         hit = cache.get(key)
         if hit is None:
             du, cu = self._phrase_match_arrays(seq)
@@ -972,9 +1001,7 @@ class FastSearch(SpecSearch):
             tuple(sorted((g, tuple(groups[g])) for g in gids)),
             bucket_limit, bool(use_scan),
         )
-        cache = getattr(self, "_round_cache", None)
-        if cache is None:
-            cache = self._round_cache = _LRU(4096)
+        cache = self._round_cache
         hit = cache.get(key)
         if hit is not None:
             return list(hit)
@@ -998,7 +1025,7 @@ class FastSearch(SpecSearch):
         )
         gdocs: dict[int, np.ndarray] = {}
         gboost: dict[int, np.ndarray] = {}
-        if do_scan and hasattr(index, "scan_top_docs"):
+        if do_scan:
             # manual-scan mode with block-max pruning: the probe set
             # (top scan_limit of the smallest group by (-boost, doc))
             # comes from a partial decode in max_boost order, and
@@ -1027,17 +1054,6 @@ class FastSearch(SpecSearch):
                     if len(docs):
                         parts.append((docs, boosts.astype(np.float64)))
                 gdocs[gid], gboost[gid] = self._group_max(parts)
-            if do_scan:
-                # index without block metadata: probe from the full
-                # arrays (same spec, no pruning)
-                sgid = min(gids, key=lambda g: (group_dfs.get(g, 0), g))
-                d_s, b_s = gdocs[sgid], gboost[sgid]
-                top_s = np.lexsort((d_s, -b_s))[: cfg.scan_limit]
-                scan_set = np.sort(d_s[top_s])
-                for gid in gids:
-                    m = _in_sorted(gdocs[gid], scan_set, values_sorted=True)
-                    gdocs[gid] = gdocs[gid][m]
-                    gboost[gid] = gboost[gid][m]
 
         common: np.ndarray | None = None
         for gid in sorted(gids, key=lambda g: len(gdocs[g])):
@@ -1102,10 +1118,10 @@ class LocalSearchEngine:
     def refresh(self) -> None:
         """Pick up a CDC-rewritten index (see ParquetIndex.refresh)."""
         self.index.refresh()
-        # searcher-level memos (whole-phrase results) are index-
-        # content-dependent — drop them with the index caches
-        self._searcher.__dict__.pop("_phrase_cache", None)
-        self._searcher.__dict__.pop("_round_cache", None)
+        # searcher-level memos are index-content-dependent — drop
+        # them with the index caches
+        if isinstance(self._searcher, FastSearch):
+            self._searcher.clear_caches()
 
     def get(self, conv_id: str, turn_idx: int):
         """Fetch one document by natural key (≙ Result.from_id)."""

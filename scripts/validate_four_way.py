@@ -144,50 +144,54 @@ def main() -> None:
     import shutil
 
     shutil.rmtree(out, ignore_errors=True)
-    t0 = time.time()
-    paths = build_index(spark, sdf, cfg, out)
-    build_s = time.time() - t0
-    pdf = transcripts_pdf(n_convs, seed=42)
+    try:
+        t0 = time.time()
+        paths = build_index(spark, sdf, cfg, out)
+        build_s = time.time() - t0
+        pdf = transcripts_pdf(n_convs, seed=42)
 
-    changes, after = change_batch(pdf, seed=11)
-    schema = T.StructType(
-        list(SCHEMA.fields) + [T.StructField("_action", T.StringType())]
-    )
-    failed = False
-    for label, corpus in (("bulk", pdf), ("cdc", after)):
-        if label == "cdc":
-            t0 = time.time()
-            m = apply_actions(
-                spark, paths, spark.createDataFrame(changes, schema), cfg,
-                fileio=NoLinkFileIO(),
+        changes, after = change_batch(pdf, seed=11)
+        schema = T.StructType(
+            list(SCHEMA.fields) + [T.StructField("_action", T.StringType())]
+        )
+        failed = False
+        for label, corpus in (("bulk", pdf), ("cdc", after)):
+            if label == "cdc":
+                t0 = time.time()
+                m = apply_actions(
+                    spark, paths, spark.createDataFrame(changes, schema), cfg,
+                    fileio=NoLinkFileIO(),
+                )
+                cdc_s = time.time() - t0
+                man = IndexPaths(Path(out), m["version"]).read_snapshot_manifest()
+                bases = {
+                    t: sorted({rel.split("/", 1)[0] for rel in entries.values()})
+                    for t, entries in man["tables"].items()
+                }
+                print(f"CDC version={m['version']} upserts={m['upserts']} "
+                      f"deletes={m['deletes']} touched={m['touched_pbuckets']} "
+                      f"apply_s={cdc_s:.1f} manifest_bases={bases}")
+            queries = make_queries(corpus, seed=7)
+            if label == "cdc":  # the updated rows' unique tokens
+                queries += [
+                    Query(qid=f"mark-{i}", q=f"cdcmark{i:04d}", k=10)
+                    for i in range(3)
+                ]
+            mismatches, exact, engine_s, srv_s = check_answers(
+                spark, cfg, out, corpus, queries
             )
-            cdc_s = time.time() - t0
-            man = IndexPaths(Path(out), m["version"]).read_snapshot_manifest()
-            bases = {
-                t: sorted({rel.split("/", 1)[0] for rel in entries.values()})
-                for t, entries in man["tables"].items()
-            }
-            print(f"CDC version={m['version']} upserts={m['upserts']} "
-                  f"deletes={m['deletes']} touched={m['touched_pbuckets']} "
-                  f"apply_s={cdc_s:.1f} manifest_bases={bases}")
-        queries = make_queries(corpus, seed=7)
-        if label == "cdc":  # the updated rows' unique tokens
-            queries += [
-                Query(qid=f"mark-{i}", q=f"cdcmark{i:04d}", k=10)
-                for i in range(3)
-            ]
-        mismatches, exact, engine_s, srv_s = check_answers(
-            spark, cfg, out, corpus, queries
-        )
-        print(
-            f"RESULT {label} turns={len(corpus)} queries={len(queries)} "
-            f"mismatches={len(mismatches)} engine_equals_serving={exact} "
-            f"build_s={build_s:.1f} engine_batch_s_per_q={engine_s/len(queries):.3f} "
-            f"serving_cold_ms_per_q={1000*srv_s/len(queries):.1f}"
-        )
-        for mm in mismatches[:5]:
-            print("MISMATCH", mm[0], mm[1], mm[2][:3], "vs", mm[3][:3])
-        failed |= bool(mismatches) or not exact
+            print(
+                f"RESULT {label} turns={len(corpus)} queries={len(queries)} "
+                f"mismatches={len(mismatches)} engine_equals_serving={exact} "
+                f"build_s={build_s:.1f} engine_batch_s_per_q={engine_s/len(queries):.3f} "
+                f"serving_cold_ms_per_q={1000*srv_s/len(queries):.1f}"
+            )
+            for mm in mismatches[:5]:
+                print("MISMATCH", mm[0], mm[1], mm[2][:3], "vs", mm[3][:3])
+            failed |= bool(mismatches) or not exact
+    finally:
+        # the index is scratch: remove it on every way out
+        shutil.rmtree(out, ignore_errors=True)
     spark.stop()
     sys.exit(1 if failed else 0)
 

@@ -1,6 +1,6 @@
 """Golden posting-table state tests (analog of the reference's exact
 Redis-keyspace assertions, ``tests/test_index_utils.py:49-116``) plus
-codec round-trips and resume behavior."""
+block-layout invariants and resume behavior."""
 
 import json
 from pathlib import Path
@@ -12,12 +12,6 @@ from pyspark.sql import functions as F
 
 from addok_spark.config import EngineConfig, FieldSpec
 from addok_spark.index.build import build_index
-from addok_spark.index.compress import (
-    pack_deltas,
-    unpack_deltas,
-    varint_decode,
-    varint_encode,
-)
 
 
 @pytest.fixture(scope="module")
@@ -48,14 +42,6 @@ def tiny_corpus(spark):
 def built(spark, tiny_corpus, tiny_cfg, tmp_index_root):
     out = str(Path(tmp_index_root) / "tiny")
     return build_index(spark, tiny_corpus, tiny_cfg, out)
-
-
-def test_codec_roundtrip():
-    rng = np.random.Generator(np.random.PCG64(3))
-    v = np.sort(rng.integers(0, 2**50, size=5000).astype(np.uint64))
-    assert np.array_equal(unpack_deltas(pack_deltas(v)), v)
-    raw = rng.integers(0, 2**63, size=777).astype(np.uint64)
-    assert np.array_equal(varint_decode(varint_encode(raw)), raw)
 
 
 def test_doc_ids_dense_and_ordered(spark, built):
@@ -104,13 +90,11 @@ def test_golden_posting_state(spark, built, tiny_cfg):
 
 
 def test_blocks_pack_and_split(spark, built, tiny_cfg):
-    from addok_spark.index.compress import unpack_deltas as und, varint_decode as vd
-
     blocks = spark.read.parquet(built.blocks).filter(F.col("token") == "rue")
     rows = blocks.orderBy("bucket", "block_id").collect()
     all_docs = []
     for r in rows:
-        docs = und(bytes(r["docs_bin"])).astype(int).tolist()
+        docs = r["docs"]
         assert r["n"] == len(docs)
         assert r["min_doc"] == docs[0] and r["max_doc"] == docs[-1]
         assert len(docs) <= tiny_cfg.posting_block_size
@@ -181,7 +165,7 @@ def test_vectorized_analyzer_equals_pandas_udf(spark, tiny_corpus):
     """`_make_doc_analyzer` (Arrow-native, vectorized) must produce
     per-doc token aggregates identical to the pandas-UDF reference
     twin `make_doc_tokens_udf` — token set, tf, boost (importance
-    folded in), position payload bytes, and dl — including synonym
+    folded in), position lists, and dl — including synonym
     expansion. Struct ORDER within a doc is unspecified (code order vs
     first-occurrence), so compare as sets."""
     from pyspark.sql import functions as F
@@ -205,7 +189,7 @@ def test_vectorized_analyzer_equals_pandas_udf(spark, tiny_corpus):
             r["doc_index"]: (
                 r["__an"].dl,
                 frozenset(
-                    (t.token, t.tf, bytes(t.pos_bin), round(t.boost, 6))
+                    (t.token, t.tf, tuple(t.pos), round(t.boost, 6))
                     for t in r["__an"].toks
                 ),
             )
@@ -221,8 +205,8 @@ def test_vectorized_analyzer_equals_pandas_udf(spark, tiny_corpus):
 
 def test_local_pack_blocks_equal_exploded_path(spark, built, tiny_cfg):
     """The local-pack+merge bulk path must emit block rows
-    BIT-IDENTICAL to the exploded sort-merge path (`build_blocks`) —
-    same grouping, same chunking, same payload bytes — including f|
+    identical to the exploded sort-merge path (`build_blocks`) —
+    same grouping, same chunking, same payload lists — including f|
     filter postings, multi-block runs (block_size=2) and multi-bucket
     salting (doc_bucket_bits=2)."""
     from pyspark.sql import functions as F
@@ -240,7 +224,7 @@ def test_local_pack_blocks_equal_exploded_path(spark, built, tiny_cfg):
         "doc_index",
         F.col("tk.token").alias("token"),
         F.col("tk.tf").alias("tf"),
-        F.col("tk.pos_bin").alias("pos_bin"),
+        F.col("tk.pos").alias("pos"),
         F.col("tk.boost").alias("boost"),
     )
     frows = filter_token_rows(analyzed, tiny_cfg)
@@ -371,7 +355,7 @@ def test_list_value_variants_weights(spark, tmp_index_root):
 
 def test_vectorized_analyzer_equals_pandas_udf_with_alt(spark):
     """Alt-variant segments must keep the vectorized analyzer and the
-    pandas twin bit-identical (token set, tf, boost, position bytes,
+    pandas twin identical (token set, tf, boost, position lists,
     dl) including synonyms inside variants."""
     from addok_spark.index.build import analyze_docs, make_doc_tokens_udf
 
@@ -395,7 +379,7 @@ def test_vectorized_analyzer_equals_pandas_udf_with_alt(spark):
             r["doc_index"]: (
                 r["__an"].dl,
                 frozenset(
-                    (t.token, t.tf, bytes(t.pos_bin), round(t.boost, 6))
+                    (t.token, t.tf, tuple(t.pos), round(t.boost, 6))
                     for t in r["__an"].toks
                 ),
             )
@@ -455,7 +439,7 @@ def test_boost_col_overrides_field_boost(spark, tmp_index_root):
             r["doc_index"]: (
                 r["__an"].dl,
                 frozenset(
-                    (t.token, t.tf, bytes(t.pos_bin), round(t.boost, 6))
+                    (t.token, t.tf, tuple(t.pos), round(t.boost, 6))
                     for t in r["__an"].toks
                 ),
             )

@@ -1,11 +1,10 @@
 """Property-based tests (hypothesis) for the pure kernels every
-layer shares: the posting codec, the edit-distance kernels, the
-analyzer, and the sampling thresholds. These are the invariants the
-index format and the rank-identity machinery stand on."""
+layer shares: the edit-distance kernels, the analyzer, and the
+sampling thresholds. These are the invariants the rank-identity
+machinery stands on."""
 
 import re
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -18,15 +17,6 @@ from addok_spark.functions.text import (
     levenshtein_batch,
     make_fuzzy_str,
 )
-from addok_spark.index.compress import (
-    pack_deltas,
-    pack_f32,
-    unpack_deltas,
-    unpack_f32,
-    varint_decode,
-    varint_encode,
-    varint_encode_offsets,
-)
 from addok_spark.pipelines.sampling import rate_threshold
 
 TEXT = st.text(
@@ -35,49 +25,6 @@ TEXT = st.text(
 )
 WORD = st.text(alphabet="abcdefghijklmnopqrstuvwxyz0123456789", min_size=1,
                max_size=16)
-
-
-# -- codec ------------------------------------------------------------------
-
-@given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=200))
-@settings(max_examples=200, deadline=None)
-def test_varint_roundtrip(values):
-    arr = np.array(values, dtype=np.uint64)
-    assert np.array_equal(varint_decode(varint_encode(arr)), arr)
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), min_size=1,
-                max_size=100))
-@settings(max_examples=100, deadline=None)
-def test_varint_offsets_slice_any_boundary(values):
-    """The offsets returned with the batch encode must cut the buffer
-    at exact value boundaries — the block packer slices one flat
-    encode into per-block payloads."""
-    arr = np.array(values, dtype=np.uint64)
-    buf, offs = varint_encode_offsets(arr)
-    assert offs[0] == 0 and offs[-1] == len(buf)
-    mid = len(values) // 2
-    left = varint_decode(buf[: offs[mid]])
-    right = varint_decode(buf[offs[mid]:])
-    assert np.array_equal(left, arr[:mid])
-    assert np.array_equal(right, arr[mid:])
-
-
-@given(st.sets(st.integers(min_value=0, max_value=2**50), max_size=200))
-@settings(max_examples=100, deadline=None)
-def test_delta_roundtrip_sorted(values):
-    arr = np.array(sorted(values), dtype=np.uint64)
-    assert np.array_equal(
-        unpack_deltas(pack_deltas(arr)).astype(np.uint64), arr
-    )
-
-
-@given(st.lists(st.floats(width=32, allow_nan=False, allow_infinity=False),
-                max_size=100))
-@settings(max_examples=100, deadline=None)
-def test_f32_roundtrip(values):
-    arr = np.array(values, dtype=np.float32)
-    assert np.array_equal(unpack_f32(pack_f32(arr)), arr)
 
 
 # -- edit distance ----------------------------------------------------------
