@@ -154,14 +154,6 @@ class EngineConfig:
     # `addok ngrams` builds it as a post-pass)
     build_prefixes: bool = True
     build_pairs: bool = True
-    # CDC policy for the pairs table: re-derive the touched pbucket
-    # partitions after every batch (exact — the pairs table is
-    # pbucket-partitioned, so the rebuild reads only the batch's
-    # re-analyzed docs, plus the blocks of any other partition holding
-    # a token that crossed the common threshold) or drop the table
-    # from the new snapshot (the relation round degrades gracefully
-    # to pairs=None until the next `addok_spark build`/pairs rebuild)
-    cdc_rebuild_pairs: bool = True
     # prefix table partition count (hash of the FULL token): a CDC
     # batch rewrites only the hash buckets holding changed tokens —
     # O(min(changed_tokens, buckets)) partition dirs, never the whole

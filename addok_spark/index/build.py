@@ -9,18 +9,20 @@ same logical artifacts are produced as one declarative Spark plan:
 
     transcripts
       → assign dense ordered doc_index   (scalable two-pass range sort)
-      → analyze fields (Arrow pandas UDF) → posexplode
-      → groupBy(doc_index, token): tf, positions, boost     [map-side
-        partial agg; key is per-doc so never skewed]
-      → groupBy(token, doc_bucket): pack posting BLOCKS      [doc-range
-        bucketing IS the hot-token salt: "the" splits across buckets,
-        no reducer ever owns a full hot posting list, and unlike a
-        random salt the bucket boundaries preserve doc order so blocks
-        concatenate into a globally doc-ordered posting list]
-      → block rows whose payloads are native Parquet list columns
-        (``docs`` absolute ascending, ``tfs``, ``boosts``, one
-        position list per posting in ``pos``) — the columnar writer
-        encodes them; no hand-written codec
+      → analyze fields (one mapInArrow pass): per doc, one
+        (token, tf, positions, boost) entry per distinct token
+      → explode into posting rows, union the f| filter postings
+      → groupBy(token, doc_bucket): array_sort(collect_list(posting))
+        [partial collect map-side, final collect after the shuffle;
+        doc-range bucketing IS the hot-token salt: "the" splits across
+        buckets, no reducer ever owns a full hot posting list, and
+        unlike a random salt the bucket boundaries preserve doc order
+        so blocks concatenate into a globally doc-ordered posting list]
+      → slice each sorted list into posting BLOCKS: rows whose
+        payloads are native Parquet list columns (``docs`` absolute
+        ascending, ``tfs``, ``boosts``, one position list per posting
+        in ``pos``) — the columnar writer encodes them; no
+        hand-written codec, no Python past the analyzer
       → dictionary / prefix / pair side tables.
 
 Each stage is written to its own directory with a manifest + metrics
@@ -52,24 +54,6 @@ from pyspark.sql import types as T
 
 from ..config import EngineConfig
 from ..functions.text import edge_ngrams_col
-
-BLOCK_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("block_id", T.IntegerType()),
-            T.StructField("n", T.IntegerType()),
-            T.StructField("sum_tf", T.LongType()),
-            T.StructField("max_tf", T.IntegerType()),
-            T.StructField("max_boost", T.FloatType()),
-            T.StructField("min_doc", T.LongType()),
-            T.StructField("max_doc", T.LongType()),
-            T.StructField("docs", T.ArrayType(T.LongType())),
-            T.StructField("tfs", T.ArrayType(T.IntegerType())),
-            T.StructField("boosts", T.ArrayType(T.FloatType())),
-            T.StructField("pos", T.ArrayType(T.ArrayType(T.IntegerType()))),
-        ]
-    )
-)
 
 # Parquet writer settings of the blocks table (bulk build and CDC).
 # A token read decodes every row group whose token min/max holds the
@@ -1005,21 +989,6 @@ def analyze_docs(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-# packer output is keyed by the two token hashes, NOT the token
-# string: the string never travels the posting shuffle or the Arrow
-# crossing (measured: serializing 40M token strings into Python was
-# ~55% of the block stage's CPU); build_blocks joins the strings back
-# onto the ~1000x-smaller block rows afterward
-BLOCK_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("g1", T.LongType()),
-        T.StructField("g2", T.LongType()),
-        T.StructField("bucket", T.LongType()),
-    ]
-    + list(BLOCK_SCHEMA.elementType.fields)
-)
-
-
 def _pack_group(
     token: str,
     bucket: int,
@@ -1073,7 +1042,6 @@ def filter_token_rows(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
     fields = [f for f in cfg.filter_fields if f in docs.columns]
     if not fields:
         return None
-    types = dict(docs.dtypes)
 
     def _vals(f):
         # ARRAY-valued filter fields index one f| posting per element
@@ -1108,29 +1076,6 @@ def filter_token_rows(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
     return out
 
 
-def _pa_block_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("g1", pa.int64()),
-            ("g2", pa.int64()),
-            ("bucket", pa.int64()),
-            ("block_id", pa.int32()),
-            ("n", pa.int32()),
-            ("sum_tf", pa.int64()),
-            ("max_tf", pa.int32()),
-            ("max_boost", pa.float32()),
-            ("min_doc", pa.int64()),
-            ("max_doc", pa.int64()),
-            ("docs", pa.list_(pa.int64())),
-            ("tfs", pa.list_(pa.int32())),
-            ("boosts", pa.list_(pa.float32())),
-            ("pos", pa.list_(pa.list_(pa.int32()))),
-        ]
-    )
-
-
 def _list_view(arr) -> tuple[np.ndarray, np.ndarray]:
     """(int64 entry offsets starting at 0, flat numpy values) of a
     one-level pyarrow list array — null entries read as empty."""
@@ -1153,377 +1098,6 @@ def _list_from(offsets: np.ndarray, values):
     )
 
 
-def _pack_sorted_window(
-    schema, k, first_offset,
-    g1, g2, bucket, docs, tfs, boosts, pos_off, pos_data,
-    block_size, final,
-):
-    """Vectorized pack of one window of (hash,bucket,doc)-sorted
-    posting rows (numpy views over the Arrow batch, prepended with any
-    carried rows; ``pos_data[pos_off[j]:pos_off[j+1]]`` = posting j's
-    positions). Emits one RecordBatch of hash-keyed block rows;
-    unless ``final``, the trailing incomplete block is returned as the
-    new carry (blocks hold absolute doc indexes, so complete blocks
-    are emitted even when their run continues into the next batch).
-
-    ``k`` = carried row count (always the head of run 0);
-    ``first_offset`` = block_id offset for run 0 (continuation)."""
-    import pyarrow as pa
-
-    n = len(docs)
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    if n > 1:
-        change[1:] = (
-            (g1[1:] != g1[:-1])
-            | (g2[1:] != g2[:-1])
-            | (bucket[1:] != bucket[:-1])
-        )
-    run_starts = np.flatnonzero(change)
-    run_id = np.cumsum(change) - 1
-    pos = np.arange(n, dtype=np.int64) - run_starts[run_id]
-    starts = np.flatnonzero(change | (pos % block_size == 0))
-    bids = (pos[starts] // block_size).astype(np.int32)
-    if first_offset:
-        bids[run_id[starts] == 0] += np.int32(first_offset)
-
-    carry = None
-    cut = n
-    m = len(starts)
-    if not final:
-        key = (int(g1[-1]), int(g2[-1]), int(bucket[-1]))
-        if n - starts[-1] < block_size:  # trailing block incomplete
-            cut = int(starts[-1])
-            m -= 1
-            carry = {
-                "key": key, "bid": int(bids[-1]),
-                "docs": docs[cut:].copy(), "tfs": tfs[cut:].copy(),
-                "boosts": boosts[cut:].copy(),
-                "pos_off": (pos_off[cut:] - pos_off[cut]).copy(),
-                "pos_data": pos_data[pos_off[cut] : pos_off[n]].copy(),
-            }
-        else:  # complete — emit it, carry only the continuation point
-            carry = {
-                "key": key, "bid": int(bids[-1]) + 1,
-                "docs": docs[:0], "tfs": tfs[:0], "boosts": boosts[:0],
-                "pos_off": np.zeros(1, dtype=np.int64),
-                "pos_data": pos_data[:0],
-            }
-    if m == 0 or cut == 0:
-        return None, carry
-    starts = starts[:m]
-    ends = np.append(starts[1:], cut)
-
-    tfs_w = tfs[:cut]
-    boosts_w = boosts[:cut].astype(np.float32, copy=False)
-    bounds = np.append(starts, cut)
-    posting_pos = _list_from(
-        pos_off[: cut + 1], pa.array(pos_data[: pos_off[cut]], pa.int32())
-    )
-    rb = pa.RecordBatch.from_arrays(
-        [
-            pa.array(g1[starts], type=pa.int64()),
-            pa.array(g2[starts], type=pa.int64()),
-            pa.array(bucket[starts], type=pa.int64()),
-            pa.array(bids[:m], type=pa.int32()),
-            pa.array((ends - starts).astype(np.int32), type=pa.int32()),
-            pa.array(np.add.reduceat(tfs_w.astype(np.int64), starts), type=pa.int64()),
-            pa.array(np.maximum.reduceat(tfs_w, starts).astype(np.int32), type=pa.int32()),
-            pa.array(np.maximum.reduceat(boosts_w, starts), type=pa.float32()),
-            pa.array(docs[starts].astype(np.int64), type=pa.int64()),
-            pa.array(docs[ends - 1].astype(np.int64), type=pa.int64()),
-            _list_from(bounds, pa.array(docs[:cut], pa.int64())),
-            _list_from(bounds, pa.array(tfs_w, pa.int32())),
-            _list_from(bounds, pa.array(boosts_w, pa.float32())),
-            _list_from(bounds, posting_pos),
-        ],
-        schema=schema,
-    )
-    return rb, carry
-
-
-def _flush_carry(schema, carry, block_size):
-    """Emit the carried partial block as its own one-block batch."""
-    k = len(carry["docs"])
-    if k == 0:
-        return None
-    key = carry["key"]
-    rb, _ = _pack_sorted_window(
-        schema, k,
-        carry["bid"],
-        np.full(k, key[0], dtype=np.int64),
-        np.full(k, key[1], dtype=np.int64),
-        np.full(k, key[2], dtype=np.int64),
-        carry["docs"], carry["tfs"], carry["boosts"],
-        carry["pos_off"], carry["pos_data"],
-        block_size, final=True,
-    )
-    return rb
-
-
-def _make_arrow_packer(block_size: int):
-    """mapInArrow fn factory: walk sorted posting runs, emit packed
-    block rows. Fully vectorized — run boundaries from the two int64
-    hash columns, per-block aggregates via np.*.reduceat, list
-    payloads cut from the batch's flat value arrays by offsets. No
-    pandas, no per-row Python objects (a 64M-row mapInPandas crossing
-    boxes every token string; this path crosses Arrow buffers only)."""
-
-    def pack(batches):
-        carry = None
-        schema = _pa_block_schema()
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = dict(zip(batch.schema.names, batch.columns))
-            g1 = cols["g1"].to_numpy()
-            g2 = cols["g2"].to_numpy()
-            bucket = cols["bucket"].to_numpy()
-            docs = cols["doc_index"].to_numpy()
-            tfs = cols["tf"].to_numpy()
-            boosts = cols["boost"].to_numpy()
-            pos_off, pos_data = _list_view(cols["pos"])
-            k = 0
-            first_offset = 0
-            if carry is not None:
-                if carry["key"] == (int(g1[0]), int(g2[0]), int(bucket[0])):
-                    k = len(carry["docs"])
-                    first_offset = carry["bid"]
-                    if k:
-                        key = carry["key"]
-                        g1 = np.concatenate([np.full(k, key[0], dtype=g1.dtype), g1])
-                        g2 = np.concatenate([np.full(k, key[1], dtype=g2.dtype), g2])
-                        bucket = np.concatenate(
-                            [np.full(k, key[2], dtype=bucket.dtype), bucket]
-                        )
-                        docs = np.concatenate([carry["docs"], docs])
-                        tfs = np.concatenate([carry["tfs"], tfs])
-                        boosts = np.concatenate([carry["boosts"], boosts])
-                        clen = carry["pos_off"][-1]
-                        pos_data = np.concatenate([carry["pos_data"], pos_data])
-                        pos_off = np.concatenate(
-                            [carry["pos_off"][:-1], pos_off + clen]
-                        )
-                else:
-                    rb = _flush_carry(schema, carry, block_size)
-                    if rb is not None:
-                        yield rb
-                carry = None
-            rb, carry = _pack_sorted_window(
-                schema, k, first_offset,
-                g1, g2, bucket, docs, tfs, boosts, pos_off, pos_data,
-                block_size, final=False,
-            )
-            if rb is not None:
-                yield rb
-        if carry is not None:
-            rb = _flush_carry(schema, carry, block_size)
-            if rb is not None:
-                yield rb
-
-    return pack
-
-
-def build_blocks(
-    token_doc: DataFrame, cfg: EngineConfig, tokens: DataFrame | None = None
-) -> DataFrame:
-    """(doc_index, token, tf, pos, boost) -> packed block rows.
-
-    External **sort-merge** posting assembly (north_star): one shuffle
-    keyed (token-hash, bucket) + Spark's spill-safe external sort — no
-    collect_list hash-agg (which anti-scales under per-task agg
-    memory pressure at high thread counts). A vectorized mapInArrow
-    packer walks each sorted run (see _make_arrow_packer); only a
-    trailing incomplete block is carried across Arrow batches. Task
-    memory is bounded by one (token,bucket) group <= 2^bits postings
-    no matter how hot the token — the doc-range bucket IS the salt.
-
-    The token STRING never enters the shuffle or the Arrow crossing:
-    rows are keyed by two independent JVM-computed xxhash64 columns
-    (long sort beats string sort; serializing 40M strings into Python
-    was ~55% of the stage's CPU). The packer emits hash-keyed block
-    rows; token strings are joined back onto the ~1000x-smaller block
-    table from ``tokens`` (a cheap distinct-token source — pass the
-    nested-pruned analyzed scan; defaults to token_doc itself), then
-    rows are re-sorted by token within partitions so parquet row
-    groups keep tight token min/max for IN-list pruning. Two distinct
-    tokens colliding on BOTH 64-bit hashes (≈2^-128 birthday-paired
-    over the vocabulary) would merge runs — same risk class the run
-    detection always had.
-    """
-    block_size = cfg.posting_block_size
-    pshift = cfg.pbucket_shift
-    arranged = (
-        token_doc.withColumn(
-            "bucket", F.shiftright("doc_index", cfg.doc_bucket_bits)
-        )
-        .withColumn("g1", F.xxhash64("token"))
-        .withColumn("g2", F.xxhash64(F.lit(1), "token"))
-        .drop("token")
-        .repartition(cfg.build_partitions, "g1", "bucket")
-        .sortWithinPartitions("g1", "g2", "bucket", "doc_index")
-    )
-    packed = arranged.mapInArrow(_make_arrow_packer(block_size), BLOCK_ROW_SCHEMA)
-    tok_src = tokens if tokens is not None else token_doc.select("token")
-    tok_map = tok_src.distinct().select(
-        "token",
-        F.xxhash64("token").alias("g1"),
-        F.xxhash64(F.lit(1), "token").alias("g2"),
-    )
-    return (
-        packed.join(tok_map, ["g1", "g2"])
-        .drop("g1", "g2")
-        .select("token", *[f.name for f in BLOCK_ROW_SCHEMA.fields[2:]])
-        .withColumn("pbucket", F.shiftright("bucket", pshift))
-        .sortWithinPartitions("token", "bucket", "block_id")
-    )
-
-
-# spark-side schemas for the local-pack path: per-partition RUN rows
-# (no block_id — chunking happens at merge) and the final token-keyed
-# block rows
-RUN_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("token", T.StringType()),
-        T.StructField("bucket", T.LongType()),
-    ]
-    + [f for f in BLOCK_SCHEMA.elementType.fields if f.name != "block_id"]
-)
-TOKEN_BLOCK_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("token", T.StringType()),
-        T.StructField("bucket", T.LongType()),
-    ]
-    + list(BLOCK_SCHEMA.elementType.fields)
-)
-
-
-def _pa_token_block_schema():
-    import pyarrow as pa
-
-    return pa.schema([("token", pa.string())] + list(_pa_block_schema())[2:])
-
-
-def _make_local_run_packer(doc_bucket_bits: int, filter_fields: list[str]):
-    """mapInArrow fn factory for the MAP side of the local-pack block
-    build: consumes nested analyzed doc rows (doc_index, toks
-    list<struct>, filter columns) straight off the columnar parquet
-    scan — the cheap Arrow path; measured ~4.5x cheaper per posting
-    than crossing exploded rows out of a row pipeline — and emits one
-    RUN row per (token, bucket) per batch: all of the batch's postings
-    for that key, doc-sorted and payload-packed. Filter-set tokens
-    (``f|field|value``, tf=1, no positions) are synthesized here with
-    the same trim semantics as ``filter_token_rows``. Run rows are
-    ~100-1000x fewer than posting rows, so the posting shuffle and
-    the reduce-side Arrow crossing shrink by the same factor."""
-
-    def pack(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        hash_schema = _pa_block_schema()
-        run_schema = _pa_run_schema()
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            cols = dict(zip(b.schema.names, b.columns))
-            docs = cols["doc_index"].to_numpy()
-            toks = cols["toks"]
-            counts = pc.list_value_length(toks).fill_null(0).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            flat = toks.flatten()
-            tok_arrs = [flat.field("token")]
-            doc_parts = [np.repeat(docs, counts)]
-            tf_parts = [
-                flat.field("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-            ]
-            boost_parts = [
-                flat.field("boost").to_numpy(zero_copy_only=False).astype(np.float32)
-            ]
-            pos_arrs = [flat.field("pos")]
-            for f in filter_fields:
-                # values arrive ALREADY Spark-cast + trimmed (the
-                # caller projects F.trim(col.cast("string")) JVM-side
-                # — Arrow's cast formats non-string values differently
-                # from Spark's, e.g. 1.0 → "1" vs "1.0", which would
-                # silently break f| key parity with the query side).
-                # Array-valued fields arrive as list<string>: one f|
-                # posting per element.
-                sv = cols[f]
-                if pa.types.is_list(sv.type):
-                    fcounts = pc.list_value_length(sv).fill_null(0).to_numpy(
-                        zero_copy_only=False
-                    ).astype(np.int64)
-                    fdocs = np.repeat(docs, fcounts)
-                    sv = _one_chunk(sv.flatten())
-                else:
-                    fdocs = docs
-                keep = pc.and_kleene(pc.is_valid(sv), pc.not_equal(sv, ""))
-                idx = np.flatnonzero(
-                    keep.to_numpy(zero_copy_only=False) == True  # noqa: E712
-                )
-                if idx.size == 0:
-                    continue
-                fvals = sv.take(pa.array(idx))
-                tok_arrs.append(
-                    pc.binary_join_element_wise(
-                        pa.scalar(f"f|{f}|"), fvals, pa.scalar("")
-                    )
-                )
-                doc_parts.append(fdocs[idx])
-                tf_parts.append(np.ones(idx.size, dtype=np.int64))
-                boost_parts.append(np.zeros(idx.size, dtype=np.float32))
-                pos_arrs.append(  # filter postings carry no positions
-                    _list_from(
-                        np.zeros(idx.size + 1, dtype=np.int32),
-                        pa.array([], pa.int32()),
-                    )
-                )
-            tok_all = pa.concat_arrays(
-                [a.cast(pa.string()) for a in tok_arrs]
-            )
-            if len(tok_all) == 0:
-                continue
-            enc = tok_all.dictionary_encode()
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            dic = enc.dictionary
-            doc_all = np.concatenate(doc_parts)
-            tf_all = np.concatenate(tf_parts)
-            boost_all = np.concatenate(boost_parts)
-            pos_all = pa.concat_arrays(pos_arrs)
-            order = np.lexsort((doc_all, codes))
-            docs_s = doc_all[order]
-            pos_off, pos_data = _list_view(pos_all.take(pa.array(order)))
-            rb, _ = _pack_sorted_window(
-                hash_schema, 0, 0,
-                codes[order], codes[order],
-                docs_s >> np.int64(doc_bucket_bits),
-                docs_s, tf_all[order], boost_all[order],
-                pos_off, pos_data,
-                1 << 30, final=True,  # block_size ∞ → one row per run
-            )
-            if rb is None:
-                continue
-            tok_out = dic.take(rb.column("g1"))
-            yield pa.RecordBatch.from_arrays(
-                [tok_out.cast(pa.string()), rb.column("bucket")]
-                + [rb.column(i) for i in range(4, rb.num_columns)],
-                schema=run_schema,
-            )
-
-    return pack
-
-
-def _pa_run_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [("token", pa.string())]
-        + [f for f in _pa_block_schema() if f.name not in ("g1", "g2", "block_id")]
-    )
-
-
 def _one_chunk(col):
     """ChunkedArray | Array → single contiguous Array (pyarrow's
     combine_chunks return type differs across versions)."""
@@ -1534,159 +1108,123 @@ def _one_chunk(col):
     return col
 
 
-def _make_run_merge_packer(block_size: int):
-    """mapInArrow fn factory for the REDUCE side of the local-pack
-    block build: consumes RUN rows sorted by (token, bucket, min_doc)
-    within partitions, flattens each (token, bucket) group's runs into
-    postings, re-sorts them by doc (input partitions need not cover
-    contiguous doc ranges — file splits/merges can interleave), and
-    re-chunks through the SAME `_pack_sorted_window` machinery the
-    exploded path uses — so the final block rows are identical to
-    `build_blocks` output (asserted in tests). Groups are buffered to
-    completion before flattening (memory bound: one (token,bucket)
-    group ≤ 2^doc_bucket_bits postings)."""
-    inner = _make_arrow_packer(block_size)
+# The blocks table's columns after (token, bucket), every one nullable
+# as the Parquet files declare them. ``build_blocks`` casts its block
+# struct to this type: Spark would otherwise write the columns it can
+# prove non-null (block_id, n, the payload lists) as required fields.
+BLOCK_COLUMNS = T.StructType(
+    [
+        T.StructField("block_id", T.IntegerType()),
+        T.StructField("n", T.IntegerType()),
+        T.StructField("sum_tf", T.LongType()),
+        T.StructField("max_tf", T.IntegerType()),
+        T.StructField("max_boost", T.FloatType()),
+        T.StructField("min_doc", T.LongType()),
+        T.StructField("max_doc", T.LongType()),
+        T.StructField("docs", T.ArrayType(T.LongType())),
+        T.StructField("tfs", T.ArrayType(T.IntegerType())),
+        T.StructField("boosts", T.ArrayType(T.FloatType())),
+        T.StructField("pos", T.ArrayType(T.ArrayType(T.IntegerType()))),
+    ]
+)
 
-    def merge(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
-        out_schema = _pa_token_block_schema()
-        gid_tokens: list[str] = []
+def build_blocks(token_doc: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """(doc_index, token, tf, pos, boost) posting rows → block rows.
 
-        def flatten(t: "pa.Table"):
-            """Complete-group run rows → one doc-sorted posting batch."""
-            tok = _one_chunk(t.column("token"))
-            bucket = t.column("bucket").to_numpy()
-            n = t.column("n").to_numpy().astype(np.int64)
-            # group boundaries over sorted (token, bucket) rows
-            nr = len(n)
-            change = np.ones(nr, dtype=bool)
-            if nr > 1:
-                neq_tok = pc.not_equal(
-                    tok.slice(1), tok.slice(0, nr - 1)
-                ).to_numpy(zero_copy_only=False)
-                change[1:] = neq_tok | (bucket[1:] != bucket[:-1])
-            gstarts = np.flatnonzero(change)
-            gid0 = len(gid_tokens)
-            for i in gstarts:
-                gid_tokens.append(tok[int(i)].as_py())
-            gid_runs = gid0 + np.cumsum(change) - 1
-            docs = _list_view(t.column("docs"))[1]
-            # posting-level group / bucket columns
-            gid_post = np.repeat(gid_runs, n)
-            bucket_post = np.repeat(bucket, n)
-            # doc re-sort within groups (stable; handles interleaved
-            # doc ranges from non-contiguous map partitions)
-            o = np.lexsort((docs, gid_post))
-            order = pa.array(o)
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(gid_post[o], type=pa.int64()),
-                    pa.array(gid_post[o], type=pa.int64()),
-                    pa.array(bucket_post[o], type=pa.int64()),
-                    pa.array(docs[o], type=pa.int64()),
-                ]
-                + [
-                    _one_chunk(t.column(c)).flatten().take(order)
-                    for c in ("tfs", "boosts", "pos")
-                ],
-                names=["g1", "g2", "bucket", "doc_index", "tf", "boost", "pos"],
-            )
+    Plain Spark, no Python crossing: ``groupBy(token, bucket)`` collects
+    each group's postings, ``array_sort`` orders them by doc (the
+    struct's first field), and ``slice`` cuts the sorted list into
+    ``posting_block_size`` blocks; the block metadata comes from
+    ``size`` / ``aggregate`` / ``array_max`` / ``element_at`` over the
+    block's own lists. A ``None`` position list reads as empty, like a
+    filter posting's.
 
-        def posting_batches():
-            buf = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                t = pa.table(rb)
-                if buf is not None:
-                    t = pa.concat_tables([buf, t]).combine_chunks()
-                nr = t.num_rows
-                tok = _one_chunk(t.column("token"))
-                bucket = t.column("bucket").to_numpy()
-                last_start = 0
-                if nr > 1:
-                    neq = pc.not_equal(
-                        tok.slice(1), tok.slice(0, nr - 1)
-                    ).to_numpy(zero_copy_only=False)
-                    bounds = np.flatnonzero(neq | (bucket[1:] != bucket[:-1])) + 1
-                    last_start = int(bounds[-1]) if len(bounds) else 0
-                if last_start > 0:
-                    yield flatten(t.slice(0, last_start))
-                buf = t.slice(last_start)
-            if buf is not None and buf.num_rows:
-                yield flatten(buf)
+    ``collect_list`` runs in two phases: a partial collect in every map
+    task, so one row per (token, bucket) per task crosses the shuffle
+    (the local-pack-then-merge shape), then the final collect. No
+    repartition may sit before the ``groupBy``: it would move the
+    partial collect after the shuffle. The doc-range bucket is the
+    hot-token salt: "the" splits across buckets, so no task holds
+    more than one (token, bucket) group of ≤ 2^doc_bucket_bits
+    postings, and the blocks of a token concatenate into one globally
+    doc-ordered posting list.
 
-        # gid→token lookup built INCREMENTALLY (convert only tokens
-        # added since the last output batch — rebuilding the whole
-        # array per batch is O(groups × batches))
-        tok_chunks: list = []
-        converted = 0
-        for rb in inner(posting_batches()):
-            if len(gid_tokens) > converted:
-                tok_chunks.append(
-                    pa.array(gid_tokens[converted:], type=pa.string())
-                )
-                converted = len(gid_tokens)
-            toks = _one_chunk(
-                pa.chunked_array(tok_chunks).take(rb.column("g1"))
-            )
-            yield pa.RecordBatch.from_arrays(
-                [toks, rb.column("bucket")]
-                + [rb.column(i) for i in range(3, rb.num_columns)],
-                schema=out_schema,
-            )
-
-    return merge
+    Rows leave sorted by (pbucket, token, bucket, block_id) within each
+    partition: the pbucket-partitioned writer needs no sort of its
+    own, and every file is token-sorted, so Parquet row groups keep
+    tight token min/max for the readers' pruning.
+    """
+    bs = cfg.posting_block_size
+    posting = F.struct(
+        F.col("doc_index").alias("doc"),
+        "tf",
+        "boost",
+        F.coalesce("pos", F.array().cast("array<int>")).alias("pos"),
+    )
+    runs = (
+        token_doc.withColumn(
+            "bucket", F.shiftright("doc_index", cfg.doc_bucket_bits)
+        )
+        .groupBy("token", "bucket")
+        .agg(F.array_sort(F.collect_list(posting)).alias("run"))
+    )
+    starts = F.sequence(F.lit(0), F.size("run") - 1, F.lit(bs))
+    blocks = runs.select(
+        "token",
+        "bucket",
+        F.posexplode(
+            F.transform(starts, lambda s: F.slice("run", s + 1, bs))
+        ).alias("block_id", "blk"),
+    )
+    docs, tfs, boosts = F.col("blk.doc"), F.col("blk.tf"), F.col("blk.boost")
+    block = F.struct(
+        "block_id",
+        F.size("blk").alias("n"),
+        F.aggregate(tfs, F.lit(0).cast("long"), lambda acc, x: acc + x).alias(
+            "sum_tf"
+        ),
+        F.array_max(tfs).alias("max_tf"),
+        F.array_max(boosts).alias("max_boost"),
+        F.element_at(docs, 1).alias("min_doc"),
+        F.element_at(docs, -1).alias("max_doc"),
+        docs.alias("docs"),
+        tfs.alias("tfs"),
+        boosts.alias("boosts"),
+        F.col("blk.pos").alias("pos"),
+    ).cast(BLOCK_COLUMNS)
+    return (
+        blocks.select("token", "bucket", block.alias("b"))
+        .select(
+            "token",
+            "bucket",
+            "b.*",
+            F.shiftright("bucket", cfg.pbucket_shift).alias("pbucket"),
+        )
+        .sortWithinPartitions("pbucket", "token", "bucket", "block_id")
+    )
 
 
 def build_blocks_from_analyzed(analyzed: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Bulk-path block build: LOCAL PACK then MERGE (the classic
-    local-index/merge shape). The map side crosses nested analyzed doc
-    rows into Python straight off the columnar parquet scan and packs
-    per-batch (token, bucket) runs; only run rows travel the shuffle
-    (~100x fewer rows than raw postings); the reduce side flattens,
-    doc-sorts, and re-chunks groups into block rows identical to
-    `build_blocks` (equivalence asserted
-    in tests/test_index_build.py; golden posting-state tests cover the
-    full build). CDC batches run it too, over the re-analyzed docs
-    of their touched pbuckets (incremental.py); `build_blocks`, fed
-    exploded posting rows, is kept as the reference the equivalence
-    test compares against."""
-    from pyspark.sql.types import ArrayType
-
-    filter_fields = [f for f in cfg.filter_fields if f in analyzed.columns]
-
-    def _fcol(f):
-        # filter values normalized JVM-side (Spark cast + trim — the
-        # same ops filter_token_rows and the query-side key builder
-        # use), so the packer sees canonical strings; array-valued
-        # fields arrive as list<string> and flatten in the packer
-        if isinstance(analyzed.schema[f].dataType, ArrayType):
-            return F.transform(
-                F.col(f), lambda x: F.trim(x.cast("string"))
-            ).alias(f)
-        return F.trim(F.col(f).cast("string")).alias(f)
-
-    src = analyzed.select(
+    """Block rows of analyzed docs (bulk build and CDC batches): the
+    analyzer's per-doc token aggregates exploded into posting rows,
+    plus the ``f|`` filter postings of ``filter_token_rows``, through
+    ``build_blocks``."""
+    token_doc = analyzed.select(
+        "doc_index", F.explode("__an.toks").alias("tk")
+    ).select(
         "doc_index",
-        F.col("__an.toks").alias("toks"),
-        *[_fcol(f) for f in filter_fields],
+        F.col("tk.token").alias("token"),
+        F.col("tk.tf").alias("tf"),
+        F.col("tk.pos").alias("pos"),
+        F.col("tk.boost").alias("boost"),
     )
-    runs = src.mapInArrow(
-        _make_local_run_packer(cfg.doc_bucket_bits, filter_fields),
-        RUN_ROW_SCHEMA,
-    )
-    return (
-        runs.repartition(cfg.build_partitions, "token", "bucket")
-        .sortWithinPartitions("token", "bucket", "min_doc")
-        .mapInArrow(
-            _make_run_merge_packer(cfg.posting_block_size),
-            TOKEN_BLOCK_ROW_SCHEMA,
-        )
-        .withColumn("pbucket", F.shiftright("bucket", cfg.pbucket_shift))
-    )
+    frows = filter_token_rows(analyzed, cfg)
+    if frows is not None:
+        token_doc = token_doc.unionByName(frows)
+    return build_blocks(token_doc, cfg)
+
+
 
 
 def prefixes_from_dictionary(dictionary: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -1972,12 +1510,12 @@ class IndexBuilder:
                 self.paths.docs, "docs", partition_by="pbucket",
             )
 
-        # stage 3: posting blocks — local pack + merge off the
-        # columnar scan (doc-range bucketing = order-preserving salt;
-        # filter-set postings synthesized inside the local packer)
+        # stage 3: posting blocks — Spark's own list functions over
+        # the exploded analyzed scan plus the f| filter postings
+        # (doc-range bucketing = order-preserving salt)
         if not (resume and self._stage_done("blocks")):
             blocks = build_blocks_from_analyzed(analyzed, cfg)
-            # pack output is (token,bucket)-sorted within partitions
+            # rows are (pbucket, token)-sorted within partitions
             # already — write as-is; parquet row-group stats give token
             # min/max pruning (see BLOCKS_WRITE_OPTIONS)
             self._write(

@@ -331,8 +331,8 @@ def apply_actions(
         fileio.stage_partitions(cur.docs, stg.docs, touched_pb, "pbucket=")
         docs_part.write.mode("append").partitionBy("pbucket").parquet(stg.docs)
 
-        # rebuild the touched posting partitions (filter-set rows are
-        # synthesized inside the local packer, same as the bulk build)
+        # rebuild the touched posting partitions (f| filter postings
+        # included, same as the bulk build)
         blocks = build_blocks_from_analyzed(analyzed_new, cfg)
         fileio.stage_partitions(cur.blocks, stg.blocks, touched_pb, "pbucket=")
         blocks.write.mode("append").options(**BLOCKS_WRITE_OPTIONS).partitionBy(
@@ -344,43 +344,34 @@ def apply_actions(
         # the global fold reads only the tiny partials table. The old
         # partials stay readable at the current snapshot, so no scratch
         # materialization is needed to know the previously-present tokens)
-        changed_tokens = None  # None → unknown → full prefix rewrite
-        partials_full_rewrite = not table_exists(cur, "dict_partials")
-        if partials_full_rewrite:
-            # legacy index (pre-partials layout): one full derivation
-            # upgrades it; subsequent batches are incremental
-            partials_src = _staged_view(spark, cur, stg, "blocks", pbnames)
-        else:
-            fileio.stage_partitions(cur.dict_partials, stg.dict_partials,
-                                    touched_pb, "pbucket=")
-            partials_src = spark.read.parquet(stg.blocks).filter(
-                F.col("pbucket").isin(touched_pb)
-            )
+        fileio.stage_partitions(cur.dict_partials, stg.dict_partials,
+                                touched_pb, "pbucket=")
+        partials_src = spark.read.parquet(stg.blocks).filter(
+            F.col("pbucket").isin(touched_pb)
+        )
         # hash repartition (not range), as the bulk build: the range
         # sampler would re-run the blocks aggregation
         dict_partials_from_blocks(partials_src).repartition(
             cfg.build_partitions, "pbucket", "token"
         ).sortWithinPartitions("pbucket", "token").write.mode(
-            "overwrite" if partials_full_rewrite else "append"
+            "append"
         ).partitionBy("pbucket").parquet(stg.dict_partials)
-        if not partials_full_rewrite:
-            # read by the crossing check and the prefix refresh (three
-            # times there) — computed once
-            changed_tokens = _persist_scoped(held, (
-                read_table(spark, cur, "dict_partials")
+        # read by the crossing check and the prefix refresh (three
+        # times there) — computed once
+        changed_tokens = _persist_scoped(held, (
+            read_table(spark, cur, "dict_partials")
+            .filter(F.col("pbucket").isin(touched_pb))
+            .select("token")
+            .unionByName(
+                spark.read.parquet(stg.dict_partials)
                 .filter(F.col("pbucket").isin(touched_pb))
                 .select("token")
-                .unionByName(
-                    spark.read.parquet(stg.dict_partials)
-                    .filter(F.col("pbucket").isin(touched_pb))
-                    .select("token")
-                )
-                .distinct()
-            ))
+            )
+            .distinct()
+        ))
 
         partials_view = _staged_view(
-            spark, cur, stg, "dict_partials",
-            "full" if partials_full_rewrite else pbnames,
+            spark, cur, stg, "dict_partials", pbnames
         )
         dictionary_from_partials(partials_view).repartitionByRange(
             cfg.build_partitions, "token"
@@ -393,11 +384,7 @@ def apply_actions(
         # Zipf head by global df) — the OLD dictionary (still intact at
         # the current snapshot) against the one just written
         crossing: list[str] = []
-        if (
-            changed_tokens is not None
-            and table_exists(cur, "pairs")
-            and cfg.cdc_rebuild_pairs
-        ):
+        if table_exists(cur, "pairs"):
             old_df = read_table(spark, cur, "dictionary").select(
                 "token", F.col("df").alias("odf")
             )
@@ -427,25 +414,18 @@ def apply_actions(
         # --- pairs: rebuild touched partitions (+ partitions holding a
         # common-threshold-crossing token), never the whole corpus ------
         pairs_rewritten: set[str] | str = "full"
-        if table_exists(cur, "pairs") and cfg.cdc_rebuild_pairs:
+        if table_exists(cur, "pairs"):
             pairs_rewritten = _refresh_pairs(
                 spark, cur, stg, dict_disk, partials_view, analyzed_new,
                 touched_pb, crossing, cfg, fileio,
             )
-        # (cdc_rebuild_pairs=False → pairs simply absent from the new
-        # snapshot; the engine degrades to pairs=None expansion pruning)
 
         # refresh meta (n_docs / avgdl) incrementally + lineage record
         meta = json.loads(cur.meta.read_text())
-        if "sum_dl" in meta:
-            new = new_stats.get
-            old = [pb_stats[pb] for pb in touched_pb if pb in pb_stats]
-            n_docs = meta["n_docs"] - sum(int(r["cnt"]) for r in old) + int(new["cnt"])
-            sum_dl = meta["sum_dl"] - sum(int(r["sdl"]) for r in old) + int(new["sdl"])
-        else:  # legacy meta: one full single-column scan re-baselines it
-            docs_now = _staged_view(spark, cur, stg, "docs", pbnames)
-            n_docs = docs_now.count()
-            sum_dl = int(docs_now.agg(F.sum("dl")).collect()[0][0] or 0)
+        new = new_stats.get
+        old = [pb_stats[pb] for pb in touched_pb if pb in pb_stats]
+        n_docs = meta["n_docs"] - sum(int(r["cnt"]) for r in old) + int(new["cnt"])
+        sum_dl = meta["sum_dl"] - sum(int(r["sdl"]) for r in old) + int(new["sdl"])
         meta["n_docs"] = int(n_docs)
         meta["sum_dl"] = int(sum_dl)
         meta["avgdl"] = float(sum_dl) / max(n_docs, 1)
@@ -466,7 +446,7 @@ def apply_actions(
         stg.write_manifest(cur, {
             "docs": pbnames,
             "blocks": pbnames,
-            "dict_partials": "full" if partials_full_rewrite else pbnames,
+            "dict_partials": pbnames,
             "dictionary": "full",
             "prefixes": pfx_rewritten,
             "pairs": pairs_rewritten,
@@ -490,10 +470,10 @@ def _refresh_prefixes(
     cur: IndexPaths,
     stg: IndexPaths,
     dict_disk: DataFrame,
-    changed_tokens: DataFrame | None,
+    changed_tokens: DataFrame,
     cfg: EngineConfig,
     fileio: FileIO,
-) -> set[str] | str:
+) -> set[str]:
     """Stage the prefix table for the next snapshot: hash buckets
     holding no changed token are shared (hardlink or manifest
     reference); buckets with changed tokens are rewritten as
@@ -501,17 +481,8 @@ def _refresh_prefixes(
     tokens' freshly derived rows. A bucket whose every token vanished
     is simply not staged — no removal from any live path, and no
     read-from/overwrite-to-same-path cycle (reads come from ``cur``,
-    writes go to ``stg``). Returns the rewritten partition names (or
-    "full") for the snapshot manifest."""
-    # a legacy flat (unpartitioned) table has the single entry ""
-    legacy = "" in cur.table_entries("prefixes")
-    if legacy or changed_tokens is None:
-        prefixes_from_dictionary(dict_disk, cfg).repartitionByRange(
-            cfg.build_partitions, "pfx_bucket", "prefix"
-        ).sortWithinPartitions("pfx_bucket", "prefix").write.mode(
-            "overwrite"
-        ).partitionBy("pfx_bucket").parquet(stg.prefixes)
-        return "full"
+    writes go to ``stg``). Returns the rewritten partition names for
+    the snapshot manifest."""
     buckets = [
         r["b"]
         for r in changed_tokens.select(
@@ -554,7 +525,7 @@ def _refresh_pairs(
     crossing: list[str],
     cfg: EngineConfig,
     fileio: FileIO,
-) -> set[str] | str:
+) -> set[str]:
     """Stage the pair table's next snapshot: untouched pbucket
     partitions shared (hardlink or manifest reference), touched ones
     re-derived from the batch's ``analyzed`` rows (which hold every
@@ -562,12 +533,10 @@ def _refresh_pairs(
     token that crossed the common threshold this batch re-derived
     from its staged blocks. A partition rebuilt to zero pairs is
     simply not written — the stale-dir hazard of in-place dynamic
-    overwrite cannot occur. Returns the rebuilt partition names (or
-    "full") for the snapshot manifest."""
-    # a legacy flat (unpartitioned) table has the single entry ""
-    legacy = "" in cur.table_entries("pairs")
+    overwrite cannot occur. Returns the rebuilt partition names for
+    the snapshot manifest."""
     rebuild = set(touched_pb)
-    if not legacy and crossing:
+    if crossing:
         rebuild.update(
             r["pbucket"]
             for r in partials_view
@@ -577,29 +546,22 @@ def _refresh_pairs(
             .collect()
         )
 
-    def staged_blocks():
-        return _staged_view(
+    fileio.stage_partitions(cur.pairs, stg.pairs, rebuild, "pbucket=")
+    # touched pbuckets: each doc's distinct tokens are already in
+    # its analyzed row — no block unpack, no regroup-by-doc shuffle
+    pairs = pairs_from_analyzed(analyzed, dict_disk, cfg)
+    # a crossing token's other pbuckets were not analyzed this
+    # batch: unpack their blocks (read through the staged VIEW, so
+    # they resolve by reference too)
+    extra = sorted(rebuild - set(touched_pb))
+    if extra:
+        staged_blocks = _staged_view(
             spark, cur, stg, "blocks", {f"pbucket={v}" for v in touched_pb}
         )
-
-    if legacy:
-        pairs = pairs_from_blocks(staged_blocks(), dict_disk, cfg)
-        mode = "overwrite"
-    else:
-        fileio.stage_partitions(cur.pairs, stg.pairs, rebuild, "pbucket=")
-        # touched pbuckets: each doc's distinct tokens are already in
-        # its analyzed row — no block unpack, no regroup-by-doc shuffle
-        pairs = pairs_from_analyzed(analyzed, dict_disk, cfg)
-        # a crossing token's other pbuckets were not analyzed this
-        # batch: unpack their blocks (read through the staged VIEW, so
-        # they resolve by reference too)
-        extra = sorted(rebuild - set(touched_pb))
-        if extra:
-            pairs = pairs.unionByName(pairs_from_blocks(
-                staged_blocks().filter(F.col("pbucket").isin(extra)),
-                dict_disk, cfg,
-            ))
-        mode = "append"
+        pairs = pairs.unionByName(pairs_from_blocks(
+            staged_blocks.filter(F.col("pbucket").isin(extra)),
+            dict_disk, cfg,
+        ))
     # HASH repartition (not range): the range sampler re-executes the
     # pair-expansion child — the measured 2× of the bulk stage; files
     # stay (token_a, token_b)-sorted within partitions for row-group
@@ -607,7 +569,7 @@ def _refresh_pairs(
     pairs.repartition(
         cfg.build_partitions, "pbucket", "token_a"
     ).sortWithinPartitions("pbucket", "token_a", "token_b").write.mode(
-        mode
+        "append"
     ).partitionBy("pbucket").parquet(stg.pairs)
     # a pair table emptied of every partition has no readable schema
     # left — drop the STAGED dir (never a live path); the engine
@@ -619,7 +581,7 @@ def _refresh_pairs(
         q.name.startswith("pbucket=") for q in Path(stg.pairs).iterdir()
     ):
         shutil.rmtree(stg.pairs, ignore_errors=True)
-    return "full" if legacy else {f"pbucket={v}" for v in rebuild}
+    return {f"pbucket={v}" for v in rebuild}
 
 
 def stream_transcripts(

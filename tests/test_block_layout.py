@@ -48,19 +48,22 @@ def _rows(conv: str, n: int, shift: int):
     ]
 
 
-def _blocks_state(paths: IndexPaths) -> tuple[pa.Table, set]:
-    """The snapshot's blocks rows, and the encodings of the ``docs``
-    and ``pos`` values in every row group of its files."""
+def _blocks_state(paths: IndexPaths) -> tuple[pa.Table, set, list]:
+    """The snapshot's blocks rows, the encodings of the ``docs`` and
+    ``pos`` values in every row group of its files, and the ``token``
+    column of each file."""
     ds = open_dataset(paths.pin(), "blocks")
     enc = set()
+    file_tokens = []
     for f in ds.files:
+        file_tokens.append(pq.read_table(f, columns=["token"])["token"].to_pylist())
         md = pq.ParquetFile(f).metadata
         for i in range(md.num_row_groups):
             for j in range(md.num_columns):
                 col = md.row_group(i).column(j)
                 if col.path_in_schema.split(".")[0] in ("docs", "pos"):
                     enc.add(col.encodings)
-    return ds.to_table(), enc
+    return ds.to_table(), enc, file_tokens
 
 
 @pytest.fixture(scope="module")
@@ -88,8 +91,12 @@ def states(spark, tmp_index_root):
 
 @pytest.mark.parametrize("state", ["bulk", "cdc"])
 def test_block_rows_agree_with_their_metadata(states, state):
-    tbl, encodings = states[state]
+    tbl, encodings, file_tokens = states[state]
     assert not any(pa.types.is_binary(f.type) for f in tbl.schema)
+    # every file is token-sorted, so row-group token min/max prune reads
+    assert len(file_tokens) > 1
+    for toks in file_tokens:
+        assert toks == sorted(toks)
     # doc ids and positions are delta-packed, not dictionary-coded
     assert encodings == {("DELTA_BINARY_PACKED",)}
     rows = tbl.to_pylist()

@@ -324,62 +324,6 @@ def _rowset(df, cols):
     return {tuple(r) for r in df.select(*cols).collect()}
 
 
-def test_legacy_layout_batch_is_exact(spark, cfg, tmp_path):
-    """An index from before the per-pbucket layouts — no dict_partials
-    table, a pair table without pbucket partitions, meta without
-    sum_dl — takes a batch through the full-derivation paths and
-    comes out exact, in the current layout."""
-    import shutil
-
-    from addok_spark.index.build import (
-        dict_partials_from_blocks,
-        dictionary_from_blocks,
-        pairs_from_blocks,
-    )
-
-    paths = build_index(spark, _bigger_corpus(spark), cfg,
-                        str(tmp_path / "idx_legacy"))
-    shutil.rmtree(paths.dict_partials)
-    flat = spark.createDataFrame(
-        spark.read.parquet(paths.pairs).select("token_a", "token_b")
-        .distinct().toPandas()
-    )
-    shutil.rmtree(paths.pairs)
-    flat.write.parquet(paths.pairs)
-    meta = json.loads(paths.meta.read_text())
-    del meta["sum_dl"]
-    paths.meta.write_text(json.dumps(meta))
-
-    changes = spark.createDataFrame(
-        [
-            ("conv-001", 0, "user", "alpha tok001 REVISED omega", None, 0.1, "index"),
-            ("conv-900", 0, "user", "alpha brand new omega", None, 0.1, "index"),
-            ("conv-002", 0, "user", None, None, 0.1, "delete"),
-        ],
-        "conv_id string, turn_idx int, role string, text string,"
-        " tool string, importance double, _action string",
-    )
-    apply_actions(spark, paths, changes, cfg)
-    blocks = spark.read.parquet(paths.blocks)
-    dictionary = spark.read.parquet(paths.dictionary)
-    dcols = ["token", "df", "cf", "max_tf", "max_boost"]
-    assert _rowset(dictionary, dcols) == _rowset(
-        dictionary_from_blocks(blocks), dcols
-    )
-    pcols = ["pbucket"] + dcols
-    assert _rowset(spark.read.parquet(paths.dict_partials), pcols) == _rowset(
-        dict_partials_from_blocks(blocks), pcols
-    )
-    pair_cols = ["pbucket", "token_a", "token_b"]
-    assert _rowset(spark.read.parquet(paths.pairs), pair_cols) == _rowset(
-        pairs_from_blocks(blocks, dictionary, cfg), pair_cols
-    )
-    docs = spark.read.parquet(paths.docs)
-    meta = json.loads(paths.meta.read_text())
-    assert meta["n_docs"] == docs.count() == 24
-    assert meta["sum_dl"] == docs.agg(F.sum("dl")).collect()[0][0]
-
-
 def test_common_threshold_crossing_rebuilds_pairs_exactly(spark, tmp_path):
     """A token whose df crosses the common threshold must drop out of
     (or enter) the pair table in ALL partitions, not only the touched

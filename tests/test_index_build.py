@@ -204,19 +204,25 @@ def test_vectorized_analyzer_equals_pandas_udf(spark, tiny_corpus):
 
 
 def test_local_pack_blocks_equal_exploded_path(spark, built, tiny_cfg):
-    """The local-pack+merge bulk path must emit block rows
-    identical to the exploded sort-merge path (`build_blocks`) —
-    same grouping, same chunking, same payload lists — including f|
-    filter postings, multi-block runs (block_size=2) and multi-bucket
-    salting (doc_bucket_bits=2)."""
+    """The Spark block build over analyzed docs must emit exactly the
+    block rows of the per-group reference `_pack_group` over the same
+    postings (the analyzer's exploded token entries plus the f| filter
+    rows), grouped by (token, bucket) and doc-sorted — including f|
+    filter postings, multi-block runs and multi-bucket salting (two
+    docs per bucket, one posting per block)."""
+    import dataclasses
+    from itertools import groupby
+
+    import numpy as np
     from pyspark.sql import functions as F
 
     from addok_spark.index.build import (
-        build_blocks,
+        _pack_group,
         build_blocks_from_analyzed,
         filter_token_rows,
     )
 
+    cfg = dataclasses.replace(tiny_cfg, doc_bucket_bits=1, posting_block_size=1)
     analyzed = spark.read.parquet(str(Path(built.root) / "_analyzed"))
     token_doc = analyzed.select(
         "doc_index", F.explode("__an.toks").alias("tk")
@@ -227,23 +233,35 @@ def test_local_pack_blocks_equal_exploded_path(spark, built, tiny_cfg):
         F.col("tk.pos").alias("pos"),
         F.col("tk.boost").alias("boost"),
     )
-    frows = filter_token_rows(analyzed, tiny_cfg)
-    if frows is not None:
-        token_doc = token_doc.unionByName(frows)
+    postings = sorted(
+        (r.token, r.doc_index >> cfg.doc_bucket_bits, r.doc_index,
+         r.tf, r.boost, r.pos)
+        for r in token_doc.unionByName(
+            filter_token_rows(analyzed, cfg)
+        ).collect()
+    )
+    want = {}
+    for (tok, bucket), grp in groupby(postings, key=lambda p: p[:2]):
+        g = list(grp)
+        for blk in _pack_group(
+            tok, bucket,
+            np.array([p[2] for p in g]), np.array([p[3] for p in g]),
+            np.array([p[4] for p in g]), [p[5] for p in g],
+            cfg.posting_block_size,
+        ):
+            want[(tok, bucket, blk["block_id"])] = blk
 
-    def key(r):
-        return (r.token, r.bucket, r.block_id)
-
-    old = {key(r): r.asDict() for r in build_blocks(token_doc, tiny_cfg).collect()}
-    new = {
-        key(r): r.asDict()
-        for r in build_blocks_from_analyzed(analyzed, tiny_cfg).collect()
-    }
-    assert set(old) == set(new)
-    assert any(r["token"].startswith("f|") for r in new.values())
-    assert max(r["block_id"] for r in new.values()) > 0  # multi-block runs
-    for k, r in old.items():
-        assert new[k] == r, k
+    got = {}
+    for r in build_blocks_from_analyzed(analyzed, cfg).collect():
+        row = r.asDict()
+        assert row.pop("pbucket") == row["bucket"] >> cfg.pbucket_shift
+        got[(r.token, r.bucket, r.block_id)] = row
+    assert set(got) == set(want)
+    assert any(k[0].startswith("f|") for k in got)
+    assert max(k[2] for k in got) > 0  # multi-block runs
+    assert len({k[1] for k in got}) > 1  # multi-bucket salting
+    for k, r in want.items():
+        assert got[k] == r, k
 
 
 def test_local_pack_filter_cast_parity_numeric_field(spark, tmp_index_root):

@@ -74,6 +74,33 @@ def test_round_pushes_token_infilter_into_blocks_scan(spark, tmp_index_root):
     assert "In(token" in plan or "EqualTo(token" in plan
 
 
+def test_block_build_is_plain_spark_with_map_side_collect(spark, tmp_path):
+    """The block build runs no Python past the analyzer, and its
+    collect_list runs in two phases: a partial collect below the
+    shuffle (one row per key per map task crosses it), the final one
+    above."""
+    from addok_spark.index.build import analyze_docs, build_blocks_from_analyzed
+
+    cfg = EngineConfig(build_partitions=2)
+    docs = spark.createDataFrame(
+        [("c", 0, "user", "hello world", None, 0.1, 0),
+         ("c", 1, "tool", "more words", "bash", 0.2, 1)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, importance double, doc_index long",
+    )
+    analyze_docs(docs, cfg).write.parquet(str(tmp_path / "analyzed"))
+    plan = _plan(build_blocks_from_analyzed(
+        spark.read.parquet(str(tmp_path / "analyzed")), cfg
+    ))
+    for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    lines = plan.splitlines()
+    ex = next(i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l)
+    assert any("partial_collect_list" in l for l in lines[ex + 1:]), plan
+    assert not any("partial_collect_list" in l for l in lines[:ex]), plan
+    assert any("collect_list" in l for l in lines[:ex]), plan
+
+
 def test_pbucket_partition_pruning(spark, tmp_index_root):
     cfg = EngineConfig(
         build_partitions=4, doc_bucket_bits=2, pbucket_shift=1,
