@@ -1154,6 +1154,16 @@ def build_blocks(token_doc: DataFrame, cfg: EngineConfig) -> DataFrame:
     partition: the pbucket-partitioned writer needs no sort of its
     own, and every file is token-sorted, so Parquet row groups keep
     tight token min/max for the readers' pruning.
+
+    Measured against the Arrow run packers this replaced (perfbench,
+    300 conversations ≈ 12k turns, local[4] on a shared 4-core VM):
+    over ten interleaved pairs per workload the whole build's
+    ``build_turns_per_cpu_s`` moved −1.7 % (``spark_batch``) and
+    −4.1 % (``serve_cdc``); in one traced run the Python workers of
+    the build got 2.6 MB instead of 16.7 MB (only the analyzer's
+    input is left), and the shuffle wrote 19.5 MB instead of 19.7 MB.
+    The collect_list aggregate did not anti-scale there; the blocks
+    stage alone took 3.6 s of wall time against 2.7 s.
     """
     bs = cfg.posting_block_size
     posting = F.struct(
