@@ -1162,8 +1162,10 @@ def build_blocks(token_doc: DataFrame, cfg: EngineConfig) -> DataFrame:
     −4.1 % (``serve_cdc``); in one traced run the Python workers of
     the build got 2.6 MB instead of 16.7 MB (only the analyzer's
     input is left), and the shuffle wrote 19.5 MB instead of 19.7 MB.
-    The collect_list aggregate did not anti-scale there; the blocks
-    stage alone took 3.6 s of wall time against 2.7 s.
+    The blocks stage alone costs more: in one quiet traced
+    ``serve_cdc`` run it took 3.6 s of wall time against 2.7 s, and
+    its 1→4-core scaling efficiency read 0.35 against 0.40. Thread
+    counts above 4 were not measured.
     """
     bs = cfg.posting_block_size
     posting = F.struct(

@@ -97,7 +97,7 @@ def _assert_same(got, ref):
 def test_builder_matches_pack_group(spark):
     rows = _make_rows()
     ref = _reference_blocks(rows)
-    # the input covers what the cases below name
+    # the input holds every case the module docstring names
     assert any(r["block_id"] > 0 for r in ref)  # runs > block size
     assert any(r["block_id"] == 0 and r["n"] < BLOCK_SIZE for r in ref)
     buckets: dict[str, set] = {}
