@@ -16,13 +16,13 @@ so it cannot serve as that oracle.)
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .pipelines import _mem, ann, dedup, retrieval, sampling, textstats
+from .persist import scoped, shared
+from .pipelines import ann, dedup, retrieval, sampling, textstats
+from .pipelines.retrieval import B, K1, bm25_term
 
 # ---------------------------------------------------------------------------
 # shared fragments
@@ -53,7 +53,6 @@ def _tok(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BM25_QUERY_TOKENS = ["data", "table", "query"]
-K1, B = 1.2, 0.75
 
 # ---------------------------------------------------------------------------
 # fulltext core (SURVEY.md §2.2-2.5)
@@ -125,13 +124,13 @@ SELECT token, doc_id, tf, rn FROM r WHERE rn <= 3
 
 def q_bm25_topk(spark, sf_dir):
     """Flagship: BM25 top-10 for a fixed query (Q1+R9/R10 as one
-    declarative plan: posting join → idf/tf-norm → top-k)."""
+    declarative plan: posting join → ``retrieval.bm25_term()`` → top-k)."""
     # ONE tokenize pass: persist the per-doc token ARRAYS (5-50×
     # smaller than the exploded rows), derive dl shuffle-free as the
     # array size (identical to counting the exploded tokens; the
     # dl>0 filter reproduces explode dropping token-less docs), and
     # explode only for the query-token tf aggregate
-    toks = _mem.shared(
+    toks = shared(
         _docs(spark, sf_dir).select(
             "doc_id", dedup.tokens_col(F.col("text")).alias("ts")
         )
@@ -154,22 +153,7 @@ def q_bm25_topk(spark, sf_dir):
         tf.join(F.broadcast(df), "token")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "ts",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            )
-            * (
-                F.col("tf") * F.lit(K1 + 1.0)
-                / (
-                    F.col("tf")
-                    + F.lit(K1)
-                    * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-                )
-            ),
-        )
+        .withColumn("ts", bm25_term())
     )
     return (
         terms.groupBy("doc_id")
@@ -293,10 +277,10 @@ def q_cooccurrence_pairs(spark, sf_dir):
     # tf feeds the df filter and the semi-join source; t is read from
     # both sides of the self-join — persist each so the tokenize and
     # the distinct run once per invocation
-    tf = _mem.shared(q_tokenize_tf(spark, sf_dir))
+    tf = shared(q_tokenize_tf(spark, sf_dir))
     d = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     rare = d.filter((F.col("df") >= 2) & (F.col("df") <= 400)).select("token")
-    t = _mem.shared(
+    t = shared(
         tf.join(rare, "token", "left_semi").select("doc_id", "token").distinct()
     )
     a, b = t.alias("a"), t.alias("b")
@@ -378,7 +362,7 @@ def q_tfidf_vectors(spark, sf_dir):
     of a retrieval/embedding pipeline), smooth idf = ln(N/df) + 1."""
     # tf feeds the doc count, the df aggregate and the weight join —
     # persist so the tokenize runs once per invocation
-    tf = _mem.shared(q_tokenize_tf(spark, sf_dir))
+    tf = shared(q_tokenize_tf(spark, sf_dir))
     # n_docs via a broadcast 1-row aggregate cross join — ONE job for
     # the whole query instead of a separate count() action per call
     n = tf.agg(
@@ -2246,23 +2230,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 
-def _entry(fn: Callable) -> Callable:
-    """Scope pipeline-internal persisted intermediates (_mem.shared)
-    to one query invocation: clear whatever a PREVIOUS query left
-    behind before building this one, so nothing is ever served from a
-    prior run's cache and storage memory stays bounded to one query's
-    working set."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _mem.clear_tracked()
-        return fn(spark, sf_dir)
-
-    run.__name__ = fn.__name__
-    run.__doc__ = fn.__doc__
-    return run
-
-
-QUERIES = {name: _entry(fn) for name, fn in QUERIES.items()}
+# each call persists its shared() intermediates in its own scope,
+# released when the DataFrame it returns is garbage-collected
+QUERIES = {name: scoped(fn) for name, fn in QUERIES.items()}
 
 ORACLES: dict[str, str] = {
     "semantic_topk": SQL_SEMANTIC_TOPK,

@@ -47,13 +47,13 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import EngineConfig
 from ..functions.text import edge_ngrams_col
+from ..persist import scope, shared
 
 # Parquet writer settings of the blocks table (bulk build and CDC).
 # A token read decodes every row group whose token min/max holds the
@@ -430,16 +430,15 @@ def table_exists(paths: "IndexPaths", table: str) -> bool:
 
 
 def _parquet_rows(path: str) -> int:
-    """Row count from parquet footers (driver-side, no Spark job)."""
+    """Row count from parquet footers (driver-side, no Spark job). A
+    footer that cannot be read raises: the docs stage's count becomes
+    ``meta.json``'s ``n_docs``, the BM25 idf input."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for p in Path(path).rglob("*.parquet"):
-        try:
-            total += pq.ParquetFile(p).metadata.num_rows
-        except Exception:
-            pass
-    return total
+    return sum(
+        pq.ParquetFile(p).metadata.num_rows
+        for p in Path(path).rglob("*.parquet")
+    )
 
 
 def assign_doc_ids(df: DataFrame, partitions: int) -> DataFrame:
@@ -449,12 +448,13 @@ def assign_doc_ids(df: DataFrame, partitions: int) -> DataFrame:
     per-partition sort, count rows per partition (O(P) driver state),
     then attach ``offset[pid] + arange`` per partition. Replaces the
     reference's Redis INCR id allocator (``addok/db.py:20-22``) with
-    an order-preserving distributed equivalent.
+    an order-preserving distributed equivalent. The sorted input is
+    read twice (counts, then ids), so it is ``shared()``: the caller's
+    persistence scope holds it.
     """
-    sdf = (
+    sdf = shared(
         df.repartitionByRange(partitions, "conv_id", "turn_idx")
         .sortWithinPartitions("conv_id", "turn_idx")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     counts = (
         sdf.groupBy(F.spark_partition_id().alias("pid"))
@@ -472,7 +472,7 @@ def assign_doc_ids(df: DataFrame, partitions: int) -> DataFrame:
     # doc_index computed entirely JVM-side: monotonically_increasing_id
     # encodes (partition_id << 33) | row-seq-within-partition, so
     # seq = mid - (pid << 33); no Python crossing in the hot path.
-    with_ids = (
+    return (
         sdf.withColumn("pid", F.spark_partition_id())
         .withColumn("__mid", F.monotonically_increasing_id())
         .join(F.broadcast(off_df), "pid")
@@ -483,7 +483,6 @@ def assign_doc_ids(df: DataFrame, partitions: int) -> DataFrame:
         )
         .drop("pid", "__mid", "__offset")
     )
-    return with_ids, sdf
 
 
 DOC_TOKENS_TYPE = T.StructType(
@@ -1028,9 +1027,9 @@ def _pack_group(
     return out
 
 
-def filter_token_rows(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Filter-set postings: one ``f|name|value`` token row per doc per
-    filterable column (≙ the reference's ``f|`` Redis sets,
+def filter_postings(docs: DataFrame, cfg: EngineConfig) -> list[Column]:
+    """Per filterable column, each doc's ``f|name|value`` postings as a
+    list typed like ``__an.toks`` (≙ the reference's ``f|`` Redis sets,
     ``addok/helpers/keys.py:16-17``, ``helpers/index.py:180-195``).
     Stored in the SAME blocks table as word postings (tf=1, boost=0,
     empty positions), so query filters ride the normal intersection
@@ -1039,41 +1038,33 @@ def filter_token_rows(docs: DataFrame, cfg: EngineConfig) -> DataFrame:
     appear in analyzed tokens, so the namespace is collision-free."""
     from pyspark.sql.types import ArrayType
 
-    fields = [f for f in cfg.filter_fields if f in docs.columns]
-    if not fields:
-        return None
-
-    def _vals(f):
+    def _postings(f):
+        dtype = docs.schema[f].dataType
         # ARRAY-valued filter fields index one f| posting per element
         # (≙ the reference's list-valued doc fields,
-        # tests/test_search.py:436-445 test_filter_indexes_multiple_values)
-        if isinstance(docs.schema[f].dataType, ArrayType):
-            return F.explode(F.col(f)).alias("__raw")
-        return F.col(f).alias("__raw")
-
-    # values TRIMMED (empty-after-trim dropped) — the exact
-    # normalization the query side applies when building f| keys and
-    # the post-score predicate, so a value carrying stray whitespace
-    # can never silently fail to match any filter
-    parts = [
-        docs.select("doc_index", _vals(f))
-        .select(
-            "doc_index", F.trim(F.col("__raw").cast("string")).alias("__v")
+        # tests/test_search.py:436-445 test_filter_indexes_multiple_values);
+        # a null list holds none, and must not null the concatenation
+        vals = (
+            F.coalesce(F.col(f), F.array().cast(dtype))
+            if isinstance(dtype, ArrayType)
+            else F.array(F.col(f))
         )
-        .filter(F.col("__v").isNotNull() & (F.col("__v") != ""))
-        .select(
-            "doc_index",
-            F.concat(F.lit(f"f|{f}|"), F.col("__v")).alias("token"),
+        # values TRIMMED (empty-after-trim dropped) — the exact
+        # normalization the query side applies when building f| keys and
+        # the post-score predicate, so a value carrying stray whitespace
+        # can never silently fail to match any filter
+        kept = F.filter(
+            F.transform(vals, lambda v: F.trim(v.cast("string"))),
+            lambda v: v.isNotNull() & (v != ""),
+        )
+        return F.transform(kept, lambda v: F.struct(
+            F.concat(F.lit(f"f|{f}|"), v).alias("token"),
             F.lit(1).alias("tf"),
             F.array().cast("array<int>").alias("pos"),
             F.lit(0.0).cast("float").alias("boost"),
-        )
-        for f in fields
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        ))
+
+    return [_postings(f) for f in cfg.filter_fields if f in docs.columns]
 
 
 def _list_view(arr) -> tuple[np.ndarray, np.ndarray]:
@@ -1218,12 +1209,15 @@ def build_blocks(token_doc: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 
 def build_blocks_from_analyzed(analyzed: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Block rows of analyzed docs (bulk build and CDC batches): the
-    analyzer's per-doc token aggregates exploded into posting rows,
-    plus the ``f|`` filter postings of ``filter_token_rows``, through
-    ``build_blocks``."""
+    """Block rows of analyzed docs (bulk build and CDC batches): each
+    doc's ``__an.toks`` and ``filter_postings`` lists, concatenated in
+    one projection of one scan and exploded once into posting rows,
+    through ``build_blocks``."""
     token_doc = analyzed.select(
-        "doc_index", F.explode("__an.toks").alias("tk")
+        "doc_index",
+        F.explode(
+            F.concat(F.col("__an.toks"), *filter_postings(analyzed, cfg))
+        ).alias("tk"),
     ).select(
         "doc_index",
         F.col("tk.token").alias("token"),
@@ -1231,12 +1225,7 @@ def build_blocks_from_analyzed(analyzed: DataFrame, cfg: EngineConfig) -> DataFr
         F.col("tk.pos").alias("pos"),
         F.col("tk.boost").alias("boost"),
     )
-    frows = filter_token_rows(analyzed, cfg)
-    if frows is not None:
-        token_doc = token_doc.unionByName(frows)
     return build_blocks(token_doc, cfg)
-
-
 
 
 def prefixes_from_dictionary(dictionary: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -1488,20 +1477,22 @@ class IndexBuilder:
 
         # stage 1: dense ids + per-doc analysis → ONE scratch parquet
         # (doc columns + nested token aggregates + dl). Intermediates
-        # go to parquet, NOT .persist(): disk-backed stage checkpoints
+        # go to parquet, not the Spark cache: disk-backed stage checkpoints
         # are what makes the build resumable AND avoid the in-memory
         # cache contention that anti-scaled at high thread counts
         # (measured: cached pipeline 2× slower on local[32] than
         # local[8]; checkpointed stages scale).
         if not (resume and self._stage_done("analyzed")):
-            docs, cached = assign_doc_ids(
-                enforce_field_nulls(transcripts, cfg), cfg.build_partitions
-            )
-            if "importance" not in docs.columns:
-                docs = docs.withColumn("importance", F.lit(0.0))
-            analyzed = analyze_docs(docs, cfg)
-            self._write(analyzed, scratch, "analyzed", count_rows=False)
-            cached.unpersist()
+            # the id assigner's sorted input is released when the write
+            # ends, a failed write included
+            with scope():
+                docs = assign_doc_ids(
+                    enforce_field_nulls(transcripts, cfg), cfg.build_partitions
+                )
+                if "importance" not in docs.columns:
+                    docs = docs.withColumn("importance", F.lit(0.0))
+                analyzed = analyze_docs(docs, cfg)
+                self._write(analyzed, scratch, "analyzed", count_rows=False)
 
         analyzed = spark.read.parquet(scratch)
 

@@ -39,13 +39,14 @@ from __future__ import annotations
 
 import json
 import shutil
-from contextlib import ExitStack
 from pathlib import Path
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
+from ..persist import scope, shared
 from .build import (
     BLOCKS_WRITE_OPTIONS,
     IndexPaths,
@@ -66,6 +67,11 @@ from .build import (
 from .fileio import FileIO, LocalFileIO
 
 
+# the relations a batch reads more than once are persisted at
+# DataFrame.persist()'s default level, deserialized in memory
+_CDC_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
+
+
 def _with_pbucket(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     return df.withColumn(
         "pbucket",
@@ -79,14 +85,6 @@ def _staged_view(spark, cur: IndexPaths, stg: IndexPaths, table: str,
     the new manifest will record for it (see ``IndexPaths.next_entries``),
     read through the same resolver as any published table."""
     return read_entries(spark, stg.root, stg.next_entries(cur, table, rewritten))
-
-
-def _persist_scoped(held: ExitStack, df: DataFrame) -> DataFrame:
-    """Persist ``df`` for the rest of the batch: ``held`` unpersists it
-    on every way out of ``apply_actions``, a failed write included."""
-    df = df.persist()
-    held.callback(df.unpersist)
-    return df
 
 
 def _last_action_per_key(changes: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -207,7 +205,7 @@ def apply_actions(
     docs = read_table(spark, cur, "docs")
     keys = ["conv_id", "turn_idx"]
     shift = cfg.doc_bucket_bits + cfg.pbucket_shift
-    with ExitStack() as held:
+    with scope():
         # the change set resolved ONCE: every key's last action with its
         # current doc_index (null → a key the index does not hold). Counts,
         # touched pbuckets, id assignment and the survivors anti-join all
@@ -217,8 +215,8 @@ def apply_actions(
         matched = docs.select(*keys, "doc_index").join(
             F.broadcast(keyed.select(*keys)), keys, "left_semi"
         )
-        resolved = _persist_scoped(
-            held, keyed.join(F.broadcast(matched), keys, "left")
+        resolved = shared(
+            keyed.join(F.broadcast(matched), keys, "left"), _CDC_LEVEL
         )
         is_del = F.col("_action") == "delete"
         counts = resolved.agg(
@@ -268,9 +266,7 @@ def apply_actions(
             # global window — id assignment must not serialize through
             # one task), offset past the existing id space
             parts = max(1, min(cfg.build_partitions, n_new // 50_000 + 1))
-            assigned, cached_ids = assign_doc_ids(new_rows, parts)
-            held.callback(cached_ids.unpersist)
-            new_rows = assigned.withColumn(
+            new_rows = assign_doc_ids(new_rows, parts).withColumn(
                 "doc_index", F.col("doc_index") + F.lit(max_id + 1)
             )
         else:
@@ -309,7 +305,7 @@ def apply_actions(
         # analyzer's own counter, and the docs, blocks and touched pairs
         # all read these analyzed rows — no second analysis pass, no dl
         # groupBy, no block unpack for the pair refresh
-        analyzed_new = _persist_scoped(held, analyze_docs(new_docs, cfg))
+        analyzed_new = shared(analyze_docs(new_docs, cfg), _CDC_LEVEL)
         docs_part = _with_pbucket(
             analyzed_new.withColumn("dl", F.col("__an.dl")).drop("__an"), cfg
         )
@@ -358,7 +354,7 @@ def apply_actions(
         ).partitionBy("pbucket").parquet(stg.dict_partials)
         # read by the crossing check and the prefix refresh (three
         # times there) — computed once
-        changed_tokens = _persist_scoped(held, (
+        changed_tokens = shared(
             read_table(spark, cur, "dict_partials")
             .filter(F.col("pbucket").isin(touched_pb))
             .select("token")
@@ -367,8 +363,9 @@ def apply_actions(
                 .filter(F.col("pbucket").isin(touched_pb))
                 .select("token")
             )
-            .distinct()
-        ))
+            .distinct(),
+            _CDC_LEVEL,
+        )
 
         partials_view = _staged_view(
             spark, cur, stg, "dict_partials", pbnames

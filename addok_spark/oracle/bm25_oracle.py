@@ -263,7 +263,7 @@ class OracleIndex(ExpansionMixin):
                 )
         self.df = {t: len(m) for t, m in self.tf.items()}
         # filter-set postings (f|name|value → {doc: 0.0}) — same
-        # namespace as the engine's filter_token_rows (build.py)
+        # namespace as the engine's filter_postings (build.py)
         self.fboost: dict[str, dict[int, float]] = defaultdict(dict)
         for fname in cfg.filter_fields:
             if fname not in corpus.columns:
@@ -272,13 +272,13 @@ class OracleIndex(ExpansionMixin):
                 if v is None or (isinstance(v, float) and math.isnan(v)):
                     continue
                 # list-valued filter fields: one f| posting per
-                # element (build.py filter_token_rows ArrayType path)
+                # element (build.py filter_postings ArrayType path)
                 vals = v if isinstance(v, (list, tuple, np.ndarray)) else [v]
                 for el in vals:
                     if el is None:
                         continue
                     # trim, drop empty — same normalization as
-                    # build.py filter_token_rows and the query side
+                    # build.py filter_postings and the query side
                     vv = str(el).strip()
                     if vv:
                         self.fboost[f"f|{fname}|{vv}"][int(d)] = 0.0

@@ -438,7 +438,7 @@ def semdedup_pairs(
     approximation, equivalent to having trained a finer quantizer
     over that region). Leave ``max_cell_size=None`` for exact
     within-cluster-complete pairs."""
-    from ._mem import shared
+    from ..persist import shared
 
     assigned = kmeans_assign(emb, n_clusters, id_col, vec_col, iters)
     # the cosine norm is per-VECTOR: compute it once per member here

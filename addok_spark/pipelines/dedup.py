@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._mem import shared
+from ..persist import shared
 
 # 48-bit md5 prefix → bigint; enough key space for banding/minhash
 # while staying exactly representable in both Spark and DuckDB.

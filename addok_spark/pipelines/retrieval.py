@@ -16,8 +16,9 @@ everything stays in the cluster:
   df cap, never by corpus size;
 - candidate generation is one equi-join token↔token (shuffle keyed
   on token, the inverted-index access pattern);
-- scoring is the same BM25 fold as the single-query flagship
-  (entry_queries.q_bm25_topk), OR semantics over matched terms;
+- scoring sums ``bm25_term()`` over the matched terms (OR
+  semantics); the single-query flagship (entry_queries.q_bm25_topk)
+  and the PRF stage 2 score with the same term;
 - the final cap is a row_number window partitioned by qid — at
   10^7 queries that is 10^7 independent partitions, each bounded by
   the df ceiling, so no single-task scan exists anywhere.
@@ -29,14 +30,32 @@ flip near-ties; residual ties break by doc id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._mem import shared
+from ..persist import shared
 from .dedup import tokens_col
 
 K1, B = 1.2, 0.75
+
+
+def bm25_term() -> Column:
+    """One matched term's BM25 score from the columns tf, df, dl,
+    n_docs and avgdl — the one Spark copy: the flagship ``q_bm25_topk``
+    and both retrieval operators score with it."""
+    return F.log(
+        F.lit(1.0)
+        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
+        / (F.col("df") + F.lit(0.5))
+    ) * (
+        F.col("tf") * F.lit(K1 + 1.0)
+        / (
+            F.col("tf")
+            + F.lit(K1)
+            * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
+        )
+    )
 
 
 def _retrieval_relations(
@@ -49,7 +68,7 @@ def _retrieval_relations(
     max_df_frac: float,
 ) -> dict[str, DataFrame]:
     """The relations every retrieval stage shares — built ONCE and
-    persisted (``_mem.shared``) so multi-reference plans (BM25 + LM,
+    persisted (``persist.shared``) so multi-reference plans (BM25 + LM,
     PRF stage 1 + feedback + stage 2) tokenize and aggregate the
     corpus exactly once per invocation instead of once per reference
     (the round-5 verdict's duplicated-pass finding)."""
@@ -188,18 +207,7 @@ def retrieval_topk(
     tf, dl, stats = rel["tf"], rel["dl"], rel["stats"]
     df_q, qtok = rel["df_q"], rel["qtok"]
     if scorer == "bm25":
-        ts = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        ) * (
-            F.col("tf") * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-            )
-        )
+        ts = bm25_term()
     elif scorer == "lm_dirichlet":
         # matched-terms part of the Dirichlet query likelihood:
         # ln(1 + tf / (mu * cf/|C|)); the dl-dependent additive part
@@ -479,27 +487,15 @@ def retrieval_prf_topk(
     )
     wq = orig_weighted.unionByName(exp_weighted)
 
-    # stage 2: weighted BM25 over the expanded query
-    ts = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    ) * (
-        F.col("tf") * F.lit(K1 + 1.0)
-        / (
-            F.col("tf")
-            + F.lit(K1)
-            * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-        )
-    )
-    # same join order as stage 1: df/stats onto the tiny weighted
-    # query-token set first, then the candidate join (tf → dl)
+    # stage 2: weighted BM25 over the expanded query, in stage 1's join
+    # order: df/stats onto the tiny weighted query-token set first,
+    # then the candidate join (tf → dl)
     scored = (
         wq.join(df, "token")
         .crossJoin(F.broadcast(stats))
         .join(tf, "token")
         .join(dl, "doc_id")
-        .withColumn("ts", F.col("qweight") * ts)
+        .withColumn("ts", F.col("qweight") * bm25_term())
         .groupBy("qid", "doc_id")
         .agg(
             F.round(F.sum("ts"), 6).alias("score"),

@@ -324,7 +324,7 @@ def dsir_weights(
         F.sequence(F.lit(1), F.size("ts") - 1),
         lambda i: F.array_join(F.slice("ts", i, 2), " "),
     )
-    from ._mem import shared
+    from ..persist import shared
 
     # feats feeds the doc histogram, the raw distribution AND the
     # target distribution — persist so the tokenize + bigram + md5

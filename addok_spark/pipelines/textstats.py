@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._mem import shared
+from ..persist import shared
 from .dedup import _md5_long, tokens_col, word_shingles
 
 STOPWORDS = {

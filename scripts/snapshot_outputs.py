@@ -6,6 +6,9 @@ Usage:
   python scripts/snapshot_outputs.py check /tmp/r06_golden [sf_dir ...]
   (optionally: QUERY_NAMES="a,b,c" to restrict)
 
+The session runs local[$SPARK_GRAFT_CPUS] (default: every core) with
+``build_session``'s default driver memory.
+
 Rows are collected, canonically sorted, and compared EXACTLY
 (bit-for-bit floats) — stricter than the driver's hash check, so a
 pass here guarantees the driver sees unchanged results.
@@ -47,8 +50,9 @@ def main() -> None:
     from addok_spark.entry_queries import QUERIES
 
     names = sorted(QUERIES) if not only else only.split(",")
-    spark = build_session(cores=32, shuffle_partitions=96,
-                          driver_memory="48g", app_name="snapshot")
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = build_session(cores=cores, shuffle_partitions=96,
+                          app_name="snapshot")
     root.mkdir(parents=True, exist_ok=True)
     bad = []
     for sf in sfs:

@@ -206,39 +206,32 @@ def test_vectorized_analyzer_equals_pandas_udf(spark, tiny_corpus):
 def test_local_pack_blocks_equal_exploded_path(spark, built, tiny_cfg):
     """The Spark block build over analyzed docs must emit exactly the
     block rows of the per-group reference `_pack_group` over the same
-    postings (the analyzer's exploded token entries plus the f| filter
-    rows), grouped by (token, bucket) and doc-sorted — including f|
-    filter postings, multi-block runs and multi-bucket salting (two
-    docs per bucket, one posting per block)."""
+    postings (the analyzer's token entries plus one f| posting per
+    trimmed, non-empty filter value, collected here in Python),
+    grouped by (token, bucket) and doc-sorted — including f| filter
+    postings, multi-block runs and multi-bucket salting (two docs per
+    bucket, one posting per block)."""
     import dataclasses
     from itertools import groupby
 
     import numpy as np
-    from pyspark.sql import functions as F
 
-    from addok_spark.index.build import (
-        _pack_group,
-        build_blocks_from_analyzed,
-        filter_token_rows,
-    )
+    from addok_spark.index.build import _pack_group, build_blocks_from_analyzed
 
     cfg = dataclasses.replace(tiny_cfg, doc_bucket_bits=1, posting_block_size=1)
     analyzed = spark.read.parquet(str(Path(built.root) / "_analyzed"))
-    token_doc = analyzed.select(
-        "doc_index", F.explode("__an.toks").alias("tk")
-    ).select(
-        "doc_index",
-        F.col("tk.token").alias("token"),
-        F.col("tk.tf").alias("tf"),
-        F.col("tk.pos").alias("pos"),
-        F.col("tk.boost").alias("boost"),
-    )
+    rows = analyzed.select("doc_index", "__an", *cfg.filter_fields).collect()
+    postings = [
+        (tk.token, r.doc_index, tk.tf, tk.boost, tk.pos)
+        for r in rows for tk in r["__an"].toks
+    ] + [
+        (f"f|{f}|{r[f].strip()}", r.doc_index, 1, 0.0, [])
+        for r in rows for f in cfg.filter_fields
+        if r[f] is not None and r[f].strip()
+    ]
     postings = sorted(
-        (r.token, r.doc_index >> cfg.doc_bucket_bits, r.doc_index,
-         r.tf, r.boost, r.pos)
-        for r in token_doc.unionByName(
-            filter_token_rows(analyzed, cfg)
-        ).collect()
+        (tok, doc >> cfg.doc_bucket_bits, doc, tf, boost, pos)
+        for tok, doc, tf, boost, pos in postings
     )
     want = {}
     for (tok, bucket), grp in groupby(postings, key=lambda p: p[:2]):
@@ -610,3 +603,81 @@ def test_callable_boost_sees_none_not_nan_and_rejects_nonfinite(spark):
     out_bad, _ = materialize_callable_boosts(df, cfg_bad)
     with pytest.raises(Exception, match="text"):
         out_bad.collect()
+
+
+def _persisted_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("fail_on", [None, "_analyzed", "blocks"])
+def test_build_releases_persisted_relations(spark, tiny_corpus, tiny_cfg,
+                                            tmp_path, monkeypatch, fail_on):
+    """The id assigner's persisted input is released when the build
+    returns AND when a stage write raises ("_analyzed": the write that
+    reads it; "blocks": a later stage)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out = str(tmp_path / "idx")
+    before = _persisted_rdds(spark)
+    if fail_on is None:
+        build_index(spark, tiny_corpus, tiny_cfg, out)
+        assert _persisted_rdds(spark) == before
+        return
+
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *a, **kw):
+        if Path(path).name == fail_on:
+            raise OSError(f"injected failure writing {path}")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(OSError, match="injected"):
+        build_index(spark, tiny_corpus, tiny_cfg, out)
+    assert _persisted_rdds(spark) == before
+
+
+def test_unreadable_docs_footer_fails_the_build(spark, tiny_corpus, tiny_cfg,
+                                                tmp_path, monkeypatch):
+    """The docs stage's footer row count becomes meta.json's n_docs
+    (the BM25 idf input): a docs file whose footer cannot be read
+    fails the build instead of being skipped, and no meta.json is
+    written."""
+    import pyarrow.parquet as pq
+
+    real = pq.ParquetFile
+    failed = []
+
+    def flaky(path, *a, **kw):
+        if not failed and "docs" in Path(path).parts:
+            failed.append(path)
+            raise OSError(f"injected unreadable footer {path}")
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", flaky)
+    paths_root = tmp_path / "idx"
+    with pytest.raises(OSError, match="unreadable footer"):
+        build_index(spark, tiny_corpus, tiny_cfg, str(paths_root))
+    assert failed
+    assert not (paths_root / "meta.json").exists()
+
+
+def test_filter_postings_of_list_and_null_values(spark):
+    """f| postings come from the same row as the word postings: a list
+    value gives one posting per trimmed, non-empty element, and a null
+    list or value drops only its own postings, never the doc's words."""
+    from addok_spark.index.build import analyze_docs, build_blocks_from_analyzed
+
+    cfg = EngineConfig(fields=(FieldSpec("text", 1.0),), build_partitions=2)
+    docs = spark.createDataFrame(
+        [("c", 0, "user", "hello world", ["bash", " python ", "", None], 0),
+         ("c", 1, None, "more words", None, 1)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool array<string>, doc_index long",
+    )
+    blocks = build_blocks_from_analyzed(analyze_docs(docs, cfg), cfg)
+    got = {(r.token, d) for r in blocks.collect() for d in r.docs}
+    assert got == {
+        ("hello", 0), ("world", 0), ("more", 1), ("words", 1),
+        ("f|role|user", 0), ("f|tool|bash", 0), ("f|tool|python", 0),
+    }

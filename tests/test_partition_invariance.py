@@ -2,13 +2,23 @@
 the same rows (verified as a sorted multiset) under different
 shuffle-partition counts. This is the engine-side half of the
 oracle-hash gate — a result that drifts with partitioning would
-pass a single-run oracle compare and still be wrong on a cluster."""
+pass a single-run oracle compare and still be wrong on a cluster.
+
+Each entry also releases what it persists: once its results are
+dropped and collected, the session holds as many persisted RDDs as
+before the call."""
+
+import gc
 
 import pytest
 
 from addok_spark import entry_queries
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _canon(df):
@@ -23,6 +33,8 @@ def _canon(df):
 @pytest.mark.parametrize("name", sorted(entry_queries.QUERIES))
 def test_entry_is_partition_invariant(spark, name):
     fn = entry_queries.QUERIES[name]
+    gc.collect()
+    persisted = _persisted(spark)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "32")
@@ -31,6 +43,10 @@ def test_entry_is_partition_invariant(spark, name):
         b = _canon(fn(spark, SF_DIR))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+    gc.collect()
+    assert _persisted(spark) == persisted, (
+        f"{name}: persisted relations outlive its result"
+    )
     assert list(a.columns) == list(b.columns)
     assert len(a) == len(b), f"{name}: row count differs across plans"
     for c in a.columns:

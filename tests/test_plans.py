@@ -75,7 +75,9 @@ def test_round_pushes_token_infilter_into_blocks_scan(spark, tmp_index_root):
 
 
 def test_block_build_is_plain_spark_with_map_side_collect(spark, tmp_path):
-    """The block build runs no Python past the analyzer, and its
+    """The block build runs no Python past the analyzer, reads the
+    analyzed table once (the f| filter postings of ``role`` and
+    ``tool`` come from the same scan as the word postings), and its
     collect_list runs in two phases: a partial collect below the
     shuffle (one row per key per map task crosses it), the final one
     above."""
@@ -94,6 +96,7 @@ def test_block_build_is_plain_spark_with_map_side_collect(spark, tmp_path):
     ))
     for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
         assert node not in plan, plan
+    assert plan.count("FileScan parquet") == 1, plan
     lines = plan.splitlines()
     ex = next(i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l)
     assert any("partial_collect_list" in l for l in lines[ex + 1:]), plan

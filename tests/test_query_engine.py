@@ -177,7 +177,7 @@ def test_scan_mode_rank_identity(spark, index_paths, corpus_pdf, oracle):
 def test_filter_value_whitespace_normalized(spark, cfg, tmp_index_root):
     """A doc whose filter-column value carries stray whitespace must
     still match the filter: index keys, query keys and the post-score
-    predicate all trim values identically (build.py filter_token_rows
+    predicate all trim values identically (build.py filter_postings
     ↔ SpecSearch planning ↔ its scoring fold)."""
     from addok_spark.index.build import build_index as _build
 
