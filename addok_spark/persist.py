@@ -7,7 +7,9 @@ default: spills, never OOMs) so the subtree runs once. This module is
 the only code that persists or unpersists.
 
 The active scope lives in a ``ContextVar``, so a thread never sees, or
-frees, another thread's caches; with none active ``shared()`` persists
+releases, another thread's scope (Spark keys its cache by plan: two
+scopes that persist identical plans share one entry, and the first
+released frees it for both); with none active ``shared()`` persists
 nothing, so a direct library call cannot leak. ``with scope():``
 releases on every way out (CDC batches, the build's analyzed stage);
 ``scoped(fn)`` releases when the DataFrame ``fn`` returns is
