@@ -68,7 +68,7 @@ from .fileio import FileIO, LocalFileIO
 
 
 # the relations a batch reads more than once are persisted at
-# DataFrame.persist()'s default level, deserialized in memory
+# the default storage level of Spark's DataFrame cache, deserialized in memory
 _CDC_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
 
 
