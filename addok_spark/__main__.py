@@ -1,6 +1,7 @@
 """CLI — the spark-submit entry point (≙ the reference's `addok`
-command surface: batch import / ngrams post-pass / search shell /
-bench, ``/root/reference/addok/bin/__init__.py``).
+command surface, ``addok/bin/__init__.py``: batch import / search
+shell / bench; autocomplete needs no ``ngrams`` post-pass, it reads
+the term dictionary).
 
 Deploy:
     zip -r addok_spark.zip addok_spark
@@ -8,7 +9,6 @@ Deploy:
 
 Local:
     python -m addok_spark build  --input corpus.parquet --index /idx
-    python -m addok_spark ngrams --index /idx           # post-pass
     python -m addok_spark search --index /idx -q "rue des lilas" -k 10
     python -m addok_spark shell  --index /idx           # interactive REPL
     python -m addok_spark actions --index /idx --input changes.parquet
@@ -38,7 +38,7 @@ def _cfg(args):
 
     kw = {}
     if getattr(args, "no_side_tables", False):
-        kw.update(build_prefixes=False, build_pairs=False)
+        kw["build_pairs"] = False
     # only EXPLICITLY-GIVEN flags become overrides — a config-file
     # knob must never be clobbered by a flag the user didn't pass
     if getattr(args, "log_dir", None):
@@ -80,53 +80,6 @@ def cmd_build(args) -> None:
     corpus = spark.read.parquet(args.input)
     paths = build_index(spark, corpus, _cfg(args), args.index, resume=not args.no_resume)
     print(json.dumps(json.loads(paths.meta.read_text()), indent=2))
-
-
-def cmd_ngrams(args) -> None:
-    """Prefix-table post-pass (≙ `addok ngrams`): builds the edge
-    n-gram table from the CURRENT dictionary. On a flat index (the
-    usual deferred-mass-import case) it writes in place; on a
-    versioned index it publishes a new snapshot that carries every
-    other table over (manifest references, hardlinked into the new
-    dir by LocalFileIO), so concurrent readers never observe a
-    half-written prefix table."""
-    import time
-    from pathlib import Path
-
-    from .index.build import IndexPaths, prefixes_from_dictionary, read_table
-    from .index.fileio import LocalFileIO
-
-    fileio = LocalFileIO()
-
-    spark = _spark(args)
-    cfg = _cfg(args)  # honors --config: prefix table must be built
-    # under the SAME min/max edge-ngram knobs as the index
-    cur = IndexPaths(Path(args.index)).pin()
-    versioned = bool(cur.version)
-    out = cur
-    if versioned:
-        out = cur.stage_next()
-        for name in ("docs", "blocks", "dictionary", "dict_partials", "pairs"):
-            fileio.stage_partitions(
-                getattr(cur, name), getattr(out, name), (), ""
-            )
-        out.meta.write_text(cur.meta.read_text())
-    t0 = time.time()
-    dictionary = read_table(spark, cur, "dictionary")
-    prefixes_from_dictionary(dictionary, cfg).repartitionByRange(
-        cfg.build_partitions, "pfx_bucket", "prefix"
-    ).sortWithinPartitions("pfx_bucket", "prefix").write.mode(
-        "overwrite"
-    ).partitionBy("pfx_bucket").parquet(out.prefixes)
-    if versioned:
-        out.write_manifest(cur, {"prefixes": "full"})
-        IndexPaths(cur.root).publish(
-            out.version, keep=cfg.snapshot_keep, fileio=fileio
-        )
-    print(json.dumps({"prefixes": {
-        "seconds": round(time.time() - t0, 3),
-        "version": out.version if versioned else None,
-    }}))
 
 
 def cmd_search(args) -> None:
@@ -326,10 +279,6 @@ def main(argv=None) -> None:
     b.add_argument("--no-resume", action="store_true")
     b.add_argument("--no-side-tables", action="store_true")
     b.set_defaults(fn=cmd_build)
-
-    g = sub.add_parser("ngrams")
-    g.add_argument("--index", required=True)
-    g.set_defaults(fn=cmd_ngrams)
 
     s = sub.add_parser("search")
     s.add_argument("--index", required=True)

@@ -16,8 +16,11 @@ distributed PySpark engine over transcript tables:
   tokens above it get salted / block-split aggregation.
 - ``bucket_min`` / ``bucket_max``: candidate-bucket bounds
   (default.py:17-18).
-- BM25 parameters (k1, b): the north-rule scoring model that
-  generalizes the reference's static zset score.
+- BM25 parameters (``BM25_K1``, ``BM25_B``): the north-rule scoring
+  model that generalizes the reference's static zset score. Module
+  constants, not fields: every scorer (serving, oracle, the Spark
+  pipelines) reads these two, and the build records them in
+  ``meta.json``.
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from .functions.text import FUZZY_KEY_MAP as _FUZZY_KEY_MAP
+
+BM25_K1, BM25_B = 1.2, 0.75
 
 
 @dataclass(frozen=True)
@@ -125,12 +130,16 @@ class EngineConfig:
     min_score: float = 0.1  # default.py:38
     # --- knobs no search path reads ---
     # They change no result. They stay only because the frozen bench.py
-    # sets or reads them in its _wand_at_scale and _phrase_ab sections;
-    # they go together with those two sections.
+    # sets or reads them: the four WAND / phrase knobs in its
+    # _wand_at_scale and _phrase_ab sections, and they go together with
+    # those two sections; build_prefixes in its build runs (perfbench's
+    # core build sets it too).
     wand_enabled: bool = True  # set by bench.py _wand_at_scale
     wand_min_df: int = 10_000  # read by bench.py _wand_at_scale
     wand_min_postings: int = 20_000_000  # set and read by _wand_at_scale
     phrase_rare_prune: bool = True  # set by bench.py _phrase_ab
+    # autocomplete reads the term dictionary; no prefix table is built
+    build_prefixes: bool = True
 
     # --- scoring model ---
     # "bm25" (north_rule default) or "reference": the reference's
@@ -139,8 +148,6 @@ class EngineConfig:
     # equals/startswith/contains ladder and the MIN_SCORE cutoff —
     # lets the reference's golden search scenarios replay 1:1
     scorer: str = "bm25"
-    bm25_k1: float = 1.2
-    bm25_b: float = 0.75
 
     # --- distributed build knobs ---
     # postings are blocked by coarse doc ranges so no single reducer
@@ -149,22 +156,9 @@ class EngineConfig:
     posting_block_size: int = 4096  # max postings per stored block row
     pbucket_shift: int = 6         # buckets per partition dir = 2^shift
     build_partitions: int = 32
-    # side-tables deferrable during mass import (≙ the reference
-    # disabling edge-ngram indexing during batch import, batch.py:44;
-    # `addok ngrams` builds it as a post-pass)
-    build_prefixes: bool = True
+    # the pair side table, deferrable during mass import (≙ the
+    # reference deferring side indexes during batch import, batch.py:44)
     build_pairs: bool = True
-    # prefix table partition count (hash of the FULL token): a CDC
-    # batch rewrites only the hash buckets holding changed tokens —
-    # O(min(changed_tokens, buckets)) partition dirs, never the whole
-    # table; within each bucket files stay prefix-sorted so query
-    # IN-lists still prune row groups
-    prefix_hash_buckets: int = 64
-    # new-doc batches above this route through the two-pass range id
-    # assigner (assign_doc_ids) instead of a single global window —
-    # a backfill-sized batch must not serialize id assignment
-    # through one task
-    cdc_backfill_threshold: int = 100_000
     # snapshots retained after an atomic publish (CURRENT.json swap):
     # the published one plus keep-1 predecessors, so readers pinned to
     # the previous snapshot finish their queries before GC reclaims it

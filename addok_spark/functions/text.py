@@ -503,20 +503,6 @@ def str_distance_keys_multi(
 # Pure-column (JVM/codegen) variants — preferred in hot paths where the
 # simpler semantics suffice (no Python at all):
 
-def edge_ngrams_col(token_col, lo: int = 3, hi: int = 20):
-    """Column expr: prefixes lo..min(len-1,hi) — whole-stage codegen.
-
-    Guarded for short tokens: Spark's ``sequence(a, b)`` DESCENDS
-    when b < a, which would emit the token itself as its own prefix.
-    """
-    return F.expr(
-        f"CASE WHEN length({token_col}) > {lo} THEN "
-        f"transform(sequence({lo}, least(length({token_col}) - 1, {hi})),"
-        f" i -> substring({token_col}, 1, i)) "
-        f"ELSE CAST(array() AS array<string>) END"
-    )
-
-
 def char_ngrams_col(token_col, n: int = 3):
     """Column expr: space-padded char n-grams — codegen, no UDF."""
     padded = f"concat(' ', {token_col}, ' ')"

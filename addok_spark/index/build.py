@@ -1,5 +1,5 @@
-"""Distributed inverted-index build (postings, dictionary, prefix,
-pairs) over a transcripts table.
+"""Distributed inverted-index build (postings, dictionary, pairs)
+over a transcripts table.
 
 Reference dataflow being re-expressed (NOT ported): the reference
 indexes docs one at a time into Redis sorted sets
@@ -23,7 +23,10 @@ same logical artifacts are produced as one declarative Spark plan:
         ascending, ``tfs``, ``boosts``, one position list per posting
         in ``pos``) — the columnar writer encodes them; no
         hand-written codec, no Python past the analyzer
-      → dictionary / prefix / pair side tables.
+      → dictionary and pair side tables. Autocomplete needs no table
+        of its own: in the token-sorted dictionary every prefix is one
+        contiguous range, which the serving tier reads in RAM
+        (``serving/local.py``).
 
 Each stage is written to its own directory with a manifest + metrics
 sidecar; a re-run with the same ``out_dir`` skips completed stages →
@@ -51,8 +54,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import EngineConfig
-from ..functions.text import edge_ngrams_col
+from ..config import BM25_B, BM25_K1, EngineConfig
 from ..persist import scope, shared
 
 # Parquet writer settings of the blocks table (bulk build and CDC).
@@ -300,6 +302,9 @@ class IndexPaths:
 
     @property
     def prefixes(self) -> str:
+        # nothing writes this dir and no manifest lists it: autocomplete
+        # reads the dictionary. An older index may still hold one, which
+        # every reader ignores; perfbench sizes it (0 bytes when absent)
         return str(self.snapshot_root / "prefixes")
 
     @property
@@ -319,9 +324,7 @@ class IndexPaths:
 
 # every table a snapshot manifest can carry (each an IndexPaths
 # property resolving under snapshot_root)
-MANIFEST_TABLES = (
-    "docs", "blocks", "dictionary", "dict_partials", "prefixes", "pairs"
-)
+MANIFEST_TABLES = ("docs", "blocks", "dictionary", "dict_partials", "pairs")
 
 
 def _scans(root: Path, entries: dict[str, str]) -> list[tuple[str, list[str] | None]]:
@@ -1228,38 +1231,6 @@ def build_blocks_from_analyzed(analyzed: DataFrame, cfg: EngineConfig) -> DataFr
     return build_blocks(token_doc, cfg)
 
 
-def prefixes_from_dictionary(dictionary: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Edge-ngram prefix table over non-digit word tokens (skips the
-    f| filter namespace) — the `addok ngrams` post-pass derivation
-    (autocomplete.py:111-131), shared by build / CDC / CLI."""
-    return (
-        dictionary.filter(
-            ~F.col("token").rlike("^[0-9]+$") & ~F.col("token").contains("|")
-        )
-        .select(
-            "token",
-            "df",
-            "max_boost",
-            F.explode(
-                edge_ngrams_col("token", cfg.min_edge_ngram, cfg.max_edge_ngram)
-            ).alias("prefix"),
-        )
-        # df AND max_boost denormalized per candidate (≙ ZCARD +
-        # ZREVRANGE max used by order_by_frequency / order_by_max_
-        # score.lua) so autocomplete planning needs no second
-        # dictionary probe; partition key = hash of the TOKEN: all of
-        # a token's prefix rows land in one bucket, so a CDC batch
-        # rewrites exactly the buckets of its changed tokens
-        # (incremental.py)
-        .select(
-            "prefix", "token", "df", "max_boost",
-            F.pmod(
-                F.xxhash64("token"), F.lit(cfg.prefix_hash_buckets)
-            ).cast("int").alias("pfx_bucket"),
-        )
-    )
-
-
 def _expand_pairs(per_doc: DataFrame) -> DataFrame:
     """(pbucket, toks sorted-distinct array) → distinct (pbucket,
     token_a, token_b) with token_a < token_b, via a codegen nested
@@ -1566,8 +1537,8 @@ class IndexBuilder:
                 "n_docs": int(n_docs),
                 "sum_dl": int(sum_dl),
                 "avgdl": float(sum_dl) / max(n_docs, 1),
-                "bm25_k1": cfg.bm25_k1,
-                "bm25_b": cfg.bm25_b,
+                "bm25_k1": BM25_K1,
+                "bm25_b": BM25_B,
                 "doc_bucket_bits": cfg.doc_bucket_bits,
                 "pbucket_shift": cfg.pbucket_shift,
                 "posting_block_size": cfg.posting_block_size,
@@ -1577,21 +1548,6 @@ class IndexBuilder:
             self._mark_stage("docs_meta")
 
         dictionary = spark.read.parquet(self.paths.dictionary)
-
-        # --- prefix table (edge n-grams over non-digit dictionary tokens;
-        # a separate follow-on job like `addok ngrams`, autocomplete.py:111-131)
-        if cfg.build_prefixes and not (resume and self._stage_done("prefixes")):
-            # token-hash-bucketed dirs, prefix-sorted files within:
-            # CDC rewrites only changed tokens' buckets, query
-            # IN-lists still prune row groups on prefix min/max
-            self._write(
-                prefixes_from_dictionary(dictionary, cfg)
-                .repartitionByRange(
-                    cfg.build_partitions, "pfx_bucket", "prefix"
-                )
-                .sortWithinPartitions("pfx_bucket", "prefix"),
-                self.paths.prefixes, "prefixes", partition_by="pfx_bucket",
-            )
 
         # --- pair (co-occurrence) table, meaningful tokens only
         # (reference PairsIndexer skips commons, addok/pairs.py:6-16)

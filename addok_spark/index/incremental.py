@@ -59,7 +59,6 @@ from .build import (
     open_dataset,
     pairs_from_analyzed,
     pairs_from_blocks,
-    prefixes_from_dictionary,
     read_entries,
     read_table,
     table_exists,
@@ -260,25 +259,18 @@ def apply_actions(
 
         # ids: updates keep their doc_index; new docs append after max
         upserts = resolved.filter(~is_del)
-        new_rows = upserts.filter(F.col("doc_index").isNull()).drop("doc_index")
-        if n_new > cfg.cdc_backfill_threshold:
-            # backfill-sized batch: the two-pass range assigner (no
-            # global window — id assignment must not serialize through
-            # one task), offset past the existing id space
+        upserted = upserts.filter(F.col("doc_index").isNotNull())
+        if n_new:
+            # the bulk build's two-pass range assigner (no global
+            # window, so id assignment never serializes through one
+            # task), offset past the existing id space
+            new_rows = upserts.filter(F.col("doc_index").isNull()).drop("doc_index")
             parts = max(1, min(cfg.build_partitions, n_new // 50_000 + 1))
-            new_rows = assign_doc_ids(new_rows, parts).withColumn(
-                "doc_index", F.col("doc_index") + F.lit(max_id + 1)
+            upserted = upserted.unionByName(
+                assign_doc_ids(new_rows, parts).withColumn(
+                    "doc_index", F.col("doc_index") + F.lit(max_id + 1)
+                )
             )
-        else:
-            # micro-batch: one small window task is cheaper than the
-            # assigner's extra pass
-            from pyspark.sql.window import Window
-
-            w = Window.orderBy("conv_id", "turn_idx")
-            new_rows = new_rows.withColumn(
-                "doc_index", F.row_number().over(w).cast("long") + F.lit(max_id)
-            )
-        upserted = upserts.filter(F.col("doc_index").isNotNull()).unionByName(new_rows)
 
         # --- staging snapshot: all writes land here; nothing under the
         # current snapshot is ever modified ------------------------------
@@ -352,20 +344,6 @@ def apply_actions(
         ).sortWithinPartitions("pbucket", "token").write.mode(
             "append"
         ).partitionBy("pbucket").parquet(stg.dict_partials)
-        # read by the crossing check and the prefix refresh (three
-        # times there) — computed once
-        changed_tokens = shared(
-            read_table(spark, cur, "dict_partials")
-            .filter(F.col("pbucket").isin(touched_pb))
-            .select("token")
-            .unionByName(
-                spark.read.parquet(stg.dict_partials)
-                .filter(F.col("pbucket").isin(touched_pb))
-                .select("token")
-            )
-            .distinct(),
-            _CDC_LEVEL,
-        )
 
         partials_view = _staged_view(
             spark, cur, stg, "dict_partials", pbnames
@@ -375,46 +353,14 @@ def apply_actions(
         ).sortWithinPartitions("token").write.mode("overwrite").parquet(
             stg.dictionary
         )
-        dict_disk = spark.read.parquet(stg.dictionary)
-        # tokens whose COMMON status flips this batch invalidate pair
-        # partitions beyond the touched set (the pair table excludes the
-        # Zipf head by global df) — the OLD dictionary (still intact at
-        # the current snapshot) against the one just written
-        crossing: list[str] = []
-        if table_exists(cur, "pairs"):
-            old_df = read_table(spark, cur, "dictionary").select(
-                "token", F.col("df").alias("odf")
-            )
-            crossing = [
-                r["token"]
-                for r in changed_tokens.join(old_df, "token", "left")
-                .join(
-                    dict_disk.select("token", F.col("df").alias("ndf")),
-                    "token",
-                    "left",
-                )
-                .filter(
-                    (F.coalesce(F.col("odf"), F.lit(0)) > cfg.common_threshold)
-                    != (F.coalesce(F.col("ndf"), F.lit(0)) > cfg.common_threshold)
-                )
-                .select("token")
-                .collect()
-            ]
-
-        # --- prefixes: rewrite only the hash buckets of changed tokens --
-        pfx_rewritten: set[str] | str = "full"
-        if table_exists(cur, "prefixes"):
-            pfx_rewritten = _refresh_prefixes(
-                spark, cur, stg, dict_disk, changed_tokens, cfg, fileio
-            )
 
         # --- pairs: rebuild touched partitions (+ partitions holding a
         # common-threshold-crossing token), never the whole corpus ------
         pairs_rewritten: set[str] | str = "full"
         if table_exists(cur, "pairs"):
             pairs_rewritten = _refresh_pairs(
-                spark, cur, stg, dict_disk, partials_view, analyzed_new,
-                touched_pb, crossing, cfg, fileio,
+                spark, cur, stg, partials_view, analyzed_new, touched_pb,
+                cfg, fileio,
             )
 
         # refresh meta (n_docs / avgdl) incrementally + lineage record
@@ -445,7 +391,6 @@ def apply_actions(
             "blocks": pbnames,
             "dict_partials": pbnames,
             "dictionary": "full",
-            "prefixes": pfx_rewritten,
             "pairs": pairs_rewritten,
         })
 
@@ -462,64 +407,13 @@ def apply_actions(
         }
 
 
-def _refresh_prefixes(
-    spark: SparkSession,
-    cur: IndexPaths,
-    stg: IndexPaths,
-    dict_disk: DataFrame,
-    changed_tokens: DataFrame,
-    cfg: EngineConfig,
-    fileio: FileIO,
-) -> set[str]:
-    """Stage the prefix table for the next snapshot: hash buckets
-    holding no changed token are shared (hardlink or manifest
-    reference); buckets with changed tokens are rewritten as
-    keep-rows (members minus changed tokens) union the changed
-    tokens' freshly derived rows. A bucket whose every token vanished
-    is simply not staged — no removal from any live path, and no
-    read-from/overwrite-to-same-path cycle (reads come from ``cur``,
-    writes go to ``stg``). Returns the rewritten partition names for
-    the snapshot manifest."""
-    buckets = [
-        r["b"]
-        for r in changed_tokens.select(
-            F.pmod(F.xxhash64("token"), F.lit(cfg.prefix_hash_buckets))
-            .cast("int")
-            .alias("b")
-        )
-        .distinct()
-        .collect()
-    ]
-    fileio.stage_partitions(cur.prefixes, stg.prefixes, buckets, "pfx_bucket=")
-    if not buckets:
-        return set()
-    keep = (
-        read_table(spark, cur, "prefixes")
-        .filter(F.col("pfx_bucket").isin(buckets))
-        .join(changed_tokens, "token", "left_anti")
-    )
-    fresh = prefixes_from_dictionary(
-        dict_disk.join(changed_tokens, "token", "left_semi"), cfg
-    )
-    keep.select("prefix", "token", "df", "max_boost", "pfx_bucket").unionByName(
-        fresh.select("prefix", "token", "df", "max_boost", "pfx_bucket")
-    ).repartitionByRange(
-        cfg.build_partitions, "pfx_bucket", "prefix"
-    ).sortWithinPartitions(
-        "pfx_bucket", "prefix"
-    ).write.mode("append").partitionBy("pfx_bucket").parquet(stg.prefixes)
-    return {f"pfx_bucket={b}" for b in buckets}
-
-
 def _refresh_pairs(
     spark: SparkSession,
     cur: IndexPaths,
     stg: IndexPaths,
-    dict_disk: DataFrame,
     partials_view: DataFrame,
     analyzed: DataFrame,
     touched_pb: list[int],
-    crossing: list[str],
     cfg: EngineConfig,
     fileio: FileIO,
 ) -> set[str]:
@@ -532,6 +426,37 @@ def _refresh_pairs(
     simply not written — the stale-dir hazard of in-place dynamic
     overwrite cannot occur. Returns the rebuilt partition names for
     the snapshot manifest."""
+    dict_disk = spark.read.parquet(stg.dictionary)
+    # tokens whose COMMON status flips this batch invalidate pair
+    # partitions beyond the touched set (the pair table excludes the
+    # Zipf head by global df): every token of the touched pbuckets,
+    # before or after, with its df in the OLD dictionary (still intact
+    # at the current snapshot) against the one just staged
+    changed_tokens = (
+        read_table(spark, cur, "dict_partials")
+        .filter(F.col("pbucket").isin(touched_pb))
+        .select("token")
+        .unionByName(
+            spark.read.parquet(stg.dict_partials)
+            .filter(F.col("pbucket").isin(touched_pb))
+            .select("token")
+        )
+        .distinct()
+    )
+    old_df = read_table(spark, cur, "dictionary").select(
+        "token", F.col("df").alias("odf")
+    )
+    crossing = [
+        r["token"]
+        for r in changed_tokens.join(old_df, "token", "left")
+        .join(dict_disk.select("token", F.col("df").alias("ndf")), "token", "left")
+        .filter(
+            (F.coalesce(F.col("odf"), F.lit(0)) > cfg.common_threshold)
+            != (F.coalesce(F.col("ndf"), F.lit(0)) > cfg.common_threshold)
+        )
+        .select("token")
+        .collect()
+    ]
     rebuild = set(touched_pb)
     if crossing:
         rebuild.update(

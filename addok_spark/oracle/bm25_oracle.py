@@ -22,7 +22,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from ..config import EngineConfig
+from ..config import BM25_B, BM25_K1, EngineConfig
 from ..query.engine import FILTER_GID_BASE, normalize_filter_values
 from ..functions.text import (
     analyze_str,
@@ -628,7 +628,7 @@ class SpecSearch:
                 candidates.update(ordered[:room])
 
         # --- scoring over FULL group set (same expression tree) ----------
-        k1, b = cfg.bm25_k1, cfg.bm25_b
+        k1, b = BM25_K1, BM25_B
         n_docs, avgdl = index.n_docs, index.avgdl
         recs = []
         filters = getattr(q, "filters", None) or {}

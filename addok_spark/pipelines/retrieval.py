@@ -34,10 +34,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..config import BM25_B as B, BM25_K1 as K1
 from ..persist import shared
 from .dedup import tokens_col
-
-K1, B = 1.2, 0.75
 
 
 def bm25_term() -> Column:

@@ -4,7 +4,7 @@ The reference serves queries in ~10 ms because its whole index lives
 in Redis RAM on the serving node (``/root/reference/addok/core.py``
 + ``addok/db.py``).  This module answers the same way Lucene-style
 systems do: Spark builds and compacts the immutable
-index artifacts (blocks / dictionary / prefixes / pairs / docs —
+index artifacts (blocks / dictionary / pairs / docs —
 ``index/build.py``), and a serving process answers queries straight
 from those artifacts with pruned columnar reads:
 
@@ -28,8 +28,11 @@ from those artifacts with pruned columnar reads:
   fields for the whole candidate array with one ``searchsorted`` +
   ``take``, reads lengths and folded text straight from the columns,
   and builds a full row dict only for the ≤k records a query returns;
-- **prefixes / pairs** reads are filter-pruned the same way and
-  memoized per key;
+- **autocomplete prefixes** come from the in-RAM dictionary: its
+  tokens, sorted once on first use, hold every prefix's candidates
+  as one contiguous range (``bisect``), memoized per prefix;
+- **pairs** reads are filter-pruned like the blocks and memoized per
+  key;
 - every table opens through ``index.build.open_dataset``, the same
   snapshot resolver Spark's ``read_table`` uses, so any published
   snapshot — hardlinked or reference-only (object-store publish,
@@ -55,7 +58,9 @@ spec exactly (tested bit-equal in tests/test_local_serving.py).
 
 from __future__ import annotations
 
+import bisect
 import json
+import re
 import threading
 import time
 from pathlib import Path
@@ -87,6 +92,10 @@ _EMPTY_PHRASE = (
     np.empty(0, dtype=np.int64),
     np.empty(0, dtype=np.int64),
 )
+
+# dictionary tokens autocomplete never offers: all-digit tokens and the
+# f|name|value filter namespace (≙ autocomplete.py:111-131)
+_NO_PREFIX = re.compile(r"[0-9]+|.*\|.*", re.S)
 
 
 class _LRU(dict):
@@ -392,7 +401,7 @@ class ParquetIndex(ExpansionMixin):
         self._pads = pads
         self.cfg = cfg or EngineConfig()
         # pin to the currently-published snapshot: all lazy posting /
-        # doc / prefix reads of this serving view come from ONE index
+        # doc reads of this serving view come from ONE index
         # version; refresh() re-pins to pick up a newer publish
         self.paths = (
             index_dir if isinstance(index_dir, IndexPaths)
@@ -408,13 +417,12 @@ class ParquetIndex(ExpansionMixin):
 
         # every table opens through the snapshot's entries — a
         # hardlinked snapshot or flat index is one directory dataset, a
-        # reference-only one unions its base dirs; prefixes / pairs are
-        # None when the snapshot has none
+        # reference-only one unions its base dirs; pairs is None when
+        # the snapshot has none
         self._blocks_ds = open_dataset(self.paths, "blocks")
         check_blocks_layout(self._blocks_ds.schema, self.paths.root)
         self._docs_ds = open_dataset(self.paths, "docs")
         self._doc_columns = frozenset(self._docs_ds.schema.names)
-        self._prefix_ds = open_dataset(self.paths, "prefixes")
         self._pairs_ds = open_dataset(self.paths, "pairs")
         self.have_pairs = self._pairs_ds is not None
 
@@ -438,6 +446,7 @@ class ParquetIndex(ExpansionMixin):
         self._doc_cache: dict[int, _DocStore] = _LRU(64)
         self._row_cache: dict[int, dict] = _LRU(100_000)
         self._fold_cache: dict[int, str] = _LRU(100_000)
+        self._prefix_tokens: list[str] | None = None
         self._prefix_cache: dict[str, list[str]] = _LRU(50_000)
         self._pair_cache: dict[str, set[str]] = _LRU(50_000)
         self._pos_cache: dict[str, tuple] = _LRU(10_000)
@@ -816,22 +825,29 @@ class ParquetIndex(ExpansionMixin):
 
     # -- prefixes / pairs ---------------------------------------------------
     def prefix_candidates(self, prefix: str, cap: int = 100) -> list[str]:
-        """≙ OracleIndex.prefix_candidates, reading the prefixes table
-        (prefix-sorted within pfx_bucket files → row-group pruning)."""
+        """≙ OracleIndex.prefix_candidates, from the in-RAM dictionary:
+        the tokens that have ``prefix`` as an edge n-gram (a prefix of
+        min..max_edge_ngram characters, shorter than the token),
+        highest df first, then by token. In the sorted token list they
+        are one contiguous range, found with ``bisect``; the list is
+        built on first use, so ``refresh()`` pays nothing for it."""
         cached = self._prefix_cache.get(prefix)
         if cached is None:
-            if self._prefix_ds is None:
-                cached = []
-            else:
-                f = self._pads.field
-                tbl = self._prefix_ds.to_table(
-                    filter=f("prefix") == prefix, columns=["token", "df"]
-                )
-                rows = list(
-                    zip(tbl.column("token").to_pylist(), tbl.column("df").to_pylist())
-                )
-                rows.sort(key=lambda x: (-x[1], x[0]))
-                cached = [t for t, _ in rows]
+            cached = []
+            n = len(prefix)
+            if self.cfg.min_edge_ngram <= n <= self.cfg.max_edge_ngram:
+                toks = self._prefix_tokens
+                if toks is None:
+                    # idempotent: threads racing here sort the same list
+                    toks = self._prefix_tokens = sorted(
+                        t for t in self.df if not _NO_PREFIX.fullmatch(t)
+                    )
+                i = bisect.bisect_left(toks, prefix)
+                while i < len(toks) and toks[i].startswith(prefix):
+                    if len(toks[i]) > n:
+                        cached.append(toks[i])
+                    i += 1
+                cached.sort(key=lambda t: (-self.df[t], t))
             self._prefix_cache[prefix] = cached
         return cached[:cap]
 

@@ -9,6 +9,7 @@ pandas-UDF closures regardless of the driver's cwd.
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
@@ -18,9 +19,16 @@ from pyspark.sql import SparkSession
 
 
 def ship_package(spark: SparkSession) -> str:
-    """Zip addok_spark and addPyFile it (≙ --py-files)."""
+    """Zip addok_spark and addPyFile it (≙ --py-files). Every call
+    writes a zip of its own name, so sessions started at the same time
+    (from one checkout or several) never overwrite each other's file;
+    it is removed when the process exits, since executors fetch it
+    whenever a task starts."""
     pkg_dir = Path(__file__).resolve().parent
-    out = Path(tempfile.gettempdir()) / "addok_spark_pkg.zip"
+    fd, name = tempfile.mkstemp(prefix="addok_spark_pkg_", suffix=".zip")
+    os.close(fd)
+    out = Path(name)
+    atexit.register(out.unlink, missing_ok=True)
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for p in sorted(pkg_dir.rglob("*.py")):
             zf.write(p, Path("addok_spark") / p.relative_to(pkg_dir))

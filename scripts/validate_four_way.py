@@ -2,7 +2,10 @@
 pure-Python oracle and the warm serving tier answer the same query
 set over the same corpus and must agree. The Spark engine runs the
 serving tier in mapInPandas tasks, so its frame must also equal the
-serving frame exactly. The check runs twice: on the bulk-built index, and again
+serving frame exactly, and the serving tier's autocomplete prefix
+candidates (read from its in-RAM dictionary) must equal the oracle's
+for every edge n-gram of every dictionary token, at the default cap.
+The check runs twice: on the bulk-built index, and again
 after one CDC batch (updates, deletes and an appended conversation)
 published with ``NoLinkFileIO`` — a reference-only snapshot whose
 untouched partitions stay in the bulk build's dirs, which the serving
@@ -40,18 +43,37 @@ def make_queries(pdf, seed):
     return queries
 
 
-def check_answers(spark, cfg, index, pdf, queries):
+def check_prefixes(cfg, index, oracle):
+    """(number of prefixes checked, mismatches): every edge n-gram of
+    every token in either dictionary, serving against the oracle."""
+    from addok_spark.functions.text import edge_ngrams_str
+    from addok_spark.serving.local import ParquetIndex
+
+    idx = ParquetIndex(index, cfg)
+    probes = sorted({
+        p for t in set(idx.df) | set(oracle.df)
+        for p in edge_ngrams_str(t, cfg.min_edge_ngram, cfg.max_edge_ngram)
+    })
+    mismatches = []
+    for p in probes:
+        got, want = idx.prefix_candidates(p), oracle.prefix_candidates(p)
+        if got != want:
+            mismatches.append((p, got, want))
+    return len(probes), mismatches
+
+
+def check_answers(spark, cfg, index, oracle, queries):
     """Rank mismatches against the oracle, whether the engine's frame
     equals the serving frame exactly, and the engine / serving wall
     seconds."""
-    from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
+    from addok_spark.oracle.bm25_oracle import oracle_search
     from addok_spark.query.engine import SearchEngine
     from addok_spark.serving.local import LocalSearchEngine
 
     t0 = time.time()
     got_engine = SearchEngine(spark, index, cfg).search(queries).toPandas()
     engine_s = time.time() - t0
-    want = oracle_search(OracleIndex(pdf, cfg), queries, cfg)
+    want = oracle_search(oracle, queries, cfg)
     srv = LocalSearchEngine(index, cfg)
     t0 = time.time()
     got_srv = srv.search(queries)
@@ -131,6 +153,7 @@ def main() -> None:
     from addok_spark.index.build import IndexPaths, build_index
     from addok_spark.index.fileio import NoLinkFileIO
     from addok_spark.index.incremental import apply_actions
+    from addok_spark.oracle.bm25_oracle import OracleIndex
     from addok_spark.query.engine import Query
     from addok_spark.session import build_session
 
@@ -177,18 +200,23 @@ def main() -> None:
                     Query(qid=f"mark-{i}", q=f"cdcmark{i:04d}", k=10)
                     for i in range(3)
                 ]
+            oracle = OracleIndex(corpus, cfg)
             mismatches, exact, engine_s, srv_s = check_answers(
-                spark, cfg, out, corpus, queries
+                spark, cfg, out, oracle, queries
             )
+            n_prefixes, pfx_mismatches = check_prefixes(cfg, out, oracle)
             print(
                 f"RESULT {label} turns={len(corpus)} queries={len(queries)} "
                 f"mismatches={len(mismatches)} engine_equals_serving={exact} "
+                f"prefixes={n_prefixes} prefix_mismatches={len(pfx_mismatches)} "
                 f"build_s={build_s:.1f} engine_batch_s_per_q={engine_s/len(queries):.3f} "
                 f"serving_cold_ms_per_q={1000*srv_s/len(queries):.1f}"
             )
             for mm in mismatches[:5]:
                 print("MISMATCH", mm[0], mm[1], mm[2][:3], "vs", mm[3][:3])
-            failed |= bool(mismatches) or not exact
+            for p, got, want in pfx_mismatches[:5]:
+                print("PREFIX MISMATCH", p, got[:3], "vs", want[:3])
+            failed |= bool(mismatches) or bool(pfx_mismatches) or not exact
     finally:
         # the index is scratch: remove it on every way out
         shutil.rmtree(out, ignore_errors=True)

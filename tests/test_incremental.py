@@ -72,11 +72,34 @@ def test_delete_leaves_no_orphans(spark, cfg, built):
     assert docs.filter(
         (F.col("conv_id") == "conv-a") & (F.col("turn_idx") == 0)
     ).count() == 0
-    # prefix table follows the dictionary
-    pfx = spark.read.parquet(built.prefixes)
-    assert pfx.filter(F.col("token") == "lilas").count() == 0
+    # autocomplete follows the dictionary
+    from addok_spark.serving.local import ParquetIndex
+
+    assert ParquetIndex(built, cfg).prefix_candidates("lil") == []
     meta = json.loads(built.meta.read_text())
     assert meta["n_docs"] == 3
+
+
+def test_no_prefix_table_written(spark, cfg, built):
+    """Neither the build nor a CDC batch writes a prefixes table, and
+    no snapshot manifest lists one: autocomplete reads the dictionary.
+    A prefixes dir an older build left behind is ignored."""
+    import shutil
+
+    assert not Path(built.prefixes).exists()
+    leftover = Path(built.prefixes) / "pfx_bucket=0"
+    shutil.copytree(built.dictionary, leftover)
+    changes = spark.createDataFrame(
+        [("conv-c", 0, "user", "jardin du Luxembourg", None, 0.9, "index")],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, importance double, _action string",
+    )
+    m = apply_actions(spark, built, changes, cfg)
+    cur = built.pin()
+    assert cur.version == m["version"] == 1
+    assert not Path(cur.prefixes).exists()
+    tables = cur.read_snapshot_manifest()["tables"]
+    assert "prefixes" not in tables and {"docs", "blocks", "pairs"} <= set(tables)
 
 
 def test_update_replaces_postings(spark, cfg, built):
@@ -240,7 +263,6 @@ def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path, fileio):
     from addok_spark.index.build import (
         dictionary_from_blocks,
         pairs_from_blocks,
-        prefixes_from_dictionary,
         read_table,
     )
 
@@ -308,12 +330,8 @@ def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path, fileio):
         for r in dictionary_from_blocks(blocks).collect()
     }
     assert got == want
-    # ...and so do the prefix and pair tables: each equals its full
-    # derivation from the published dictionary / blocks
-    pfx_cols = ["prefix", "token", "df", "max_boost", "pfx_bucket"]
-    assert _rowset(read_table(spark, paths, "prefixes"), pfx_cols) == _rowset(
-        prefixes_from_dictionary(dictionary, cfg), pfx_cols
-    )
+    # ...and so does the pair table: it equals its full derivation
+    # from the published dictionary and blocks
     pair_cols = ["pbucket", "token_a", "token_b"]
     assert _rowset(read_table(spark, paths, "pairs"), pair_cols) == _rowset(
         pairs_from_blocks(blocks, dictionary, cfg), pair_cols,
@@ -443,12 +461,9 @@ def test_common_token_falling_below_threshold_regains_pairs(spark, tmp_path):
 
 
 def test_backfill_batch_routes_through_range_assigner(spark, cfg, built):
-    """Verdict #8: new-doc batches above cdc_backfill_threshold use
-    the two-pass assigner — ids stay dense, appended after the old
-    max, in (conv_id, turn_idx) order."""
-    import dataclasses
-
-    cfg2 = dataclasses.replace(cfg, cdc_backfill_threshold=10)
+    """New docs get their ids from the bulk build's two-pass range
+    assigner — ids stay dense, appended after the old max, in
+    (conv_id, turn_idx) order."""
     docs0 = spark.read.parquet(built.docs)
     max0 = docs0.agg(F.max("doc_index")).collect()[0][0]
     rows = [
@@ -460,7 +475,7 @@ def test_backfill_batch_routes_through_range_assigner(spark, cfg, built):
         rows, "conv_id string, turn_idx int, role string, text string,"
         " tool string, importance double",
     )
-    m = apply_actions(spark, built, changes, cfg2)
+    m = apply_actions(spark, built, changes, cfg)
     assert m["upserts"] == 60
     new = (
         spark.read.parquet(built.docs)
@@ -544,9 +559,9 @@ def test_snapshot_publish_atomic_and_versioned(spark, cfg, built):
 
 def test_concurrent_readers_never_torn(spark, cfg, tmp_path):
     """Readers opened at ANY moment during a stream of CDC batches
-    see a complete index: dictionary loaded, prefix table present,
+    see a complete index: dictionary loaded, autocomplete answering,
     queries answer — the torn-read window of in-place partition
-    rewrites (empty prefix dir mid-refresh) must not exist."""
+    rewrites must not exist."""
     import threading
 
     from addok_spark.data.transcripts import transcripts_df
@@ -556,13 +571,11 @@ def test_concurrent_readers_never_torn(spark, cfg, tmp_path):
     corpus = transcripts_df(spark, 10, seed=42)
     paths = build_index(spark, corpus, cfg, out)
     probe = ParquetIndex(out, cfg)
-    # pick a live prefix straight from the table
-    import pyarrow.dataset as pads
-
-    tbl = pads.dataset(probe.paths.prefixes, partitioning="hive").to_table(
-        columns=["prefix"]
+    # a live prefix: the edge n-gram of a dictionary token
+    a_prefix = next(
+        t[: cfg.min_edge_ngram] for t in sorted(probe.df)
+        if len(t) > cfg.min_edge_ngram and t.isalpha()
     )
-    a_prefix = tbl.column("prefix")[0].as_py()
     n_tokens0 = len(probe.df)
 
     errors: list = []
@@ -575,7 +588,7 @@ def test_concurrent_readers_never_torn(spark, cfg, tmp_path):
                 idx = ParquetIndex(out, cfg)  # fresh open → pins CURRENT
                 assert idx.n_docs > 0
                 assert len(idx.df) >= n_tokens0 - 5, "torn dictionary"
-                assert idx.prefix_candidates(a_prefix), "torn prefix table"
+                assert idx.prefix_candidates(a_prefix), "torn dictionary"
                 openings[0] += 1
             except Exception as e:  # pragma: no cover - failure detail
                 errors.append(e)

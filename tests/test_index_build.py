@@ -111,15 +111,25 @@ def test_dl_and_meta(spark, built):
     assert meta["avgdl"] == pytest.approx(sum(docs.values()) / 4)
 
 
-def test_prefix_table(spark, built):
-    pfx = spark.read.parquet(built.prefixes)
+def test_prefix_table(built, tiny_cfg):
+    """Autocomplete candidates come from the dictionary: a token is
+    offered under its edge n-grams (min..max_edge_ngram characters,
+    shorter than the token) and nowhere else; no prefixes table or
+    manifest stage is written."""
+    from addok_spark.serving.local import ParquetIndex
+
+    idx = ParquetIndex(built, tiny_cfg)
     got = {
-        (r["prefix"], r["token"])
-        for r in pfx.filter(F.col("token") == "lilas").collect()
+        p for p in ("li", "lil", "lila", "lilas", "lilasx")
+        if "lilas" in idx.prefix_candidates(p)
     }
-    assert got == {("lil", "lilas"), ("lila", "lilas")}
-    # digit tokens excluded
-    assert pfx.filter(F.col("token").rlike("^[0-9]+$")).count() == 0
+    assert got == {"lil", "lila"}
+    assert idx.prefix_candidates("gen") == ["general"]  # folded "Général"
+    # filter tokens are never offered
+    assert "f|role|user" in idx.df
+    assert idx.prefix_candidates("f|r") == []
+    assert not Path(built.prefixes).exists()
+    assert "prefixes" not in json.loads(built.manifest.read_text())["stages"]
 
 
 def test_pairs_table(spark, built):

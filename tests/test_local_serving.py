@@ -415,10 +415,12 @@ def test_serving_trace_and_bounded_caches(index_paths, cfg):
 
 
 def test_serving_without_side_tables(spark, tmp_path, corpus_pdf):
-    """An index built without prefixes/pairs (the reference's
-    mass-import shape, ngrams deferred) must still serve: autocomplete
-    degrades to no expansions, fuzzy to presence-only — same as the
-    Spark engine's behavior on the same index."""
+    """An index built in the reference's mass-import shape (side
+    tables deferred; ``build_prefixes`` is read by no code) must still
+    serve: autocomplete expands from the dictionary with no pair
+    pruning, fuzzy degrades to presence-only — as the oracle built
+    without pairs does, and as the Spark engine does on the same
+    index."""
     bare_cfg = EngineConfig(
         build_partitions=4,
         doc_bucket_bits=8,
@@ -430,21 +432,110 @@ def test_serving_without_side_tables(spark, tmp_path, corpus_pdf):
     sdf = transcripts_df(spark, 10, seed=42)
     paths = build_index(spark, sdf, bare_cfg, str(tmp_path / "bare_idx"))
     srv = LocalSearchEngine(paths, bare_cfg)
-    assert srv.index._prefix_ds is None and srv.index._pairs_ds is None
-    assert srv.index.have_pairs is False
+    assert srv.index._pairs_ds is None and srv.index.have_pairs is False
+    oracle = OracleIndex(sdf.toPandas(), bare_cfg)
+    # a prefix that is no token itself: only its expansions can match
+    pfx = next(
+        t[:4] for t in sorted(oracle.df)
+        if len(t) > 5 and t.isalpha() and t[:4] not in oracle.df
+    )
     words = corpus_pdf["text"].iloc[0].split()[:3]
-    r = srv.search([
+    queries = [
         Query(qid="b1", q=" ".join(words), k=5),
-        Query(qid="b2", q=words[0][:4], k=5, autocomplete=True),
+        Query(qid="b2", q=pfx, k=5, autocomplete=True),
         Query(qid="b3", q=words[0][:-1] + "x " + words[1], k=5),  # typo
-    ])
+    ]
+    r = srv.search(queries)
     assert len(r[r.qid == "b1"]) > 0
+    # the autocomplete query answers from the dictionary, as the oracle
+    want = oracle_search(oracle, queries[1:2], bare_cfg)
+    _assert_identical(r[r.qid == "b2"], want, min_nonempty=1)
     # and the Spark engine agrees on the same bare index
     eng = SearchEngine(spark, paths, bare_cfg)
     for qid, q in [("b1", " ".join(words))]:
         got = eng.search([Query(qid=qid, q=q, k=5)]).toPandas()
         want = r[r.qid == qid]
         assert list(got["doc_index"]) == list(want["doc_index"])
+
+
+def _prefix_probes(index, cfg) -> set[str]:
+    """Every edge n-gram of every dictionary token (f| filter tokens
+    included), plus prefixes autocomplete never answers: shorter than
+    min_edge_ngram, longer than max_edge_ngram, all-digit, f|… and
+    absent from the dictionary."""
+    from addok_spark.functions.text import edge_ngrams_str
+
+    lo, hi = cfg.min_edge_ngram, cfg.max_edge_ngram
+    probes = {
+        p for t in index.df for p in edge_ngrams_str(t, lo, hi)
+    }
+    for t in index.df:
+        probes.add(t[: lo - 1])
+        probes.add(t[: hi + 1])
+        probes.add(t)
+    probes |= {"", "0", "123", "2024", "f|", "f|r", "f|role", "f|role|u",
+               "zzzq", "x" * (hi + 1)}
+    # all-digit tokens whose edge n-grams must not offer them
+    assert any(t.isdigit() and len(t) > lo for t in index.df)
+    return probes
+
+
+def _assert_prefixes_match(idx, oracle, cfg):
+    probes = _prefix_probes(idx, cfg)
+    for cap in (5, 100):
+        for p in sorted(probes):
+            assert idx.prefix_candidates(p, cap) == oracle.prefix_candidates(
+                p, cap
+            ), (p, cap)
+    return probes
+
+
+def test_prefix_candidates_equal_oracle_exhaustively(
+    spark, index_paths, cfg, corpus_pdf, oracle, tmp_path
+):
+    """Serving answers autocomplete prefixes from the sorted in-RAM
+    dictionary. Its answer must equal the oracle's own edge-n-gram
+    enumeration for every edge n-gram of every token, for both caps,
+    and for every prefix it must not answer — on the bulk index and
+    after a CDC batch that adds, rewrites and removes tokens."""
+    import shutil
+
+    from addok_spark.index.incremental import apply_actions
+    from addok_spark.serving.local import ParquetIndex
+
+    probes = _assert_prefixes_match(ParquetIndex(index_paths, cfg), oracle, cfg)
+    assert len(probes) > 1000
+
+    # CDC, on a copy of the module index (other tests read it as built)
+    root = tmp_path / "pfx_cdc"
+    shutil.copytree(index_paths.root, root)
+    live = corpus_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    ups = live.iloc[[2, 9, 30]].copy()
+    # one token longer than max_edge_ngram + 1: its longest edge n-gram
+    # is answered, the prefix one character longer is not
+    ups["text"] = ["zqprefixmark alphabetical", "zqprefixmarker",
+                   "zqpre zqprefixmarkerlongerthanmax"]
+    dels = live.iloc[[4, 5, 6, 60]].copy()
+    new = live.iloc[:3].copy()
+    new["conv_id"] = "conv-zz-appended"
+    batch = pd.concat([
+        ups.assign(_action="index"),
+        dels.assign(_action="delete"),
+        new.assign(_action="index"),
+    ], ignore_index=True)
+    apply_actions(spark, str(root), spark.createDataFrame(batch), cfg)
+    after = live.copy()
+    after.loc[ups.index, "text"] = ups["text"]
+    after = pd.concat([after.drop(dels.index), new], ignore_index=True)
+    idx = ParquetIndex(str(root), cfg)
+    assert idx.paths.version == 1
+    assert idx.prefix_candidates("zqpre") == [
+        "zqprefixmark", "zqprefixmarker", "zqprefixmarkerlongerthanmax",
+    ]
+    long_tok = "zqprefixmarkerlongerthanmax"
+    assert idx.prefix_candidates(long_tok[: cfg.max_edge_ngram]) == [long_tok]
+    assert idx.prefix_candidates(long_tok[: cfg.max_edge_ngram + 1]) == []
+    _assert_prefixes_match(idx, OracleIndex(after, cfg), cfg)
 
 
 def test_serving_preload_hot(index_paths, cfg, oracle, corpus_pdf):

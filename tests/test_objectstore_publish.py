@@ -104,8 +104,7 @@ def test_nolink_publish_shares_by_reference(spark, cfg, tmp_path):
     )
 
     # manifest-resolved reads == the hardlink twin, table by table
-    for table in ("docs", "blocks", "dictionary", "dict_partials",
-                  "prefixes", "pairs"):
+    for table in ("docs", "blocks", "dictionary", "dict_partials", "pairs"):
         a = read_table(spark, lp, table)
         b = read_table(spark, np_, table)
         cols = sorted(a.columns)
@@ -304,8 +303,7 @@ def test_rebuild_over_stale_manifest_reads_rebuilt_tables(spark, cfg, tmp_path):
     (root / "snapshot-v000002.json").write_text(json.dumps(stale))
     rebuilt = build_index(spark, _corpus(spark, 20), cfg, str(root))
     assert paths.current_version() == 2
-    for table in ("docs", "blocks", "dictionary", "dict_partials",
-                  "prefixes", "pairs"):
+    for table in ("docs", "blocks", "dictionary", "dict_partials", "pairs"):
         got = read_table(spark, paths, table)
         want = spark.read.parquet(getattr(rebuilt, table))
         cols = sorted(want.columns)
@@ -327,62 +325,3 @@ def test_read_table_prunes_partitions_on_manifest_snapshots(spark, cfg, tmp_path
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "pbucket" in plan
     assert df.count() > 0
-
-
-def test_cli_ngrams_postpass_on_flat_linked_and_reference_snapshots(
-    spark, cfg, tmp_path, capsys, monkeypatch
-):
-    """The `ngrams` CLI post-pass must work against all three index
-    states: flat bulk layout, versioned materialized snapshots, and
-    versioned reference-only (object-store) snapshots — in the last
-    case carrying untouched tables purely via the new manifest."""
-    import json as _json
-
-    import addok_spark.__main__ as cli
-
-    monkeypatch.setattr(cli, "_spark", lambda args: spark)
-    cfg2 = EngineConfig(**{
-        **cfg.__dict__, "build_prefixes": False, "min_edge_ngram": 2,
-    })
-
-    def run_ngrams(idx):
-        cli.main(["ngrams", "--index", idx])
-        out = capsys.readouterr().out.strip().splitlines()[-1]
-        return _json.loads(out)["prefixes"]
-
-    def has_prefix(paths, pfx):
-        rows = read_table(spark, paths.pin(), "prefixes").filter(
-            F.col("prefix") == pfx
-        )
-        return rows.count() > 0
-
-    # (a) flat layout
-    flat = build_index(spark, _corpus(spark), cfg2, str(tmp_path / "flat"))
-    assert run_ngrams(str(flat.root))["version"] is None
-    assert has_prefix(flat, "alp")
-
-    # (b) versioned materialized (LocalFileIO CDC first)
-    lp = build_index(spark, _corpus(spark), cfg2, str(tmp_path / "lk"))
-    apply_actions(spark, lp, _batch(spark, 0, "linked ngrams probe"), cfg2)
-    v = run_ngrams(str(lp.root))["version"]
-    assert v == 2 and lp.pin().version == 2
-    assert has_prefix(lp, "lin")
-
-    # (c) versioned reference-only (NoLinkFileIO CDC first): carried
-    # tables resolve via the manifest, prefixes land in the new
-    # snapshot, searches still work
-    np_ = build_index(spark, _corpus(spark), cfg2, str(tmp_path / "nl"))
-    apply_actions(
-        spark, np_, _batch(spark, 0, "nolink ngrams probe"), cfg2,
-        fileio=NoLinkFileIO(),
-    )
-    v = run_ngrams(str(np_.root))["version"]
-    assert v == 2 and np_.pin().version == 2
-    man = json.loads((Path(np_.root) / "snapshot-v000002.json").read_text())
-    assert "prefixes" in man["tables"]
-    assert any(
-        not loc.startswith("v000002/")
-        for loc in man["tables"]["docs"].values()
-    ), "carried tables must stay by-reference"
-    assert has_prefix(np_, "nol")
-    assert _search(spark, np_, cfg2, "nolink ngrams")

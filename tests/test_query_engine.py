@@ -210,37 +210,39 @@ def test_filter_value_whitespace_normalized(spark, cfg, tmp_index_root):
 
 
 def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
-    """The serving index's pyarrow metadata probes (in-RAM dictionary
-    stats, prefix candidates, pair existence) the search flow plans
-    with must return exactly what Spark scans of the same tables
-    return — including absent keys and the prefix rank-and-cap
+    """The serving index's metadata probes (in-RAM dictionary stats,
+    prefix candidates, pair existence) the search flow plans with must
+    return exactly what Spark scans of the same tables return, and
+    the prefix candidates what the oracle's edge n-gram enumeration
+    returns — including absent keys and the prefix rank-and-cap
     order."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from addok_spark.index.build import read_table
+    from addok_spark.oracle.bm25_oracle import OracleIndex
     from addok_spark.serving.local import ParquetIndex
 
     cfg = EngineConfig(
         build_partitions=4, doc_bucket_bits=4, posting_block_size=16,
-        build_prefixes=True, build_pairs=True, common_threshold=400,
+        build_pairs=True, common_threshold=400,
     )
+    sdf = transcripts_df(spark, 15, seed=42)
     paths = build_index(
-        spark, transcripts_df(spark, 15, seed=42), cfg,
-        str(Path(tmp_index_root) / "probe_idx"),
+        spark, sdf, cfg, str(Path(tmp_index_root) / "probe_idx"),
     )
     idx = ParquetIndex(paths, cfg)
     dictionary = read_table(spark, paths, "dictionary")
-    prefix_tbl = read_table(spark, paths, "prefixes")
     pairs_tbl = read_table(spark, paths, "pairs")
 
     toks = {
         r["token"]
         for r in dictionary.select("token").limit(10).collect()
     } | {"zz_absent_token"}
+    # edge n-grams (3 to 5 characters) of some word tokens
+    words = dictionary.filter(F.col("token").rlike("^[a-z]{6,}$"))
     prefixes = {
-        r["prefix"]
-        for r in prefix_tbl.select("prefix").limit(6).collect()
+        r["token"][: cfg.min_edge_ngram + i % 3]
+        for i, r in enumerate(words.select("token").limit(6).collect())
     } | {"zzzz"}
     some = sorted(toks)[:6]
     checks = {
@@ -252,15 +254,11 @@ def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
         for r in dictionary.filter(F.col("token").isin(list(toks)))
         .select("token", "df", "max_boost").collect()
     }
-    w = Window.partitionBy("prefix").orderBy(F.desc("df"), F.asc("token"))
-    cands: dict = {}
-    for r in sorted(
-        prefix_tbl.filter(F.col("prefix").isin(list(prefixes)))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5).collect(),
-        key=lambda r: (r["prefix"], r["rn"]),
-    ):
-        cands.setdefault(r["prefix"], []).append(r["token"])
+    oracle = OracleIndex(sdf.toPandas(), cfg)
+    cands = {
+        p: c for p in prefixes if (c := oracle.prefix_candidates(p, cap=5))
+    }
+    assert len(cands) == len(prefixes) - 1
     a_list = sorted({a for a, _ in checks})
     b_list = sorted({b for _, b in checks})
     pairs = {

@@ -33,7 +33,6 @@ def test_resume_after_partial_failure(spark, cfg, tmp_path):
     for stage, d in (
         ("blocks", paths.blocks),
         ("dictionary", paths.dictionary),
-        ("prefixes", paths.prefixes),
         ("pairs", paths.pairs),
     ):
         manifest["stages"].pop(stage, None)
@@ -47,17 +46,22 @@ def test_resume_after_partial_failure(spark, cfg, tmp_path):
     assert m2["docs"] == full_stages["docs"]
     assert m2["blocks"]["rows"] == full_stages["blocks"]["rows"]
     assert m2["dictionary"]["rows"] == full_stages["dictionary"]["rows"]
+    assert m2["pairs"]["rows"] == full_stages["pairs"]["rows"]
 
-    # the resumed index answers queries rank-identically to the oracle
+    # the resumed index answers queries (autocomplete included)
+    # rank-identically to the oracle
     corpus_pdf = corpus.toPandas()
     oracle = OracleIndex(corpus_pdf, cfg)
-    phrase = " ".join(corpus_pdf["text"].iloc[3].split()[:3])
-    q = [Query(qid="r1", q=phrase, k=5)]
-    got = SearchEngine(spark, paths, cfg).search(q).toPandas()
-    want = oracle_search(oracle, q, cfg)
-    assert list(got.sort_values("rank")["doc_index"]) == list(
-        want.sort_values("rank")["doc_index"]
-    )
+    words = corpus_pdf["text"].iloc[3].split()
+    for q in (
+        [Query(qid="r1", q=" ".join(words[:3]), k=5)],
+        [Query(qid="r2", q=f"{words[0]} {words[1][:3]}", k=5, autocomplete=True)],
+    ):
+        got = SearchEngine(spark, paths, cfg).search(q).toPandas()
+        want = oracle_search(oracle, q, cfg)
+        assert list(got.sort_values("rank")["doc_index"]) == list(
+            want.sort_values("rank")["doc_index"]
+        )
 
 
 def test_metrics_sidecars_exist(spark, cfg, tmp_path):
@@ -65,7 +69,7 @@ def test_metrics_sidecars_exist(spark, cfg, tmp_path):
     (north_rule: 'metrics written alongside each Iceberg snapshot')."""
     out = str(tmp_path / "idx2")
     paths = build_index(spark, transcripts_df(spark, 8, seed=1), cfg, out)
-    for d in (paths.docs, paths.blocks, paths.dictionary, paths.prefixes):
+    for d in (paths.docs, paths.blocks, paths.dictionary, paths.pairs):
         side = Path(d) / "_metrics.json"
         assert side.exists(), d
         m = json.loads(side.read_text())
