@@ -156,8 +156,10 @@ class EngineConfig:
     posting_block_size: int = 4096  # max postings per stored block row
     pbucket_shift: int = 6         # buckets per partition dir = 2^shift
     build_partitions: int = 32
-    # the pair side table, deferrable during mass import (≙ the
-    # reference deferring side indexes during batch import, batch.py:44)
+    # whether autocomplete and fuzzy expansions are co-occurrence-
+    # filtered (≙ the reference deferring its pair index during mass
+    # import, batch.py:44). No table is built either way: co-occurrence
+    # intersects posting lists, and meta.json records the choice
     build_pairs: bool = True
     # snapshots retained after an atomic publish (CURRENT.json swap):
     # the published one plus keep-1 predecessors, so readers pinned to

@@ -1,5 +1,5 @@
-"""Distributed inverted-index build (postings, dictionary, pairs)
-over a transcripts table.
+"""Distributed inverted-index build (postings, dictionary) over a
+transcripts table.
 
 Reference dataflow being re-expressed (NOT ported): the reference
 indexes docs one at a time into Redis sorted sets
@@ -23,10 +23,11 @@ same logical artifacts are produced as one declarative Spark plan:
         ascending, ``tfs``, ``boosts``, one position list per posting
         in ``pos``) — the columnar writer encodes them; no
         hand-written codec, no Python past the analyzer
-      → dictionary and pair side tables. Autocomplete needs no table
-        of its own: in the token-sorted dictionary every prefix is one
-        contiguous range, which the serving tier reads in RAM
-        (``serving/local.py``).
+      → the dictionary side table. Autocomplete and co-occurrence
+        need no table of their own: in the token-sorted dictionary
+        every prefix is one contiguous range, and two tokens co-occur
+        when their doc-sorted posting lists intersect — both read by
+        the serving tier (``serving/local.py``).
 
 Each stage is written to its own directory with a manifest + metrics
 sidecar; a re-run with the same ``out_dir`` skips completed stages →
@@ -309,6 +310,10 @@ class IndexPaths:
 
     @property
     def pairs(self) -> str:
+        # nothing writes this dir and no manifest lists it: co-occurrence
+        # intersects posting lists. An older index may still hold one,
+        # which every reader ignores; perfbench sizes it (0 bytes when
+        # absent)
         return str(self.snapshot_root / "pairs")
 
     @property
@@ -324,7 +329,7 @@ class IndexPaths:
 
 # every table a snapshot manifest can carry (each an IndexPaths
 # property resolving under snapshot_root)
-MANIFEST_TABLES = ("docs", "blocks", "dictionary", "dict_partials", "pairs")
+MANIFEST_TABLES = ("docs", "blocks", "dictionary", "dict_partials")
 
 
 def _scans(root: Path, entries: dict[str, str]) -> list[tuple[str, list[str] | None]]:
@@ -671,7 +676,7 @@ def _make_doc_analyzer(
     buffers — no per-token Python objects in OR out (the list-of-dicts
     return path of the pandas UDF was most of the stage's CPU). Struct
     order within a doc is dictionary-code order, not first-occurrence
-    order — no consumer depends on it (blocks and pairs both re-sort)."""
+    order — no consumer depends on it (the blocks stage re-sorts)."""
     from ..functions.text import fold_series
 
     syn = dict(cfg.synonyms)
@@ -1231,105 +1236,6 @@ def build_blocks_from_analyzed(analyzed: DataFrame, cfg: EngineConfig) -> DataFr
     return build_blocks(token_doc, cfg)
 
 
-def _expand_pairs(per_doc: DataFrame) -> DataFrame:
-    """(pbucket, toks sorted-distinct array) → distinct (pbucket,
-    token_a, token_b) with token_a < token_b, via a codegen nested
-    transform — no self-join shuffle at all (≙ PairsIndexer,
-    addok/pairs.py:6-16). pbucket is the provenance partition key:
-    pairs are distinct per pbucket (the global pair set is the union
-    over partitions; consumers dedupe in the driver set), which is
-    what makes the CDC pair refresh O(touched partitions) instead of
-    a full corpus unpack."""
-    return (
-        per_doc.select(
-            "pbucket",
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "toks",
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("toks"),
-                                i + 2,
-                                F.greatest(
-                                    F.size(F.col("toks")) - i - 1, F.lit(0)
-                                ),
-                            ),
-                            lambda y: F.struct(
-                                x.alias("token_a"), y.alias("token_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("pbucket", "p.token_a", "p.token_b")
-        .distinct()
-    )
-
-
-def pairs_from_blocks(
-    blocks_df: DataFrame, dictionary: DataFrame, cfg: EngineConfig
-) -> DataFrame:
-    """Co-occurrence pairs derived from posting BLOCKS (no text
-    re-analysis): unpack doc ids per token, drop COMMON tokens (the
-    Zipf head is small by construction → broadcast anti-join), regroup
-    per doc, expand pairs (≙ PairsIndexer skipping commons,
-    addok/pairs.py:6-16). For pbuckets with no analyzed rows at hand:
-    a CDC batch's pbuckets that only a common-threshold crossing
-    touches, and legacy (non-pbucket-partitioned) pair tables. The
-    bulk build and the CDC batch's touched pbuckets use
-    ``pairs_from_analyzed`` (same result, no block unpack, one less
-    shuffle)."""
-    commons = dictionary.filter(
-        F.col("df") > cfg.common_threshold
-    ).select("token")
-    shift = cfg.doc_bucket_bits + cfg.pbucket_shift
-    tok_doc = (
-        blocks_df.filter(~F.col("token").contains("|"))
-        .join(F.broadcast(commons), "token", "left_anti")
-        .select("token", F.explode("docs").alias("doc_index"))
-    )
-    per_doc = tok_doc.groupBy("doc_index").agg(
-        F.array_sort(F.collect_set("token")).alias("toks")
-    ).select(F.shiftright("doc_index", shift).alias("pbucket"), "toks")
-    return _expand_pairs(per_doc)
-
-
-def pairs_from_analyzed(
-    analyzed: DataFrame, dictionary: DataFrame, cfg: EngineConfig
-) -> DataFrame:
-    """Pairs derivation for the bulk build (over the analyzed scratch)
-    and for a CDC batch's touched pbuckets (over its re-analyzed
-    docs): analyzed rows already hold each doc's distinct tokens
-    (``__an.toks``, one struct per distinct token), so the per-doc
-    token set needs NO block unpack and NO regroup-by-doc shuffle —
-    just an in-row projection. Commons (the
-    Zipf head: bounded by tokens with df > COMMON_THRESHOLD, i.e. a
-    stopword-sized set even at full corpus scale) are removed with a
-    constant-folded literal array via ``array_except``. Produces the
-    identical pair set to ``pairs_from_blocks`` (asserted in
-    tests/test_index_build.py)."""
-    commons = [
-        r["token"]
-        for r in dictionary.filter(F.col("df") > cfg.common_threshold)
-        .select("token")
-        .collect()
-    ]
-    shift = cfg.doc_bucket_bits + cfg.pbucket_shift
-    # direct array-struct field extraction (NOT a lambda transform):
-    # GetArrayStructFields is what nested-schema pruning understands —
-    # a transform() lambda forces the scan to read the full token
-    # structs incl. position binaries (measured 4× slower)
-    toks = F.array_sort(F.col("__an.toks").getField("token"))
-    if commons:
-        toks = F.array_except(toks, F.array(*[F.lit(c) for c in commons]))
-    per_doc = analyzed.select(
-        F.shiftright("doc_index", shift).alias("pbucket"), toks.alias("toks")
-    )
-    return _expand_pairs(per_doc)
-
-
 def dictionary_from_blocks(blocks: DataFrame) -> DataFrame:
     """Token dictionary as a pure derivation of block metadata."""
     return blocks.groupBy("token").agg(
@@ -1543,33 +1449,10 @@ class IndexBuilder:
                 "pbucket_shift": cfg.pbucket_shift,
                 "posting_block_size": cfg.posting_block_size,
                 "fields": [[f.name, f.boost] for f in cfg.fields],
+                "build_pairs": cfg.build_pairs,
             }
             self.paths.meta.write_text(json.dumps(meta, indent=2))
             self._mark_stage("docs_meta")
-
-        dictionary = spark.read.parquet(self.paths.dictionary)
-
-        # --- pair (co-occurrence) table, meaningful tokens only
-        # (reference PairsIndexer skips commons, addok/pairs.py:6-16)
-        if cfg.build_pairs and not (resume and self._stage_done("pairs")):
-            # bulk path reads per-doc token sets straight from the
-            # analyzed scratch (no block unpack / regroup shuffle);
-            # CDC does the same over its touched pbuckets' re-analyzed
-            # docs
-            pairs = pairs_from_analyzed(analyzed, dictionary, cfg)
-            # HASH repartition, not repartitionByRange: the range
-            # partitioner's sampling job re-executes the child, and
-            # this child is the 700M-row pair expansion + distinct
-            # (measured ~2x the stage). Files lose global token-range
-            # clustering but stay (token_a, token_b)-sorted WITHIN
-            # partitions, so the probes' IN-lists still prune row
-            # groups on footer min/max — the part that matters.
-            self._write(
-                pairs.repartition(
-                    cfg.build_partitions, "pbucket", "token_a"
-                ).sortWithinPartitions("pbucket", "token_a", "token_b"),
-                self.paths.pairs, "pairs", partition_by="pbucket",
-            )
 
         # final metrics rollup
         meta = json.loads(self.paths.meta.read_text())

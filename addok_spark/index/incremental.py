@@ -38,7 +38,6 @@ streaming checkpoint + the manifest's applied-batch record.
 from __future__ import annotations
 
 import json
-import shutil
 from pathlib import Path
 
 from pyspark import StorageLevel
@@ -57,11 +56,8 @@ from .build import (
     dict_partials_from_blocks,
     dictionary_from_partials,
     open_dataset,
-    pairs_from_analyzed,
-    pairs_from_blocks,
     read_entries,
     read_table,
-    table_exists,
 )
 from .fileio import FileIO, LocalFileIO
 
@@ -178,8 +174,8 @@ def apply_actions(
 
     Each relation is computed once per batch: the change set is
     resolved against the docs table in one join, the touched docs are
-    analyzed once (docs, blocks AND touched pairs all come from those
-    rows), and the dictionary is folded once. Every relation the batch
+    analyzed once (docs and blocks both come from those rows), and
+    the dictionary is folded once. Every relation the batch
     persists is released before it returns or raises.
     """
     paths = paths if isinstance(paths, IndexPaths) else IndexPaths(Path(paths))
@@ -294,9 +290,8 @@ def apply_actions(
         new_docs = survivors.unionByName(ups_cols)
 
         # analyze ONCE (the bulk build's shape): dl comes from the
-        # analyzer's own counter, and the docs, blocks and touched pairs
-        # all read these analyzed rows — no second analysis pass, no dl
-        # groupBy, no block unpack for the pair refresh
+        # analyzer's own counter, and the docs and blocks both read
+        # these analyzed rows — no second analysis pass, no dl groupBy
         analyzed_new = shared(analyze_docs(new_docs, cfg), _CDC_LEVEL)
         docs_part = _with_pbucket(
             analyzed_new.withColumn("dl", F.col("__an.dl")).drop("__an"), cfg
@@ -345,23 +340,13 @@ def apply_actions(
             "append"
         ).partitionBy("pbucket").parquet(stg.dict_partials)
 
-        partials_view = _staged_view(
-            spark, cur, stg, "dict_partials", pbnames
-        )
-        dictionary_from_partials(partials_view).repartitionByRange(
+        dictionary_from_partials(
+            _staged_view(spark, cur, stg, "dict_partials", pbnames)
+        ).repartitionByRange(
             cfg.build_partitions, "token"
         ).sortWithinPartitions("token").write.mode("overwrite").parquet(
             stg.dictionary
         )
-
-        # --- pairs: rebuild touched partitions (+ partitions holding a
-        # common-threshold-crossing token), never the whole corpus ------
-        pairs_rewritten: set[str] | str = "full"
-        if table_exists(cur, "pairs"):
-            pairs_rewritten = _refresh_pairs(
-                spark, cur, stg, partials_view, analyzed_new, touched_pb,
-                cfg, fileio,
-            )
 
         # refresh meta (n_docs / avgdl) incrementally + lineage record
         meta = json.loads(cur.meta.read_text())
@@ -391,7 +376,6 @@ def apply_actions(
             "blocks": pbnames,
             "dict_partials": pbnames,
             "dictionary": "full",
-            "pairs": pairs_rewritten,
         })
 
         # --- atomic publish: one pointer swap of CURRENT.json (local:
@@ -405,105 +389,6 @@ def apply_actions(
             "touched_pbuckets": touched_pb,
             "version": stg.version,
         }
-
-
-def _refresh_pairs(
-    spark: SparkSession,
-    cur: IndexPaths,
-    stg: IndexPaths,
-    partials_view: DataFrame,
-    analyzed: DataFrame,
-    touched_pb: list[int],
-    cfg: EngineConfig,
-    fileio: FileIO,
-) -> set[str]:
-    """Stage the pair table's next snapshot: untouched pbucket
-    partitions shared (hardlink or manifest reference), touched ones
-    re-derived from the batch's ``analyzed`` rows (which hold every
-    doc of the touched pbuckets), and any other partition holding a
-    token that crossed the common threshold this batch re-derived
-    from its staged blocks. A partition rebuilt to zero pairs is
-    simply not written — the stale-dir hazard of in-place dynamic
-    overwrite cannot occur. Returns the rebuilt partition names for
-    the snapshot manifest."""
-    dict_disk = spark.read.parquet(stg.dictionary)
-    # tokens whose COMMON status flips this batch invalidate pair
-    # partitions beyond the touched set (the pair table excludes the
-    # Zipf head by global df): every token of the touched pbuckets,
-    # before or after, with its df in the OLD dictionary (still intact
-    # at the current snapshot) against the one just staged
-    changed_tokens = (
-        read_table(spark, cur, "dict_partials")
-        .filter(F.col("pbucket").isin(touched_pb))
-        .select("token")
-        .unionByName(
-            spark.read.parquet(stg.dict_partials)
-            .filter(F.col("pbucket").isin(touched_pb))
-            .select("token")
-        )
-        .distinct()
-    )
-    old_df = read_table(spark, cur, "dictionary").select(
-        "token", F.col("df").alias("odf")
-    )
-    crossing = [
-        r["token"]
-        for r in changed_tokens.join(old_df, "token", "left")
-        .join(dict_disk.select("token", F.col("df").alias("ndf")), "token", "left")
-        .filter(
-            (F.coalesce(F.col("odf"), F.lit(0)) > cfg.common_threshold)
-            != (F.coalesce(F.col("ndf"), F.lit(0)) > cfg.common_threshold)
-        )
-        .select("token")
-        .collect()
-    ]
-    rebuild = set(touched_pb)
-    if crossing:
-        rebuild.update(
-            r["pbucket"]
-            for r in partials_view
-            .filter(F.col("token").isin(crossing))
-            .select("pbucket")
-            .distinct()
-            .collect()
-        )
-
-    fileio.stage_partitions(cur.pairs, stg.pairs, rebuild, "pbucket=")
-    # touched pbuckets: each doc's distinct tokens are already in
-    # its analyzed row — no block unpack, no regroup-by-doc shuffle
-    pairs = pairs_from_analyzed(analyzed, dict_disk, cfg)
-    # a crossing token's other pbuckets were not analyzed this
-    # batch: unpack their blocks (read through the staged VIEW, so
-    # they resolve by reference too)
-    extra = sorted(rebuild - set(touched_pb))
-    if extra:
-        staged_blocks = _staged_view(
-            spark, cur, stg, "blocks", {f"pbucket={v}" for v in touched_pb}
-        )
-        pairs = pairs.unionByName(pairs_from_blocks(
-            staged_blocks.filter(F.col("pbucket").isin(extra)),
-            dict_disk, cfg,
-        ))
-    # HASH repartition (not range): the range sampler re-executes the
-    # pair-expansion child — the measured 2× of the bulk stage; files
-    # stay (token_a, token_b)-sorted within partitions for row-group
-    # pruning, which is the part the probes need
-    pairs.repartition(
-        cfg.build_partitions, "pbucket", "token_a"
-    ).sortWithinPartitions("pbucket", "token_a", "token_b").write.mode(
-        "append"
-    ).partitionBy("pbucket").parquet(stg.pairs)
-    # a pair table emptied of every partition has no readable schema
-    # left — drop the STAGED dir (never a live path); the engine
-    # treats a missing pairs dir as pairs=None (expansion pruning
-    # degrades to dictionary presence, which is exact here: with zero
-    # co-occurring non-common pairs no multi-token expansion could
-    # match anyway)
-    if Path(stg.pairs).exists() and not any(
-        q.name.startswith("pbucket=") for q in Path(stg.pairs).iterdir()
-    ):
-        shutil.rmtree(stg.pairs, ignore_errors=True)
-    return {f"pbucket={v}" for v in rebuild}
 
 
 def stream_transcripts(

@@ -16,6 +16,7 @@ runs it over the parquet index, and the Spark ``SearchEngine``
 from __future__ import annotations
 
 import math
+import random
 from collections import defaultdict
 from dataclasses import dataclass
 
@@ -151,7 +152,7 @@ class ExpansionMixin:
     ) -> list[tuple[str, int]]:
         """≙ autocomplete.py:83-95:
         candidates co-occurring with every other meaningful token
-        (commons exempt — the pair table drops the Zipf head), ordered
+        (commons exempt — ``cooc`` excludes the Zipf head), ordered
         by max posting score when the prefix is the only meaningful
         token (order_by_max_score.lua), by frequency otherwise."""
         cands = [c for c in self.prefix_candidates(prefix) if c != prefix]
@@ -296,8 +297,9 @@ class OracleIndex(ExpansionMixin):
         self.max_boost = {
             t: max(m.values()) if m else 0.0 for t, m in self.boost.items()
         }
-        # co-occurrence pairs of NON-common word tokens (mirror of
-        # pairs_from_blocks: Zipf head dropped, sorted distinct pairs)
+        # co-occurrence pairs of NON-common word tokens (Zipf head
+        # dropped, sorted distinct pairs): the independent reference
+        # that serving's posting-list intersection is tested against
         self.have_pairs = cfg.build_pairs
         self.pairs: set[tuple[str, str]] = set()
         if self.have_pairs:
@@ -335,6 +337,35 @@ class OracleIndex(ExpansionMixin):
         capped at ``cap``, highest df first)."""
         cands = sorted(self.prefixes.get(prefix, []), key=lambda x: (-x[1], x[0]))
         return [t for t, _ in cands[:cap]]
+
+    def cooc_probes(self, seed: int = 0) -> list[tuple[str, str]]:
+        """Token pairs to check another index's ``cooc`` against this
+        one: every co-occurring pair, as many sampled non-pairs of
+        non-common word tokens, each common word token with every
+        token of its first doc, a filter token with every word token
+        of its first doc, an absent token and a token with itself.
+        Each pair's order is drawn at random."""
+        rng = random.Random(seed)
+        words = sorted(self.tf)
+        rare = [t for t in words if self.noncommon(t)]
+        probes = sorted(self.pairs)
+        non: set[tuple[str, str]] = set()
+        for _ in range(20 * len(probes)):
+            if len(non) == len(probes) or len(rare) < 2:
+                break
+            a, b = sorted(rng.sample(rare, 2))
+            if (a, b) not in self.pairs:
+                non.add((a, b))
+        probes += sorted(non)
+        firsts = [
+            (t, min(self.tf[t])) for t in words if not self.noncommon(t)
+        ] + [(f, min(self.fboost[f])) for f in sorted(self.fboost)[:1]]
+        for t, d in firsts:
+            probes += [(t, u) for u in words if d in self.tf[u]]
+        if rare:
+            absent = "q" * (1 + max(map(len, self.df)))
+            probes += [(absent, rare[0]), (rare[0], absent), (rare[0], rare[0])]
+        return [p if rng.random() < 0.5 else p[::-1] for p in probes]
 
 
 class SpecSearch:

@@ -2,8 +2,8 @@
 ``/root/reference/addok/helpers/collectors.py:151-214``
 ``extend_results_extrapoling_relations``): when every direct
 relaxation ran dry, build the co-occurrence graph among the query's
-meaningful tokens (edges = the pair index) and re-intersect each
-maximal clique, smallest-average-df cliques first.
+meaningful tokens (an edge joins two tokens that share a doc) and
+re-intersect each maximal clique, smallest-average-df cliques first.
 
 Deterministic by construction: nodes processed in sorted order,
 Bron-Kerbosch without pivoting, cliques ordered by

@@ -4,7 +4,7 @@ The reference serves queries in ~10 ms because its whole index lives
 in Redis RAM on the serving node (``/root/reference/addok/core.py``
 + ``addok/db.py``).  This module answers the same way Lucene-style
 systems do: Spark builds and compacts the immutable
-index artifacts (blocks / dictionary / pairs / docs —
+index artifacts (blocks / dictionary / docs —
 ``index/build.py``), and a serving process answers queries straight
 from those artifacts with pruned columnar reads:
 
@@ -31,8 +31,10 @@ from those artifacts with pruned columnar reads:
 - **autocomplete prefixes** come from the in-RAM dictionary: its
   tokens, sorted once on first use, hold every prefix's candidates
   as one contiguous range (``bisect``), memoized per prefix;
-- **pairs** reads are filter-pruned like the blocks and memoized per
-  key;
+- **co-occurrence** (the reference's ``p|`` pair sets) is answered
+  by intersecting the doc-sorted posting arrays of two non-common
+  tokens, each at most ``common_threshold`` long — no table of its
+  own;
 - every table opens through ``index.build.open_dataset``, the same
   snapshot resolver Spark's ``read_table`` uses, so any published
   snapshot — hardlinked or reference-only (object-store publish,
@@ -417,14 +419,14 @@ class ParquetIndex(ExpansionMixin):
 
         # every table opens through the snapshot's entries — a
         # hardlinked snapshot or flat index is one directory dataset, a
-        # reference-only one unions its base dirs; pairs is None when
-        # the snapshot has none
+        # reference-only one unions its base dirs
         self._blocks_ds = open_dataset(self.paths, "blocks")
         check_blocks_layout(self._blocks_ds.schema, self.paths.root)
         self._docs_ds = open_dataset(self.paths, "docs")
         self._doc_columns = frozenset(self._docs_ds.schema.names)
-        self._pairs_ds = open_dataset(self.paths, "pairs")
-        self.have_pairs = self._pairs_ds is not None
+        # whether expansions are co-occurrence-filtered: as the index
+        # was built (indexes that predate the meta key always were)
+        self.have_pairs = bool(self.meta.get("build_pairs", True))
 
         # term dictionary in RAM (token → df / max_boost, float32
         # parity with dictionary_from_blocks)
@@ -448,7 +450,10 @@ class ParquetIndex(ExpansionMixin):
         self._fold_cache: dict[int, str] = _LRU(100_000)
         self._prefix_tokens: list[str] | None = None
         self._prefix_cache: dict[str, list[str]] = _LRU(50_000)
-        self._pair_cache: dict[str, set[str]] = _LRU(50_000)
+        # always empty: ``cooc`` keeps no memo. perfbench's trace of
+        # ``cooc`` reads it; it stays until that trace moves into the
+        # package
+        self._pair_cache: dict[str, set[str]] = {}
         self._pos_cache: dict[str, tuple] = _LRU(10_000)
 
     def refresh(self) -> None:
@@ -823,7 +828,7 @@ class ParquetIndex(ExpansionMixin):
             self._fold_cache[d] = ft
         return ft
 
-    # -- prefixes / pairs ---------------------------------------------------
+    # -- prefixes / co-occurrence -------------------------------------------
     def prefix_candidates(self, prefix: str, cap: int = 100) -> list[str]:
         """≙ OracleIndex.prefix_candidates, from the in-RAM dictionary:
         the tokens that have ``prefix`` as an edge n-gram (a prefix of
@@ -852,18 +857,15 @@ class ParquetIndex(ExpansionMixin):
         return cached[:cap]
 
     def cooc(self, a: str, b: str) -> bool:
-        if a == b or self._pairs_ds is None:
-            return False
-        lo, hi = (a, b) if a < b else (b, a)
-        s = self._pair_cache.get(lo)
-        if s is None:
-            f = self._pads.field
-            tbl = self._pairs_ds.to_table(
-                filter=f("token_a") == lo, columns=["token_b"]
-            )
-            s = set(tbl.column("token_b").to_pylist())
-            self._pair_cache[lo] = s
-        return hi in s
+        """≙ OracleIndex.cooc: two different non-common word tokens
+        that share a doc (the reference's ``p|`` sets skip commons,
+        addok/pairs.py:6-16). Both posting arrays hold at most
+        ``common_threshold`` docs, so one sorted intersection answers."""
+        return (
+            a != b and "|" not in a and "|" not in b
+            and self.noncommon(a) and self.noncommon(b)
+            and self.any_shared_docs(a, b)
+        )
 
 
 class FastSearch(SpecSearch):

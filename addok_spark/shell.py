@@ -232,29 +232,15 @@ class Shell:
 
     def do_pair(self, token: str) -> str:
         """Tokens co-occurring with ``token`` (≙ inspecting the p|
-        set; served from the pairs table, commons excluded by
-        design)."""
-        import pyarrow.dataset as pds
-
+        set): ``cooc`` over the dictionary's tokens, so commons are
+        excluded by design."""
         from .functions.text import analyze_str
-        from .index.build import open_dataset
 
         toks = analyze_str(token, self.cfg.synonyms, self.cfg.processors)
         if not toks:
             return "(no token)"
         t = toks[0]
-        pairs = open_dataset(self.index.paths, "pairs")
-        if pairs is None:
-            return "(no pairs table)"
-        tbl = pairs.to_table(
-            filter=(pds.field("token_a") == t) | (pds.field("token_b") == t),
-            columns=["token_a", "token_b"],
-        )
-        others = sorted({
-            b if a == t else a
-            for a, b in zip(tbl.column("token_a").to_pylist(),
-                            tbl.column("token_b").to_pylist())
-        })
+        others = sorted(u for u in self.index.df if self.index.cooc(t, u))
         return f"{t}: {len(others)} pairs\n" + ", ".join(others[:100])
 
     def do_bestscore(self, word: str) -> str:

@@ -4,7 +4,10 @@ set over the same corpus and must agree. The Spark engine runs the
 serving tier in mapInPandas tasks, so its frame must also equal the
 serving frame exactly, and the serving tier's autocomplete prefix
 candidates (read from its in-RAM dictionary) must equal the oracle's
-for every edge n-gram of every dictionary token, at the default cap.
+for every edge n-gram of every dictionary token, at the default cap,
+and its co-occurrence test (a posting-list intersection) the oracle's
+pair set on ``OracleIndex.cooc_probes``: every co-occurring pair, as
+many non-pairs, common, filter and absent tokens.
 The check runs twice: on the bulk-built index, and again
 after one CDC batch (updates, deletes and an appended conversation)
 published with ``NoLinkFileIO`` — a reference-only snapshot whose
@@ -59,6 +62,20 @@ def check_prefixes(cfg, index, oracle):
         got, want = idx.prefix_candidates(p), oracle.prefix_candidates(p)
         if got != want:
             mismatches.append((p, got, want))
+    return len(probes), mismatches
+
+
+def check_cooc(cfg, index, oracle):
+    """(number of token pairs checked, mismatches): the oracle's
+    ``cooc_probes``, serving against the oracle."""
+    from addok_spark.serving.local import ParquetIndex
+
+    idx = ParquetIndex(index, cfg)
+    probes = oracle.cooc_probes()
+    mismatches = [
+        (a, b, got, want) for a, b in probes
+        if (got := idx.cooc(a, b)) != (want := oracle.cooc(a, b))
+    ]
     return len(probes), mismatches
 
 
@@ -205,10 +222,12 @@ def main() -> None:
                 spark, cfg, out, oracle, queries
             )
             n_prefixes, pfx_mismatches = check_prefixes(cfg, out, oracle)
+            n_cooc, cooc_mismatches = check_cooc(cfg, out, oracle)
             print(
                 f"RESULT {label} turns={len(corpus)} queries={len(queries)} "
                 f"mismatches={len(mismatches)} engine_equals_serving={exact} "
                 f"prefixes={n_prefixes} prefix_mismatches={len(pfx_mismatches)} "
+                f"cooc={n_cooc} cooc_mismatches={len(cooc_mismatches)} "
                 f"build_s={build_s:.1f} engine_batch_s_per_q={engine_s/len(queries):.3f} "
                 f"serving_cold_ms_per_q={1000*srv_s/len(queries):.1f}"
             )
@@ -216,7 +235,10 @@ def main() -> None:
                 print("MISMATCH", mm[0], mm[1], mm[2][:3], "vs", mm[3][:3])
             for p, got, want in pfx_mismatches[:5]:
                 print("PREFIX MISMATCH", p, got[:3], "vs", want[:3])
-            failed |= bool(mismatches) or bool(pfx_mismatches) or not exact
+            for mm in cooc_mismatches[:5]:
+                print("COOC MISMATCH", *mm)
+            failed |= (bool(mismatches) or bool(pfx_mismatches)
+                       or bool(cooc_mismatches) or not exact)
     finally:
         # the index is scratch: remove it on every way out
         shutil.rmtree(out, ignore_errors=True)

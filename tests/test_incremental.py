@@ -81,12 +81,16 @@ def test_delete_leaves_no_orphans(spark, cfg, built):
 
 
 def test_no_prefix_table_written(spark, cfg, built):
-    """Neither the build nor a CDC batch writes a prefixes table, and
-    no snapshot manifest lists one: autocomplete reads the dictionary.
+    """Neither the build nor a CDC batch writes a prefixes or pairs
+    table, and no build or snapshot manifest lists one: autocomplete
+    reads the dictionary and co-occurrence intersects posting lists.
     A prefixes dir an older build left behind is ignored."""
     import shutil
 
-    assert not Path(built.prefixes).exists()
+    for d in (built.prefixes, built.pairs):
+        assert not Path(d).exists()
+    stages = json.loads(built.manifest.read_text())["stages"]
+    assert "prefixes" not in stages and "pairs" not in stages
     leftover = Path(built.prefixes) / "pfx_bucket=0"
     shutil.copytree(built.dictionary, leftover)
     changes = spark.createDataFrame(
@@ -97,9 +101,10 @@ def test_no_prefix_table_written(spark, cfg, built):
     m = apply_actions(spark, built, changes, cfg)
     cur = built.pin()
     assert cur.version == m["version"] == 1
-    assert not Path(cur.prefixes).exists()
+    for d in (cur.prefixes, cur.pairs):
+        assert not Path(d).exists()
     tables = cur.read_snapshot_manifest()["tables"]
-    assert "prefixes" not in tables and {"docs", "blocks", "pairs"} <= set(tables)
+    assert set(tables) == {"docs", "blocks", "dictionary", "dict_partials"}
 
 
 def test_update_replaces_postings(spark, cfg, built):
@@ -146,30 +151,48 @@ def test_insert_appends_and_searchable(spark, cfg, built):
     assert list(res["turn_idx"])[0] == 0
 
 
-def test_pairs_follow_cdc(spark, cfg, built):
-    """Pairs (co-occurrence) must be re-derived after CDC: edges from
-    deleted docs disappear, edges from new docs appear (otherwise the
-    relation round uses stale edges)."""
+def _cooc_matches_oracle(paths, cfg, corpus_pdf):
+    """Serving's ``cooc`` equals the oracle's over the oracle's probe
+    pairs on ``corpus_pdf``; returns the serving index."""
+    from addok_spark.oracle.bm25_oracle import OracleIndex
+    from addok_spark.serving.local import ParquetIndex
 
-    def pairset():
-        return {
-            (r["token_a"], r["token_b"])
-            for r in spark.read.parquet(built.pairs).collect()
-        }
+    idx = ParquetIndex(paths, cfg)
+    oracle = OracleIndex(corpus_pdf, cfg)
+    probes = oracle.cooc_probes()
+    assert [p for p in probes if idx.cooc(*p) != oracle.cooc(*p)] == []
+    return idx
 
-    assert ("des", "lilas") in pairset()  # from conv-a/0
-    changes = spark.createDataFrame(
-        [
-            ("conv-a", 0, "user", "rue des Lilas", None, 0.5, "delete"),
-            ("conv-d", 0, "user", "quai branly musee", None, 0.3, "index"),
-        ],
-        "conv_id string, turn_idx int, role string, text string,"
-        " tool string, importance double, _action string",
+
+def _apply(spark, paths, cfg, corpus, changes):
+    """Apply ``changes`` (rows with an ``_action``); returns the
+    batch's metrics and the corpus after it, as pandas."""
+    cols = ("conv_id string, turn_idx int, role string, text string,"
+            " tool string, importance double")
+    m = apply_actions(
+        spark, paths,
+        spark.createDataFrame(changes, cols + ", _action string"), cfg,
     )
-    apply_actions(spark, built, changes, cfg)
-    ps = pairset()
-    assert ("des", "lilas") not in ps          # stale edge gone
-    assert ("branly", "quai") in ps            # new doc's edges present
+    keys = {(r[0], r[1]) for r in changes}
+    kept = [r for r in corpus.collect() if (r[0], r[1]) not in keys]
+    kept += [r[:-1] for r in changes if r[-1] != "delete"]
+    return m, spark.createDataFrame(kept, cols).toPandas()
+
+
+def test_pairs_follow_cdc(spark, cfg, built):
+    """Co-occurrence follows CDC: edges from deleted docs disappear,
+    edges from new docs appear (otherwise the relation round uses
+    stale edges)."""
+    from addok_spark.serving.local import ParquetIndex
+
+    assert ParquetIndex(built, cfg).cooc("des", "lilas")  # from conv-a/0
+    _, after = _apply(spark, built, cfg, _corpus(spark), [
+        ("conv-a", 0, "user", "rue des Lilas", None, 0.5, "delete"),
+        ("conv-d", 0, "user", "quai branly musee", None, 0.3, "index"),
+    ])
+    idx = _cooc_matches_oracle(built, cfg, after)
+    assert not idx.cooc("des", "lilas")        # stale edge gone
+    assert idx.cooc("branly", "quai")          # new doc's edges present
 
 
 def test_last_action_per_key_is_deterministic(spark, cfg, built):
@@ -260,11 +283,7 @@ def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path, fileio):
     locations, and (b) the partials read plan carrying a pbucket
     partition filter — while global df/cf stay EXACTLY consistent
     (full-recompute comparison)."""
-    from addok_spark.index.build import (
-        dictionary_from_blocks,
-        pairs_from_blocks,
-        read_table,
-    )
+    from addok_spark.index.build import dictionary_from_blocks, read_table
 
     out = str(tmp_path / "idx_untouched")
     paths = build_index(spark, _bigger_corpus(spark), cfg, out)
@@ -330,26 +349,10 @@ def test_cdc_leaves_untouched_pbuckets_alone(spark, cfg, tmp_path, fileio):
         for r in dictionary_from_blocks(blocks).collect()
     }
     assert got == want
-    # ...and so does the pair table: it equals its full derivation
-    # from the published dictionary and blocks
-    pair_cols = ["pbucket", "token_a", "token_b"]
-    assert _rowset(read_table(spark, paths, "pairs"), pair_cols) == _rowset(
-        pairs_from_blocks(blocks, dictionary, cfg), pair_cols,
-    )
 
 
-def _rowset(df, cols):
-    return {tuple(r) for r in df.select(*cols).collect()}
-
-
-def test_common_threshold_crossing_rebuilds_pairs_exactly(spark, tmp_path):
-    """A token whose df crosses the common threshold must drop out of
-    (or enter) the pair table in ALL partitions, not only the touched
-    ones — the CDC pair refresh widens to partitions holding the
-    crossing token."""
-    from addok_spark.index.build import pairs_from_blocks
-
-    cfg2 = EngineConfig(
+def _crossing_cfg():
+    return EngineConfig(
         fields=(FieldSpec("text", 1.0),),
         build_partitions=4,
         doc_bucket_bits=2,
@@ -357,107 +360,61 @@ def test_common_threshold_crossing_rebuilds_pairs_exactly(spark, tmp_path):
         posting_block_size=2,
         common_threshold=2,
     )
-    # zulu df=2 (non-common) spread over two pbuckets; each doc pairs
-    # zulu with a rare local token
-    rows = [
-        (f"conv-{i:03d}", 0, "user", txt, None, 0.1)
-        for i, txt in enumerate(
-            ["zulu first0", "first1 only", "first2 only", "first3 only",
-             "first4 only", "first5 only", "first6 only", "first7 only",
-             "zulu ninth8", "ninth9 only"]
-        )
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string,"
-        " tool string, importance double",
-    )
-    out = str(tmp_path / "idx_cross")
-    paths = build_index(spark, df, cfg2, out)
-    pairs0 = {
-        (r["token_a"], r["token_b"])
-        for r in spark.read.parquet(paths.pairs).collect()
-    }
-    assert ("first0", "zulu") in pairs0 and ("ninth8", "zulu") in pairs0
-    # add a third zulu doc (new pbucket) -> df=3 > threshold -> common
-    changes = spark.createDataFrame(
-        [("conv-100", 0, "user", "zulu extra", None, 0.1)],
+
+
+def _texts_df(spark, texts):
+    return spark.createDataFrame(
+        [(f"conv-{i:03d}", 0, "user", t, None, 0.1) for i, t in enumerate(texts)],
         "conv_id string, turn_idx int, role string, text string,"
         " tool string, importance double",
     )
-    apply_actions(spark, paths, changes, cfg2)
-    got = (
-        {
-            (r["token_a"], r["token_b"])
-            for r in spark.read.parquet(paths.pairs).collect()
-        }
-        if Path(paths.pairs).exists()
-        else set()
-    )
-    want = {
-        (r["token_a"], r["token_b"])
-        for r in pairs_from_blocks(
-            spark.read.parquet(paths.blocks),
-            spark.read.parquet(paths.dictionary),
-            cfg2,
-        ).collect()
-    }
-    assert got == want
-    assert not any("zulu" in p for p in got)
+
+
+def test_common_threshold_crossing_rebuilds_pairs_exactly(spark, tmp_path):
+    """A token whose df crosses the common threshold stops co-occurring
+    with every token, in pbuckets the batch never touched too."""
+    from addok_spark.serving.local import ParquetIndex
+
+    cfg2 = _crossing_cfg()
+    # zulu df=2 (non-common) spread over two pbuckets; each doc pairs
+    # zulu with a rare local token
+    df = _texts_df(spark, [
+        "zulu first0", "first1 only", "first2 only", "first3 only",
+        "first4 only", "first5 only", "first6 only", "first7 only",
+        "zulu ninth8", "ninth9 only",
+    ])
+    paths = build_index(spark, df, cfg2, str(tmp_path / "idx_cross"))
+    idx0 = ParquetIndex(paths, cfg2)
+    assert idx0.cooc("first0", "zulu") and idx0.cooc("ninth8", "zulu")
+    # add a third zulu doc (new pbucket) -> df=3 > threshold -> common
+    _, after = _apply(spark, paths, cfg2, df, [
+        ("conv-100", 0, "user", "zulu extra", None, 0.1, "index"),
+    ])
+    idx = _cooc_matches_oracle(paths, cfg2, after)
+    assert not idx.cooc("first0", "zulu") and not idx.cooc("ninth8", "zulu")
 
 
 def test_common_token_falling_below_threshold_regains_pairs(spark, tmp_path):
     """The other crossing direction: deletes drop a COMMON token's df
-    to the threshold, so its pairs must reappear in pbuckets the batch
-    never touched — the one path that still unpacks posting blocks
-    (the batch holds no analyzed rows for those pbuckets)."""
-    from addok_spark.index.build import pairs_from_blocks
+    to the threshold, so it co-occurs again with the tokens of
+    pbuckets the batch never touched."""
+    from addok_spark.serving.local import ParquetIndex
 
-    cfg2 = EngineConfig(
-        fields=(FieldSpec("text", 1.0),),
-        build_partitions=4,
-        doc_bucket_bits=2,
-        pbucket_shift=1,
-        posting_block_size=2,
-        common_threshold=2,
-    )
+    cfg2 = _crossing_cfg()
     # 8 docs per pbucket: zulu sits in pbuckets 0, 1 and 2 → df=3 > 2
     texts = [f"fill{i} word{i}" for i in range(17)]
     texts[0], texts[8], texts[16] = "zulu first0", "zulu ninth8", "zulu last16"
-    rows = [(f"conv-{i:03d}", 0, "user", t, None, 0.1)
-            for i, t in enumerate(texts)]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string,"
-        " tool string, importance double",
-    )
+    df = _texts_df(spark, texts)
     paths = build_index(spark, df, cfg2, str(tmp_path / "idx_uncommon"))
-    pairs0 = {
-        (r["token_a"], r["token_b"])
-        for r in spark.read.parquet(paths.pairs).collect()
-    }
-    assert not any("zulu" in p for p in pairs0)  # common: no pairs
+    assert not ParquetIndex(paths, cfg2).cooc("first0", "zulu")  # common
     # delete the pbucket-2 zulu doc -> df=2 -> no longer common
-    changes = spark.createDataFrame(
-        [("conv-016", 0, "user", None, None, 0.1, "delete")],
-        "conv_id string, turn_idx int, role string, text string,"
-        " tool string, importance double, _action string",
-    )
-    m = apply_actions(spark, paths, changes, cfg2)
+    m, after = _apply(spark, paths, cfg2, df, [
+        ("conv-016", 0, "user", None, None, 0.1, "delete"),
+    ])
     assert m["touched_pbuckets"] == [2]
-    got = {
-        (r["pbucket"], r["token_a"], r["token_b"])
-        for r in spark.read.parquet(paths.pairs).collect()
-    }
-    want = {
-        (r["pbucket"], r["token_a"], r["token_b"])
-        for r in pairs_from_blocks(
-            spark.read.parquet(paths.blocks),
-            spark.read.parquet(paths.dictionary),
-            cfg2,
-        ).collect()
-    }
-    assert got == want
-    # the pairs came back in the two UNTOUCHED pbuckets
-    assert (0, "first0", "zulu") in got and (1, "ninth8", "zulu") in got
+    idx = _cooc_matches_oracle(paths, cfg2, after)
+    # co-occurrence came back in the two UNTOUCHED pbuckets
+    assert idx.cooc("first0", "zulu") and idx.cooc("ninth8", "zulu")
 
 
 def test_backfill_batch_routes_through_range_assigner(spark, cfg, built):
@@ -759,12 +716,12 @@ def _persisted_rdds(spark):
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-@pytest.mark.parametrize("fail_on", [None, "blocks", "pairs"])
+@pytest.mark.parametrize("fail_on", [None, "blocks", "dictionary"])
 def test_batch_releases_persisted_relations(spark, cfg, built, monkeypatch,
                                             fail_on):
     """Every relation a batch persists is released when it returns AND
     when a staged write raises midway ("blocks": after the analyzed
-    rows are cached; "pairs": the last write) — nothing stays pinned
+    rows are cached; "dictionary": the last write) — nothing stays pinned
     for the life of the session, and the failed batch publishes
     nothing, so the next batch applies cleanly."""
     from pyspark.sql.readwriter import DataFrameWriter

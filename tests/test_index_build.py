@@ -132,45 +132,6 @@ def test_prefix_table(built, tiny_cfg):
     assert "prefixes" not in json.loads(built.manifest.read_text())["stages"]
 
 
-def test_pairs_table(spark, built):
-    pairs = {
-        (r["token_a"], r["token_b"])
-        for r in spark.read.parquet(built.pairs).collect()
-    }
-    assert ("des", "rue") in pairs or ("rue", "des") in pairs
-    for a, b in pairs:
-        assert a < b  # canonical ordering, no dup orientation
-
-
-def test_pairs_from_analyzed_equals_pairs_from_blocks(spark, built, tiny_cfg):
-    """The bulk-path derivation (per-doc token sets read straight from
-    the analyzed scratch) must produce the identical pair set to the
-    block-unpack derivation — including commons exclusion
-    (threshold lowered so the tiny corpus actually has a Zipf head)."""
-    from dataclasses import replace
-
-    from addok_spark.index.build import pairs_from_analyzed, pairs_from_blocks
-
-    analyzed = spark.read.parquet(str(Path(built.root) / "_analyzed"))
-    blocks = spark.read.parquet(built.blocks)
-    dictionary = spark.read.parquet(built.dictionary)
-    for thr in (tiny_cfg.common_threshold, 2):  # no commons / with commons
-        cfg = replace(tiny_cfg, common_threshold=thr)
-        a = {
-            (r.pbucket, r.token_a, r.token_b)
-            for r in pairs_from_analyzed(analyzed, dictionary, cfg).collect()
-        }
-        b = {
-            (r.pbucket, r.token_a, r.token_b)
-            for r in pairs_from_blocks(blocks, dictionary, cfg).collect()
-        }
-        assert a == b and a
-    # the thr=2 run actually excluded the Zipf head (df("des")=3 > 2)
-    assert not any(
-        t in ("des", "rue") for _, ta, tb in a for t in (ta, tb)
-    )
-
-
 def test_vectorized_analyzer_equals_pandas_udf(spark, tiny_corpus):
     """`_make_doc_analyzer` (Arrow-native, vectorized) must produce
     per-doc token aggregates identical to the pandas-UDF reference

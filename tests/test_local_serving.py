@@ -432,7 +432,7 @@ def test_serving_without_side_tables(spark, tmp_path, corpus_pdf):
     sdf = transcripts_df(spark, 10, seed=42)
     paths = build_index(spark, sdf, bare_cfg, str(tmp_path / "bare_idx"))
     srv = LocalSearchEngine(paths, bare_cfg)
-    assert srv.index._pairs_ds is None and srv.index.have_pairs is False
+    assert srv.index.have_pairs is False
     oracle = OracleIndex(sdf.toPandas(), bare_cfg)
     # a prefix that is no token itself: only its expansions can match
     pfx = next(
@@ -490,24 +490,16 @@ def _assert_prefixes_match(idx, oracle, cfg):
     return probes
 
 
-def test_prefix_candidates_equal_oracle_exhaustively(
-    spark, index_paths, cfg, corpus_pdf, oracle, tmp_path
-):
-    """Serving answers autocomplete prefixes from the sorted in-RAM
-    dictionary. Its answer must equal the oracle's own edge-n-gram
-    enumeration for every edge n-gram of every token, for both caps,
-    and for every prefix it must not answer — on the bulk index and
-    after a CDC batch that adds, rewrites and removes tokens."""
+@pytest.fixture(scope="module")
+def cdc_index(spark, index_paths, cfg, corpus_pdf, tmp_path_factory):
+    """A copy of the module index (other tests read it as built) after
+    one CDC batch that adds, rewrites and deletes docs, with the
+    oracle of the corpus after that batch."""
     import shutil
 
     from addok_spark.index.incremental import apply_actions
-    from addok_spark.serving.local import ParquetIndex
 
-    probes = _assert_prefixes_match(ParquetIndex(index_paths, cfg), oracle, cfg)
-    assert len(probes) > 1000
-
-    # CDC, on a copy of the module index (other tests read it as built)
-    root = tmp_path / "pfx_cdc"
+    root = tmp_path_factory.mktemp("cdc") / "idx"
     shutil.copytree(index_paths.root, root)
     live = corpus_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     ups = live.iloc[[2, 9, 30]].copy()
@@ -527,7 +519,24 @@ def test_prefix_candidates_equal_oracle_exhaustively(
     after = live.copy()
     after.loc[ups.index, "text"] = ups["text"]
     after = pd.concat([after.drop(dels.index), new], ignore_index=True)
-    idx = ParquetIndex(str(root), cfg)
+    return str(root), OracleIndex(after, cfg)
+
+
+def test_prefix_candidates_equal_oracle_exhaustively(
+    index_paths, cfg, oracle, cdc_index
+):
+    """Serving answers autocomplete prefixes from the sorted in-RAM
+    dictionary. Its answer must equal the oracle's own edge-n-gram
+    enumeration for every edge n-gram of every token, for both caps,
+    and for every prefix it must not answer — on the bulk index and
+    after a CDC batch that adds, rewrites and removes tokens."""
+    from addok_spark.serving.local import ParquetIndex
+
+    probes = _assert_prefixes_match(ParquetIndex(index_paths, cfg), oracle, cfg)
+    assert len(probes) > 1000
+
+    root, after = cdc_index
+    idx = ParquetIndex(root, cfg)
     assert idx.paths.version == 1
     assert idx.prefix_candidates("zqpre") == [
         "zqprefixmark", "zqprefixmarker", "zqprefixmarkerlongerthanmax",
@@ -535,7 +544,32 @@ def test_prefix_candidates_equal_oracle_exhaustively(
     long_tok = "zqprefixmarkerlongerthanmax"
     assert idx.prefix_candidates(long_tok[: cfg.max_edge_ngram]) == [long_tok]
     assert idx.prefix_candidates(long_tok[: cfg.max_edge_ngram + 1]) == []
-    _assert_prefixes_match(idx, OracleIndex(after, cfg), cfg)
+    _assert_prefixes_match(idx, after, cfg)
+
+
+@pytest.mark.parametrize("phase", ["bulk", "cdc"])
+def test_cooc_equals_oracle_exhaustively(
+    index_paths, cfg, oracle, cdc_index, phase
+):
+    """Serving answers co-occurrence by intersecting two tokens'
+    posting lists. It must equal the oracle's pair set on every
+    co-occurring pair, as many non-pairs, common tokens with the
+    tokens they share a doc with, a filter token, an absent token and
+    a token with itself — on the bulk index and after a CDC batch."""
+    from addok_spark.serving.local import ParquetIndex
+
+    if phase == "bulk":
+        idx, want = ParquetIndex(index_paths, cfg), oracle
+    else:
+        idx, want = ParquetIndex(cdc_index[0], cfg), cdc_index[1]
+    probes = want.cooc_probes()
+    hits = [p for p in probes if want.cooc(*p)]
+    assert len(hits) == len(want.pairs) > 1000
+    assert len(probes) > 2 * len(hits)
+    assert any(
+        want.df.get(a, 0) > cfg.common_threshold for p in probes for a in p
+    )
+    assert [p for p in probes if idx.cooc(*p) != want.cooc(*p)] == []
 
 
 def test_serving_preload_hot(index_paths, cfg, oracle, corpus_pdf):

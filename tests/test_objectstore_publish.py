@@ -104,7 +104,7 @@ def test_nolink_publish_shares_by_reference(spark, cfg, tmp_path):
     )
 
     # manifest-resolved reads == the hardlink twin, table by table
-    for table in ("docs", "blocks", "dictionary", "dict_partials", "pairs"):
+    for table in ("docs", "blocks", "dictionary", "dict_partials"):
         a = read_table(spark, lp, table)
         b = read_table(spark, np_, table)
         cols = sorted(a.columns)
@@ -303,7 +303,7 @@ def test_rebuild_over_stale_manifest_reads_rebuilt_tables(spark, cfg, tmp_path):
     (root / "snapshot-v000002.json").write_text(json.dumps(stale))
     rebuilt = build_index(spark, _corpus(spark, 20), cfg, str(root))
     assert paths.current_version() == 2
-    for table in ("docs", "blocks", "dictionary", "dict_partials", "pairs"):
+    for table in ("docs", "blocks", "dictionary", "dict_partials"):
         got = read_table(spark, paths, table)
         want = spark.read.parquet(getattr(rebuilt, table))
         cols = sorted(want.columns)

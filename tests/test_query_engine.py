@@ -211,11 +211,12 @@ def test_filter_value_whitespace_normalized(spark, cfg, tmp_index_root):
 
 def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
     """The serving index's metadata probes (in-RAM dictionary stats,
-    prefix candidates, pair existence) the search flow plans with must
-    return exactly what Spark scans of the same tables return, and
-    the prefix candidates what the oracle's edge n-gram enumeration
-    returns — including absent keys and the prefix rank-and-cap
-    order."""
+    prefix candidates) the search flow plans with must return exactly
+    what Spark scans of the same tables return, and the prefix
+    candidates what the oracle's edge n-gram enumeration returns —
+    including absent keys and the prefix rank-and-cap order.
+    Co-occurrence is checked against the oracle in
+    tests/test_local_serving.py."""
     from pyspark.sql import functions as F
 
     from addok_spark.index.build import read_table
@@ -232,7 +233,6 @@ def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
     )
     idx = ParquetIndex(paths, cfg)
     dictionary = read_table(spark, paths, "dictionary")
-    pairs_tbl = read_table(spark, paths, "pairs")
 
     toks = {
         r["token"]
@@ -244,10 +244,6 @@ def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
         r["token"][: cfg.min_edge_ngram + i % 3]
         for i, r in enumerate(words.select("token").limit(6).collect())
     } | {"zzzz"}
-    some = sorted(toks)[:6]
-    checks = {
-        (a, b) for a in some for b in some if a < b
-    }
 
     stats = {
         r["token"]: (r["df"], float(r["max_boost"] or 0.0))
@@ -259,14 +255,6 @@ def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
         p: c for p in prefixes if (c := oracle.prefix_candidates(p, cap=5))
     }
     assert len(cands) == len(prefixes) - 1
-    a_list = sorted({a for a, _ in checks})
-    b_list = sorted({b for _, b in checks})
-    pairs = {
-        (r["token_a"], r["token_b"])
-        for r in pairs_tbl.filter(
-            F.col("token_a").isin(a_list) & F.col("token_b").isin(b_list)
-        ).collect()
-    } & checks
 
     assert {
         t: (idx.df[t], idx.max_boost[t]) for t in toks if t in idx.df
@@ -274,4 +262,3 @@ def test_arrow_probes_match_spark_scans(spark, tmp_index_root):
     assert {
         p: c for p in prefixes if (c := idx.prefix_candidates(p, cap=5))
     } == cands
-    assert {(a, b) for a, b in checks if idx.cooc(a, b)} == pairs

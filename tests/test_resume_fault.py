@@ -33,7 +33,6 @@ def test_resume_after_partial_failure(spark, cfg, tmp_path):
     for stage, d in (
         ("blocks", paths.blocks),
         ("dictionary", paths.dictionary),
-        ("pairs", paths.pairs),
     ):
         manifest["stages"].pop(stage, None)
         shutil.rmtree(d, ignore_errors=True)
@@ -46,7 +45,6 @@ def test_resume_after_partial_failure(spark, cfg, tmp_path):
     assert m2["docs"] == full_stages["docs"]
     assert m2["blocks"]["rows"] == full_stages["blocks"]["rows"]
     assert m2["dictionary"]["rows"] == full_stages["dictionary"]["rows"]
-    assert m2["pairs"]["rows"] == full_stages["pairs"]["rows"]
 
     # the resumed index answers queries (autocomplete included)
     # rank-identically to the oracle
@@ -69,7 +67,7 @@ def test_metrics_sidecars_exist(spark, cfg, tmp_path):
     (north_rule: 'metrics written alongside each Iceberg snapshot')."""
     out = str(tmp_path / "idx2")
     paths = build_index(spark, transcripts_df(spark, 8, seed=1), cfg, out)
-    for d in (paths.docs, paths.blocks, paths.dictionary, paths.pairs):
+    for d in (paths.docs, paths.blocks, paths.dictionary):
         side = Path(d) / "_metrics.json"
         assert side.exists(), d
         m = json.loads(side.read_text())

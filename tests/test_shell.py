@@ -12,8 +12,8 @@ from addok_spark.shell import Shell
 
 
 @pytest.fixture(scope="module")
-def shell(spark, tmp_index_root):
-    pdf = pd.DataFrame(
+def shell_corpus():
+    return pd.DataFrame(
         {
             "conv_id": ["doc-0", "doc-1", "doc-2"],
             "turn_idx": 0,
@@ -28,6 +28,10 @@ def shell(spark, tmp_index_root):
             "importance": 0.0,
         }
     )
+
+
+@pytest.fixture(scope="module")
+def shell(spark, tmp_index_root, shell_corpus):
     cfg = EngineConfig(
         fields=(FieldSpec("text", 1.0),),
         build_partitions=2,
@@ -35,7 +39,7 @@ def shell(spark, tmp_index_root):
         posting_block_size=16,
     )
     out = str(Path(tmp_index_root) / "shell_idx")
-    build_index(spark, spark.createDataFrame(pdf), cfg, out)
+    build_index(spark, spark.createDataFrame(shell_corpus), cfg, out)
     return Shell(out, cfg)
 
 
@@ -117,6 +121,25 @@ def test_shell_pair(shell):
     out = shell.dispatch("PAIR lilas")
     assert out.startswith("lilas:")
     assert "rue" in out and "avenue" in out
+
+
+def test_shell_pair_equals_oracle(shell, shell_corpus):
+    """PAIR lists, for every token, the tokens the oracle's pair set
+    holds with it — commons (threshold lowered to 1) list none."""
+    import dataclasses
+
+    from addok_spark.oracle.bm25_oracle import OracleIndex
+
+    for thr in (shell.cfg.common_threshold, 1):
+        cfg = dataclasses.replace(shell.cfg, common_threshold=thr)
+        oracle = OracleIndex(shell_corpus, cfg)
+        sh = Shell(shell.index_dir, cfg)
+        for t in sorted(oracle.df):
+            want = sorted(u for u in oracle.df if oracle.cooc(t, u))
+            assert sh.dispatch(f"PAIR {t}") == (
+                f"{t}: {len(want)} pairs\n" + ", ".join(want)
+            )
+    assert sh.dispatch("PAIR lilas") == "lilas: 0 pairs\n"  # df 2 > 1
 
 
 def test_shell_bestscore(shell):
