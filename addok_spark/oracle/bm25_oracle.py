@@ -466,7 +466,10 @@ class SpecSearch:
         ordered = sorted(matched.items(), key=lambda kv: (-kv[1], kv[0]))
         return [d for d, _ in ordered[:bucket_limit]]
 
-    def _one(self, q) -> pd.DataFrame | None:
+    def _one(self, q) -> list[dict]:
+        """The ranked result records of one query (each with its
+        ``rank``), best first; ``result_frame`` turns the records of a
+        whole call into one frame."""
         index, cfg = self.index, self.cfg
         is_phrase = bool(getattr(q, "phrase", False))
         seq = analyze_str(q.q, cfg.synonyms, cfg.processors)  # ordered, duplicates kept
@@ -517,7 +520,7 @@ class SpecSearch:
 
         # no usable word tokens -> abort guard (collectors.py:10-17)
         if not groups:
-            return None
+            return []
         # filter groups (FILTER_GID_BASE and up)
         filter_gids: list[int] = []
         for fi, (fcol, vals) in enumerate(
@@ -769,13 +772,12 @@ class SpecSearch:
             for i, dv in zip(sel, dists):
                 recs[i]["str_distance"] = dv
         if not recs:
-            return None
+            return []
         # total order (score desc, str_distance desc, boost desc,
         # importance desc, doc_index asc) via one lexsort on the key
-        # arrays; only the top-k records fetch their doc row and
-        # become a frame (a per-query sort_values over a 5-key
-        # candidate-sized DataFrame was a measured chunk of warm
-        # serving latency)
+        # arrays; only the top-k records fetch their doc row (a
+        # per-query sort_values over a 5-key candidate-sized DataFrame
+        # was a measured chunk of warm serving latency)
         order = np.lexsort((
             np.array([r["doc_index"] for r in recs], dtype=np.int64),
             -np.array([r["importance"] for r in recs], dtype=np.float64),
@@ -784,7 +786,7 @@ class SpecSearch:
             -np.array([r["score"] for r in recs], dtype=np.float64),
         ))[: q.k]
         top = []
-        for i in order:
+        for rank, i in enumerate(order, 1):
             rec = recs[i]
             doc = index.doc(rec["doc_index"])
             # render fields (≙ the reference's doc fetch) so
@@ -794,20 +796,19 @@ class SpecSearch:
             rec["role"] = doc.get("role")
             rec["tool"] = doc.get("tool")
             rec["text"] = doc["text"]
+            rec["rank"] = rank
             top.append(rec)
-        rdf = pd.DataFrame(top, columns=_RESULT_COLUMNS)
-        rdf["rank"] = np.arange(1, len(rdf) + 1)
-        return rdf
+        return top
 
     def search(self, queries: list) -> pd.DataFrame:
-        rows_out = []
-        for q in queries:
-            rdf = self._one(q)
-            if rdf is not None:
-                rows_out.append(rdf)
-        if not rows_out:
-            return pd.DataFrame(columns=_RESULT_COLUMNS + ["rank"])
-        return pd.concat(rows_out, ignore_index=True)
+        return result_frame([r for q in queries for r in self._one(q)])
+
+
+def result_frame(records: list[dict]) -> pd.DataFrame:
+    """One result frame (``_RESULT_COLUMNS`` then ``rank``) of the
+    ranked records of every query of a call, built once: a frame per
+    query and a concat cost more than the records themselves."""
+    return pd.DataFrame(records, columns=_RESULT_COLUMNS + ["rank"])
 
 
 def oracle_search(

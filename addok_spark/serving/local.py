@@ -18,9 +18,12 @@ from those artifacts with pruned columnar reads:
   statistics select the few that can hold a token. Block payloads
   are native Parquet list columns (``docs`` / ``tfs`` / ``boosts`` /
   ``pos``); a selected row group is decoded once per column and
-  cached, a token's rows are filtered from it, and a block is a
-  slice of their flattened numpy arrays. Postings are kept as sorted
-  numpy arrays (docs / tf / boost), not Python dicts;
+  cached, with its ``token`` column kept as a sorted Python list. A
+  token's rows are one contiguous range of each group, found by
+  binary search and returned as zero-copy slices of the cached
+  columns; a cached token copies its slice into numpy arrays of its
+  own, so it never pins a whole row group. Postings are kept as
+  sorted numpy arrays (docs / tf / boost), not Python dicts;
 - **documents** are read per pbucket partition (hive partition
   pruning on ``pbucket``) the first time one of its docs becomes a
   candidate, and kept columnar: the partition's Arrow table sorted by
@@ -32,9 +35,10 @@ from those artifacts with pruned columnar reads:
   tokens, sorted once on first use, hold every prefix's candidates
   as one contiguous range (``bisect``), memoized per prefix;
 - **co-occurrence** (the reference's ``p|`` pair sets) is answered
-  by intersecting the doc-sorted posting arrays of two non-common
-  tokens, each at most ``common_threshold`` long — no table of its
-  own;
+  by intersecting the doc arrays of two non-common tokens, each at
+  most ``common_threshold`` long — no table of its own. A token not
+  yet cached is read ``docs`` only and stays out of the block cache:
+  most autocomplete candidates are probed, never scored;
 - every table opens through ``index.build.open_dataset``, the same
   snapshot resolver Spark's ``read_table`` uses, so any published
   snapshot — hardlinked or reference-only (object-store publish,
@@ -45,7 +49,7 @@ the shell, ``explain`` and every Spark task. Many queries spread over
 executors through ``SearchEngine``'s ``mapInPandas`` tasks, each
 Python worker holding one ``LocalSearchEngine`` on the pinned
 snapshot; within a query, ``prefetch_tokens`` reads the cold tokens'
-blocks concurrently.
+blocks concurrently on one thread pool per process.
 
 Rank identity is by construction, not by re-implementation: planning,
 rounds, relaxation, cream, and scoring run through the *same*
@@ -62,9 +66,11 @@ from __future__ import annotations
 
 import bisect
 import json
+import os
 import re
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import numpy as np
@@ -80,7 +86,12 @@ from ..index.build import (
     open_dataset,
     table_files,
 )
-from ..oracle.bm25_oracle import REQUIRED, ExpansionMixin, SpecSearch
+from ..oracle.bm25_oracle import (
+    REQUIRED,
+    ExpansionMixin,
+    SpecSearch,
+    result_frame,
+)
 from ..query.engine import Query, normalize_filter_values
 
 _EMPTY = (
@@ -98,6 +109,27 @@ _EMPTY_PHRASE = (
 # dictionary tokens autocomplete never offers: all-digit tokens and the
 # f|name|value filter namespace (≙ autocomplete.py:111-131)
 _NO_PREFIX = re.compile(r"[0-9]+|.*\|.*", re.S)
+
+# concurrent token reads of one process (see ``_read_pool``)
+_READ_WORKERS = 8
+_read_pool_lock = threading.Lock()
+_read_pool_owner: tuple[int, ThreadPoolExecutor] | None = None
+
+
+def _read_pool() -> ThreadPoolExecutor:
+    """The process's pool for concurrent token reads, started on
+    first use and shared by every ``ParquetIndex``: a cold multi-token
+    query borrows its threads instead of starting and joining its own,
+    and an index that is refreshed or dropped leaves no threads
+    behind. A forked child starts its own pool, since the parent's
+    threads do not exist there."""
+    global _read_pool_owner
+    with _read_pool_lock:
+        if _read_pool_owner is None or _read_pool_owner[0] != os.getpid():
+            _read_pool_owner = (os.getpid(), ThreadPoolExecutor(
+                max_workers=_READ_WORKERS, thread_name_prefix="token-read",
+            ))
+        return _read_pool_owner[1]
 
 
 class _LRU(dict):
@@ -195,7 +227,12 @@ class _TokenBlocks:
     touch. Doc ranges are disjoint across a token's blocks (bucket =
     doc high bits; blocks partition the sorted run within a bucket),
     so point lookups slice exactly one block and range probes only
-    intersecting blocks."""
+    intersecting blocks.
+
+    Every array is a copy the object owns: ``tbl`` holds zero-copy
+    slices of cached row groups (``ParquetIndex._blocks_rows``), and a
+    view kept here would pin the whole group for as long as the token
+    stays cached."""
 
     __slots__ = (
         "is_filter", "n", "ub", "mind", "maxd", "n_blocks",
@@ -203,16 +240,22 @@ class _TokenBlocks:
     )
 
     def __init__(self, tbl, is_filter: bool):
+        def owned(col):
+            return np.array(col.to_numpy())
+
         self.is_filter = is_filter
-        self.n = tbl.column("n").to_numpy()
-        self.ub = tbl.column("max_boost").to_numpy()
-        self.mind = tbl.column("min_doc").to_numpy()
-        self.maxd = tbl.column("max_doc").to_numpy()
+        self.n = owned(tbl.column("n"))
+        self.ub = owned(tbl.column("max_boost"))
+        self.mind = owned(tbl.column("min_doc"))
+        self.maxd = owned(tbl.column("max_doc"))
         self.n_blocks = len(self.n)
-        self._off, self._docs = _list_view(tbl.column("docs"))
+        self._off, docs = _list_view(tbl.column("docs"))
+        self._docs = docs.astype(np.int64)
         # filter (f|) postings score nothing: tf and boost read as 0
-        self._tfs = None if is_filter else _list_view(tbl.column("tfs"))[1]
-        self._boosts = None if is_filter else _list_view(tbl.column("boosts"))[1]
+        self._tfs = self._boosts = None
+        if not is_filter:
+            self._tfs = _list_view(tbl.column("tfs"))[1].astype(np.int64)
+            self._boosts = np.array(_list_view(tbl.column("boosts"))[1])
         # per-block slice memo: grows only until full() concatenates
         # and clears it, so worst-case residency is bounded by the
         # posting-store _LRU above (maxsize tokens × this token's
@@ -224,12 +267,12 @@ class _TokenBlocks:
         got = self._dec.get(i)
         if got is None:
             lo, hi = self._off[i], self._off[i + 1]
-            docs = self._docs[lo:hi].astype(np.int64, copy=False)
+            docs = self._docs[lo:hi]
             if self.is_filter:
                 tfs = np.zeros(len(docs), np.int64)
                 boosts = np.zeros(len(docs), np.float32)
             else:
-                tfs = self._tfs[lo:hi].astype(np.int64)
+                tfs = self._tfs[lo:hi]
                 boosts = self._boosts[lo:hi]
             got = (docs, tfs, boosts)
             self._dec[i] = got
@@ -443,6 +486,7 @@ class ParquetIndex(ExpansionMixin):
         self._blocks: dict[str, _TokenBlocks] = _LRU(100_000)
         self._rg_index: list[tuple] | None = None
         self._rg_cache: dict[tuple, pa.ChunkedArray] = _LRU(4096)
+        self._rg_tokens: dict[int, list[str]] = _LRU(4096)
         self._scan_cache: dict[tuple, np.ndarray] = _LRU(1024)
         self._dict_views: dict[str, dict[int, float]] = _LRU(10_000)
         self._doc_cache: dict[int, _DocStore] = _LRU(64)
@@ -481,29 +525,56 @@ class ParquetIndex(ExpansionMixin):
             self._rg_index = index
         return self._rg_index
 
+    def _group_tokens(self, i: int, rg) -> list[str]:
+        """Row group ``i``'s ``token`` column as a Python list, decoded
+        once and kept in ``_rg_tokens``. The build writes every blocks
+        file sorted by token, so the list is sorted; a group that is not
+        raises instead of hiding postings from the binary search."""
+        toks = self._rg_tokens.get(i)
+        if toks is None:
+            col = rg.to_table(columns=["token"]).column("token")
+            if len(col) > 1 and not pc.all(
+                pc.less_equal(col.slice(0, len(col) - 1), col.slice(1))
+            ).as_py():
+                raise ValueError(
+                    f"{rg.path}: row group {rg.row_groups[0].id} of the "
+                    "blocks table is not sorted by token"
+                )
+            toks = self._rg_tokens[i] = col.to_pylist()
+        return toks
+
     def _blocks_rows(self, token: str, columns: list[str]) -> pa.Table:
-        """``columns`` of ``token``'s block rows. Each row group whose
-        token statistics admit the token is decoded whole, once per
-        column, and kept in ``_rg_cache``: list columns decode value by
-        value, so re-decoding a Zipf-head token's row groups for every
-        query would cost more than the read. Thread-safe: a race only
-        decodes a group twice."""
+        """``columns`` of ``token``'s block rows, in file and row order.
+        The row groups whose token statistics admit the token are
+        searched: their sorted ``token`` lists give the token's range by
+        binary search, and the rows are zero-copy slices of the groups'
+        cached columns. A group's column is decoded whole, once, and
+        kept in ``_rg_cache`` (list columns decode value by value, so
+        re-decoding a Zipf-head token's groups for every query would
+        cost more than the read); a group that does not hold the token
+        decodes only its ``token`` column. The slices share the cached
+        buffers: a caller that keeps them copies them first (see
+        ``_TokenBlocks``). Thread-safe: a race only decodes a group
+        twice."""
         parts = []
         for i, (lo, hi, rg) in enumerate(self._row_groups()):
             if lo is not None and not lo <= token <= hi:
                 continue
-            want = ["token"] + columns
-            got = {c: self._rg_cache.get((i, c)) for c in want}
-            missing = [c for c in want if got[c] is None]
+            toks = self._group_tokens(i, rg)
+            a = bisect.bisect_left(toks, token)
+            b = bisect.bisect_right(toks, token, a)
+            if a == b:
+                continue
+            got = {c: self._rg_cache.get((i, c)) for c in columns}
+            missing = [c for c in columns if got[c] is None]
             if missing:
                 tbl = rg.to_table(columns=missing)
                 for c in missing:
                     got[c] = self._rg_cache[(i, c)] = tbl.column(c)
-            part = pa.table(got)
-            parts.append(part.filter(pc.equal(part["token"], token)))
+            parts.append(pa.table({c: got[c].slice(a, b - a) for c in columns}))
         if not parts:
             return self._blocks_ds.schema.empty_table().select(columns)
-        return pa.concat_tables(parts).select(columns)
+        return pa.concat_tables(parts)
 
     def _read_token_blocks(self, token: str) -> "_TokenBlocks":
         """Uncached blocks read for one token (thread-safe, see
@@ -530,8 +601,9 @@ class ParquetIndex(ExpansionMixin):
         """Concurrent first-touch of several tokens' pruned blocks
         reads (pyarrow releases the GIL inside ``to_table``), so a
         cold multi-token query pays ~one parquet read latency instead
-        of one per token. Reads run in worker threads against the
-        immutable dataset; the caller's thread inserts the results
+        of one per token. Reads run on the process's read pool
+        (``_read_pool``) against the immutable dataset, at most
+        ``_READ_WORKERS`` at once; the caller's thread inserts the results
         into the block cache (an ``_LRU``, whose lock makes each
         insert atomic)."""
         todo = [
@@ -543,10 +615,7 @@ class ParquetIndex(ExpansionMixin):
         if len(todo) == 1:
             self._token_blocks(todo[0])
             return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, len(todo))) as ex:
-            built = list(ex.map(self._read_token_blocks, todo))
+        built = list(_read_pool().map(self._read_token_blocks, todo))
         for t, tb in zip(todo, built):
             if self._blocks.get(t) is None:
                 self._blocks[t] = tb
@@ -651,19 +720,19 @@ class ParquetIndex(ExpansionMixin):
 
     def token_position_arrays(self, token: str, within_docs=None):
         """(docs repeated per occurrence int64, absolute position
-        int64) for one token: the ``pos`` lists flattened twice, each
-        doc repeated by its posting's position count. One pruned read
-        per token, memoized.
+        int64) for one token: each posting's ``pos`` list flattened,
+        its doc repeated once per position. One pruned read per token,
+        memoized.
 
         ``within_docs`` (sorted unique int64 array) restricts the
-        DECODE to blocks whose [min_doc, max_doc] range intersects
-        it — the phrase path passes the rarest token's doc set, so a
-        stopword flattens at most |rare docs| blocks instead of its
-        whole Zipf-head positional stream (a rare-token conjunction
-        applied at block granularity). Restricted results are not
-        token-cached — the phrase layer memoizes at whole-phrase
-        granularity instead; a cached full result is sliced, never
-        re-read."""
+        output to those docs, at posting level: the token's postings
+        are selected by doc first, and only the selected postings'
+        ``pos`` lists are gathered and flattened — the phrase path
+        passes the rarest token's doc set, so a stopword flattens at
+        most |rare docs| postings instead of its whole Zipf-head
+        positional stream. Restricted results are not token-cached —
+        the phrase layer memoizes at whole-phrase granularity instead;
+        a cached full result is sliced, never re-read."""
         cached = self._pos_cache.get(token)
         if cached is not None:
             if within_docs is not None:
@@ -671,26 +740,18 @@ class ParquetIndex(ExpansionMixin):
                 m = _in_sorted(docs, within_docs)
                 return docs[m], pos[m]
             return cached
-        if within_docs is None:
-            tbl = self._blocks_rows(token, ["docs", "pos"])
-        else:
-            tbl = self._blocks_rows(token, ["min_doc", "max_doc", "docs", "pos"])
-            # keep only blocks whose doc range holds a target doc
-            mn = tbl.column("min_doc").to_numpy()
-            mx = tbl.column("max_doc").to_numpy()
-            keep = np.searchsorted(within_docs, mn, "left") < np.searchsorted(
-                within_docs, mx + 1, "left"
-            )
-            tbl = tbl.filter(pa.array(keep))
-        docs = _list_view(tbl.column("docs"))[1].astype(np.int64, copy=False)
-        off, pos = _list_view(pc.list_flatten(tbl.column("pos")))
-        out = (np.repeat(docs, np.diff(off)), pos.astype(np.int64))
+        tbl = self._blocks_rows(token, ["docs", "pos"])
+        postings = pc.list_flatten(tbl.column("pos"))
+        docs = _list_view(tbl.column("docs"))[1]
+        if within_docs is not None:
+            sel = np.flatnonzero(_in_sorted(docs, within_docs))
+            docs = docs[sel]
+            postings = postings.take(pa.array(sel))
+        off, pos = _list_view(postings)
+        out = (np.repeat(docs.astype(np.int64), np.diff(off)), pos.astype(np.int64))
         if within_docs is None:
             self._pos_cache[token] = out
-            return out
-        docs, pos = out
-        m = _in_sorted(docs, within_docs)
-        return docs[m], pos[m]
+        return out
 
     def token_positions(self, token: str) -> dict[int, list[int]]:
         """Dict view of the position streams (spec path)."""
@@ -726,9 +787,18 @@ class ParquetIndex(ExpansionMixin):
         i = int(np.searchsorted(docs, d))
         return float(boosts[i])
 
+    def _token_docs(self, token: str) -> np.ndarray:
+        """Doc ids of one token's postings, unordered: a cached token's
+        own array, else a ``docs``-only read that leaves the block
+        cache as it was."""
+        tb = self._blocks.get(token)
+        if tb is not None:
+            return tb._docs
+        return _list_view(self._blocks_rows(token, ["docs"]).column("docs"))[1]
+
     def any_shared_docs(self, a: str, b: str) -> bool:
-        da = self._token_arrays(a)[0]
-        db = self._token_arrays(b)[0]
+        da = self._token_docs(a)
+        db = self._token_docs(b)
         if not len(da) or not len(db):
             return False
         return bool(
@@ -1159,7 +1229,7 @@ class LocalSearchEngine:
                     f"query too long ({len(q.q)} > {self.cfg.query_max_length})"
                 )
         trace = []
-        frames = []
+        records = []
         blocks = self.index._blocks
         for q in queries:
             t0 = _time.perf_counter()
@@ -1177,21 +1247,13 @@ class LocalSearchEngine:
                     ):
                         want.append(f"f|{col}|{v}")
             self.index.prefetch_tokens(want)
-            rdf = self._searcher.search([q])
-            frames.append(rdf)
+            recs = self._searcher._one(q)
+            records += recs
             trace.append({
                 "qid": q.qid,
                 "seconds": round(_time.perf_counter() - t0, 4),
-                "rows": int(len(rdf)),
+                "rows": len(recs),
                 "tokens_faulted": len(blocks) - b0,
             })
         self.last_trace = trace
-        # empty-safe concat: zero queries (or all-empty results)
-        # return the contract's empty-columns frame rather than
-        # raising from pd.concat / tripping the all-NA FutureWarning
-        nonempty = [f for f in frames if len(f)]
-        if nonempty:
-            return pd.concat(nonempty, ignore_index=True)
-        if frames:
-            return frames[0].iloc[0:0].reset_index(drop=True)
-        return self._searcher.search([])
+        return result_frame(records)

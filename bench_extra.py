@@ -4,6 +4,7 @@ iterate on individual operators without touching it).
 
 Usage:
   python bench_extra.py [--reps N] [--plans DIR] [--noop] [q1 q2 ...]
+  python bench_extra.py --serve-kinds SEED [--index DIR]
 
 - Times each named query (default: the full bench.py HEADLINE list)
   with the same methodology as bench.py (`fn(spark, SF_DIR).count()`
@@ -16,6 +17,16 @@ Usage:
 
 Prints one JSON line at the end: {"queries": {name: [s, ...]},
 "queries_min": {name: s}}.
+
+`--serve-kinds SEED` instead measures first-touch serving CPU per
+query kind in perfbench's `spark_batch` serving shape: the workload's
+corpus and query mix for SEED, four rounds of 128 queries, each round
+on a newly opened `LocalSearchEngine`, and the process CPU time of
+each `search([q])`. The index is built with Spark into `--index DIR`
+(reused when DIR already holds one; a temporary directory otherwise).
+Prints one JSON line: the overall median and nearest-rank p90 (ms), and
+per kind the query count, median, p90 and how many of its queries
+cost more than the overall p90.
 """
 
 from __future__ import annotations
@@ -32,8 +43,85 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def serve_kinds(seed: int, index_dir: str | None) -> dict:
+    """Per-kind first-touch serving CPU in the ``spark_batch`` shape."""
+    import statistics
+    import tempfile
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent / "perfbench"))
+    import workloads as W
+    from layers import p90
+
+    from addok_spark.data.transcripts import transcripts_pdf
+    from addok_spark.serving.local import LocalSearchEngine
+
+    cfg = W.engine_cfg()
+    corpus = transcripts_pdf(W.N_CONVS, seed=seed)
+    pools = W.query_pools(corpus, W.SERVED * W.SERVE_ROUNDS // len(W.KINDS),
+                          seed + 29, "v")
+    kind_of = {q.qid: k for k, qs in pools.items() for q in qs}
+    served = W.interleave(pools)
+    tmp = None
+    if index_dir is None:
+        tmp = tempfile.TemporaryDirectory(prefix="serve_kinds_")
+        index_dir = str(Path(tmp.name) / "idx")
+    if not (Path(index_dir) / "meta.json").exists():
+        from addok_spark.index.build import build_index
+        from addok_spark.session import build_session
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        # the corpus file perfbench's write_corpus writes
+        src = Path(index_dir).parent / f"corpus_{seed}.parquet"
+        schema = pa.schema([
+            ("conv_id", pa.string()), ("turn_idx", pa.int32()),
+            ("role", pa.string()), ("text", pa.string()), ("tool", pa.string()),
+            ("ts", pa.timestamp("us")), ("importance", pa.float64()),
+        ])
+        pq.write_table(pa.Table.from_pandas(corpus, schema=schema,
+                                            preserve_index=False), str(src))
+        spark = build_session(cores=CPUS, app_name="addok_spark_serve_kinds")
+        build_index(spark, spark.read.parquet(str(src)), cfg, index_dir,
+                    resume=False)
+        spark.stop()
+    cpu: list[tuple[str, float]] = []
+    for r in range(W.SERVE_ROUNDS):
+        srv = LocalSearchEngine(index_dir, cfg)
+        for q in served[r * W.SERVED:(r + 1) * W.SERVED]:
+            c0 = time.process_time()
+            srv.search([q])
+            cpu.append((kind_of[q.qid], (time.process_time() - c0) * 1000.0))
+    if tmp is not None:
+        tmp.cleanup()
+    overall = p90([c for _, c in cpu])
+    kinds = {}
+    for kind in W.KINDS:
+        ms = [c for k, c in cpu if k == kind]
+        kinds[kind] = {
+            "n": len(ms),
+            "median_ms": round(statistics.median(ms), 3),
+            "p90_ms": round(p90(ms), 3),
+            "above_p90": sum(c > overall for c in ms),
+        }
+    return {
+        "seed": seed,
+        "queries": len(cpu),
+        "p50_ms": round(statistics.median(c for _, c in cpu), 3),
+        "p90_ms": round(overall, 3),
+        "kinds": kinds,
+    }
+
+
 def main() -> None:
     args = sys.argv[1:]
+    if "--serve-kinds" in args:
+        i = args.index("--serve-kinds")
+        index_dir = None
+        if "--index" in args:
+            index_dir = args[args.index("--index") + 1]
+        print(json.dumps({"serve_kinds": serve_kinds(int(args[i + 1]), index_dir)}))
+        return
     reps = 1
     plans_dir = None
     use_noop = False

@@ -570,6 +570,97 @@ def test_cooc_equals_oracle_exhaustively(
         want.df.get(a, 0) > cfg.common_threshold for p in probes for a in p
     )
     assert [p for p in probes if idx.cooc(*p) != want.cooc(*p)] == []
+    # every probe read its tokens' docs only: none entered the block cache
+    assert len(idx._blocks) == 0
+
+
+@pytest.mark.parametrize("phase", ["bulk", "cdc"])
+def test_blocks_rows_equal_dataset_filter_exhaustively(
+    index_paths, cfg, cdc_index, phase
+):
+    """``_blocks_rows`` binary-searches each admitted row group's
+    sorted token list and slices the cached columns. For every
+    dictionary token, ``f|`` filter tokens included, its rows must
+    equal a filter on ``token == t`` over the whole blocks dataset, and
+    a cached token's arrays must be its own copies. An absent token,
+    one inside a row group's token range and ones outside every
+    group's range, reads no rows."""
+    from collections import Counter
+
+    import pyarrow.compute as pc
+
+    from addok_spark.index.build import open_dataset
+    from addok_spark.serving.local import ParquetIndex
+
+    idx = ParquetIndex(index_paths if phase == "bulk" else cdc_index[0], cfg)
+    cols = [c for c in idx._blocks_ds.schema.names if c != "pbucket"]
+    full = open_dataset(idx.paths, "blocks").to_table(columns=cols)
+    order = [("bucket", "ascending"), ("block_id", "ascending"),
+             ("min_doc", "ascending")]
+    toks = sorted(idx.df)
+    assert any(t.startswith("f|") for t in toks)
+    for t in toks:
+        got = idx._blocks_rows(t, cols)
+        want = full.filter(pc.field("token") == t)
+        assert got.num_rows == want.num_rows > 0, t
+        assert got.sort_by(order).to_pydict() == want.sort_by(order).to_pydict(), t
+        tb = idx._read_token_blocks(t)
+        for arr in (tb.n, tb.ub, tb.mind, tb.maxd, tb._off, tb._docs,
+                    tb._tfs, tb._boosts):
+            assert arr is None or arr.flags.owndata, t
+    # some token's rows straddle row groups, so the slices concatenate
+    assert max(Counter(
+        t for toks in idx._rg_tokens.values() for t in set(toks)
+    ).values()) > 1
+    mins = [lo for lo, _, _ in idx._row_groups()]
+    maxs = [hi for _, hi, _ in idx._row_groups()]
+    inside = toks[len(toks) // 2] + "\x00"
+    assert inside not in idx.df
+    for t in ("", min(mins)[:-1], max(maxs) + "z", "\uffff", inside):
+        got = idx._blocks_rows(t, cols)
+        assert got.num_rows == 0 and got.schema.names == cols, t
+
+
+def test_unsorted_blocks_row_group_raises(index_paths, cfg, tmp_path):
+    """A blocks file whose rows are not sorted by token would hide
+    postings from the binary search; the first read of such a row
+    group raises instead of answering with a silent miss."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from addok_spark.index.build import IndexPaths, table_files
+
+    root = tmp_path / "idx"
+    shutil.copytree(index_paths.root, root)
+    f = str(table_files(IndexPaths(root).pin(), "blocks")[0])
+    tbl = pq.ParquetFile(f).read()
+    toks = tbl.column("token").to_pylist()
+    j = next(i for i in range(len(toks) - 1)
+             if toks[i] < toks[i + 1] and toks[i].isalpha())
+    swapped = list(range(len(toks)))
+    swapped[j], swapped[j + 1] = j + 1, j
+    pq.write_table(tbl.take(swapped), f, row_group_size=len(toks))
+    srv = LocalSearchEngine(str(root), cfg)
+    with pytest.raises(ValueError, match="not sorted by token"):
+        srv.search([Query(qid="u", q=toks[j], k=5)])
+
+
+def test_prefetch_pool_survives_refresh(index_paths, cfg):
+    """Cold multi-token queries read their tokens on one pool per
+    process: twenty ``refresh()`` + query cycles leave at most the
+    pool's eight threads behind."""
+    import threading
+
+    words = [t for t in LocalSearchEngine(index_paths, cfg).index.df
+             if t.isalpha()]
+    base = threading.active_count()
+    srv = LocalSearchEngine(index_paths, cfg)
+    for i in range(20):
+        srv.refresh()
+        srv.search([Query(qid=f"r{i}", q=" ".join(words[i:i + 4]), k=5)])
+        assert srv.last_trace[0]["tokens_faulted"] == 4
+    assert threading.active_count() <= base + 8
 
 
 def test_serving_preload_hot(index_paths, cfg, oracle, corpus_pdf):

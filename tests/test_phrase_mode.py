@@ -138,25 +138,25 @@ def test_phrase_mixed_with_normal_queries_in_one_batch(env):
 
 
 def test_serving_restricted_position_decode_identical(env):
-    """token_position_arrays(within_docs=...) (block-granular decode
-    restriction to the rarest phrase token's docs) must equal full-decode-then-slice on every token,
-    and the whole-phrase LRU must return independent copies."""
+    """token_position_arrays(within_docs=...) (posting-level restriction
+    to the rarest phrase token's docs) must equal full-decode-then-slice
+    on every token of the index, read cold and from the token memo, and
+    the whole-phrase LRU must return independent copies."""
     import numpy as np
 
     idx = env["serving"].index
     rare_docs, _ = idx.token_position_arrays("gamma")
     rare_docs = np.unique(rare_docs)
     assert len(rare_docs)
-    for tok in ("alpha", "beta", "common", "gamma"):
+    for tok in sorted(idx.df):
+        cold = ParquetIndex(idx.paths, idx.cfg)
+        got_d, got_p = cold.token_position_arrays(tok, within_docs=rare_docs)
         full_d, full_p = idx.token_position_arrays(tok)
         m = np.isin(full_d, rare_docs)
-        got_d, got_p = idx.token_position_arrays(
-            tok, within_docs=rare_docs
-        )
-        o = np.lexsort((got_p, got_d))
-        w = np.lexsort((full_p[m], full_d[m]))
-        assert np.array_equal(got_d[o], full_d[m][w])
-        assert np.array_equal(got_p[o], full_p[m][w])
+        assert np.array_equal(got_d, full_d[m]), tok
+        assert np.array_equal(got_p, full_p[m]), tok
+        memo_d, memo_p = idx.token_position_arrays(tok, within_docs=rare_docs)
+        assert np.array_equal(memo_d, got_d) and np.array_equal(memo_p, got_p)
     # restricted reads bypass the per-token memo: a later full
     # decode must still return the complete stream
     idx_fresh_d, _ = idx.token_position_arrays("common")
