@@ -45,6 +45,13 @@ _RESULT_COLUMNS = [
 # ``doc_values`` default meaning "the field must exist" (``row[name]``)
 REQUIRED = object()
 
+# the doc fields a returned record carries, each with its default
+# when the docs table lacks the column
+_RENDER_FIELDS = (
+    ("conv_id", REQUIRED), ("turn_idx", REQUIRED), ("role", None),
+    ("tool", None), ("text", REQUIRED),
+)
+
 
 @dataclass
 class QueryPlan:
@@ -66,10 +73,26 @@ class OracleResult:
 
 class ExpansionMixin:
     """Query-planning spec shared by the corpus-built OracleIndex and
-    the parquet-backed serving index (serving/local.py): both expose
-    ``cfg, df, max_boost, boost, fboost, have_pairs, cooc(),
-    prefix_candidates()`` and inherit the expansion semantics below,
-    so the serving tier follows the oracle's plan by construction."""
+    the parquet-backed serving index (serving/local.py). Both inherit
+    the expansion semantics below, so the serving tier follows the
+    oracle's plan by construction. The search flow (``SpecSearch``)
+    reads an index only through this protocol:
+
+    - ``cfg, df, max_boost, n_docs, avgdl, have_pairs`` and
+      ``prefetch_tokens(tokens)``;
+    - postings: ``postings, posting_count, tf_boost_many,
+      token_positions, any_shared_docs, cooc, prefix_candidates``
+      (serving's ``FastSearch`` kernel reads ``ParquetIndex``'s
+      posting arrays instead of the dict views);
+    - documents: ``doc_values`` (one gather per field over a doc
+      array) and ``folded_text``.
+
+    ``doc(d)`` (one full row) is for the shell; the flow never calls
+    it."""
+
+    def prefetch_tokens(self, tokens) -> None:
+        """Read these tokens' postings ahead of the flow. No-op here:
+        the oracle holds every posting in RAM."""
 
     def postings(self, token: str) -> dict[int, float]:
         """doc → boost for word tokens AND f| filter keys."""
@@ -80,36 +103,10 @@ class ExpansionMixin:
     def posting_count(self, token: str) -> int:
         return len(self.postings(token))
 
-    def tf_of(self, token: str, d: int) -> int:
-        """Per-doc term frequency; 0 ⟺ token absent from doc."""
-        return self.tf.get(token, {}).get(d, 0)
-
-    def boost_of(self, token: str, d: int) -> float:
-        """Per-doc posting boost (only called when tf_of > 0)."""
-        return self.boost[token][d]
-
     def any_shared_docs(self, a: str, b: str) -> bool:
         """Do two tokens co-occur in at least one doc? (relation-
         extrapolation edge test, collectors.py:166-170)."""
         return bool(set(self.tf.get(a, {})) & set(self.tf.get(b, {})))
-
-    def tf_boost_many(self, token: str, docs_sorted):
-        """(tf, boost) arrays of one token over a sorted candidate
-        array — tf 0 where the token misses the doc. Spec form: the
-        per-doc point accessors; the serving tier overrides this with
-        one block-pruned gather (serving/local.py), value-identical."""
-        tfs = np.fromiter(
-            (self.tf_of(token, int(d)) for d in docs_sorted),
-            np.int64, len(docs_sorted),
-        )
-        boosts = np.fromiter(
-            (
-                self.boost_of(token, int(d)) if t else 0.0
-                for d, t in zip(docs_sorted, tfs)
-            ),
-            np.float64, len(docs_sorted),
-        )
-        return tfs, boosts
 
     def doc_values(self, name: str, docs, default=REQUIRED) -> list:
         """One field of many docs, in ``docs`` order: ``doc(d)[name]``
@@ -283,6 +280,8 @@ class OracleIndex(ExpansionMixin):
                     vv = str(el).strip()
                     if vv:
                         self.fboost[f"f|{fname}|{vv}"][int(d)] = 0.0
+        # the docs table stores each doc's length beside its fields
+        corpus["dl"] = self.dl
         self.n_docs = len(corpus)
         self.avgdl = float(self.dl.sum()) / max(self.n_docs, 1)
         # prefix table (non-digit tokens, autocomplete.py:111-131)
@@ -319,15 +318,23 @@ class OracleIndex(ExpansionMixin):
         return self.positions.get(token, {})
 
     def doc(self, d: int):
-        """Full row of one doc (supports ``row[col]`` / ``row.get``).
-        The scoring fold reads single fields through ``doc_values``
-        and fetches full rows only for the ≤k records it returns; the
-        serving tier overrides both with reads from a columnar
-        per-pbucket doc store (serving/local.py)."""
+        """Full row of one doc (supports ``row[col]`` / ``row.get``):
+        the spec form that ``doc_values`` reads field by field."""
         return self.docs.iloc[d]
 
-    def doc_len(self, d: int) -> int:
-        return int(self.dl[d])
+    def tf_boost_many(self, token: str, docs_sorted):
+        """(tf, boost) arrays of one token over a sorted candidate
+        array, tf 0 and boost 0.0 where the token misses the doc. The
+        serving tier answers the same from one block-pruned gather
+        (serving/local.py), value-identical."""
+        tf, boost = self.tf.get(token, {}), self.boost.get(token, {})
+        n = len(docs_sorted)
+        return (
+            np.fromiter((tf.get(int(d), 0) for d in docs_sorted), np.int64, n),
+            np.fromiter(
+                (boost.get(int(d), 0.0) for d in docs_sorted), np.float64, n
+            ),
+        )
 
     def cooc(self, a: str, b: str) -> bool:
         return a != b and (min(a, b), max(a, b)) in self.pairs
@@ -453,15 +460,18 @@ class SpecSearch:
         return {d: len(s) for d, s in (per_doc or {}).items()}
 
     def phrase_candidates(
-        self, seq: list[str], filter_docsets: list[set[int]], bucket_limit: int
+        self, seq: list[str], filter_groups: list[list[str]], bucket_limit: int
     ) -> list[int]:
         """Phrase candidate doc ids ordered (-occurrences, doc),
-        filter-set constrained BEFORE the cap. Pure-dict spec; the
-        serving tier overrides with a twin that caches the ORDERED
-        match arrays, so a repeat phrase pays a slice instead of
-        re-sorting a possibly corpus-scale match map."""
+        constrained BEFORE the cap to the docs of every filter group
+        (a group's docs: the union of its f| keys' postings).
+        Pure-dict spec; the serving tier overrides with a twin that
+        caches the ORDERED match arrays, so a repeat phrase pays a
+        slice instead of re-sorting a possibly corpus-scale match
+        map."""
         matched = self.phrase_occurrences(seq)
-        for fdocs in filter_docsets:
+        for keys in filter_groups:
+            fdocs = set().union(*(self.index.postings(k) for k in keys))
             matched = {d: c for d, c in matched.items() if d in fdocs}
         ordered = sorted(matched.items(), key=lambda kv: (-kv[1], kv[0]))
         return [d for d, _ in ordered[:bucket_limit]]
@@ -473,9 +483,22 @@ class SpecSearch:
         index, cfg = self.index, self.cfg
         is_phrase = bool(getattr(q, "phrase", False))
         seq = analyze_str(q.q, cfg.synonyms, cfg.processors)  # ordered, duplicates kept
-        toks = seq
+        # filters: (gid, column, normalized values, f| keys), gids
+        # FILTER_GID_BASE and up in sorted column order
+        filters = []
+        for fi, (fcol, vals) in enumerate(
+            sorted((getattr(q, "filters", None) or {}).items())
+        ):
+            vs = normalize_filter_values(vals, cfg.max_filter_values)
+            if vs:
+                filters.append(
+                    (FILTER_GID_BASE + fi, fcol, vs, [f"f|{fcol}|{v}" for v in vs])
+                )
+        # cold-path fan-out: read every query token's and filter key's
+        # postings at once before the flow touches them one by one
+        index.prefetch_tokens(seq + [k for *_, keys in filters for k in keys])
         seen: set[str] = set()
-        toks = [t for t in toks if not (t in seen or seen.add(t))]
+        toks = [t for t in seq if not (t in seen or seen.add(t))]
         groups: dict[int, list[str]] = {}
         group_dfs: dict[int, int] = {}
         meaningful: list[tuple[int, int, str]] = []
@@ -521,18 +544,11 @@ class SpecSearch:
         # no usable word tokens -> abort guard (collectors.py:10-17)
         if not groups:
             return []
-        # filter groups (FILTER_GID_BASE and up)
         filter_gids: list[int] = []
-        for fi, (fcol, vals) in enumerate(
-            sorted((getattr(q, "filters", None) or {}).items())
-        ):
-            vs = normalize_filter_values(vals, cfg.max_filter_values)
-            if vs:
-                gid = FILTER_GID_BASE + fi
-                keys = [f"f|{fcol}|{v}" for v in vs]
-                groups[gid] = keys
-                group_dfs[gid] = min(index.posting_count(k) for k in keys)
-                filter_gids.append(gid)
+        for gid, _, _, keys in filters:
+            groups[gid] = keys
+            group_dfs[gid] = min(index.posting_count(k) for k in keys)
+            filter_gids.append(gid)
 
         done = False
         qf = fold_str(q.q)
@@ -579,15 +595,9 @@ class SpecSearch:
             # candidates = positional phrase matches, filter-set
             # constrained BEFORE the cap, ordered (-occurrences, doc)
             if seq and all(index.df.get(t, 0) > 0 for t in seq):
-                fsets: list[set[int]] = []
-                for gid in filter_gids:
-                    fdocs: set[int] = set()
-                    for fk in groups[gid]:
-                        fdocs |= set(index.postings(fk))
-                    fsets.append(fdocs)
-                candidates.update(
-                    self.phrase_candidates(seq, fsets, bucket_limit)
-                )
+                candidates.update(self.phrase_candidates(
+                    seq, [groups[g] for g in filter_gids], bucket_limit
+                ))
             done = True
 
         for round_no in (1, 3, 4):
@@ -665,7 +675,6 @@ class SpecSearch:
         k1, b = BM25_K1, BM25_B
         n_docs, avgdl = index.n_docs, index.avgdl
         recs = []
-        filters = getattr(q, "filters", None) or {}
         cand_sorted = sorted(candidates)
         # one bulk (tf, boost) gather per scoring token over the whole
         # candidate array — the inner fold below reads positions from
@@ -679,15 +688,14 @@ class SpecSearch:
                     continue
                 for tok in groups[gid]:
                     gathered[(gid, tok)] = index.tf_boost_many(tok, cand_arr)
-        # the fold reads only importance and the filter fields: one
-        # column gather each over the candidate array; full rows are
-        # fetched below only for the ≤k records that are returned
-        fcols = []
-        for col, vals in filters.items():
-            vs = set(normalize_filter_values(vals, cfg.max_filter_values))
-            if vs:
-                fcols.append((index.doc_values(col, cand_arr), vs))
+        # the fold reads importance, the length and the filter fields:
+        # one column gather each over the candidate array
+        fcols = [
+            (index.doc_values(col, cand_arr), set(vs))
+            for _, col, vs, _ in filters
+        ]
         imps = index.doc_values("importance", cand_arr, default=0.0)
+        dls = index.doc_values("dl", cand_arr)
         for ci, d in enumerate(cand_sorted):
             ok = True
             for fvals, vs in fcols:
@@ -701,7 +709,7 @@ class SpecSearch:
             if not ok:
                 continue
             importance = float(imps[ci] or 0.0)
-            dl = float(index.doc_len(d))
+            dl = float(dls[ci])
             score = 0.0
             boost_sum = 0.0
             matched_any = False
@@ -775,9 +783,8 @@ class SpecSearch:
             return []
         # total order (score desc, str_distance desc, boost desc,
         # importance desc, doc_index asc) via one lexsort on the key
-        # arrays; only the top-k records fetch their doc row (a
-        # per-query sort_values over a 5-key candidate-sized DataFrame
-        # was a measured chunk of warm serving latency)
+        # arrays (a per-query sort_values over a 5-key candidate-sized
+        # DataFrame was a measured chunk of warm serving latency)
         order = np.lexsort((
             np.array([r["doc_index"] for r in recs], dtype=np.int64),
             -np.array([r["importance"] for r in recs], dtype=np.float64),
@@ -785,19 +792,20 @@ class SpecSearch:
             -np.array([r["str_distance"] for r in recs], dtype=np.float64),
             -np.array([r["score"] for r in recs], dtype=np.float64),
         ))[: q.k]
-        top = []
-        for rank, i in enumerate(order, 1):
-            rec = recs[i]
-            doc = index.doc(rec["doc_index"])
-            # render fields (≙ the reference's doc fetch) so
-            # serving/HTTP can answer without a second fetch
-            rec["conv_id"] = doc["conv_id"]
-            rec["turn_idx"] = int(doc["turn_idx"])
-            rec["role"] = doc.get("role")
-            rec["tool"] = doc.get("tool")
-            rec["text"] = doc["text"]
-            rec["rank"] = rank
-            top.append(rec)
+        top = [recs[i] for i in order]
+        # render fields (≙ the reference's doc fetch) so serving/HTTP
+        # can answer without a second fetch: one gather per field over
+        # the returned docs, in rank order
+        docs = [rec["doc_index"] for rec in top]
+        cols = [
+            (name, index.doc_values(name, docs, default=default))
+            for name, default in _RENDER_FIELDS
+        ]
+        for i, rec in enumerate(top):
+            for name, vals in cols:
+                rec[name] = vals[i]
+            rec["turn_idx"] = int(rec["turn_idx"])
+            rec["rank"] = i + 1
         return top
 
     def search(self, queries: list) -> pd.DataFrame:

@@ -60,8 +60,9 @@ FILTER_GID_BASE = 1_000_000
 def normalize_filter_values(vals, cap: int) -> list[str]:
     """≙ _normalize_filter_values (reference core.py:160-176): strip,
     drop empties, dedup PRESERVING appearance order, take the first
-    ``cap`` uniques, then sort. Shared by the search flow and the
-    serving prefetch so the f|field|value keys agree for any input."""
+    ``cap`` uniques, then sort. The search flow normalizes each
+    filter once per query; its f|field|value keys, their prefetch and
+    the scoring fold's value check all read that one result."""
     uniq = list(
         dict.fromkeys(s for s in (str(v).strip() for v in (vals or [])) if s)
     )

@@ -27,10 +27,11 @@ from those artifacts with pruned columnar reads:
 - **documents** are read per pbucket partition (hive partition
   pruning on ``pbucket``) the first time one of its docs becomes a
   candidate, and kept columnar: the partition's Arrow table sorted by
-  ``doc_index``. The scoring fold gathers importance and the filter
-  fields for the whole candidate array with one ``searchsorted`` +
-  ``take``, reads lengths and folded text straight from the columns,
-  and builds a full row dict only for the ≤k records a query returns;
+  ``doc_index``. The search flow reads them only by column: the
+  scoring fold gathers importance, length and the filter fields for
+  the whole candidate array, and the top-k render the returned
+  fields for the ≤k records, each with one ``searchsorted`` +
+  ``take``; no row dict is built on the query path;
 - **autocomplete prefixes** come from the in-RAM dictionary: its
   tokens, sorted once on first use, hold every prefix's candidates
   as one contiguous range (``bisect``), memoized per prefix;
@@ -92,7 +93,7 @@ from ..oracle.bm25_oracle import (
     SpecSearch,
     result_frame,
 )
-from ..query.engine import Query, normalize_filter_values
+from ..query.engine import Query
 
 _EMPTY = (
     np.empty(0, dtype=np.int64),
@@ -226,8 +227,7 @@ class _TokenBlocks:
     columns flattened to numpy once and sliced per block on first
     touch. Doc ranges are disjoint across a token's blocks (bucket =
     doc high bits; blocks partition the sorted run within a bucket),
-    so point lookups slice exactly one block and range probes only
-    intersecting blocks.
+    so range probes slice only the intersecting blocks.
 
     Every array is a copy the object owns: ``tbl`` holds zero-copy
     slices of cached row groups (``ParquetIndex._blocks_rows``), and a
@@ -294,17 +294,6 @@ class _TokenBlocks:
                 self._dec.clear()
         return self._full
 
-    def point(self, d: int):
-        """Arrays containing doc ``d`` if present — one block."""
-        if self._full is not None:
-            return self._full
-        if self.n_blocks == 0:
-            return _EMPTY
-        hit = np.flatnonzero((self.mind <= d) & (self.maxd >= d))
-        if not len(hit):
-            return _EMPTY
-        return self.decode_block(int(hit[0]))
-
     def covering(self, docs_sorted: np.ndarray):
         """Concatenated arrays of every block whose doc range
         intersects the sorted candidate set (doc-sorted output).
@@ -349,7 +338,7 @@ class _DocStore:
     """One pbucket's docs, columnar: the partition's Arrow table
     sorted by ``doc_index`` (after CDC a partition can hold several
     files, so the sort is explicit), with numpy ``doc_index`` for
-    position lookups and ``dl`` for the BM25 length norm.
+    position lookups.
 
     Values are boxed per read exactly as the pandas row
     ``frame.loc[d].to_dict()`` boxes them. String columns stay Arrow
@@ -360,12 +349,11 @@ class _DocStore:
     converting the same column at once build equal values, so the
     memo needs no lock."""
 
-    __slots__ = ("table", "doc_index", "dl", "_cols")
+    __slots__ = ("table", "doc_index", "_cols")
 
     def __init__(self, tbl):
         self.table = tbl.sort_by("doc_index")
         self.doc_index = self.table.column("doc_index").to_numpy()
-        self.dl = self.table.column("dl").to_numpy()
         self._cols: dict[str, tuple] = {}
 
     def positions(self, docs: np.ndarray) -> np.ndarray:
@@ -435,8 +423,8 @@ class ParquetIndex(ExpansionMixin):
     """OracleIndex-shaped read-only view over the on-disk index.
 
     Posting lists are numpy triples ``(docs asc, tf, boost_f32)``;
-    the dict views the pure-dict spec path expects are derived lazily
-    (only the tests' spec-mode runs ever materialize them)."""
+    the dict views the pure-dict spec path and the shell read are
+    built per call, uncached."""
 
     def __init__(
         self, index_dir: str | Path, cfg: EngineConfig | None = None
@@ -488,9 +476,7 @@ class ParquetIndex(ExpansionMixin):
         self._rg_cache: dict[tuple, pa.ChunkedArray] = _LRU(4096)
         self._rg_tokens: dict[int, list[str]] = _LRU(4096)
         self._scan_cache: dict[tuple, np.ndarray] = _LRU(1024)
-        self._dict_views: dict[str, dict[int, float]] = _LRU(10_000)
         self._doc_cache: dict[int, _DocStore] = _LRU(64)
-        self._row_cache: dict[int, dict] = _LRU(100_000)
         self._fold_cache: dict[int, str] = _LRU(100_000)
         self._prefix_tokens: list[str] | None = None
         self._prefix_cache: dict[str, list[str]] = _LRU(50_000)
@@ -762,30 +748,14 @@ class ParquetIndex(ExpansionMixin):
         return view
 
     def postings(self, token: str) -> dict[int, float]:
-        """Dict view for the pure-dict spec path (tests); the fast
-        path never materializes these."""
-        view = self._dict_views.get(token)
-        if view is None:
-            docs, _, boosts = self._token_arrays(token)
-            view = dict(
-                zip(docs.tolist(), boosts.astype(np.float64).tolist())
-            )
-            self._dict_views[token] = view
-        return view
+        """Dict view (doc → boost) for the pure-dict spec path and the
+        shell, built per call; the fast path never materializes it."""
+        docs, _, boosts = self._token_arrays(token)
+        return dict(zip(docs.tolist(), boosts.astype(np.float64).tolist()))
 
     def posting_count(self, token: str) -> int:
         # block metadata only — counting never decodes payloads
         return int(self._token_blocks(token).n.sum())
-
-    def tf_of(self, token: str, d: int) -> int:
-        docs, tfs, _ = self._token_blocks(token).point(d)
-        i = int(np.searchsorted(docs, d))
-        return int(tfs[i]) if i < len(docs) and docs[i] == d else 0
-
-    def boost_of(self, token: str, d: int) -> float:
-        docs, _, boosts = self._token_blocks(token).point(d)
-        i = int(np.searchsorted(docs, d))
-        return float(boosts[i])
 
     def _token_docs(self, token: str) -> np.ndarray:
         """Doc ids of one token's postings, unordered: a cached token's
@@ -807,10 +777,9 @@ class ParquetIndex(ExpansionMixin):
 
     def tf_boost_many(self, token: str, docs_sorted):
         """Bulk (tf, boost) gather over a sorted candidate array —
-        ONE block-pruned read + one binary-search gather per token,
-        replacing per-(token, doc) point decodes in the scoring fold
-        (value-identical to the spec's point accessors; the float
-        path is the same f32 → float64 widening)."""
+        ONE block-pruned read + one binary-search gather per token
+        (value-identical to OracleIndex.tf_boost_many; the float path
+        is the f32 → float64 widening of the stored boost)."""
         docs_sorted = np.asarray(docs_sorted, dtype=np.int64)
         docs, tfs, boosts = self.arrays_within(token, docs_sorted)
         n = len(docs_sorted)
@@ -842,17 +811,11 @@ class ParquetIndex(ExpansionMixin):
     def doc(self, d: int):
         """Full row of one doc as a plain dict: the same keys, values
         and Python types as the pandas row ``.loc[d].to_dict()`` of
-        its pbucket partition. The scoring fold calls this only for
-        the ≤k records it returns; everything it reads per candidate
-        comes from ``doc_values`` / ``doc_len`` / ``folded_text``,
-        which read the columnar store without building a row."""
-        d = int(d)
-        row = self._row_cache.get(d)
-        if row is None:
-            store, i = self._locate(d)
-            row = store.row(i)
-            self._row_cache[d] = row
-        return row
+        its pbucket partition. Uncached, for the shell: the search
+        flow reads docs only through ``doc_values`` and
+        ``folded_text``, which never build a row."""
+        store, i = self._locate(int(d))
+        return store.row(i)
 
     def doc_values(self, name: str, docs, default=REQUIRED) -> list:
         """One field of many docs (see ExpansionMixin.doc_values):
@@ -868,10 +831,6 @@ class ParquetIndex(ExpansionMixin):
             return store.values(name, store.positions(docs[sel]))
 
         return _stitch(docs >> self._doc_shift, fetch)
-
-    def doc_len(self, d: int) -> int:
-        store, i = self._locate(int(d))
-        return store.dl.item(i)
 
     def get_doc(self, conv_id: str, turn_idx: int):
         """Direct lookup by natural key (≙ Result.from_id,
@@ -978,7 +937,7 @@ class FastSearch(SpecSearch):
         return dict(zip(docs.tolist(), cnts.tolist()))
 
     def phrase_candidates(
-        self, seq: list[str], filter_docsets: list[set[int]], bucket_limit: int
+        self, seq: list[str], filter_groups: list[list[str]], bucket_limit: int
     ) -> list[int]:
         """Ordered-candidate twin of the spec's phrase branch: the
         memoized arrays are ALREADY in (-occurrences, doc) order, so
@@ -986,13 +945,16 @@ class FastSearch(SpecSearch):
         of a corpus-scale match map (a two-common-token phrase can
         match a large fraction of the corpus; sorting that on every
         warm query dominated serving phrase latency at 1.6M turns).
-        Filter sets subset the ordered stream, preserving order —
-        identical output to the spec's filter-then-sort."""
+        Each filter group (the sorted union of its keys' posting
+        docs) subsets the ordered stream, preserving order — identical
+        output to the spec's filter-then-sort."""
         docs, _ = self._phrase_arrays(seq)
-        for fdocs in filter_docsets:
+        for keys in filter_groups:
             if not len(docs):
                 break
-            fa = np.sort(np.fromiter(fdocs, np.int64, len(fdocs)))
+            fa = np.unique(np.concatenate(
+                [self.index._token_arrays(k)[0] for k in keys]
+            ))
             docs = docs[_in_sorted(docs, fa)]
         return docs[:bucket_limit].tolist()
 
@@ -1186,18 +1148,6 @@ class LocalSearchEngine:
             else SpecSearch(self.index, self.cfg)
         )
 
-    def _analyzed(self, q: str) -> list[str]:
-        cache = getattr(self, "_an_cache", None)
-        if cache is None:
-            cache = self._an_cache = _LRU(4096)
-        toks = cache.get(q)
-        if toks is None:
-            from ..functions.text import analyze_str
-
-            toks = analyze_str(q, self.cfg.synonyms, self.cfg.processors)
-            cache[q] = toks
-        return toks
-
     def preload(self, n_hot_tokens: int = 1000) -> int:
         """Warm the posting cache with the Zipf-head token blocks
         before serving traffic (see ParquetIndex.preload_hot)."""
@@ -1234,19 +1184,6 @@ class LocalSearchEngine:
         for q in queries:
             t0 = _time.perf_counter()
             b0 = len(blocks)
-            # cold-path fan-out: read every query token's (and filter
-            # key's) pruned blocks concurrently before the sequential
-            # spec flow touches them one by one (analysis memoized so
-            # warm repeats don't re-analyze for a no-op prefetch)
-            want = self._analyzed(q.q)
-            if getattr(q, "filters", None):
-                want = list(want)
-                for col, vals in sorted(q.filters.items()):
-                    for v in normalize_filter_values(
-                        vals, self.cfg.max_filter_values
-                    ):
-                        want.append(f"f|{col}|{v}")
-            self.index.prefetch_tokens(want)
             recs = self._searcher._one(q)
             records += recs
             trace.append({

@@ -218,10 +218,15 @@ class Shell:
         ids = self.searcher.run_gids(
             groups, dfs, sorted(groups), limit, use_scan=False
         )
+        # Σ boost in gid order, the kernel's accumulation order: one
+        # gather per token over the returned docs
+        ids_sorted = sorted(ids)
+        prescores = dict(zip(ids_sorted, sum(
+            self.index.tf_boost_many(t, ids_sorted)[1] for t in toks
+        ).tolist()))
         out = []
         for rn, d in enumerate(ids, 1):
-            # Σ boost in gid order, the kernel's accumulation order
-            prescore = sum(self.index.boost_of(t, d) for t in toks)
+            prescore = prescores[d]
             doc = self.index.doc(d)
             out.append(
                 f"{rn:>3}  {prescore:.4f}  {doc['conv_id']}#{doc['turn_idx']} "

@@ -4,7 +4,7 @@ iterate on individual operators without touching it).
 
 Usage:
   python bench_extra.py [--reps N] [--plans DIR] [--noop] [q1 q2 ...]
-  python bench_extra.py --serve-kinds SEED [--index DIR]
+  python bench_extra.py --serve-kinds SEED [--index DIR] [--dump FILE | --check FILE]
 
 - Times each named query (default: the full bench.py HEADLINE list)
   with the same methodology as bench.py (`fn(spark, SF_DIR).count()`
@@ -27,12 +27,20 @@ each `search([q])`. The index is built with Spark into `--index DIR`
 Prints one JSON line: the overall median and nearest-rank p90 (ms), and
 per kind the query count, median, p90 and how many of its queries
 cost more than the overall p90.
+
+`--dump FILE` also pickles the result frame of every `search([q])`
+call of that loop, in call order. `--check FILE` instead compares each
+call's frame with the one FILE holds (`assert_frame_equal`,
+`check_exact=True`) and exits 1 on the first mismatch: run `--dump` on
+one tree and `--check` on another to show two trees answer
+bit-identically.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import pickle
 import sys
 import time
 from pathlib import Path
@@ -43,8 +51,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def serve_kinds(seed: int, index_dir: str | None) -> dict:
-    """Per-kind first-touch serving CPU in the ``spark_batch`` shape."""
+def serve_kinds(seed: int, index_dir: str | None, frames: list | None = None) -> dict:
+    """Per-kind first-touch serving CPU in the ``spark_batch`` shape.
+    Each call's result frame is appended to ``frames`` when given."""
     import statistics
     import tempfile
 
@@ -90,7 +99,9 @@ def serve_kinds(seed: int, index_dir: str | None) -> dict:
         srv = LocalSearchEngine(index_dir, cfg)
         for q in served[r * W.SERVED:(r + 1) * W.SERVED]:
             c0 = time.process_time()
-            srv.search([q])
+            got = srv.search([q])
+            if frames is not None:
+                frames.append(got)
             cpu.append((kind_of[q.qid], (time.process_time() - c0) * 1000.0))
     if tmp is not None:
         tmp.cleanup()
@@ -113,6 +124,26 @@ def serve_kinds(seed: int, index_dir: str | None) -> dict:
     }
 
 
+def check_frames(frames: list, path: str) -> int:
+    """0 when ``frames`` equal the dumped ones call for call, else 1."""
+    import pandas as pd
+
+    with open(path, "rb") as f:
+        want = pickle.load(f)
+    if len(frames) != len(want):
+        print(f"{len(frames)} calls, the dump holds {len(want)}", file=sys.stderr)
+        return 1
+    for i, (g, w) in enumerate(zip(frames, want)):
+        try:
+            pd.testing.assert_frame_equal(g, w, check_exact=True)
+        except AssertionError as e:
+            print(f"call {i} differs: {e}", file=sys.stderr)
+            return 1
+    print(f"{len(frames)} calls, {sum(map(len, frames))} rows identical",
+          file=sys.stderr)
+    return 0
+
+
 def main() -> None:
     args = sys.argv[1:]
     if "--serve-kinds" in args:
@@ -120,7 +151,14 @@ def main() -> None:
         index_dir = None
         if "--index" in args:
             index_dir = args[args.index("--index") + 1]
-        print(json.dumps({"serve_kinds": serve_kinds(int(args[i + 1]), index_dir)}))
+        frames: list = []
+        out = serve_kinds(int(args[i + 1]), index_dir, frames)
+        print(json.dumps({"serve_kinds": out}))
+        if "--dump" in args:
+            with open(args[args.index("--dump") + 1], "wb") as f:
+                pickle.dump(frames, f)
+        elif "--check" in args:
+            sys.exit(check_frames(frames, args[args.index("--check") + 1]))
         return
     reps = 1
     plans_dir = None

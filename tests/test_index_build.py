@@ -283,6 +283,11 @@ def test_analyzer_empty_synonym_target_and_no_fields(spark):
     assert got[0]["__an"].toks == [] and got[0]["__an"].dl == 0
 
 
+def _boost(index, token: str, d: int) -> float:
+    """Posting boost of ``token`` in doc ``d`` (0.0 when absent)."""
+    return float(index.tf_boost_many(token, [d])[1][0])
+
+
 ALT_ROWS = [
     ("c", 0, "user", "Vernou-la-Celle-sur-Seine", None, 0.0, ["Vernou"]),
     ("c", 1, "user", "rue des Lilas", "grep", 0.5, None),
@@ -316,11 +321,11 @@ def test_list_value_variants_weights(spark, tmp_index_root):
 
     idx = ParquetIndex(str(paths.root), cfg)
     d = int(d0["doc_index"])
-    assert idx.tf_of("vernou", d) == 2
-    assert abs(idx.boost_of("vernou", d) - 4.0) < 1e-6
-    assert idx.tf_of("celle", d) == 1
-    assert abs(idx.boost_of("celle", d) - 4 / 5) < 1e-6
-    assert idx.doc_len(d) == 6
+    tfs, boosts = idx.tf_boost_many("vernou", [d])
+    assert tfs[0] == 2 and abs(boosts[0] - 4.0) < 1e-6
+    tfs, boosts = idx.tf_boost_many("celle", [d])
+    assert tfs[0] == 1 and abs(boosts[0] - 4 / 5) < 1e-6
+    assert idx.doc_values("dl", [d]) == [6]
     # deindex parity (tests/test_index_utils.py:185-201): deleting the
     # doc removes its variant postings too
     from addok_spark.index.incremental import apply_actions
@@ -403,9 +408,9 @@ def test_boost_col_overrides_field_boost(spark, tmp_index_root):
         r["turn_idx"]: int(r["doc_index"])
         for r in spark.read.parquet(paths.docs).collect()
     }
-    assert abs(idx.boost_of("lilas", docs[0]) - 5.0) < 1e-6
-    assert abs(idx.boost_of("cergy", docs[0]) - 1.0) < 1e-6
-    assert abs(idx.boost_of("voltaire", docs[1]) - 1.0) < 1e-6
+    assert abs(_boost(idx, "lilas", docs[0]) - 5.0) < 1e-6
+    assert abs(_boost(idx, "cergy", docs[0]) - 1.0) < 1e-6
+    assert abs(_boost(idx, "voltaire", docs[1]) - 1.0) < 1e-6
     # twin equivalence with the boost column in play
     docs_df = df.withColumn("doc_index", F.monotonically_increasing_id())
     new = analyze_docs(docs_df, cfg).select("doc_index", "__an").collect()
@@ -440,9 +445,9 @@ def test_boost_col_overrides_field_boost(spark, tmp_index_root):
                  "importance", "text_boost"],
     )
     oi = OracleIndex(pdf, cfg)
-    assert abs(oi.boost_of("lilas", 0) - 5.0) < 1e-6
-    assert abs(oi.boost_of("cergy", 0) - 1.0) < 1e-6
-    assert abs(oi.boost_of("voltaire", 1) - 1.0) < 1e-6
+    assert abs(_boost(oi, "lilas", 0) - 5.0) < 1e-6
+    assert abs(_boost(oi, "cergy", 0) - 1.0) < 1e-6
+    assert abs(_boost(oi, "voltaire", 1) - 1.0) < 1e-6
 
 
 def test_allow_null_false_drops_doc(spark, tmp_index_root):
@@ -532,9 +537,9 @@ def test_callable_boost_matches_reference_scenario(spark, tmp_index_root):
         for r in spark.read.parquet(paths.docs).collect()
     }
     # w|lilas = 5/1-token + importance*0.1; w|cergy = 1 + imp*0.1
-    assert abs(idx.boost_of("lilas", docs[0]) - (5.0 + 0.05)) < 1e-6
-    assert abs(idx.boost_of("cergy", docs[0]) - (1.0 + 0.05)) < 1e-6
-    assert abs(idx.boost_of("voltaire", docs[1]) - (2.0 + 0.02)) < 1e-6
+    assert abs(_boost(idx, "lilas", docs[0]) - (5.0 + 0.05)) < 1e-6
+    assert abs(_boost(idx, "cergy", docs[0]) - (1.0 + 0.05)) < 1e-6
+    assert abs(_boost(idx, "voltaire", docs[1]) - (2.0 + 0.02)) < 1e-6
 
 
 def test_callable_boost_sees_none_not_nan_and_rejects_nonfinite(spark):

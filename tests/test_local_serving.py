@@ -803,10 +803,10 @@ def test_doc_store_matches_pandas_rows_after_cdc(spark, tmp_path):
     """The columnar doc store answers ``doc(d)`` with exactly the row
     a pandas ``.loc[d].to_dict()`` over the same pbucket partition
     gives (keys, values and Python types: ``pd.Timestamp`` ts, ``None``
-    tool, ``int`` ints), and ``doc_len`` / ``folded_text`` /
-    ``doc_values`` agree with it. The CDC batch leaves a touched
-    pbucket in several files, so the store's own sort by doc_index is
-    what orders it."""
+    tool, ``int`` ints), and ``folded_text`` / ``doc_values`` agree
+    with it (the ``dl`` column included: the length norm reads it).
+    The CDC batch leaves a touched pbucket in several files, so the
+    store's own sort by doc_index is what orders it."""
     import re
 
     import pyarrow.dataset as pads
@@ -870,7 +870,6 @@ def test_doc_store_matches_pandas_rows_after_cdc(spark, tmp_path):
         for d in docs:
             want = frame.loc[d].to_dict()
             _assert_same_row(idx.doc(d), want, int(d))
-            assert idx.doc_len(d) == want["dl"]
             assert idx.folded_text(d) == fold_str(want["text"] or "")
     # across pbuckets, in any order: one value per doc, input order
     mixed = np.concatenate([f.index.to_numpy()[:2] for f in frames.values()])
@@ -878,16 +877,25 @@ def test_doc_store_matches_pandas_rows_after_cdc(spark, tmp_path):
     assert idx.doc_values("doc_index", mixed) == mixed.tolist()
 
 
-def test_row_fetch_bounded_by_k(index_paths, oracle, corpus_pdf, cfg):
-    """The scoring fold builds full row dicts only for the records a
-    query returns: on a fresh engine, ``_row_cache`` grows by at most
-    each query's ``k`` — common, filtered, phrase and reference-scorer
-    queries included — and the answers stay equal to the spec flow
-    and the corpus oracle."""
+def test_search_builds_no_doc_rows(
+    index_paths, oracle, corpus_pdf, cfg, monkeypatch
+):
+    """The search flow reads docs only by column: with ``doc()`` and
+    the store's row builder made to raise, the reference set plus
+    common, filtered and phrase queries answer, under both scorers and
+    both search modes, exactly as the spec flow and the corpus oracle
+    do."""
     import dataclasses
 
+    from addok_spark.serving.local import ParquetIndex, _DocStore
+
+    def no_rows(*a, **kw):
+        raise AssertionError("the search flow built a doc row")
+
+    monkeypatch.setattr(ParquetIndex, "doc", no_rows)
+    monkeypatch.setattr(_DocStore, "row", no_rows)
     words = corpus_pdf["text"].iloc[0].split()
-    queries = _queries(corpus_pdf)[:12] + [
+    queries = _queries(corpus_pdf) + [
         Query(qid="rb1", q="the of", k=10),
         Query(qid="rb2", q="the of to and", k=3),
         Query(qid="rb3", q=" ".join(words[:2]), k=10, filters={"role": ["user"]}),
@@ -897,15 +905,37 @@ def test_row_fetch_bounded_by_k(index_paths, oracle, corpus_pdf, cfg):
     ]
     ref_cfg = dataclasses.replace(cfg, scorer="reference")
     for qcfg in (cfg, ref_cfg):
-        srv = LocalSearchEngine(index_paths, qcfg)
-        frames = []
-        for q in queries:
-            before = len(srv.index._row_cache)
-            frames.append(srv.search([q]))
-            assert len(srv.index._row_cache) - before <= q.k, q.qid
-        got = pd.concat([f for f in frames if len(f)], ignore_index=True)
+        got = LocalSearchEngine(index_paths, qcfg).search(queries)
         spec = LocalSearchEngine(index_paths, qcfg, mode="spec").search(queries)
+        want = oracle_search(oracle, queries, qcfg)
         _assert_identical(got, spec, min_nonempty=10, score_rtol=0.0)
-        _assert_identical(
-            got, oracle_search(oracle, queries, qcfg), score_rtol=0.0
+        _assert_identical(got, want, score_rtol=0.0)
+        # the rendered fields are the oracle's row values
+        cols = ["qid", "rank", "conv_id", "turn_idx", "role", "tool", "text"]
+        pd.testing.assert_frame_equal(
+            got[cols].sort_values(["qid", "rank"], ignore_index=True),
+            want[cols].sort_values(["qid", "rank"], ignore_index=True),
         )
+
+
+def test_search_analyzes_each_query_once(
+    index_paths, corpus_pdf, cfg, monkeypatch
+):
+    """A search of N queries calls the analyzer N times: the flow
+    analyzes each query once and feeds the same tokens and filter keys
+    to the prefetch and to the plan."""
+    from addok_spark.functions import text
+    from addok_spark.oracle import bm25_oracle
+
+    calls = []
+    analyze = text.analyze_str
+
+    def counting(*a, **kw):
+        calls.append(a[0])
+        return analyze(*a, **kw)
+
+    monkeypatch.setattr(text, "analyze_str", counting)
+    monkeypatch.setattr(bm25_oracle, "analyze_str", counting)
+    queries = _equality_queries(corpus_pdf)
+    LocalSearchEngine(index_paths, cfg).search(queries)
+    assert sorted(calls) == sorted(q.q for q in queries)

@@ -15,19 +15,19 @@ import pytest
 
 from addok_spark.config import EngineConfig, FieldSpec
 from addok_spark.index.build import build_index
-from addok_spark.oracle.bm25_oracle import OracleIndex, oracle_search
+from addok_spark.oracle.bm25_oracle import OracleIndex, SpecSearch, oracle_search
 from addok_spark.query.engine import Query, SearchEngine
 from addok_spark.serving.local import FastSearch, LocalSearchEngine, ParquetIndex
 
 DOCS = [
-    # conv_id, text, role
-    ("d-ab", "alpha beta gamma delta", "user"),
-    ("d-ba", "beta alpha gamma delta", "assistant"),
-    ("d-2x", "alpha beta filler alpha beta tail", "user"),
-    ("d-far", "alpha filler filler beta", "user"),
-    ("d-dup", "alpha beta alpha common common", "assistant"),
-    ("d-common", "common common common words here", "user"),
-    ("d-c2", "words common here common", "user"),
+    # conv_id, text, role, tool
+    ("d-ab", "alpha beta gamma delta", "user", "python"),
+    ("d-ba", "beta alpha gamma delta", "assistant", None),
+    ("d-2x", "alpha beta filler alpha beta tail", "user", "bash"),
+    ("d-far", "alpha filler filler beta", "user", None),
+    ("d-dup", "alpha beta alpha common common", "assistant", "python"),
+    ("d-common", "common common common words here", "user", None),
+    ("d-c2", "words common here common", "user", None),
 ]
 
 
@@ -39,7 +39,7 @@ def env(spark, tmp_index_root):
             "turn_idx": 0,
             "role": [d[2] for d in DOCS],
             "text": [d[1] for d in DOCS],
-            "tool": None,
+            "tool": [d[3] for d in DOCS],
             "ts": pd.Timestamp("2026-01-01"),
             "importance": 0.0,
         }
@@ -119,12 +119,26 @@ def test_phrase_absent_token_and_no_match(env):
 
 
 def test_phrase_with_filters(env):
+    """Filters constrain phrase candidates: one value, and OR filters
+    on two fields (each group's docs are the union of its keys'
+    postings). FastSearch and SpecSearch over the same ParquetIndex
+    answer exactly alike, and as the oracle does."""
     pdf_sorted = env["pdf"].sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    want = _run(env, [
+    queries = [
         Query(qid="p", q="alpha beta", k=10, phrase=True,
               filters={"role": ["assistant"]}),
-    ])
+        Query(qid="p2", q="alpha beta", k=10, phrase=True,
+              filters={"role": ["user", "assistant"], "tool": ["python"]}),
+    ]
+    want = _run(env, queries)
     assert set(_ids(want, pdf_sorted, "p")) == {"d-dup"}
+    assert set(_ids(want, pdf_sorted, "p2")) == {"d-ab", "d-dup"}
+    idx = ParquetIndex(env["serving"].index.paths, env["cfg"])
+    fast = FastSearch(idx, env["cfg"]).search(queries)
+    pd.testing.assert_frame_equal(
+        fast, SpecSearch(idx, env["cfg"]).search(queries), check_exact=True
+    )
+    pd.testing.assert_frame_equal(fast, want, check_exact=True)
 
 
 def test_phrase_mixed_with_normal_queries_in_one_batch(env):

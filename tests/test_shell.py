@@ -110,9 +110,20 @@ def test_shell_dbinfo_help_errors(shell):
         shell.dispatch("FILTERS {bad json")
 
 
-def test_shell_intersect(shell):
+def test_shell_intersect(shell, shell_corpus):
+    from addok_spark.oracle.bm25_oracle import OracleIndex
+
     out = shell.dispatch("INTERSECT des lilas LIMIT 5")
     assert "doc-0" in out and "doc-1" in out and "doc-2" not in out
+    # each printed prescore is the oracle's Σ boost for that doc
+    oracle = OracleIndex(shell_corpus, shell.cfg)
+    doc_of = dict(zip(oracle.docs["conv_id"], oracle.docs["doc_index"]))
+    rows = [line.split() for line in out.splitlines() if "#" in line]
+    assert len(rows) == 2
+    for _, prescore, key, *_ in rows:
+        d = int(doc_of[key.split("#")[0]])
+        want = sum(oracle.boost[t][d] for t in ("des", "lilas"))
+        assert prescore == f"{want:.4f}"
     # raw conjunction, no relaxation: disjoint tokens → empty
     assert "(0 in" in shell.dispatch("INTERSECT rue montparnasse")
 
