@@ -44,6 +44,7 @@ Weight formula parity: per-field token boost =
 from __future__ import annotations
 
 import json
+import shutil
 import time
 from dataclasses import dataclass
 from pathlib import Path
@@ -1075,18 +1076,6 @@ def filter_postings(docs: DataFrame, cfg: EngineConfig) -> list[Column]:
     return [_postings(f) for f in cfg.filter_fields if f in docs.columns]
 
 
-def _list_view(arr) -> tuple[np.ndarray, np.ndarray]:
-    """(int64 entry offsets starting at 0, flat numpy values) of a
-    one-level pyarrow list array — null entries read as empty."""
-    import pyarrow.compute as pc
-
-    arr = _one_chunk(arr)
-    lens = pc.list_value_length(arr).fill_null(0).to_numpy(zero_copy_only=False)
-    off = np.zeros(len(arr) + 1, dtype=np.int64)
-    np.cumsum(lens, out=off[1:])
-    return off, arr.flatten().to_numpy(zero_copy_only=False)
-
-
 def _list_from(offsets: np.ndarray, values):
     """pyarrow list array over one flat pyarrow array: entry i =
     values[offsets[i]:offsets[i+1]] — no per-entry Python objects."""
@@ -1371,10 +1360,15 @@ class IndexBuilder:
                 analyzed = analyze_docs(docs, cfg)
                 self._write(analyzed, scratch, "analyzed", count_rows=False)
 
-        analyzed = spark.read.parquet(scratch)
+        # only the docs and blocks stages read the scratch table; a
+        # finished build has deleted it
+        docs_todo = not (resume and self._stage_done("docs"))
+        blocks_todo = not (resume and self._stage_done("blocks"))
+        if docs_todo or blocks_todo:
+            analyzed = spark.read.parquet(scratch)
 
         # stage 2: final docs table (dl + pbucket partition layout)
-        if not (resume and self._stage_done("docs")):
+        if docs_todo:
             docs_out = (
                 analyzed.withColumn("dl", F.col("__an.dl"))
                 .drop("__an")
@@ -1393,7 +1387,7 @@ class IndexBuilder:
         # stage 3: posting blocks — Spark's own list functions over
         # the exploded analyzed scan plus the f| filter postings
         # (doc-range bucketing = order-preserving salt)
-        if not (resume and self._stage_done("blocks")):
+        if blocks_todo:
             blocks = build_blocks_from_analyzed(analyzed, cfg)
             # rows are (pbucket, token)-sorted within partitions
             # already — write as-is; parquet row-group stats give token
@@ -1454,9 +1448,13 @@ class IndexBuilder:
             self.paths.meta.write_text(json.dumps(meta, indent=2))
             self._mark_stage("docs_meta")
 
-        # final metrics rollup
+        # every stage is done: the scratch table has no reader left
+        shutil.rmtree(scratch, ignore_errors=True)
+
+        # final metrics rollup (a resumed build keeps the figures of
+        # the stages it skipped)
         meta = json.loads(self.paths.meta.read_text())
-        meta["build_metrics"] = self.metrics["stages"]
+        meta.setdefault("build_metrics", {}).update(self.metrics["stages"])
         self.paths.meta.write_text(json.dumps(meta, indent=2))
         if self._publish_version is not None:
             # this snapshot's own manifest (overwriting any a crashed

@@ -85,7 +85,8 @@ class ExpansionMixin:
       (serving's ``FastSearch`` kernel reads ``ParquetIndex``'s
       posting arrays instead of the dict views);
     - documents: ``doc_values`` (one gather per field over a doc
-      array) and ``folded_text``.
+      array) and ``folded_labels`` (built on ``folded_texts``, one
+      ``text`` gather over a doc array).
 
     ``doc(d)`` (one full row) is for the shell; the flow never calls
     it."""
@@ -118,26 +119,29 @@ class ExpansionMixin:
             return [self.doc(int(d))[name] for d in docs]
         return [self.doc(int(d)).get(name, default) for d in docs]
 
-    def folded_text(self, d: int) -> str:
-        """Folded doc text for cream / reference-scorer / tie-break
-        string comparisons (fold is deterministic, so implementations
-        may cache it per doc)."""
-        return fold_str(self.doc(d)["text"] or "")
+    def folded_texts(self, docs) -> list[str]:
+        """Folded text of each doc, in ``docs`` order, for cream /
+        reference-scorer / tie-break string comparisons: one ``text``
+        gather, each text folded once (fold is deterministic, so
+        implementations may cache it per doc)."""
+        return [fold_str(t or "") for t in self.doc_values("text", docs)]
 
-    def folded_labels(self, d: int) -> list[str]:
-        """Folded label VARIANTS of a doc: primary text plus the
-        optional ``alt_text_field`` list (≙ reference Result.labels,
-        results.py:80-104 — string comparisons score the BEST
-        variant). Singleton (no alt column) ⇒ identical to
-        ``folded_text`` alone, so the non-alt paths are unchanged."""
-        labels = [self.folded_text(d)]
+    def folded_labels(self, docs) -> list[list[str]]:
+        """Folded label VARIANTS of each doc, in ``docs`` order: primary
+        text plus the optional ``alt_text_field`` list (≙ reference
+        Result.labels, results.py:80-104 — string comparisons score the
+        BEST variant), read with one gather of each field. Singleton
+        (no alt column) ⇒ the folded text alone, so the non-alt paths
+        are unchanged."""
+        labels = [[t] for t in self.folded_texts(docs)]
         alt_name = getattr(self.cfg, "alt_text_field", None)
-        if alt_name:
-            alt = self.doc_values(alt_name, [d], default=None)[0]
-            if alt is not None and not (
-                isinstance(alt, float) and math.isnan(alt)
-            ) and len(alt):
-                labels.extend(fold_str(v or "") for v in alt)
+        if alt_name and labels:
+            alts = self.doc_values(alt_name, docs, default=None)
+            for lab, alt in zip(labels, alts):
+                if alt is not None and not (
+                    isinstance(alt, float) and math.isnan(alt)
+                ) and len(alt):
+                    lab.extend(fold_str(v or "") for v in alt)
         return labels
 
     # -- expansion helpers (query planning) ---------------------------------
@@ -565,14 +569,16 @@ class SpecSearch:
             # query mode, results.py:60-104), not the tie-break key.
             # Memoized per doc: rounds re-test the same accumulated
             # candidates and the metric is deterministic per query.
+            # The labels of the docs not yet scored come from one
+            # gather.
             ac = bool(getattr(q, "autocomplete", False))
+            todo = [d for d in sorted(candidates) if d not in cream_memo]
+            labels = dict(zip(todo, index.folded_labels(todo)))
 
             def _m(d: int) -> float:
                 v = cream_memo.get(d)
                 if v is None:
-                    v = ref_string_score_best(
-                        qf, index.folded_labels(d), ac
-                    )
+                    v = ref_string_score_best(qf, labels[d], ac)
                     cream_memo[d] = v
                 return v
 
@@ -696,6 +702,8 @@ class SpecSearch:
         ]
         imps = index.doc_values("importance", cand_arr, default=0.0)
         dls = index.doc_values("dl", cand_arr)
+        if cfg.scorer == "reference":
+            ref_labels = index.folded_labels(cand_arr)
         for ci, d in enumerate(cand_sorted):
             ok = True
             for fvals, vs in fcols:
@@ -741,7 +749,7 @@ class SpecSearch:
                 score = ref_fold_score(
                     importance,
                     ref_string_score_best(
-                        qf, index.folded_labels(d),
+                        qf, ref_labels[ci],
                         bool(getattr(q, "autocomplete", False)),
                     ),
                     cfg.importance_weight,
@@ -775,7 +783,7 @@ class SpecSearch:
             else:
                 sel = np.arange(len(recs))
             dists = str_distance_keys_multi(
-                qf, [index.folded_labels(recs[i]["doc_index"]) for i in sel]
+                qf, index.folded_labels([recs[i]["doc_index"] for i in sel])
             )
             for i, dv in zip(sel, dists):
                 recs[i]["str_distance"] = dv

@@ -17,13 +17,17 @@ from those artifacts with pruned columnar reads:
   and written in small row groups, so the row groups' token
   statistics select the few that can hold a token. Block payloads
   are native Parquet list columns (``docs`` / ``tfs`` / ``boosts`` /
-  ``pos``); a selected row group is decoded once per column and
-  cached, with its ``token`` column kept as a sorted Python list. A
-  token's rows are one contiguous range of each group, found by
-  binary search and returned as zero-copy slices of the cached
-  columns; a cached token copies its slice into numpy arrays of its
-  own, so it never pins a whole row group. Postings are kept as
-  sorted numpy arrays (docs / tf / boost), not Python dicts;
+  ``pos``). One row-group store (``_RowGroup``) holds each touched
+  group: its ``token`` column as a sorted Python list, and each
+  column a read asks for, decoded once into flat numpy arrays in its
+  stored dtype (list columns as row offsets plus values; ``pos`` also
+  as offsets over the postings plus flat positions, decoded only for
+  phrases). A token's rows are one contiguous range of each group,
+  found by binary search; its posting arrays are numpy views of the
+  group's (concatenated in file order when it spans several groups),
+  and co-occurrence and position reads slice or offset-gather the
+  same arrays. Postings are kept as numpy arrays (docs / tf / boost),
+  not Python dicts;
 - **documents** are read per pbucket partition (hive partition
   pruning on ``pbucket``) the first time one of its docs becomes a
   candidate, and kept columnar: the partition's Arrow table sorted by
@@ -82,7 +86,7 @@ import pyarrow.compute as pc
 from ..config import EngineConfig
 from ..index.build import (
     IndexPaths,
-    _list_view,
+    _one_chunk,
     check_blocks_layout,
     open_dataset,
     table_files,
@@ -97,7 +101,7 @@ from ..query.engine import Query
 
 _EMPTY = (
     np.empty(0, dtype=np.int64),
-    np.empty(0, dtype=np.int64),
+    np.empty(0, dtype=np.int32),
     np.empty(0, dtype=np.float32),
 )
 
@@ -207,91 +211,192 @@ def _in_sorted(
         nz = lens > 0
         out = np.zeros(nv, dtype=bool)
         if nz.any():
-            starts, lens = lo[nz], lens[nz]
-            offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            idx = (
-                np.arange(int(lens.sum()), dtype=np.int64)
-                - np.repeat(offs, lens)
-                + np.repeat(starts, lens)
-            )
-            out[idx] = True
+            out[_ranges(lo[nz], lens[nz])] = True
         return out
     idx = np.searchsorted(sorted_uniq, values)
     np.minimum(idx, ns - 1, out=idx)
     return sorted_uniq[idx] == values
 
 
-class _TokenBlocks:
-    """Block-granular lazy posting store of ONE token: metadata
-    (n / max_boost / min_doc / max_doc) held as numpy, payload list
-    columns flattened to numpy once and sliced per block on first
-    touch. Doc ranges are disjoint across a token's blocks (bucket =
-    doc high bits; blocks partition the sorted run within a bucket),
-    so range probes slice only the intersecting blocks.
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(start, start + len)`` of every range: the
+    flat indices that gather those ranges in one ``take``."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if len(ends) else 0
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - (ends - lens), lens)
 
-    Every array is a copy the object owns: ``tbl`` holds zero-copy
-    slices of cached row groups (``ParquetIndex._blocks_rows``), and a
-    view kept here would pin the whole group for as long as the token
-    stays cached."""
+
+def _list_parts(arr) -> tuple[np.ndarray, pa.Array]:
+    """(int64 entry offsets starting at 0, flattened child array) of a
+    one-level pyarrow list array; a null entry reads as empty."""
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy(zero_copy_only=False)
+    off = np.zeros(len(arr) + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    return off, arr.flatten()
+
+
+# the blocks table's list columns: per-posting payloads sharing one set
+# of row offsets (``pos`` holds a list of positions per posting)
+_LIST_COLUMNS = frozenset({"docs", "tfs", "boosts", "pos"})
+
+# stored dtype of every column a token read takes from a row group
+_DTYPES = {
+    "n": np.int32, "max_boost": np.float32, "min_doc": np.int64,
+    "max_doc": np.int64, "docs": np.int64, "tfs": np.int32,
+    "boosts": np.float32,
+}
+
+
+class _RowGroup:
+    """One row group of the blocks table, decoded to numpy one column
+    at a time, the first time a read asks for that column; every token
+    read of the group then slices the same arrays.
+
+    ``tokens`` is the group's sorted ``token`` column as a Python list:
+    a token's rows are the range ``bisect`` finds in it. ``off`` are the
+    row offsets over the group's postings, shared by the ``docs``,
+    ``tfs``, ``boosts`` and ``pos`` lists. ``cols`` maps each decoded
+    column to numpy in its stored dtype: one value per row for ``n``,
+    ``max_boost``, ``min_doc`` and ``max_doc``, one per posting for
+    ``docs``, ``tfs`` and ``boosts``, and for ``pos`` a pair (offsets
+    over the postings, flat positions). Thread-safe: two reads racing
+    on one column decode it twice and keep either copy."""
+
+    __slots__ = ("frag", "tokens", "off", "cols")
+
+    def __init__(self, frag, tokens: list[str]):
+        self.frag = frag
+        self.tokens = tokens
+        self.off: np.ndarray | None = None
+        self.cols: dict[str, object] = {}
+
+    def decode(self, columns) -> None:
+        missing = [c for c in columns if c not in self.cols]
+        if not missing:
+            return
+        tbl = self.frag.to_table(columns=missing)
+        for c in missing:
+            arr = _one_chunk(tbl.column(c))
+            if c not in _LIST_COLUMNS:
+                self.cols[c] = arr.to_numpy(zero_copy_only=False)
+                continue
+            off, flat = _list_parts(arr)
+            if self.off is None:
+                self.off = off
+            elif not np.array_equal(off, self.off):
+                raise ValueError(
+                    f"{self.frag.path}: row group {self.frag.row_groups[0].id}"
+                    f" of the blocks table has a {c} list that does not"
+                    " align with the other posting lists"
+                )
+            if c == "pos":
+                pos_off, flat = _list_parts(flat)
+                self.cols[c] = (pos_off, flat.to_numpy(zero_copy_only=False))
+            else:
+                self.cols[c] = flat.to_numpy(zero_copy_only=False)
+
+
+def _join(parts: list, dtype) -> np.ndarray:
+    """One array of ``parts`` in order: the part itself when there is
+    only one (no copy), an empty array of ``dtype`` when there is none."""
+    if len(parts) == 1:
+        return parts[0]
+    if not parts:
+        return np.empty(0, dtype=dtype)
+    return np.concatenate(parts)
+
+
+def _row_slices(rows: list, column: str) -> np.ndarray:
+    """A per-row column over the row ranges ``rows`` of row groups."""
+    return _join([g.cols[column][a:b] for g, a, b in rows], _DTYPES[column])
+
+
+def _posting_slices(rows: list, column: str) -> np.ndarray:
+    """A per-posting column over the postings of the row ranges."""
+    return _join(
+        [g.cols[column][g.off[a]:g.off[b]] for g, a, b in rows],
+        _DTYPES[column],
+    )
+
+
+class _TokenBlocks:
+    """Block-granular posting store of ONE token: block metadata
+    (n / max_boost / min_doc / max_doc) and the flat payloads (docs /
+    tfs / boosts, in their stored dtypes) as numpy arrays, sliced per
+    block on first touch. Doc ranges are disjoint across a token's
+    blocks (bucket = doc high bits; blocks partition the sorted run
+    within a bucket), so range probes slice only the intersecting
+    blocks.
+
+    ``rows`` are the token's ``(group, a, b)`` row ranges from
+    ``ParquetIndex._token_rows``. A token held by one row group is
+    made of views into that group's decoded columns: nothing is
+    copied, and ``full()`` hands the same views back when the docs are
+    already sorted. A token spread over several groups (a Zipf-head
+    token, or several pbucket files after CDC) is their concatenation
+    in file and row order. ``_off`` are the blocks' offsets over the
+    payloads; they start at the first block's offset, not at 0."""
 
     __slots__ = (
         "is_filter", "n", "ub", "mind", "maxd", "n_blocks",
         "_off", "_docs", "_tfs", "_boosts", "_dec", "_full",
     )
 
-    def __init__(self, tbl, is_filter: bool):
-        def owned(col):
-            return np.array(col.to_numpy())
-
+    def __init__(self, rows: list, is_filter: bool):
         self.is_filter = is_filter
-        self.n = owned(tbl.column("n"))
-        self.ub = owned(tbl.column("max_boost"))
-        self.mind = owned(tbl.column("min_doc"))
-        self.maxd = owned(tbl.column("max_doc"))
+        self.n = _row_slices(rows, "n")
+        self.ub = _row_slices(rows, "max_boost")
+        self.mind = _row_slices(rows, "min_doc")
+        self.maxd = _row_slices(rows, "max_doc")
         self.n_blocks = len(self.n)
-        self._off, docs = _list_view(tbl.column("docs"))
-        self._docs = docs.astype(np.int64)
+        if len(rows) == 1:
+            grp, a, b = rows[0]
+            self._off = grp.off[a:b + 1]
+        else:
+            # blocks of later groups continue after the earlier ones
+            off = [np.zeros(1, np.int64)]
+            for grp, a, b in rows:
+                off.append(grp.off[a + 1:b + 1] - grp.off[a] + off[-1][-1])
+            self._off = np.concatenate(off)
+        self._docs = _posting_slices(rows, "docs")
         # filter (f|) postings score nothing: tf and boost read as 0
         self._tfs = self._boosts = None
         if not is_filter:
-            self._tfs = _list_view(tbl.column("tfs"))[1].astype(np.int64)
-            self._boosts = np.array(_list_view(tbl.column("boosts"))[1])
-        # per-block slice memo: grows only until full() concatenates
-        # and clears it, so worst-case residency is bounded by the
-        # posting-store _LRU above (maxsize tokens × this token's
-        # blocks) — the store evicts whole _TokenBlocks objects
+            self._tfs = _posting_slices(rows, "tfs")
+            self._boosts = _posting_slices(rows, "boosts")
+        # per-block slice memo: grows only until full() clears it, so
+        # worst-case residency is bounded by the posting-store _LRU
+        # (maxsize tokens × this token's blocks) — the store evicts
+        # whole _TokenBlocks objects
         self._dec: dict[int, tuple] = {}
         self._full = None
+
+    def _payloads(self, lo: int, hi: int) -> tuple:
+        docs = self._docs[lo:hi]
+        if self.is_filter:
+            return (docs, np.zeros(len(docs), np.int32),
+                    np.zeros(len(docs), np.float32))
+        return docs, self._tfs[lo:hi], self._boosts[lo:hi]
 
     def decode_block(self, i: int):
         got = self._dec.get(i)
         if got is None:
-            lo, hi = self._off[i], self._off[i + 1]
-            docs = self._docs[lo:hi]
-            if self.is_filter:
-                tfs = np.zeros(len(docs), np.int64)
-                boosts = np.zeros(len(docs), np.float32)
-            else:
-                tfs = self._tfs[lo:hi]
-                boosts = self._boosts[lo:hi]
-            got = (docs, tfs, boosts)
+            base = self._off[0]
+            got = self._payloads(self._off[i] - base, self._off[i + 1] - base)
             self._dec[i] = got
         return got
 
     def full(self):
         if self._full is None:
-            if self.n_blocks == 0:
-                self._full = _EMPTY
-            else:
-                parts = [self.decode_block(i) for i in range(self.n_blocks)]
-                docs = np.concatenate([p[0] for p in parts])
-                tfs = np.concatenate([p[1] for p in parts])
-                boosts = np.concatenate([p[2] for p in parts])
-                # fragments arrive in directory-listing order, not
-                # doc order — restore the global sort (docs unique)
+            docs, tfs, boosts = self._payloads(0, len(self._docs))
+            # one group's postings are already doc-sorted; fragments of
+            # several files arrive in directory-listing order, not doc
+            # order — restore the global sort (docs unique)
+            if len(docs) > 1 and not (docs[1:] > docs[:-1]).all():
                 o = np.argsort(docs, kind="stable")
-                self._full = (docs[o], tfs[o], boosts[o])
-                self._dec.clear()
+                docs, tfs, boosts = docs[o], tfs[o], boosts[o]
+            self._full = (docs, tfs, boosts)
+            self._dec.clear()
         return self._full
 
     def covering(self, docs_sorted: np.ndarray):
@@ -473,8 +578,9 @@ class ParquetIndex(ExpansionMixin):
 
         self._blocks: dict[str, _TokenBlocks] = _LRU(100_000)
         self._rg_index: list[tuple] | None = None
-        self._rg_cache: dict[tuple, pa.ChunkedArray] = _LRU(4096)
-        self._rg_tokens: dict[int, list[str]] = _LRU(4096)
+        # the row-group store: decoded blocks row groups by their
+        # index in ``_row_groups()``
+        self._groups: dict[int, _RowGroup] = _LRU(4096)
         self._scan_cache: dict[tuple, np.ndarray] = _LRU(1024)
         self._doc_cache: dict[int, _DocStore] = _LRU(64)
         self._fold_cache: dict[int, str] = _LRU(100_000)
@@ -511,65 +617,56 @@ class ParquetIndex(ExpansionMixin):
             self._rg_index = index
         return self._rg_index
 
-    def _group_tokens(self, i: int, rg) -> list[str]:
-        """Row group ``i``'s ``token`` column as a Python list, decoded
-        once and kept in ``_rg_tokens``. The build writes every blocks
-        file sorted by token, so the list is sorted; a group that is not
-        raises instead of hiding postings from the binary search."""
-        toks = self._rg_tokens.get(i)
-        if toks is None:
-            col = rg.to_table(columns=["token"]).column("token")
-            if len(col) > 1 and not pc.all(
-                pc.less_equal(col.slice(0, len(col) - 1), col.slice(1))
-            ).as_py():
-                raise ValueError(
-                    f"{rg.path}: row group {rg.row_groups[0].id} of the "
-                    "blocks table is not sorted by token"
-                )
-            toks = self._rg_tokens[i] = col.to_pylist()
-        return toks
+    @staticmethod
+    def _group_tokens(rg) -> list[str]:
+        """A row group's ``token`` column as a Python list. The build
+        writes every blocks file sorted by token, so the list is sorted;
+        a group that is not raises instead of hiding postings from the
+        binary search."""
+        col = rg.to_table(columns=["token"]).column("token")
+        if len(col) > 1 and not pc.all(
+            pc.less_equal(col.slice(0, len(col) - 1), col.slice(1))
+        ).as_py():
+            raise ValueError(
+                f"{rg.path}: row group {rg.row_groups[0].id} of the "
+                "blocks table is not sorted by token"
+            )
+        return col.to_pylist()
 
-    def _blocks_rows(self, token: str, columns: list[str]) -> pa.Table:
-        """``columns`` of ``token``'s block rows, in file and row order.
-        The row groups whose token statistics admit the token are
-        searched: their sorted ``token`` lists give the token's range by
-        binary search, and the rows are zero-copy slices of the groups'
-        cached columns. A group's column is decoded whole, once, and
-        kept in ``_rg_cache`` (list columns decode value by value, so
-        re-decoding a Zipf-head token's groups for every query would
-        cost more than the read); a group that does not hold the token
-        decodes only its ``token`` column. The slices share the cached
-        buffers: a caller that keeps them copies them first (see
-        ``_TokenBlocks``). Thread-safe: a race only decodes a group
-        twice."""
-        parts = []
+    def _token_rows(self, token: str, columns) -> list[tuple]:
+        """``(group, a, b)`` for every row group holding ``token``, in
+        file and row order: rows ``a:b`` of ``group`` (a ``_RowGroup``
+        whose ``columns`` are decoded) are the token's. The row groups
+        whose token statistics admit the token are searched, each by
+        binary search over its sorted token list. A group enters the
+        store on first touch with its token list only, and decodes a
+        column whole the first time a token read needs it (list columns
+        decode value by value, so re-decoding a Zipf-head token's groups
+        for every query would cost more than the read); a group that
+        does not hold the token decodes nothing more. Thread-safe: a
+        race only decodes a group twice."""
+        rows = []
         for i, (lo, hi, rg) in enumerate(self._row_groups()):
             if lo is not None and not lo <= token <= hi:
                 continue
-            toks = self._group_tokens(i, rg)
-            a = bisect.bisect_left(toks, token)
-            b = bisect.bisect_right(toks, token, a)
-            if a == b:
-                continue
-            got = {c: self._rg_cache.get((i, c)) for c in columns}
-            missing = [c for c in columns if got[c] is None]
-            if missing:
-                tbl = rg.to_table(columns=missing)
-                for c in missing:
-                    got[c] = self._rg_cache[(i, c)] = tbl.column(c)
-            parts.append(pa.table({c: got[c].slice(a, b - a) for c in columns}))
-        if not parts:
-            return self._blocks_ds.schema.empty_table().select(columns)
-        return pa.concat_tables(parts)
+            grp = self._groups.get(i)
+            if grp is None:
+                grp = self._groups[i] = _RowGroup(rg, self._group_tokens(rg))
+            a = bisect.bisect_left(grp.tokens, token)
+            b = bisect.bisect_right(grp.tokens, token, a)
+            if a < b:
+                grp.decode(columns)
+                rows.append((grp, a, b))
+        return rows
 
     def _read_token_blocks(self, token: str) -> "_TokenBlocks":
         """Uncached blocks read for one token (thread-safe, see
-        ``_blocks_rows``)."""
+        ``_token_rows``)."""
         is_filter = token.startswith("f|")
         cols = ["n", "max_boost", "min_doc", "max_doc", "docs"]
         if not is_filter:
             cols += ["tfs", "boosts"]
-        return _TokenBlocks(self._blocks_rows(token, cols), is_filter)
+        return _TokenBlocks(self._token_rows(token, cols), is_filter)
 
     def _token_blocks(self, token: str) -> "_TokenBlocks":
         """Per-block lazy posting store for one token: block metadata
@@ -620,7 +717,7 @@ class ParquetIndex(ExpansionMixin):
         return len(hot)
 
     def _token_arrays(self, token: str):
-        """(docs asc int64, tf int64, boost float32) for one token —
+        """(docs asc int64, tf int32, boost float32) for one token —
         full decode, cached (the non-scan collection path)."""
         return self._token_blocks(token).full()
 
@@ -726,15 +823,24 @@ class ParquetIndex(ExpansionMixin):
                 m = _in_sorted(docs, within_docs)
                 return docs[m], pos[m]
             return cached
-        tbl = self._blocks_rows(token, ["docs", "pos"])
-        postings = pc.list_flatten(tbl.column("pos"))
-        docs = _list_view(tbl.column("docs"))[1]
-        if within_docs is not None:
-            sel = np.flatnonzero(_in_sorted(docs, within_docs))
-            docs = docs[sel]
-            postings = postings.take(pa.array(sel))
-        off, pos = _list_view(postings)
-        out = (np.repeat(docs.astype(np.int64), np.diff(off)), pos.astype(np.int64))
+        dparts, pparts = [], []
+        for grp, a, b in self._token_rows(token, ["docs", "pos"]):
+            lo, hi = grp.off[a], grp.off[b]
+            docs = grp.cols["docs"][lo:hi]
+            pos_off, pos = grp.cols["pos"]
+            if within_docs is None:
+                lens = np.diff(pos_off[lo:hi + 1])
+                pparts.append(pos[pos_off[lo]:pos_off[hi]])
+            else:
+                # select postings by doc, then gather their position
+                # ranges
+                sel = np.flatnonzero(_in_sorted(docs, within_docs))
+                docs = docs[sel]
+                starts = pos_off[lo + sel]
+                lens = pos_off[lo + sel + 1] - starts
+                pparts.append(pos[_ranges(starts, lens)])
+            dparts.append(np.repeat(docs, lens))
+        out = (_join(dparts, np.int64), _join(pparts, np.int32).astype(np.int64))
         if within_docs is None:
             self._pos_cache[token] = out
         return out
@@ -764,7 +870,7 @@ class ParquetIndex(ExpansionMixin):
         tb = self._blocks.get(token)
         if tb is not None:
             return tb._docs
-        return _list_view(self._blocks_rows(token, ["docs"]).column("docs"))[1]
+        return _posting_slices(self._token_rows(token, ["docs"]), "docs")
 
     def any_shared_docs(self, a: str, b: str) -> bool:
         da = self._token_docs(a)
@@ -813,7 +919,7 @@ class ParquetIndex(ExpansionMixin):
         and Python types as the pandas row ``.loc[d].to_dict()`` of
         its pbucket partition. Uncached, for the shell: the search
         flow reads docs only through ``doc_values`` and
-        ``folded_text``, which never build a row."""
+        ``folded_texts``, which never build a row."""
         store, i = self._locate(int(d))
         return store.row(i)
 
@@ -846,16 +952,20 @@ class ParquetIndex(ExpansionMixin):
             return None
         return tbl.to_pandas().iloc[0]
 
-    def folded_text(self, d: int) -> str:
-        d = int(d)
-        ft = self._fold_cache.get(d)
-        if ft is None:
-            from ..functions.text import fold_str
+    def folded_texts(self, docs) -> list[str]:
+        """≙ ExpansionMixin.folded_texts, memoized per doc: the docs
+        not yet folded are read with one ``text`` gather."""
+        from ..functions.text import fold_str
 
-            store, i = self._locate(d)
-            ft = fold_str(store.value("text", i) or "")
-            self._fold_cache[d] = ft
-        return ft
+        docs = [int(d) for d in docs]
+        cache = self._fold_cache
+        out = [cache.get(d) for d in docs]
+        miss = [i for i, ft in enumerate(out) if ft is None]
+        if miss:
+            texts = self.doc_values("text", [docs[i] for i in miss])
+            for i, text in zip(miss, texts):
+                out[i] = cache[docs[i]] = fold_str(text or "")
+        return out
 
     # -- prefixes / co-occurrence -------------------------------------------
     def prefix_candidates(self, prefix: str, cap: int = 100) -> list[str]:

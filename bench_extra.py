@@ -24,9 +24,12 @@ corpus and query mix for SEED, four rounds of 128 queries, each round
 on a newly opened `LocalSearchEngine`, and the process CPU time of
 each `search([q])`. The index is built with Spark into `--index DIR`
 (reused when DIR already holds one; a temporary directory otherwise).
-Prints one JSON line: the overall median and nearest-rank p90 (ms), and
+Prints one JSON line: the overall median and nearest-rank p90 (ms),
 per kind the query count, median, p90 and how many of its queries
-cost more than the overall p90.
+cost more than the overall p90, and `rss_mb`, each round's growth in
+resident memory from just before its engine opens to the end of its
+queries, read the way perfbench reads `serve_rss_mb` (after
+`gc.collect()`, Arrow's `release_unused()` and `malloc_trim`).
 
 `--dump FILE` also pickles the result frame of every `search([q])`
 call of that loop, in call order. `--check FILE` instead compares each
@@ -95,7 +98,10 @@ def serve_kinds(seed: int, index_dir: str | None, frames: list | None = None) ->
                     resume=False)
         spark.stop()
     cpu: list[tuple[str, float]] = []
+    rss: list[float] = []
     for r in range(W.SERVE_ROUNDS):
+        srv = None   # free the previous round's engine before rss0
+        rss0 = W._rss_mb()
         srv = LocalSearchEngine(index_dir, cfg)
         for q in served[r * W.SERVED:(r + 1) * W.SERVED]:
             c0 = time.process_time()
@@ -103,6 +109,7 @@ def serve_kinds(seed: int, index_dir: str | None, frames: list | None = None) ->
             if frames is not None:
                 frames.append(got)
             cpu.append((kind_of[q.qid], (time.process_time() - c0) * 1000.0))
+        rss.append(round(W._rss_mb() - rss0, 2))
     if tmp is not None:
         tmp.cleanup()
     overall = p90([c for _, c in cpu])
@@ -120,6 +127,7 @@ def serve_kinds(seed: int, index_dir: str | None, frames: list | None = None) ->
         "queries": len(cpu),
         "p50_ms": round(statistics.median(c for _, c in cpu), 3),
         "p90_ms": round(overall, 3),
+        "rss_mb": rss,
         "kinds": kinds,
     }
 
@@ -151,7 +159,10 @@ def main() -> None:
         index_dir = None
         if "--index" in args:
             index_dir = args[args.index("--index") + 1]
-        frames: list = []
+        # frames are kept only to dump or check: held, they would count
+        # in the rounds' resident memory
+        keep = "--dump" in args or "--check" in args
+        frames: list | None = [] if keep else None
         out = serve_kinds(int(args[i + 1]), index_dir, frames)
         print(json.dumps({"serve_kinds": out}))
         if "--dump" in args:

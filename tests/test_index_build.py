@@ -189,8 +189,14 @@ def test_local_pack_blocks_equal_exploded_path(spark, built, tiny_cfg):
 
     from addok_spark.index.build import _pack_group, build_blocks_from_analyzed
 
+    from addok_spark.index.build import analyze_docs
+
     cfg = dataclasses.replace(tiny_cfg, doc_bucket_bits=1, posting_block_size=1)
-    analyzed = spark.read.parquet(str(Path(built.root) / "_analyzed"))
+    # the build deletes its analyzed scratch table: analyze the built
+    # docs again (the same doc columns, doc_index included)
+    analyzed = analyze_docs(
+        spark.read.parquet(built.docs).drop("dl", "pbucket"), tiny_cfg
+    )
     rows = analyzed.select("doc_index", "__an", *cfg.filter_fields).collect()
     postings = [
         (tk.token, r.doc_index, tk.tf, tk.boost, tk.pos)
@@ -611,6 +617,34 @@ def test_build_releases_persisted_relations(spark, tiny_corpus, tiny_cfg,
     with pytest.raises(OSError, match="injected"):
         build_index(spark, tiny_corpus, tiny_cfg, out)
     assert _persisted_rdds(spark) == before
+
+
+def test_build_deletes_analyzed_scratch_and_resumes(spark, tiny_corpus,
+                                                   tiny_cfg, tmp_path):
+    """A finished build leaves no ``_analyzed`` scratch table behind,
+    and resuming it reads none: a second ``build_index`` with
+    ``resume=True`` succeeds and changes no table file and no
+    ``meta.json``."""
+    import hashlib
+
+    def files(root: Path) -> dict[str, str]:
+        return {
+            str(f.relative_to(root)): hashlib.sha256(f.read_bytes()).hexdigest()
+            for f in sorted(root.rglob("*")) if f.is_file()
+        }
+
+    out = tmp_path / "idx"
+    paths = build_index(spark, tiny_corpus, tiny_cfg, str(out))
+    assert not (out / "_analyzed").exists()
+    tables = [Path(getattr(paths, t))
+              for t in ("docs", "blocks", "dict_partials", "dictionary")]
+    before = [files(t) for t in tables]
+    meta = paths.meta.read_text()
+    assert all(before) and '"analyzed"' in meta
+    again = build_index(spark, tiny_corpus, tiny_cfg, str(out), resume=True)
+    assert not (out / "_analyzed").exists()
+    assert [files(t) for t in tables] == before
+    assert again.meta.read_text() == meta
 
 
 def test_unreadable_docs_footer_fails_the_build(spark, tiny_corpus, tiny_cfg,

@@ -574,17 +574,41 @@ def test_cooc_equals_oracle_exhaustively(
     assert len(idx._blocks) == 0
 
 
+def _store_rows(rows) -> list[dict]:
+    """Every block row of a token, from its ``(group, a, b)`` ranges in
+    the row-group store, as plain Python values in read order."""
+    out = []
+    for g, a, b in rows:
+        pos_off, pos = g.cols["pos"]
+        for r in range(a, b):
+            lo, hi = g.off[r], g.off[r + 1]
+            out.append({
+                "n": int(g.cols["n"][r]),
+                "max_boost": float(g.cols["max_boost"][r]),
+                "min_doc": int(g.cols["min_doc"][r]),
+                "max_doc": int(g.cols["max_doc"][r]),
+                "docs": g.cols["docs"][lo:hi].tolist(),
+                "tfs": g.cols["tfs"][lo:hi].tolist(),
+                "boosts": g.cols["boosts"][lo:hi].tolist(),
+                "pos": [pos[pos_off[i]:pos_off[i + 1]].tolist()
+                        for i in range(lo, hi)],
+            })
+    return out
+
+
 @pytest.mark.parametrize("phase", ["bulk", "cdc"])
-def test_blocks_rows_equal_dataset_filter_exhaustively(
+def test_row_group_store_equals_dataset_filter_exhaustively(
     index_paths, cfg, cdc_index, phase
 ):
-    """``_blocks_rows`` binary-searches each admitted row group's
-    sorted token list and slices the cached columns. For every
-    dictionary token, ``f|`` filter tokens included, its rows must
-    equal a filter on ``token == t`` over the whole blocks dataset, and
-    a cached token's arrays must be its own copies. An absent token,
-    one inside a row group's token range and ones outside every
-    group's range, reads no rows."""
+    """A token read binary-searches each admitted row group's sorted
+    token list and slices the group's decoded numpy columns. For every
+    dictionary token, ``f|`` filter tokens included, ``n``,
+    ``max_boost``, ``min_doc``, ``max_doc`` and every block's docs,
+    tfs, boosts and position lists must equal a filter on
+    ``token == t`` over the whole blocks dataset — read from the store,
+    through ``_TokenBlocks`` and through ``token_position_arrays``. An
+    absent token, one inside a row group's token range and ones outside
+    every group's range read no rows."""
     from collections import Counter
 
     import pyarrow.compute as pc
@@ -593,32 +617,137 @@ def test_blocks_rows_equal_dataset_filter_exhaustively(
     from addok_spark.serving.local import ParquetIndex
 
     idx = ParquetIndex(index_paths if phase == "bulk" else cdc_index[0], cfg)
-    cols = [c for c in idx._blocks_ds.schema.names if c != "pbucket"]
-    full = open_dataset(idx.paths, "blocks").to_table(columns=cols)
-    order = [("bucket", "ascending"), ("block_id", "ascending"),
-             ("min_doc", "ascending")]
+    cols = ["n", "max_boost", "min_doc", "max_doc", "docs", "tfs", "boosts",
+            "pos"]
+    full = open_dataset(idx.paths, "blocks").to_table(columns=["token"] + cols)
     toks = sorted(idx.df)
     assert any(t.startswith("f|") for t in toks)
     for t in toks:
-        got = idx._blocks_rows(t, cols)
-        want = full.filter(pc.field("token") == t)
-        assert got.num_rows == want.num_rows > 0, t
-        assert got.sort_by(order).to_pydict() == want.sort_by(order).to_pydict(), t
+        want = full.filter(pc.field("token") == t).select(cols).to_pylist()
+        assert want, t
+        got = _store_rows(idx._token_rows(t, cols))
+        key = lambda r: r["min_doc"]  # noqa: E731 — unique per token
+        assert sorted(got, key=key) == sorted(want, key=key), t
+        # _TokenBlocks and the position stream read the same rows, in
+        # the store's (file and row) order
         tb = idx._read_token_blocks(t)
-        for arr in (tb.n, tb.ub, tb.mind, tb.maxd, tb._off, tb._docs,
-                    tb._tfs, tb._boosts):
-            assert arr is None or arr.flags.owndata, t
+        assert tb.n.tolist() == [r["n"] for r in got], t
+        assert tb.ub.tolist() == [r["max_boost"] for r in got], t
+        assert tb.mind.tolist() == [r["min_doc"] for r in got], t
+        assert tb.maxd.tolist() == [r["max_doc"] for r in got], t
+        for i, r in enumerate(got):
+            docs, tfs, boosts = tb.decode_block(i)
+            assert docs.tolist() == r["docs"], (t, i)
+            if not t.startswith("f|"):
+                assert tfs.tolist() == r["tfs"], (t, i)
+                assert boosts.tolist() == r["boosts"], (t, i)
+        pdocs, pos = idx.token_position_arrays(t)
+        assert pdocs.tolist() == [
+            d for r in got for d, p in zip(r["docs"], r["pos"]) for _ in p
+        ], t
+        assert pos.tolist() == [x for r in got for p in r["pos"] for x in p], t
     # some token's rows straddle row groups, so the slices concatenate
     assert max(Counter(
-        t for toks in idx._rg_tokens.values() for t in set(toks)
+        t for g in idx._groups.values() for t in set(g.tokens)
     ).values()) > 1
     mins = [lo for lo, _, _ in idx._row_groups()]
     maxs = [hi for _, hi, _ in idx._row_groups()]
     inside = toks[len(toks) // 2] + "\x00"
     assert inside not in idx.df
     for t in ("", min(mins)[:-1], max(maxs) + "z", "\uffff", inside):
-        got = idx._blocks_rows(t, cols)
-        assert got.num_rows == 0 and got.schema.names == cols, t
+        assert idx._token_rows(t, cols) == [], t
+        tb = idx._read_token_blocks(t)
+        assert tb.n_blocks == 0 and all(len(a) == 0 for a in tb.full()), t
+        assert [len(a) for a in idx.token_position_arrays(t)] == [0, 0], t
+
+
+def test_single_group_token_reads_are_views(index_paths, cfg):
+    """A token held by one row group is read without copying: its
+    ``_TokenBlocks`` arrays, and the arrays ``full()`` returns, share
+    memory with the group's decoded columns."""
+    from addok_spark.serving.local import ParquetIndex
+
+    idx = ParquetIndex(index_paths, cfg)
+    single = [t for t in sorted(idx.df)
+              if not t.startswith("f|") and len(idx._token_rows(t, [])) == 1]
+    assert len(single) > 100
+    multi_block = 0
+    for t in single:
+        tb = idx._token_blocks(t)
+        (grp, _, _), = idx._token_rows(t, [])
+        for arr, col in ((tb.n, "n"), (tb.ub, "max_boost"),
+                         (tb.mind, "min_doc"), (tb.maxd, "max_doc"),
+                         (tb._docs, "docs"), (tb._tfs, "tfs"),
+                         (tb._boosts, "boosts")):
+            assert np.shares_memory(arr, grp.cols[col]), (t, col)
+        docs, tfs, boosts = tb.full()
+        assert np.all(docs[1:] > docs[:-1]), t
+        for arr, col in ((docs, "docs"), (tfs, "tfs"), (boosts, "boosts")):
+            assert np.shares_memory(arr, grp.cols[col]), (t, col)
+        multi_block += tb.n_blocks > 1
+    assert multi_block > 0
+
+
+def test_token_over_several_files_reads_in_file_order(spark, tmp_path):
+    """After a CDC batch a token's postings sit in several pbucket
+    files. A token read concatenates them in file order — the order of
+    the snapshot's blocks files — and ``full()`` hands them back
+    doc-sorted, with each doc's tf and boost."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from addok_spark.index.build import table_files
+    from addok_spark.index.incremental import apply_actions
+    from addok_spark.serving.local import ParquetIndex
+
+    cfg = EngineConfig(
+        build_partitions=4,
+        doc_bucket_bits=2,
+        pbucket_shift=1,   # 8 docs per pbucket: many files
+        posting_block_size=4,
+        common_threshold=1000,
+    )
+    schema = ("conv_id string, turn_idx int, role string, text string,"
+              " tool string, importance double")
+    rows = [(f"conv-{i:03d}", 0, "user", f"alpha tok{i:03d} omega", None,
+             0.1 + i / 100) for i in range(32)]
+    paths = build_index(spark, spark.createDataFrame(rows, schema), cfg,
+                        str(tmp_path / "files"))
+    new_rows = [(f"conv-{i:03d}", 0, "user", f"beta new{i:03d} omega", None,
+                 0.3, "index") for i in range(32, 48)]
+    new_rows.append(("conv-000", 0, "user", "alpha zeta omega", None, 0.9,
+                     "index"))
+    apply_actions(spark, paths,
+                  spark.createDataFrame(new_rows, schema + ", _action string"),
+                  cfg)
+    idx = ParquetIndex(paths.root, cfg)
+    files = [str(f) for f in table_files(idx.paths, "blocks")]
+    for tok in ("omega", "alpha"):
+        per_file = []
+        for f in files:
+            tbl = pq.read_table(f, columns=["token", "docs", "tfs", "boosts"])
+            tbl = tbl.filter(pc.field("token") == tok)
+            if tbl.num_rows:
+                per_file.append({c: [x for v in tbl.column(c).to_pylist()
+                                     for x in v]
+                                 for c in ("docs", "tfs", "boosts")})
+        assert len(per_file) > 2, tok
+        want = {c: [x for part in per_file for x in part[c]]
+                for c in ("docs", "tfs", "boosts")}
+        tb = idx._token_blocks(tok)
+        assert tb._docs.tolist() == want["docs"], tok
+        assert tb._tfs.tolist() == want["tfs"], tok
+        assert tb._boosts.tolist() == want["boosts"], tok
+        docs, tfs, boosts = tb.full()
+        order = np.argsort(want["docs"], kind="stable")
+        assert docs.tolist() == sorted(want["docs"]), tok
+        assert tfs.tolist() == np.array(want["tfs"])[order].tolist(), tok
+        assert boosts.tolist() == np.array(
+            want["boosts"], dtype=np.float32)[order].tolist(), tok
+    # the rewritten pbucket's file comes after the others: file order is
+    # not doc order, so full() really restores the sort
+    omega = idx._token_blocks("omega")._docs
+    assert not np.all(omega[1:] > omega[:-1])
 
 
 def test_unsorted_blocks_row_group_raises(index_paths, cfg, tmp_path):
@@ -803,7 +932,7 @@ def test_doc_store_matches_pandas_rows_after_cdc(spark, tmp_path):
     """The columnar doc store answers ``doc(d)`` with exactly the row
     a pandas ``.loc[d].to_dict()`` over the same pbucket partition
     gives (keys, values and Python types: ``pd.Timestamp`` ts, ``None``
-    tool, ``int`` ints), and ``folded_text`` / ``doc_values`` agree
+    tool, ``int`` ints), and ``folded_texts`` / ``doc_values`` agree
     with it (the ``dl`` column included: the length norm reads it).
     The CDC batch leaves a touched pbucket in several files, so the
     store's own sort by doc_index is what orders it."""
@@ -870,7 +999,9 @@ def test_doc_store_matches_pandas_rows_after_cdc(spark, tmp_path):
         for d in docs:
             want = frame.loc[d].to_dict()
             _assert_same_row(idx.doc(d), want, int(d))
-            assert idx.folded_text(d) == fold_str(want["text"] or "")
+        assert idx.folded_texts(docs[::-1]) == [
+            fold_str(frame.loc[d].to_dict()["text"] or "") for d in docs[::-1]
+        ]
     # across pbuckets, in any order: one value per doc, input order
     mixed = np.concatenate([f.index.to_numpy()[:2] for f in frames.values()])
     np.random.default_rng(0).shuffle(mixed)

@@ -22,29 +22,41 @@ def cfg():
     )
 
 
-def test_resume_after_partial_failure(spark, cfg, tmp_path):
+def test_resume_after_partial_failure(spark, cfg, tmp_path, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameWriter
+
     out = str(tmp_path / "idx")
     corpus = transcripts_df(spark, 15, seed=42)
-    paths = build_index(spark, corpus, cfg, out)
+    # the reference: an uninterrupted build of the same corpus
+    full = build_index(spark, corpus, cfg, str(tmp_path / "full"))
+    full_stages = json.loads(full.manifest.read_text())["stages"]
 
-    # simulate a crash after the 'analyzed' stage: later stages lost
-    manifest = json.loads(paths.manifest.read_text())
-    full_stages = dict(manifest["stages"])
-    for stage, d in (
-        ("blocks", paths.blocks),
-        ("dictionary", paths.dictionary),
-    ):
-        manifest["stages"].pop(stage, None)
-        shutil.rmtree(d, ignore_errors=True)
-    paths.manifest.write_text(json.dumps(manifest))
+    # a crash after the 'analyzed' and 'docs' stages: the blocks write
+    # raises, so the later stages are lost (a finished build deletes
+    # its analyzed scratch table, so only a real crash leaves one)
+    real = DataFrameWriter.parquet
+
+    def crashing(self, path, *a, **kw):
+        if Path(path).name == "blocks":
+            raise OSError(f"injected crash writing {path}")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+    with pytest.raises(OSError, match="injected crash"):
+        build_index(spark, corpus, cfg, out)
+    monkeypatch.undo()
+    crashed = json.loads((Path(out) / full.manifest.name).read_text())["stages"]
+    assert "blocks" not in crashed and "dictionary" not in crashed
 
     # resume: completes ONLY the missing stages (analyzed/docs kept)
-    build_index(spark, corpus, cfg, out, resume=True)
+    paths = build_index(spark, corpus, cfg, out, resume=True)
     m2 = json.loads(paths.manifest.read_text())["stages"]
-    assert m2["analyzed"] == full_stages["analyzed"]  # untouched
-    assert m2["docs"] == full_stages["docs"]
+    assert m2["analyzed"] == crashed["analyzed"]  # untouched
+    assert m2["docs"] == crashed["docs"]
+    assert m2["docs"]["rows"] == full_stages["docs"]["rows"]
     assert m2["blocks"]["rows"] == full_stages["blocks"]["rows"]
     assert m2["dictionary"]["rows"] == full_stages["dictionary"]["rows"]
+    assert not (Path(out) / "_analyzed").exists()
 
     # the resumed index answers queries (autocomplete included)
     # rank-identically to the oracle
