@@ -298,42 +298,60 @@ def levenshtein(a: str, b: str) -> int:
     return int(prev[-1])
 
 
+def _codepoints(s: str):
+    """Code points of ``s`` as uint32, lone surrogates included (the
+    values ``ord`` gives)."""
+    return np.frombuffer(s.encode("utf-32-le", "surrogatepass"), np.uint32)
+
+
 def levenshtein_batch(a: str, labels: list[str]) -> list[int]:
     """Edit distance of ONE query against MANY labels in a single
     vectorized DP over a padded (n_labels × max_len) matrix — exact
-    same integers as ``levenshtein`` (tested), ~10× less numpy call
-    overhead than n separate calls. Padding beyond a label's length
-    is harmless: DP column j depends only on columns ≤ j, and each
-    label's answer is read at its own length column."""
-    import numpy as np
+    same integers as ``levenshtein`` (tested). Padding beyond a
+    label's length is harmless: DP column j depends only on columns
+    ≤ j, and each label's answer is read at its own length column.
 
+    The rows run in D-space, ``D[j] = cur[j] - j``: the row recurrence
+    ``cur[j] = min(prev[j-1] + neq, prev[j] + 1, cur[j-1] + 1)``
+    becomes ``D[j] = min(Dp[j-1] + neq - 1, Dp[j] + 1, D[j-1])``, so a
+    row is one elementwise minimum and one ``minimum.accumulate``. The
+    ``neq - 1`` masks of the query's distinct characters are built
+    once per call."""
     if not labels:
         return []
     la = len(a)
-    lens = [len(b) for b in labels]
-    L = max(lens)
+    lens = np.array([len(b) for b in labels], dtype=np.int64)
+    L = int(lens.max())
     if la == 0:
-        return lens
+        return lens.tolist()
     if L == 0:
         return [la] * len(labels)
-    B = np.zeros((len(labels), L), dtype=np.int64)
-    B -= 1  # pad value no codepoint matches
-    for r, b in enumerate(labels):
-        if b:
-            B[r, : len(b)] = np.fromiter(
-                (ord(c) for c in b), dtype=np.int64, count=len(b)
-            )
-    idx = np.arange(L + 1, dtype=np.int64)
-    prev = np.tile(idx, (len(labels), 1))
-    c = np.empty_like(prev)
-    for i, ca in enumerate(a, 1):
+    n = len(labels)
+    # label code points scattered into rows, padded with a value no
+    # code point has
+    B = np.full((n, L), 0xFFFFFFFF, dtype=np.uint32)
+    rows = np.repeat(np.arange(n), lens)
+    starts = np.cumsum(lens) - lens
+    B[rows, np.arange(len(rows)) - np.repeat(starts, lens)] = _codepoints(
+        "".join(labels)
+    )
+    chars, of = np.unique(_codepoints(a), return_inverse=True)
+    neq = []
+    for ch in chars.tolist():
+        m = (B != ch).view(np.int8)
+        m -= 1
+        neq.append(m)
+    D = np.zeros((n, L + 1), dtype=np.int32)
+    c = np.empty_like(D)
+    tmp = np.empty((n, L), dtype=np.int32)
+    for i, ci in enumerate(of.tolist(), 1):
+        np.add(D[:, :-1], neq[ci], out=c[:, 1:])
+        np.add(D[:, 1:], 1, out=tmp)
+        np.minimum(c[:, 1:], tmp, out=c[:, 1:])
         c[:, 0] = i
-        np.minimum(prev[:, :-1] + (B != ord(ca)), prev[:, 1:] + 1, out=c[:, 1:])
-        np.subtract(c, idx, out=c)
         np.minimum.accumulate(c, axis=1, out=c)
-        np.add(c, idx, out=c)
-        prev, c = c, prev
-    return [int(prev[r, lens[r]]) for r in range(len(labels))]
+        D, c = c, D
+    return (D[np.arange(n), lens] + lens).tolist()
 
 
 def compare_ngrams(a: str, b: str, n: int = 2) -> float:

@@ -52,7 +52,7 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1310,12 +1310,21 @@ class IndexBuilder:
 
     def _write(self, df: DataFrame, path: str, name: str, sort_by=None,
                partition_keys: int | None = None, partition_by: str | None = None,
-               count_rows: bool = True, options: dict | None = None) -> None:
+               count_rows: bool = True, options: dict | None = None,
+               observe: dict[str, Column] | None = None) -> None:
+        """Write one stage table and mark the stage done. ``observe``
+        maps names to aggregates collected by the write job itself
+        (``DataFrame.observe``: no second scan); their values go into
+        the stage's manifest entry under those names."""
         t0 = time.time()
         if sort_by:
             df = df.repartitionByRange(
                 partition_keys or self.cfg.build_partitions, *sort_by
             ).sortWithinPartitions(*sort_by)
+        obs = None
+        if observe:
+            obs = Observation()
+            df = df.observe(obs, *(c.alias(k) for k, c in observe.items()))
         writer = df.write.mode("overwrite").options(**(options or {}))
         if partition_by:
             # directory-partitioned layout → incremental maintenance
@@ -1332,7 +1341,8 @@ class IndexBuilder:
             json.dumps({"rows": rows, "seconds": round(dur, 3)})
         )
         self.metrics["stages"][name] = {"rows": rows, "seconds": round(dur, 3)}
-        self._mark_stage(name, rows=rows, seconds=round(dur, 3))
+        self._mark_stage(name, rows=rows, seconds=round(dur, 3),
+                         **(obs.get if obs is not None else {}))
 
     # --- the build ---------------------------------------------------------
     def build(self, transcripts: DataFrame, resume: bool = True) -> IndexPaths:
@@ -1379,9 +1389,11 @@ class IndexBuilder:
             )
             # analyzed is already globally doc_index-ordered (range
             # layout from assign_doc_ids) — no re-shuffle needed
+            # Σdl (avgdl's numerator) is collected by the write itself
             self._write(
                 docs_out.sortWithinPartitions("doc_index"),
                 self.paths.docs, "docs", partition_by="pbucket",
+                observe={"sum_dl": F.coalesce(F.sum("dl"), F.lit(0))},
             )
 
         # stage 3: posting blocks — Spark's own list functions over
@@ -1428,11 +1440,18 @@ class IndexBuilder:
             )
 
         if not (resume and self._stage_done("docs_meta")):
-            docs_now = spark.read.parquet(self.paths.docs)
-            n_docs = self._manifest()["stages"].get("docs", {}).get("rows", -1)
+            # n_docs and Σdl come from the docs stage's manifest entry;
+            # a manifest written without them (an older build resumed)
+            # falls back to scanning the docs table
+            docs_stage = self._manifest()["stages"].get("docs", {})
+            n_docs = docs_stage.get("rows", -1)
+            sum_dl = docs_stage.get("sum_dl", -1)
+            if n_docs < 0 or sum_dl < 0:
+                docs_now = spark.read.parquet(self.paths.docs)
             if n_docs < 0:
                 n_docs = docs_now.count()
-            sum_dl = docs_now.agg(F.sum("dl")).collect()[0][0] or 0
+            if sum_dl < 0:
+                sum_dl = docs_now.agg(F.sum("dl")).collect()[0][0] or 0
             meta = {
                 "n_docs": int(n_docs),
                 "sum_dl": int(sum_dl),

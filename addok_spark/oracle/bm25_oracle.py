@@ -6,7 +6,8 @@ and the same weight formula (``addok/helpers/index.py:30-37``).
 ``SpecSearch`` is the search flow itself: planning, collection
 rounds, relaxation, cream, relation round and BM25 scoring with
 deterministic tie-breaks. The serving tier (``serving/local.py``)
-runs it over the parquet index, and the Spark ``SearchEngine``
+runs it over the parquet index, with array twins of its collection,
+phrase and scoring kernels, and the Spark ``SearchEngine``
 (``query/engine.py``) runs the serving tier in tasks, so rank identity
 (north_rule) against the corpus-built oracle is checkable with
 ``python -m pytest -x -q`` (bucket semantics ≙
@@ -85,8 +86,9 @@ class ExpansionMixin:
       (serving's ``FastSearch`` kernel reads ``ParquetIndex``'s
       posting arrays instead of the dict views);
     - documents: ``doc_values`` (one gather per field over a doc
-      array) and ``folded_labels`` (built on ``folded_texts``, one
-      ``text`` gather over a doc array).
+      array), ``doc_array`` (the same as numpy), ``doc_fields``
+      (several fields of the same docs) and ``folded_labels`` (built
+      on ``folded_texts``, one ``text`` gather over a doc array).
 
     ``doc(d)`` (one full row) is for the shell; the flow never calls
     it."""
@@ -118,6 +120,25 @@ class ExpansionMixin:
         if default is REQUIRED:
             return [self.doc(int(d))[name] for d in docs]
         return [self.doc(int(d)).get(name, default) for d in docs]
+
+    def doc_array(self, name: str, docs, default=REQUIRED) -> np.ndarray:
+        """``doc_values`` as one numpy array: numbers in the dtype numpy
+        gives them, any other values (``None`` among them) as an object
+        array. The serving tier gathers it per pbucket without a list."""
+        vals = self.doc_values(name, docs, default)
+        arr = np.array(vals) if vals else np.empty(0)
+        if arr.ndim != 1 or arr.dtype.kind not in "biuf":
+            arr = np.fromiter(vals, dtype=object, count=len(vals))
+        return arr
+
+    def doc_fields(self, fields, docs) -> dict[str, list]:
+        """Several fields of many docs: ``doc_values(name, docs,
+        default)`` for each ``(name, default)`` of ``fields``. The
+        serving tier locates the docs once for all the fields."""
+        return {
+            name: self.doc_values(name, docs, default)
+            for name, default in fields
+        }
 
     def folded_texts(self, docs) -> list[str]:
         """Folded text of each doc, in ``docs`` order, for cream /
@@ -383,11 +404,14 @@ class SpecSearch:
     """Per-query search flow over an OracleIndex-shaped index object:
     planning, collection rounds, relaxation, relation extrapolation,
     cream early-termination, scoring.  The serving tier
-    (serving/local.py) subclasses this and overrides only the hot
-    ``run_gids`` collection kernel with a numpy-vectorized version;
-    every other line of the flow is shared, so serving, the Spark
-    engine that runs it in tasks and this oracle cannot drift in
-    semantics."""
+    (serving/local.py) subclasses this and overrides three kernels
+    with numpy twins: ``run_gids`` (collection), ``phrase_candidates``
+    (phrase matches) and ``_score_rank`` (BM25 fold, tie-break and
+    render, returning typed columns that ``frame`` turns into the
+    same frame). Planning, rounds, relaxation, cream and cliques are
+    shared, and the loops kept here are the oracle the twins are
+    tested bit-equal against, so serving, the Spark engine that runs
+    it in tasks and this oracle cannot drift in semantics."""
 
     def __init__(self, index, cfg: EngineConfig):
         self.index = index
@@ -480,10 +504,10 @@ class SpecSearch:
         ordered = sorted(matched.items(), key=lambda kv: (-kv[1], kv[0]))
         return [d for d, _ in ordered[:bucket_limit]]
 
-    def _one(self, q) -> list[dict]:
-        """The ranked result records of one query (each with its
-        ``rank``), best first; ``result_frame`` turns the records of a
-        whole call into one frame."""
+    def _one(self, q):
+        """The ranked answer of one query, from ``_score_rank`` (here
+        records, each with its ``rank``, best first); ``frame`` turns
+        the answers of a whole call into one frame."""
         index, cfg = self.index, self.cfg
         is_phrase = bool(getattr(q, "phrase", False))
         seq = analyze_str(q.q, cfg.synonyms, cfg.processors)  # ordered, duplicates kept
@@ -544,10 +568,11 @@ class SpecSearch:
         # EXPLAIN's view of this query; the filter groups and the
         # candidates below fill the same dicts and set
         self.last_plan = QueryPlan(groups, group_dfs, order, candidates)
+        qf = fold_str(q.q)
 
         # no usable word tokens -> abort guard (collectors.py:10-17)
         if not groups:
-            return []
+            return self._score_rank(q, qf, groups, filters, candidates)
         filter_gids: list[int] = []
         for gid, _, _, keys in filters:
             groups[gid] = keys
@@ -555,7 +580,6 @@ class SpecSearch:
             filter_gids.append(gid)
 
         done = False
-        qf = fold_str(q.q)
         # per-query bucket limit = max(k, BUCKET_MAX) (reference
         # core.py:339 / issue #422)
         bucket_limit = max(cfg.bucket_max, int(getattr(q, "k", 0) or 0))
@@ -677,7 +701,23 @@ class SpecSearch:
                 room = max(0, bucket_limit - len(candidates))
                 candidates.update(ordered[:room])
 
-        # --- scoring over FULL group set (same expression tree) ----------
+        return self._score_rank(q, qf, groups, filters, candidates)
+
+    def _score_rank(
+        self,
+        q,
+        qf: str,
+        groups: dict[int, list[str]],
+        filters: list[tuple],
+        candidates: set[int],
+    ) -> list[dict]:
+        """Scoring over the FULL group set, tie-break and render: the
+        ranked records of one query, best first, each with its
+        ``rank``. ``qf`` is the folded query; ``filters`` are the
+        query's ``(gid, column, values, keys)``. The serving tier
+        overrides this with an array twin (``FastSearch``) that
+        returns the same rows as typed columns."""
+        index, cfg = self.index, self.cfg
         k1, b = BM25_K1, BM25_B
         n_docs, avgdl = index.n_docs, index.avgdl
         recs = []
@@ -816,8 +856,12 @@ class SpecSearch:
             rec["rank"] = i + 1
         return top
 
+    def frame(self, ranked: list) -> pd.DataFrame:
+        """One result frame of the ``_one`` answers of a call."""
+        return result_frame([r for recs in ranked for r in recs])
+
     def search(self, queries: list) -> pd.DataFrame:
-        return result_frame([r for q in queries for r in self._one(q)])
+        return self.frame([self._one(q) for q in queries])
 
 
 def result_frame(records: list[dict]) -> pd.DataFrame:

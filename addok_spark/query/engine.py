@@ -4,12 +4,13 @@
 turns it into a small query DataFrame and ``mapInPandas``-es each
 partition through a ``LocalSearchEngine`` (``serving/local.py``) over
 the engine's pinned snapshot. Spark spreads whole Arrow batches of
-queries over executors; each executor answers its slice with the
-vectorized ``FastSearch`` kernel, which inherits every line of the
-relaxation flow — plan, collection rounds, token drop, cream, relation
-round, scoring — from the oracle's ``SpecSearch``
-(``oracle/bm25_oracle.py``). Spark, serving and oracle answers
-therefore come from one piece of code.
+queries over executors; each executor answers its slice with
+``FastSearch``, which inherits the relaxation flow — plan, collection
+rounds, token drop, cream, relation round — from the oracle's
+``SpecSearch`` (``oracle/bm25_oracle.py``) and overrides its
+collection, phrase and scoring kernels with numpy twins tested
+bit-equal to the spec loops. Spark, serving and oracle answers
+therefore come from one flow.
 
 Reference mapping of that flow: collection ≙ the RESULTS_COLLECTORS
 chain (``addok/helpers/collectors.py``, fuzzy ``addok/fuzzy.py:59-114``,

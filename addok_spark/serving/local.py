@@ -32,10 +32,11 @@ from those artifacts with pruned columnar reads:
   pruning on ``pbucket``) the first time one of its docs becomes a
   candidate, and kept columnar: the partition's Arrow table sorted by
   ``doc_index``. The search flow reads them only by column: the
-  scoring fold gathers importance, length and the filter fields for
-  the whole candidate array, and the top-k render the returned
-  fields for the ≤k records, each with one ``searchsorted`` +
-  ``take``; no row dict is built on the query path;
+  scoring fold gathers the filter fields, then importance and length
+  as numpy arrays, for the candidate array, and the top-k render
+  gathers the returned fields of the ≤k rows through one
+  ``searchsorted`` per pbucket store; no row dict is built on the
+  query path;
 - **autocomplete prefixes** come from the in-RAM dictionary: its
   tokens, sorted once on first use, hold every prefix's candidates
   as one contiguous range (``bisect``), memoized per prefix;
@@ -57,20 +58,25 @@ snapshot; within a query, ``prefetch_tokens`` reads the cold tokens'
 blocks concurrently on one thread pool per process.
 
 Rank identity is by construction, not by re-implementation: planning,
-rounds, relaxation, cream, and scoring run through the *same*
-``SpecSearch`` flow (``oracle/bm25_oracle.py``) as the oracle, and the
-Spark ``SearchEngine`` (``query/engine.py``) runs this module's
+rounds, relaxation and cream run through the *same* ``SpecSearch``
+flow (``oracle/bm25_oracle.py``) as the oracle, and the Spark
+``SearchEngine`` (``query/engine.py``) runs this module's
 ``LocalSearchEngine`` in ``mapInPandas`` tasks. This module only (a)
 swaps the data access layer from "rebuilt from corpus" to "read from
-the index parquet" and (b) overrides the one hot kernel (``run_gids``) with a
-numpy-vectorized version whose float64 accumulation order matches the
-spec exactly (tested bit-equal in tests/test_local_serving.py).
+the index parquet" and (b) overrides three hot kernels with numpy
+twins whose float64 operation order matches the spec exactly:
+collection (``run_gids``), phrase candidates, and the scoring fold
+with its tie-break and render (``_score_rank``), whose typed columns
+become the call's one frame (``ranked_frame``). Each twin is tested
+bit-equal to the spec loop it replaces (tests/test_local_serving.py,
+tests/test_score_rank.py).
 """
 
 from __future__ import annotations
 
 import bisect
 import json
+import math
 import os
 import re
 import threading
@@ -83,7 +89,12 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from ..config import EngineConfig
+from ..config import BM25_B, BM25_K1, EngineConfig
+from ..functions.text import (
+    ref_fold_score,
+    ref_string_score_best,
+    str_distance_keys_multi,
+)
 from ..index.build import (
     IndexPaths,
     _one_chunk,
@@ -92,12 +103,14 @@ from ..index.build import (
     table_files,
 )
 from ..oracle.bm25_oracle import (
+    _RENDER_FIELDS,
+    _RESULT_COLUMNS,
     REQUIRED,
     ExpansionMixin,
     SpecSearch,
     result_frame,
 )
-from ..query.engine import Query
+from ..query.engine import FILTER_GID_BASE, Query
 
 _EMPTY = (
     np.empty(0, dtype=np.int64),
@@ -439,6 +452,11 @@ def _native(v):
     return v.item() if isinstance(v, np.generic) else v
 
 
+# up to this many rows, boxing Arrow values one by one costs less than
+# a ``take`` kernel call (the top-k render reads ≤ k rows per field)
+_SCALAR_READS = 16
+
+
 class _DocStore:
     """One pbucket's docs, columnar: the partition's Arrow table
     sorted by ``doc_index`` (after CDC a partition can hold several
@@ -500,27 +518,54 @@ class _DocStore:
     def values(self, name: str, pos: np.ndarray) -> list:
         arrow, vals = self._column(name)
         if arrow:
+            if len(pos) <= _SCALAR_READS:
+                return [vals[i].as_py() for i in pos.tolist()]
             return vals.take(pos).to_pylist()
         if isinstance(vals, np.ndarray):
             return vals[pos].tolist()
         return [_native(vals[i]) for i in pos.tolist()]
 
+    def array(self, name: str, pos: np.ndarray) -> np.ndarray:
+        """``values`` as numpy: a numpy-backed column's own gather,
+        anything else the boxed values in an object array."""
+        arrow, vals = self._column(name)
+        if not arrow and isinstance(vals, np.ndarray):
+            return vals[pos]
+        return np.fromiter(self.values(name, pos), dtype=object, count=len(pos))
+
     def row(self, i: int) -> dict:
         return {name: self.value(name, i) for name in self.table.column_names}
 
 
-def _stitch(keys: np.ndarray, fetch) -> list:
-    """Values for every position of ``keys``, in input order, from one
-    ``fetch(key, sel)`` call per distinct key (``sel`` = the positions
-    holding it; a slice when there is only one key)."""
+def _stitch(keys: np.ndarray, fetch, width: int) -> list[list]:
+    """``width`` columns of values for every position of ``keys``, in
+    input order, from one ``fetch(key, sel)`` call per distinct key
+    (``sel`` = the positions holding it; a slice when there is only
+    one key), which returns the key's ``width`` columns."""
     uniq = np.unique(keys)
     if len(uniq) <= 1:
-        return fetch(int(uniq[0]), slice(None)) if len(uniq) else []
-    out = [None] * len(keys)
+        return fetch(int(uniq[0]), slice(None)) if len(uniq) else [[]] * width
+    outs = [[None] * len(keys) for _ in range(width)]
     for key in uniq.tolist():
         sel = np.flatnonzero(keys == key)
-        for i, v in zip(sel.tolist(), fetch(key, sel)):
-            out[i] = v
+        at = sel.tolist()
+        for out, vals in zip(outs, fetch(key, sel)):
+            for i, v in zip(at, vals):
+                out[i] = v
+    return outs
+
+
+def _stitch_array(keys: np.ndarray, fetch) -> np.ndarray:
+    """``_stitch`` for a ``fetch`` that returns numpy arrays: one
+    array in input order, in the dtype the parts promote to."""
+    uniq = np.unique(keys)
+    if len(uniq) <= 1:
+        return fetch(int(uniq[0]), slice(None)) if len(uniq) else np.empty(0)
+    sels = [np.flatnonzero(keys == key) for key in uniq.tolist()]
+    parts = [fetch(key, sel) for key, sel in zip(uniq.tolist(), sels)]
+    out = np.empty(len(keys), dtype=np.result_type(*parts))
+    for sel, part in zip(sels, parts):
+        out[sel] = part
     return out
 
 
@@ -918,25 +963,54 @@ class ParquetIndex(ExpansionMixin):
         """Full row of one doc as a plain dict: the same keys, values
         and Python types as the pandas row ``.loc[d].to_dict()`` of
         its pbucket partition. Uncached, for the shell: the search
-        flow reads docs only through ``doc_values`` and
-        ``folded_texts``, which never build a row."""
+        flow reads docs only through ``doc_fields`` (``doc_values``),
+        ``doc_array`` and ``folded_texts``, which never build a row."""
         store, i = self._locate(int(d))
         return store.row(i)
 
     def doc_values(self, name: str, docs, default=REQUIRED) -> list:
-        """One field of many docs (see ExpansionMixin.doc_values):
-        one ``searchsorted`` + ``take`` per pbucket store."""
+        """One field of many docs (see ExpansionMixin.doc_values)."""
+        return self.doc_fields([(name, default)], docs)[name]
+
+    def doc_array(self, name: str, docs, default=REQUIRED) -> np.ndarray:
+        """One field of many docs as numpy (see
+        ExpansionMixin.doc_array): each pbucket column's own gather, no
+        list in between."""
         docs = np.asarray(docs, dtype=np.int64)
         if len(docs) and name not in self._doc_columns:
             if default is REQUIRED:
                 raise KeyError(name)
-            return [default] * len(docs)
+            return ExpansionMixin.doc_array(self, name, docs, default)
 
         def fetch(pbucket, sel):
             store = self._doc_store(pbucket)
-            return store.values(name, store.positions(docs[sel]))
+            return store.array(name, store.positions(docs[sel]))
 
-        return _stitch(docs >> self._doc_shift, fetch)
+        return _stitch_array(docs >> self._doc_shift, fetch)
+
+    def doc_fields(self, fields, docs) -> dict[str, list]:
+        """Several fields of many docs (see ExpansionMixin.doc_fields):
+        per pbucket store, one ``positions`` lookup serves every field,
+        each then one gather."""
+        docs = np.asarray(docs, dtype=np.int64)
+        out: dict[str, list] = {}
+        present = []
+        for name, default in fields:
+            if len(docs) and name not in self._doc_columns:
+                if default is REQUIRED:
+                    raise KeyError(name)
+                out[name] = [default] * len(docs)
+            else:
+                present.append(name)
+
+        def fetch(pbucket, sel):
+            store = self._doc_store(pbucket)
+            pos = store.positions(docs[sel])
+            return [store.values(name, pos) for name in present]
+
+        cols = _stitch(docs >> self._doc_shift, fetch, len(present))
+        out.update(zip(present, cols))
+        return {name: out[name] for name, _ in fields}
 
     def get_doc(self, conv_id: str, turn_idx: int):
         """Direct lookup by natural key (≙ Result.from_id,
@@ -1007,13 +1081,87 @@ class ParquetIndex(ExpansionMixin):
         )
 
 
+# the result frame's columns, in order
+_FRAME_COLUMNS = _RESULT_COLUMNS + ["rank"]
+
+
+class Ranked:
+    """One query's ranked top-k as typed columns, in ``_FRAME_COLUMNS``
+    order: ``doc_index``, ``turn_idx`` and ``rank`` int64, the four
+    score columns float64, ``qid`` and the other rendered doc fields
+    object arrays."""
+
+    __slots__ = ("columns",)
+
+    def __init__(self, columns: list[np.ndarray]):
+        self.columns = columns
+
+    def __len__(self) -> int:
+        return len(self.columns[0])
+
+
+_NO_ROWS = Ranked([np.empty(0)] * len(_FRAME_COLUMNS))
+
+
+def ranked_frame(ranked: list[Ranked]) -> pd.DataFrame:
+    """One result frame of the typed columns of a call's queries, equal
+    under ``check_exact`` to ``result_frame`` of the same rows as
+    records. Numeric columns keep their arrays and a column of ``str``
+    and ``None`` goes in as its object array; a column holding any
+    other value goes in as a list, so pandas infers its dtype as it
+    does for records. No rows: ``result_frame([])`` itself."""
+    parts = [r.columns for r in ranked if len(r)]
+    if not parts:
+        return result_frame([])
+    data = {}
+    for j, name in enumerate(_FRAME_COLUMNS):
+        col = parts[0][j] if len(parts) == 1 else np.concatenate(
+            [p[j] for p in parts]
+        )
+        if col.dtype == object and not all(
+            v is None or isinstance(v, str) for v in col.tolist()
+        ):
+            col = col.tolist()
+        data[name] = col
+    return pd.DataFrame(data, copy=False)
+
+
+def _objects(vals) -> np.ndarray:
+    return np.fromiter(vals, dtype=object, count=len(vals))
+
+
+def _importance(arr: np.ndarray) -> np.ndarray:
+    """The spec fold's ``float(v or 0.0)`` of gathered importances:
+    ``None`` (and ``-0.0``) read as 0.0, NaN stays NaN."""
+    if arr.dtype.kind not in "biuf":
+        return np.fromiter(
+            (float(v or 0.0) for v in arr.tolist()), np.float64, len(arr)
+        )
+    out = arr.astype(np.float64)
+    out[out == 0.0] = 0.0
+    return out
+
+
+def _filter_mask(vals: list, vs: set) -> np.ndarray:
+    """The spec's filter-field test per doc: a value (a list-valued
+    field: any element) that, stripped, is one of ``vs``."""
+    def ok(dv):
+        els = dv if isinstance(dv, (list, tuple, np.ndarray)) else [dv]
+        return any(el is not None and str(el).strip() in vs for el in els)
+
+    return np.fromiter((ok(dv) for dv in vals), bool, len(vals))
+
+
 class FastSearch(SpecSearch):
-    """SpecSearch with the collection kernel vectorized: per-group
-    max-boost posting arrays, k-way sorted-set intersection (smallest
-    group first), float64 pre-score accumulation in the spec's sorted-
-    gid order, lexsort top-``bucket_limit`` with the identical
-    (-score, doc) tie-break.  Everything outside this kernel — rounds,
-    relaxation, cream, cliques, scoring — is inherited from the spec."""
+    """SpecSearch with its three hot kernels as numpy twins: the
+    collection kernel (per-group max-boost posting arrays, k-way
+    sorted-set intersection smallest group first, float64 pre-score
+    accumulation in the spec's sorted-gid order, lexsort
+    top-``bucket_limit`` with the identical (-score, doc) tie-break),
+    the phrase candidates, and the scoring fold with its tie-break and
+    render (``_score_rank``: one column operation per scoring token,
+    returning typed columns). Planning, rounds, relaxation, cream and
+    cliques are inherited from the spec."""
 
     def __init__(self, index, cfg: EngineConfig):
         super().__init__(index, cfg)
@@ -1232,6 +1380,118 @@ class FastSearch(SpecSearch):
         top = np.lexsort((common, -pre))[:bucket_limit]
         return [int(d) for d in common[top]]
 
+    def _score_rank(self, q, qf, groups, filters, candidates) -> Ranked:
+        """Array twin of the spec's scoring fold, tie-break and render:
+        the same rows with bit-equal floats, as typed columns. Per
+        scoring group, in ascending gid order: ``tf`` sums the tokens'
+        ``tf_boost_many`` columns, ``dfm`` is the least ``df`` and the
+        group boost the greatest boost over the tokens that hit (a
+        later token replaces it only when strictly greater, as
+        Python's ``max`` does), ``idf`` comes from ``math.log`` once per
+        distinct ``dfm``, and every float operation keeps the spec's
+        operand order, applied only where the group's tf is nonzero."""
+        index, cfg = self.index, self.cfg
+        cand = np.fromiter(candidates, np.int64, len(candidates))
+        cand.sort()
+        for _, col, vs, _ in filters:
+            if not len(cand):
+                break
+            cand = cand[_filter_mask(index.doc_values(col, cand), set(vs))]
+        n = len(cand)
+        if not n:
+            return _NO_ROWS
+        k1, b = BM25_K1, BM25_B
+        n_docs, avgdl = float(index.n_docs), index.avgdl
+        dl = index.doc_array("dl", cand).astype(np.float64)
+        score = np.zeros(n)
+        boost = np.zeros(n)
+        matched = np.zeros(n, dtype=bool)
+        for gid in sorted(groups):
+            if gid >= FILTER_GID_BASE:
+                continue  # filter groups never score
+            tf = dfm = gboost = has = None
+            for tok in groups[gid]:
+                g_tf, g_b = index.tf_boost_many(tok, cand)
+                hit = g_tf != 0
+                if tf is None:
+                    tf = g_tf.astype(np.int64)
+                    dfm = np.full(n, np.iinfo(np.int64).max)
+                    gboost, has = np.zeros(n), np.zeros(n, dtype=bool)
+                else:
+                    tf = tf + g_tf
+                if not hit.any():
+                    continue
+                np.minimum(dfm, np.where(hit, index.df[tok], dfm), out=dfm)
+                take = hit & (~has | (g_b > gboost))
+                gboost = np.where(take, g_b, gboost)
+                has |= hit
+            if tf is None:
+                continue
+            rows = np.flatnonzero(tf)
+            if not len(rows):
+                continue
+            matched[rows] = True
+            uniq, inv = np.unique(dfm[rows], return_inverse=True)
+            idf = np.array([
+                math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
+                for d in uniq.tolist()
+            ])[inv]
+            t = tf[rows].astype(np.float64)
+            tfn = t * (k1 + 1.0) / (t + k1 * ((1.0 - b) + b * dl[rows] / avgdl))
+            score[rows] += idf * tfn
+            boost[rows] += gboost[rows]
+        keep = np.flatnonzero(matched)
+        if not len(keep):
+            return _NO_ROWS
+        cand, score, boost = cand[keep], score[keep], boost[keep]
+        imp = _importance(index.doc_array("importance", cand, default=0.0))
+        if cfg.scorer == "reference":
+            ac = bool(getattr(q, "autocomplete", False))
+            sub = np.array([
+                ref_string_score_best(qf, labels, ac)
+                for labels in index.folded_labels(cand)
+            ])
+            score = ref_fold_score(imp, sub, cfg.importance_weight)
+            keep = np.flatnonzero(~(score < cfg.min_score))
+            if not len(keep):
+                return _NO_ROWS
+            cand, score, boost, imp = cand[keep], score[keep], boost[keep], imp[keep]
+        # the str_distance tie-break only for the rows whose score
+        # reaches the k-th score (see the spec)
+        n = len(cand)
+        k = int(getattr(q, "k", 0) or 0)
+        if 0 < k < n:
+            kth = np.partition(score, n - k)[n - k]
+            sel = np.flatnonzero(score >= kth)
+        else:
+            sel = np.arange(n)
+        dist = np.zeros(n)
+        dist[sel] = str_distance_keys_multi(qf, index.folded_labels(cand[sel]))
+        top = np.lexsort((cand, -imp, -boost, -dist, -score))[: q.k]
+        if not len(top):
+            return _NO_ROWS
+        docs = cand[top]
+        fields = index.doc_fields(_RENDER_FIELDS, docs)
+        cols = {
+            "qid": np.full(len(top), q.qid, dtype=object),
+            "doc_index": docs,
+            "score": score[top],
+            "str_distance": dist[top],
+            "boost": boost[top],
+            "importance": imp[top],
+            "turn_idx": np.fromiter(
+                (int(v) for v in fields["turn_idx"]), np.int64, len(top)
+            ),
+            "rank": np.arange(1, len(top) + 1, dtype=np.int64),
+        }
+        return Ranked([
+            cols[name] if name in cols else _objects(fields[name])
+            for name in _FRAME_COLUMNS
+        ])
+
+    def frame(self, ranked: list[Ranked]) -> pd.DataFrame:
+        return ranked_frame(ranked)
+
 
 class LocalSearchEngine:
     """Low-latency search over the parquet index without a Spark job:
@@ -1289,18 +1549,18 @@ class LocalSearchEngine:
                     f"query too long ({len(q.q)} > {self.cfg.query_max_length})"
                 )
         trace = []
-        records = []
+        ranked = []
         blocks = self.index._blocks
         for q in queries:
             t0 = _time.perf_counter()
             b0 = len(blocks)
-            recs = self._searcher._one(q)
-            records += recs
+            got = self._searcher._one(q)
+            ranked.append(got)
             trace.append({
                 "qid": q.qid,
                 "seconds": round(_time.perf_counter() - t0, 4),
-                "rows": len(recs),
+                "rows": len(got),
                 "tokens_faulted": len(blocks) - b0,
             })
         self.last_trace = trace
-        return result_frame(records)
+        return self._searcher.frame(ranked)

@@ -29,7 +29,11 @@ per kind the query count, median, p90 and how many of its queries
 cost more than the overall p90, and `rss_mb`, each round's growth in
 resident memory from just before its engine opens to the end of its
 queries, read the way perfbench reads `serve_rss_mb` (after
-`gc.collect()`, Arrow's `release_unused()` and `malloc_trim`).
+`gc.collect()`, Arrow's `release_unused()` and `malloc_trim`). After
+that read, each round runs its queries once more on the same engine,
+every cache they filled now warm; `hot_p50_ms` is the median wall time
+of those repeats, the warm fixed cost per query that perfbench's
+`serve.hot_query_p50_ms` reads.
 
 `--dump FILE` also pickles the result frame of every `search([q])`
 call of that loop, in call order. `--check FILE` instead compares each
@@ -99,17 +103,23 @@ def serve_kinds(seed: int, index_dir: str | None, frames: list | None = None) ->
         spark.stop()
     cpu: list[tuple[str, float]] = []
     rss: list[float] = []
+    hot: list[float] = []
     for r in range(W.SERVE_ROUNDS):
         srv = None   # free the previous round's engine before rss0
         rss0 = W._rss_mb()
         srv = LocalSearchEngine(index_dir, cfg)
-        for q in served[r * W.SERVED:(r + 1) * W.SERVED]:
+        round_qs = served[r * W.SERVED:(r + 1) * W.SERVED]
+        for q in round_qs:
             c0 = time.process_time()
             got = srv.search([q])
             if frames is not None:
                 frames.append(got)
             cpu.append((kind_of[q.qid], (time.process_time() - c0) * 1000.0))
         rss.append(round(W._rss_mb() - rss0, 2))
+        for q in round_qs:
+            t0 = time.perf_counter()
+            srv.search([q])
+            hot.append((time.perf_counter() - t0) * 1000.0)
     if tmp is not None:
         tmp.cleanup()
     overall = p90([c for _, c in cpu])
@@ -128,6 +138,7 @@ def serve_kinds(seed: int, index_dir: str | None, frames: list | None = None) ->
         "p50_ms": round(statistics.median(c for _, c in cpu), 3),
         "p90_ms": round(overall, 3),
         "rss_mb": rss,
+        "hot_p50_ms": round(statistics.median(hot), 3),
         "kinds": kinds,
     }
 

@@ -691,3 +691,58 @@ def test_filter_postings_of_list_and_null_values(spark):
         ("hello", 0), ("world", 0), ("more", 1), ("words", 1),
         ("f|role|user", 0), ("f|tool|bash", 0), ("f|tool|python", 0),
     }
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """(fn's result, the number of Spark jobs it ran), counted through
+    a job group on this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_docs_meta_reads_sum_dl_from_the_docs_write(spark, tiny_corpus,
+                                                    tiny_cfg, tmp_path):
+    """The docs write collects Σdl itself (an observation on its own
+    job) into the docs stage's manifest entry, next to ``rows``, so the
+    ``docs_meta`` stage runs no Spark job: ``meta.json``'s n_docs,
+    sum_dl and avgdl equal a recount of the docs table. A manifest
+    without the key (an older build, resumed) still gets the same
+    figures, from an aggregate over the docs table."""
+    import uuid
+
+    out = tmp_path / "idx"
+    paths = build_index(spark, tiny_corpus, tiny_cfg, str(out))
+    docs = spark.read.parquet(paths.docs)
+    n_docs = docs.count()
+    sum_dl = docs.agg(F.sum("dl")).collect()[0][0]
+    meta = json.loads(paths.meta.read_text())
+    assert (meta["n_docs"], meta["sum_dl"]) == (n_docs, sum_dl) == (4, 15)
+    assert meta["avgdl"] == sum_dl / n_docs
+    manifest = json.loads(paths.manifest.read_text())
+    assert manifest["stages"]["docs"]["sum_dl"] == sum_dl
+
+    def rerun_docs_meta(drop_key: bool) -> int:
+        m = json.loads(paths.manifest.read_text())
+        del m["stages"]["docs_meta"]
+        if drop_key:
+            del m["stages"]["docs"]["sum_dl"]
+        paths.manifest.write_text(json.dumps(m))
+        paths.meta.unlink()
+        group = f"docs-meta-{uuid.uuid4().hex}"
+        _, jobs = _jobs_in_group(spark, group, lambda: build_index(
+            spark, tiny_corpus, tiny_cfg, str(out), resume=True
+        ))
+        again = json.loads(paths.meta.read_text())
+        assert {k: again[k] for k in ("n_docs", "sum_dl", "avgdl")} == {
+            k: meta[k] for k in ("n_docs", "sum_dl", "avgdl")
+        }
+        return jobs
+
+    assert rerun_docs_meta(drop_key=False) == 0
+    assert rerun_docs_meta(drop_key=True) >= 1

@@ -986,14 +986,22 @@ def test_doc_store_matches_pandas_rows_after_cdc(spark, tmp_path):
     assert n_live == len(live) - len(dels) + len(new)
 
     idx = LocalSearchEngine(paths, cfg).index
+    cols = ("importance", "role", "tool", "ts", "turn_idx", "dl")
     for pb, frame in frames.items():
         docs = frame.index.to_numpy()
-        for col in ("importance", "role", "tool", "ts", "turn_idx", "dl"):
+        fields = idx.doc_fields([(c, None) for c in cols], docs[::-1])
+        for col in cols:
             got = idx.doc_values(col, docs[::-1])
             want = [frame.loc[d].to_dict()[col] for d in docs[::-1]]
             _assert_same_row(dict(enumerate(got)), dict(enumerate(want)),
                              (pb, col))
+            # the numpy gather and the several-field gather hold the
+            # same values
+            for other in (idx.doc_array(col, docs[::-1]).tolist(), fields[col]):
+                _assert_same_row(dict(enumerate(other)), dict(enumerate(want)),
+                                 (pb, col))
         assert idx.doc_values("nope", docs[:2], default=0.0) == [0.0, 0.0]
+        assert idx.doc_fields([("nope", None)], docs[:2]) == {"nope": [None, None]}
         with pytest.raises(KeyError):
             idx.doc_values("nope", docs[:2])
         for d in docs:
@@ -1006,6 +1014,10 @@ def test_doc_store_matches_pandas_rows_after_cdc(spark, tmp_path):
     mixed = np.concatenate([f.index.to_numpy()[:2] for f in frames.values()])
     np.random.default_rng(0).shuffle(mixed)
     assert idx.doc_values("doc_index", mixed) == mixed.tolist()
+    assert idx.doc_array("doc_index", mixed).tolist() == mixed.tolist()
+    assert idx.doc_fields([("doc_index", None)], mixed) == {
+        "doc_index": mixed.tolist()
+    }
 
 
 def test_search_builds_no_doc_rows(

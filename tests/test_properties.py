@@ -55,6 +55,33 @@ def test_levenshtein_batch_equals_single(a, labels):
     assert levenshtein_batch(a, labels) == [levenshtein(a, b) for b in labels]
 
 
+# lone surrogates (which TEXT leaves out: category Cs), astral-plane
+# characters and a few plain ones: code points ``ord`` accepts that a
+# UTF-8 round trip would not
+ODD = st.text(
+    alphabet=st.sampled_from(
+        ["\ud800", "\udbff", "\udc00", "\udfff", "\U0001f600",
+         "\U00010000", "\U0010ffff", "a", "b", "é"]
+    ),
+    max_size=12,
+)
+
+
+@given(ODD, st.lists(ODD, max_size=6))
+@settings(max_examples=150, deadline=None)
+def test_levenshtein_batch_odd_codepoints(a, labels):
+    assert levenshtein_batch(a, labels) == [levenshtein(a, b) for b in labels]
+    assert levenshtein_batch(a, labels) == [_ref_lev(a, b) for b in labels]
+
+
+def test_levenshtein_batch_surrogate_pairs_stay_apart():
+    """A lone high and a lone low surrogate side by side are two code
+    points, not one astral character."""
+    pair = "\ud83d\ude00"
+    assert len(pair) == 2
+    assert levenshtein_batch(pair, ["\U0001f600", pair, "\ud83d"]) == [2, 0, 1]
+
+
 @given(TEXT, TEXT, TEXT)
 @settings(max_examples=150, deadline=None)
 def test_levenshtein_triangle(a, b, c):
